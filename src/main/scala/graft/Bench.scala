@@ -1,19 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Sessions
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // static conf, must be set on the first session of the JVM: the
-      // 100-entry default generated-class cache thrashes across 255
-      // queries x ~10 codegen fragments (see Sessions.local)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(appName = "graft-bench")
     // ambient machine load BEFORE the bench touches anything — the end-of-run
     // reading mostly measures the bench itself
     val loadAtStart = java.lang.management.ManagementFactory

@@ -1,22 +1,34 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 import graft.expressions.{AlignedTokenCount, FloatVecDot, LongArrayMatchFrac, LongSetJaccard, MinHashSig, NgramFreqStats, ShingleHashes, SimHash64, TokenSetHits, Winnow}
 
-/** Session extension registering the engine's native expressions as SQL
-  * functions, so the `spark.sql` surface (and dbt-style SQL-string models)
-  * can call them directly:
+/** The engine's catalogue of session extensions, declared once and injected
+  * when the session is built ([[graft.core.Sessions.local]]):
+  *
+  *   - native expressions as SQL functions, so the `spark.sql` surface (and
+  *     dbt-style SQL-string models) can call them directly;
+  *   - the optimizer rules [[graft.plans.NoBroadcastOverExpansion]] and
+  *     [[graft.plans.MvRewrite]];
+  *   - the planner strategies of the two native operators,
+  *     [[graft.plans.AsOfJoinStrategy]] and
+  *     [[graft.plans.TopKPerGroupStrategy]].
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * val spark = graft.core.Sessions.local() // builds withExtensions(new GraftExtensions)
   * spark.sql("SELECT vec_dot(a.embedding, b.embedding) FROM ...")
   * }}}
   *
-  * Covers: vec_dot(array<float>, array<float>) → double,
+  * A session built elsewhere gets the same catalogue through
+  * [[graft.core.Sessions.tune]].
+  *
+  * Functions: vec_dot(array<float>, array<float>) → double,
   * shingle_hashes(text, n) → array<bigint>, simhash64(text) → bigint,
   * minhash_match_frac(array<bigint>, array<bigint>) → double,
   * minhash_sig(text, n, k) → array<bigint>, winnow(array<bigint>, w) →
@@ -38,10 +50,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[GraftExtensions].getName, name, usage),
         builder))
     }
-    // engine-level guard against stats-blind broadcasts of exploded
-    // subtrees (see the rule's scaladoc for the failure mode)
-    ext.injectOptimizerRule(_ => graft.plans.NoBroadcastOverExpansion)
-    ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
+    optimizerRules.foreach(rule => ext.injectOptimizerRule(_ => rule))
+    strategies.foreach(strategy => ext.injectPlannerStrategy(_ => strategy))
   }
 }
 
@@ -142,20 +152,25 @@ object GraftExtensions {
     }
   }
 
-  /** Register the same functions on an already-built session (temp-function
-    * scope) — for sessions the caller doesn't construct.
+  /** Optimizer rules: the engine-level guard against stats-blind broadcasts
+    * of exploded subtrees (see the rule's scaladoc for the failure mode),
+    * and the maintained-view rewrite (a no-op until a view is registered).
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    // idempotence guard: tune() runs before EVERY gate query, and
-    // re-registering 14 functions each time churns the registry and logs a
-    // "replaced a previously registered function" warning per function per
-    // query (≈7k log lines over a bench run). The last name in the list is
-    // the sentinel: present ⇒ this session is already registered.
-    if (!registry.functionExists(FunctionIdentifier(functions.last._1))) {
-      functions.foreach { case (name, _, builder) =>
-        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
-      }
-    }
-  }
+  private[graft] val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(graft.plans.NoBroadcastOverExpansion, graft.plans.MvRewrite)
+
+  /** Planner strategies of the native operators behind
+    * [[graft.operators.AsOfJoin.joinAsOfNative]] and
+    * [[graft.operators.TopK.perGroupNative]].
+    */
+  private[graft] val strategies: Seq[SparkStrategy] =
+    Seq(graft.plans.AsOfJoinStrategy, graft.plans.TopKPerGroupStrategy)
+
+  /** True when `spark` already has the catalogue. The last function in the
+    * list is the sentinel: the catalogue is installed all at once, at build
+    * time or by [[graft.core.Sessions.tune]].
+    */
+  private[graft] def installed(spark: SparkSession): Boolean =
+    spark.sessionState.functionRegistry
+      .functionExists(FunctionIdentifier(functions.last._1))
 }

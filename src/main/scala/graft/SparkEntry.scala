@@ -38,7 +38,10 @@ object SparkEntry {
     all("q1_agg").build(spark, "/root/testdata/sf0.001")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. A driver may
+    * pass a session it built itself: `Sessions.tune` installs the engine on
+    * it once, and is a no-op on a `Sessions.local` session.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map { case (name, qd) =>
       name -> ((s: SparkSession, dir: String) => { Sessions.tune(s); qd.build(s, dir) })

@@ -17,11 +17,25 @@ import org.apache.spark.sql.DataFrame
   * reliable `checkpoint(true)` that survives executor loss; leave it unset
   * (the local/bench default) and cuts stay local. Results are identical
   * either way — only where the materialized partitions live changes.
+  *
+  * Cleanup differs too. Local checkpoint blocks are reclaimed by the
+  * ContextCleaner once their frame is unreferenced. Reliable checkpoint
+  * files are deleted only when the static conf
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` is `true`:
+  * [[Sessions.local]] sets it; a session built elsewhere must set it at
+  * build time, or the files stay until the application ends.
   */
 object Barriers {
 
   /** Runtime conf key holding the reliable-checkpoint directory. */
   val ConfKey = "spark.graft.checkpointDir"
+
+  /** The conf directory this object last set, with the directory Spark
+    * resolved it to. Spark stores the directory fs-qualified under a fresh
+    * UUID subdirectory, so comparing `getCheckpointDir` with the conf value
+    * never matches; comparing with the resolved one does.
+    */
+  private var lastSet: Option[(String, String)] = None
 
   /** Materialize `df` eagerly and truncate its lineage — reliable
     * checkpoint when [[ConfKey]] is set, local checkpoint otherwise.
@@ -33,8 +47,15 @@ object Barriers {
     else {
       val sc = spark.sparkContext
       // Dataset.checkpoint requires the SparkContext-level dir; align it
-      // with the session conf (idempotent when unchanged)
-      if (!sc.getCheckpointDir.contains(dir)) sc.setCheckpointDir(dir)
+      // with the session conf, once per directory: every setCheckpointDir
+      // creates a new subdirectory
+      synchronized {
+        if (!lastSet.exists { case (d, resolved) =>
+            d == dir && sc.getCheckpointDir.contains(resolved) }) {
+          sc.setCheckpointDir(dir)
+          lastSet = sc.getCheckpointDir.map(dir -> _)
+        }
+      }
       df.checkpoint(true)
     }
   }

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.sql.{Date, Timestamp}
-
 import org.apache.spark.sql.types._
 
 /** Typed schemas for the two source entities (claims, policies).
@@ -54,18 +52,3 @@ object Schemas {
   val policyStatuses: Seq[String] =
     Seq("ACTIVE", "PENDING", "CANCELLED", "EXPIRED", "SUSPENDED")
 }
-
-/** Typed rows for Dataset[T] use where compile-time field checks help. */
-final case class Claim(
-    claim_id: String, policy_id: String, customer_id: String,
-    claim_amount: BigDecimal, claim_date: Date, claim_type: String,
-    claim_status: String, description: String, adjuster_id: String,
-    settlement_amount: Option[BigDecimal], settlement_date: Option[Date],
-    created_at: Timestamp, updated_at: Timestamp)
-
-final case class Policy(
-    policy_id: String, customer_id: String, policy_number: String,
-    policy_type: String, premium_amount: BigDecimal,
-    deductible_amount: BigDecimal, coverage_limit: BigDecimal,
-    start_date: Date, end_date: Date, policy_status: String,
-    agent_id: String, created_at: Timestamp, updated_at: Timestamp)

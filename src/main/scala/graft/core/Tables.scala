@@ -46,14 +46,20 @@ object Tables {
     * as epoch-nanos long under spark.sql.legacy.parquet.nanosAsLong) and
     * TIMESTAMP(MICROS) without UTC adjustment (surfaces as TIMESTAMP_NTZ).
     * Normalize both to session-zone TimestampType at microsecond precision —
-    * the session zone is pinned UTC (build.sbt), so the wall-clock values
+    * the session zone is pinned UTC (Sessions), so the wall-clock values
     * match what DuckDB reads from the same file and oracle comparisons line
     * up either way.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    readNanosAsLong(spark)
     normalizeEventTs(load(spark, dir, "events"))
   }
+
+  /** Read TIMESTAMP(NANOS) parquet columns as epoch-nanos longs, the form
+    * [[normalizeEventTs]] expects.
+    */
+  private[graft] def readNanosAsLong(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Declared schema of the CURRENT events generation (micros-NTZ `ts`) —
     * the single source of truth for readers that must commit to a schema

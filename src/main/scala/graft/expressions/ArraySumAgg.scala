@@ -10,7 +10,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.TypedInputs
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Element-wise sum of `array<float>` columns as ONE aggregate expression —
+/** Element-wise sum of `array<float>` or `array<double>` columns as ONE
+  * aggregate expression —
   * the vector form of per-dimension `SUM(element_at(v, i))` columns.
   *
   * Motivation is planning cost, not arithmetic: a centroid/mean update over
@@ -29,9 +30,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *     element_at the replaced formulation used would have thrown — this
   *     aggregate is the lenient variant, callers probe one dim per corpus);
   *   - a dimension with zero contributions evaluates to NULL (SUM of an
-  *     all-NULL column), else the float values are accumulated into a
-  *     DOUBLE in row order — the same adds in the same order as Sum's
-  *     double buffer, hence bit-identical partials.
+  *     all-NULL column), else the values (floats widened) are accumulated
+  *     into a DOUBLE in row order — the same adds in the same order as
+  *     Sum's double buffer, hence bit-identical partials.
   */
 case class ArraySumAgg(child: Expression, dim: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
@@ -41,7 +42,13 @@ case class ArraySumAgg(child: Expression, dim: Int,
   require(dim >= 1 && dim <= (1 << 20), s"dim must be in [1, 2^20], got $dim")
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
-  override def declaredInputTypes: Seq[DataType] = Seq(ArrayType(FloatType))
+  // lazy: the child is unresolved when the expression is first built
+  private lazy val doubles = child.dataType match {
+    case ArrayType(DoubleType, _) => true
+    case _ => false
+  }
+  override def declaredInputTypes: Seq[DataType] =
+    Seq(ArrayType(if (doubles) DoubleType else FloatType))
   override def nullable: Boolean = false
 
   override def createAggregationBuffer(): ArraySumAgg.Buf =
@@ -51,11 +58,12 @@ case class ArraySumAgg(child: Expression, dim: Int,
     val v = child.eval(input)
     if (v != null) {
       val arr = v.asInstanceOf[ArrayData]
+      val wide = doubles
       val n = math.min(dim, arr.numElements())
       var i = 0
       while (i < n) {
         if (!arr.isNullAt(i)) {
-          buffer.sums(i) += arr.getFloat(i).toDouble
+          buffer.sums(i) += (if (wide) arr.getDouble(i) else arr.getFloat(i).toDouble)
           buffer.cnts(i) += 1L
         }
         i += 1

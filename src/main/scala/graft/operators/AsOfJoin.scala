@@ -27,6 +27,11 @@ object AsOfJoin {
     * (key, ts), which one matches is tie-order dependent (both here and in
     * the composed form) — pre-aggregate the right side to one row per
     * (key, ts) for fully deterministic output, as q26_asof_join does.
+    *
+    * Both native forms plan only on a session that carries
+    * [[graft.GraftExtensions]]' planner strategies: one from
+    * [[graft.core.Sessions.local]], or one passed through
+    * [[graft.core.Sessions.tune]].
     */
   def joinAsOfNative(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightKey: String, rightTs: String): DataFrame =
@@ -47,9 +52,6 @@ object AsOfJoin {
       toleranceUs: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
     val lp = ColumnBridge.analyzedPlan(left)
     val rp = ColumnBridge.analyzedPlan(right)
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, n: String) =

@@ -20,9 +20,11 @@ import org.apache.spark.sql.functions._
   * tiny scalar aggregate, and a TakeOrderedAndProject top-k — the corpus
   * is scanned once per snapshot and never shuffled. The joined count frame
   * has two consumers (scalar totals + the ranked output), so it is
-  * materialized once via an eager localCheckpoint — vocabulary-sized
-  * blocks, reclaimed by the ContextCleaner when the result frame is
-  * dropped; without it both consumers would re-run the corpus scans.
+  * materialized once via an eager [[graft.core.Barriers.cut]] —
+  * vocabulary-sized, reclaimed when the result frame is dropped (local
+  * blocks by the ContextCleaner; reliable files only under the cleaner
+  * conf [[graft.core.Barriers]] names); without it both consumers would
+  * re-run the corpus scans.
   */
 object Drift {
 

@@ -44,8 +44,9 @@ object DupGroups {
       maxIter: Int = 25, maxDriverEdges: Long = 1000000L): DataFrame = {
     // persist, NOT localCheckpoint: the edge projection is read twice (count
     // + one strategy) and must be releasable — Dataset.unpersist frees cache
-    // entries but not local-checkpoint RDD blocks (those wait for the
-    // ContextCleaner), so a checkpoint here could never be reclaimed on exit
+    // entries but not checkpoints (local blocks wait for the ContextCleaner,
+    // reliable files for its cleanCheckpoints conf), so a checkpoint here
+    // could never be released on exit
     val e = edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Size-based strategy switch, the same philosophy as Spark's broadcast
@@ -99,9 +100,11 @@ object DupGroups {
     // after ~15 rounds. Checkpointing cuts the lineage to the materialized
     // partitions, keeping every round's plan constant-size. Edges are tiny
     // (already-thresholded pairs), so the materialization is cheap. The
-    // round frames' checkpoint blocks are reclaimed by the ContextCleaner
-    // once unreferenced (Dataset.unpersist cannot free checkpoint blocks) —
-    // bounded by rounds × label-frame size, label frames being vertex-sized.
+    // round frames' checkpoints are reclaimed by the ContextCleaner once
+    // unreferenced — local blocks always, reliable files only under
+    // spark.cleaner.referenceTracking.cleanCheckpoints (see Barriers;
+    // Dataset.unpersist frees neither) — bounded by rounds × label-frame
+    // size, label frames being vertex-sized.
     val sym = graft.core.Barriers.cut(
       e.union(e.select(col("v").as("u"), col("u").as("v"))))
 
@@ -304,9 +307,9 @@ object DupGroups {
       // final anti-join, which executes AFTER this method returns) — an
       // eager localCheckpoint materializes it once and truncates lineage so
       // the returned plan reads its blocks instead of re-running the LSH
-      // probe over the by-then-unpersisted signatures; blocks are reclaimed
-      // by the ContextCleaner when the result frame is dropped (the same
-      // trade distributedComponents documents)
+      // probe over the by-then-unpersisted signatures; the checkpoint is
+      // reclaimed when the result frame is dropped, under the conditions
+      // distributedComponents documents
       val flagged = TextDedup.minHashVerifyAgainst(
         TextDedup.lshCandidatePairsAgainst(bs, cs, bands, md5Parity),
         bs, cs, minJaccard)

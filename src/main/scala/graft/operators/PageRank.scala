@@ -52,8 +52,8 @@ object PageRank {
     // §3.3 "enormous plans: planning time itself becomes the bottleneck"),
     // and profiled iteration stages re-read the base parquet (12-14
     // CPU-s/stage at sf0.1) where checkpoint blocks are reused
-    // unconditionally. Blocks are reclaimed by the ContextCleaner when the
-    // frames drop out of scope — the DupGroups.distributedComponents trade.
+    // unconditionally. Checkpoints are reclaimed when the frames drop out of
+    // scope, under the conditions DupGroups.distributedComponents documents.
     // degree-annotated edges materialize ONCE, in ONE barrier: the
     // out-degree rides along as a window count over the source-partitioned
     // edges, so the degree aggregate + degree join (and their own edge-

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * shuffle melts: which join/aggregation keys are hot, how hot relative to
   * the mean, and how concentrated the table is on its head keys. The
   * remediation operators already exist ([[graft.queries]] q29 salted agg,
-  * AQE skew join in Sessions.tune); this is the detection side of that
+  * AQE skew join in Sessions); this is the detection side of that
   * loop. Reference scope: generalizes the per-column profiling of
   * tests/unit/test_data_quality.py (null/uniqueness profiling) to load
   * profiling.

@@ -25,13 +25,14 @@ object TopK {
     * pathological group counts — groups ≈ rows, where top-k degenerates
     * toward a plain projection — use [[perGroupWindow]], whose sorter
     * spills at any cardinality in exchange for the full per-group sort.
+    *
+    * Plans only on a session that carries [[graft.GraftExtensions]]' planner
+    * strategies: one from [[graft.core.Sessions.local]], or one passed
+    * through [[graft.core.Sessions.tune]].
     */
   def perGroupNative(df: DataFrame, groupCol: String, orderCol: String,
       tieCol: String, k: Int, descending: Boolean = true): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKPerGroupStrategy
     val plan = ColumnBridge.analyzedPlan(df)
     def attr(n: String) = plan.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(s"no column $n in ${plan.output.map(_.name)}"))

@@ -29,8 +29,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * broadcast from MEASURED runtime sizes stays available. Idempotent: a
   * side already carrying any strategy hint is left alone.
   *
-  * Registered by Sessions (local: SparkSessionExtensions optimizer rule;
-  * tune: experimental.extraOptimizations) so every gate runs under it.
+  * Part of the [[graft.GraftExtensions]] catalogue, injected when the
+  * session is built (or installed once on a foreign session by
+  * [[graft.core.Sessions.tune]]), so every gate runs under it.
   */
 object NoBroadcastOverExpansion extends Rule[LogicalPlan] {
 

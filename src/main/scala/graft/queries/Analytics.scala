@@ -82,7 +82,7 @@ object Analytics {
   /** Key-skew diagnostics ([[graft.operators.SkewReport]]): the 10 hottest
     * customer keys in orders with load share, head concentration and
     * skew-vs-mean ratio — the detection side of the salting/AQE-skew
-    * remediation the engine already ships (q29, Sessions.tune).
+    * remediation the engine already ships (q29, Sessions).
     */
   private val skewReport = QueryDef(
     (s, dir) =>
@@ -131,7 +131,7 @@ object Analytics {
         // story lives in PageRank.run; an 11 s gate query was 9% of the
         // whole bench for no extra coverage). Filter pushes into BOTH scans.
         // Residual gate cost (~5 s at sf0.1) is profiled, not mysterious:
-        // tools/ProfilePageRank measures ~2 s per iteration on the CACHED
+        // profiling measured ~2 s per iteration on the CACHED
         // 60k-edge graph, unordered — i.e. the materialization barrier
         // (persist+count per iteration, required for bounded lineage) plus
         // ~5 exchanges of scheduling fixed cost, NOT data volume or the

@@ -28,7 +28,7 @@ object EventStreams {
     * same nanos→micros ts handling as graft.core.Tables.events.
     */
   def readEvents(spark: SparkSession, eventsDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.core.Tables.readNanosAsLong(spark)
     // a streaming source needs its schema up front: probe the directory with
     // a one-off batch read (metadata only, no data scan), then normalize ts
     // exactly like the batch loader (nanos-long vs micros-NTZ generations).

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.{Codecs, PerceptualHash}
@@ -65,13 +65,7 @@ object IncrementalPerceptualProbe {
       .map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(1, 100, 1000))
     val outPath = args.lift(1).getOrElse("/tmp/incremental_perceptual_probe.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
     import spark.implicits._
 
     def hash(media: org.apache.spark.sql.Dataset[(Long, Array[Byte])]): DataFrame =

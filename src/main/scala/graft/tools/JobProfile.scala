@@ -17,8 +17,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.head
     val names = args.tail
-    val spark = graft.core.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.core.Sessions.local()
 
     case class StageRow(name: String, tasks: Int, var taskTimeMs: Long = 0L,
         var shufReadB: Long = 0L, var shufWriteB: Long = 0L,

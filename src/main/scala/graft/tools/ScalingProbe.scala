@@ -97,13 +97,7 @@ object ScalingProbe {
     val queries = args.lift(4)
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(probeQueries)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
 
     val scaledDir = s"$workDir/sf${mult}x"
     // SPARK_GRAFT_PROBE_REUSE=1 skips the fan-out when the scaled dataset
@@ -162,7 +156,7 @@ object ScalingProbe {
     md ++= "then times each query at both scales in one warmed JVM: min of 2 COLD\n"
     md ++= "passes per scale (cache cleared before every pass, so a gate's\n"
     md ++= "materialized result cannot serve the next pass warm).\n"
-    md ++= s"Super-linear bar: ratio > 1.5 x M = ${bar}. local[$cpus], " +
+    md ++= s"Super-linear bar: ratio > 1.5 x M = ${bar}. local[${graft.core.Sessions.cpus}], " +
       s"heap ${Runtime.getRuntime.maxMemory() / (1024 * 1024)} MB.\n\n"
     md ++= s"| query | base (s) | ${mult}x (s) | ratio | vs bar ${bar} |\n"
     md ++= "|---|---|---|---|---|\n"

@@ -48,6 +48,16 @@ class BarriersSpec extends AnyFunSuite {
     }
   }
 
+  test("reliable cuts share one checkpoint subdirectory per configured dir") {
+    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    withReliableDir { dir =>
+      Barriers.cut(df)
+      Barriers.cut(df)
+      val subdirs = java.nio.file.Files.list(dir).toArray.toSeq
+      assert(subdirs.size == 1, s"checkpoint subdirectories under $dir: $subdirs")
+    }
+  }
+
   test("PageRank results are identical across barrier durability levels") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L)).toDF("a", "b")
     def ranks(): Map[Long, Double] =

@@ -45,7 +45,6 @@ class CmsMd5Spec extends AnyFunSuite {
 
   test("cms_md5_agg + estimateCol match the scalar path bucket for bucket") {
     val width = 128
-    graft.GraftExtensions.register(spark)
     val df = keys.toDF("k")
     val sk = df.agg(expr(s"cms_md5_agg(k, $width)").as("counters"))
     val counters = sk.head().getSeq[Long](0).toArray

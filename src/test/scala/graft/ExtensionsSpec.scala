@@ -3,17 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Custom expressions surfaced as SQL functions, both via
-  * SparkSessionExtensions (session build time) and GraftExtensions.register
-  * (existing session).
+/** The GraftExtensions catalogue: custom expressions surfaced as SQL
+  * functions, and the whole catalogue installed either at session build time
+  * (Sessions.local, withExtensions) or once on a foreign session
+  * (Sessions.tune).
   */
 class ExtensionsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkTestSession.spark
-    GraftExtensions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = SparkTestSession.spark
 
   test("vec_dot is callable from SQL and matches the fold") {
     val got = spark.sql(
@@ -112,23 +109,69 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(row.getSeq[Long](2) == Seq.empty) // short-but-clean is an empty sketch
   }
 
-  test("withExtensions wires the same registry at session build time") {
-    // a fresh session (shared context) built with the extensions class;
-    // clear default/active so getOrCreate actually constructs one
+  /** A fresh session on the shared context, built with or without the
+    * extensions class; clears default/active so getOrCreate actually
+    * constructs one, and restores them afterwards.
+    */
+  private def withFreshSession[T](extensions: Boolean)(f: SparkSession => T): T = {
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
     try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
-      assert(s2.sql("SELECT vec_dot(array(cast(1.0 as float)), array(cast(3.0 as float)))")
-        .head.getDouble(0) == 3.0)
+      val b = SparkSession.builder().master("local[2]")
+      f((if (extensions) b.withExtensions(new GraftExtensions) else b).getOrCreate())
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("withExtensions wires the same registry at session build time") {
+    withFreshSession(extensions = true) { s2 =>
+      assert(s2.sql("SELECT vec_dot(array(cast(1.0 as float)), array(cast(3.0 as float)))")
+        .head.getDouble(0) == 3.0)
+    }
+  }
+
+  test("a Sessions.local session plans through injected extensions only") {
+    def experimental = (spark.experimental.extraOptimizations,
+      spark.experimental.extraStrategies)
+    assert(experimental == ((Nil, Nil)))
+    graft.core.Sessions.tune(spark)
+    assert(experimental == ((Nil, Nil)))
+  }
+
+  test("Sessions.tune installs the whole catalogue on a plain session") {
+    withFreshSession(extensions = false) { s =>
+      import s.implicits._
+      assert(!GraftExtensions.installed(s))
+      graft.core.Sessions.tune(s)
+      assert(s.sql("SELECT simhash64('spark native engine')").head.getLong(0) != 0L)
+      assert(s.experimental.extraOptimizations ==
+        Seq(graft.plans.NoBroadcastOverExpansion, graft.plans.MvRewrite))
+      val top = graft.operators.TopK.perGroupNative(
+        Seq((1, 5.0, 1L), (1, 7.0, 2L), (2, 1.0, 3L)).toDF("g", "o", "t"), "g", "o", "t", 1)
+      assert(top.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
+      assert(top.select("t").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
+      val asOf = graft.operators.AsOfJoin.joinAsOfNative(
+        Seq((1, 10L)).toDF("k", "ts"), Seq((1, 5L, "x")).toDF("rk", "rts", "v"),
+        "k", "ts", "rk", "rts")
+      assert(asOf.queryExecution.executedPlan.toString.contains("AsOfJoin"))
+      assert(asOf.select("v").as[String].collect().toSeq == Seq("x"))
+    }
+  }
+
+  test("a second Sessions.tune adds nothing and re-sets no conf") {
+    withFreshSession(extensions = false) { s =>
+      graft.core.Sessions.tune(s)
+      def state = (s.experimental.extraOptimizations, s.experimental.extraStrategies,
+        s.catalog.listFunctions().count())
+      val once = state
+      s.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+      graft.core.Sessions.tune(s)
+      assert(state == once)
+      assert(s.conf.get("spark.sql.adaptive.skewJoin.enabled") == "false")
     }
   }
 }

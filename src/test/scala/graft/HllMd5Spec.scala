@@ -151,7 +151,6 @@ class HllMd5Spec extends AnyFunSuite {
   }
 
   test("the SQL surface exposes the aggregate trio") {
-    graft.GraftExtensions.register(spark)
     (1 to 5000).map(i => ("g", s"k$i")).toDF("g", "k")
       .createOrReplaceTempView("hll_sql_in")
     val viaSql = spark.sql(

@@ -196,15 +196,13 @@ class IvmStreamSpec extends AnyFunSuite {
 
   test("a versioned MV registration tracks the stream's refreshes, no re-register") {
     import graft.plans.MvRewrite
-    // the rewrite rule rides the engine's user-rule batch
-    val tuned = graft.core.Sessions.tune(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_ivm_mv").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ivm_mv_ckpt")
     val srcDir = java.nio.file.Files.createTempDirectory("graft_ivm_mv_src")
-    Tables.orders(tuned, SparkTestSession.sfDir)
+    Tables.orders(spark, SparkTestSession.sfDir)
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
       .write.parquet(s"$dir/base")
-    val base = tuned.read.parquet(s"$dir/base")
+    val base = spark.read.parquet(s"$dir/base")
     val baseState = IncrementalAgg.state(base, groups, sums)
     val chunks = Seq(
       base.filter(col("o_orderkey") % 13 === 0)
@@ -232,7 +230,7 @@ class IvmStreamSpec extends AnyFunSuite {
           java.nio.file.Paths.get(s"$srcDir/$name"))
       }
       def runStream(): Unit = {
-        val deltas = tuned.readStream
+        val deltas = spark.readStream
           .schema("op STRING, o_orderpriority STRING, o_totalprice DOUBLE")
           .option("maxFilesPerTrigger", "1")
           .parquet(srcDir.toString)

@@ -85,7 +85,6 @@ class KmvSketchSpec extends AnyFunSuite {
     assert(asSet(KmvSketch.sketchAgg(df, "k", "src", k = 256)) ===
       asSet(KmvSketch.sketch(df, "k", "src", k = 256)))
     // and through the SQL surface
-    graft.GraftExtensions.register(spark)
     df.createOrReplaceTempView("kmv_sql_in")
     val viaSql = spark.sql(
       "SELECT src, explode(kmv_md5_agg(k, 256)) AS h FROM kmv_sql_in GROUP BY src")

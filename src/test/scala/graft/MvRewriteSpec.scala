@@ -13,11 +13,7 @@ import graft.plans.MvRewrite
   * other shape on the base scan.
   */
 class MvRewriteSpec extends AnyFunSuite {
-  lazy val spark = {
-    // the rewrite rule rides the engine's user-rule batch, which gate
-    // invocations install via Sessions.tune (idempotent)
-    graft.core.Sessions.tune(SparkTestSession.spark)
-  }
+  lazy val spark = SparkTestSession.spark
 
   private val groups = Seq("o_orderstatus", "o_orderpriority")
   private val sums = Seq("sum_price" -> "o_totalprice")

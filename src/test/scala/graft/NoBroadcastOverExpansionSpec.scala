@@ -11,11 +11,7 @@ import graft.plans.NoBroadcastOverExpansion
   * barriers (Aggregate/Limit) must lift the restriction.
   */
 class NoBroadcastOverExpansionSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = SparkTestSession.spark
-    graft.core.Sessions.tune(s) // installs the rule (idempotent)
-    s
-  }
+  lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   // a 20-row frame that explodes to 20k rows but LOOKS tiny to the planner

@@ -98,6 +98,27 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got.find(_._1 == 2).get._2.forall(_ == null))
   }
 
+  test("ivfCentroids over array<double> equals per-dimension SUM bit for bit") {
+    val rnd = new scala.util.Random(7)
+    val rows: Seq[(Int, Seq[java.lang.Double])] =
+      (0 until 40).map(i => (i % 3, Seq.fill(4)(
+        java.lang.Double.valueOf(rnd.nextGaussian() * math.pow(10, rnd.nextInt(9)))))) ++
+        Seq((0, Seq[java.lang.Double](0.1, null, 0.2, 0.3)), (1, null))
+    val df = rows.toDF("cell", "embedding")
+    val got = Similarity.ivfCentroids(df, "cell")
+      .orderBy("cell").as[(Int, Seq[java.lang.Float])].collect()
+    val ref = df.groupBy(col("cell"))
+      .agg(sum(element_at(col("embedding"), 1)).as("s0"),
+        (2 to 4).map(i => sum(element_at(col("embedding"), i)).as(s"s${i - 1}")) :+
+          count(lit(1)).as("n"): _*)
+      .select(col("cell"),
+        array((0 until 4).map(i => (col(s"s$i") / col("n")).cast("float")): _*)
+          .as("centroid"))
+      .orderBy("cell").as[(Int, Seq[java.lang.Float])].collect()
+    assert(got.length == 3)
+    assert(got.toSeq == ref.toSeq)
+  }
+
   test("k-means IVF: k cells, deterministic assignment, sane recall") {
     val cents = Similarity.kmeansCentroids(emb, k = 8, iters = 3)
     assert(cents.count() == 8)

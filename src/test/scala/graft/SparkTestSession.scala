@@ -5,7 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 
 /** One SparkSession shared by every suite (per-suite sessions thrash the
-  * JVM); warehouse + metastore in a fresh temp dir per test run.
+  * JVM), built by the engine's own builder; warehouse + metastore in a fresh
+  * temp dir per test run.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -19,16 +20,9 @@ object SparkTestSession {
       }
       rm(new java.io.File(wh))
     }, "graft-test-wh-sweep"))
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+    // read by the session's SparkConf, like any spark.* system property
+    System.setProperty("spark.sql.warehouse.dir", wh)
+    graft.core.Sessions.local(4, "graft-test")
   }
 
   val sfDir = "/root/testdata/sf0.001"

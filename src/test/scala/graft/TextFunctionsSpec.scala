@@ -35,7 +35,6 @@ class TextFunctionsSpec extends AnyFunSuite {
       .select(hashAlignedTokenCount(col("t")).as("r")).head
     assert(n.isNullAt(0))
     // and the SQL registration exposes the same kernel
-    graft.GraftExtensions.register(spark)
     assert(spark.sql("SELECT aligned_token_count('\ta b')").head.getInt(0) === 2)
   }
 
