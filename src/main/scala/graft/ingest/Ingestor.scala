@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.core.JobPool
 import graft.sources.TableFormat
 
 /** One ingestion unit: a source file → bronze table (reference
@@ -118,6 +119,10 @@ final class Ingestor(format: TableFormat, batchId: String,
 
   /** Ingest every spec, isolating failures per entity
     * (ingestion.py:149-176): one bad source never blocks the others.
+    * Specs with different `targetTable`s run at the same time on a per-run
+    * [[graft.core.JobPool]], under the caller's Spark job group; specs that
+    * share a target table run one after another in declaration order, so
+    * their appends never race. The results come back in spec order.
     * Retries are per entity — only the failed entity re-runs, so entities
     * that already appended are never duplicated by a step-level re-run.
     * (Caveat: a mid-write crash can still leave a partial append in the
@@ -125,8 +130,8 @@ final class Ingestor(format: TableFormat, batchId: String,
     * TableFormat seam.)
     */
   def ingestAll(spark: SparkSession, specs: Seq[IngestSpec],
-      retries: Int = 0, retrySleepMs: Long = 0L): Seq[IngestResult] =
-    specs.map { spec =>
+      retries: Int = 0, retrySleepMs: Long = 0L): Seq[IngestResult] = {
+    def withRetries(spec: IngestSpec): IngestResult = {
       var result = ingest(spark, spec)
       var remaining = retries
       while (!result.ok && remaining > 0) {
@@ -136,4 +141,13 @@ final class Ingestor(format: TableFormat, batchId: String,
       }
       result
     }
+    val chains = specs.zipWithIndex
+      .groupBy(_._1.targetTable.toLowerCase(java.util.Locale.ROOT)).values.toSeq
+    val pool = new JobPool[Seq[(Int, IngestResult)]](spark, math.max(1, chains.size))
+    try {
+      chains.foreach(chain =>
+        pool.submit(chain.map { case (spec, i) => i -> withRetries(spec) }))
+      chains.flatMap(_ => pool.next()).sortBy(_._1).map(_._2)
+    } finally pool.shutdown()
+  }
 }

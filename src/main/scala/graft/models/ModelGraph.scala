@@ -1,9 +1,12 @@
 package graft.models
 
+import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, max}
 
+import graft.core.JobPool
 import graft.quality.RuleSet
 import graft.sources.TableFormat
 
@@ -39,19 +42,24 @@ final case class ModelRun(
     name: String, ok: Boolean, rows: Long, testViolations: Long,
     error: Option[String] = None)
 
-/** Dependency-ordered model executor — the in-session replacement for
+/** Dependency-driven model executor — the in-session replacement for
   * dbt-over-HTTP (reference orchestrator.py:60-78 + profiles.yml:4-13;
-  * SURVEY §3 E3): topological order, fail-fast on build errors, test
-  * failures tolerated but counted (orchestrator.py:84-85 semantics).
+  * SURVEY §3 E3). A model starts as soon as every one of its `deps` has
+  * finished. A build failure skips the model's dependents but not the
+  * independent branches beside it; test failures are tolerated but counted
+  * (orchestrator.py:84-85 semantics).
   *
-  * `parallelism > 1` runs independent models of the same dependency rank
-  * concurrently (the dbt `threads` analog, profiles.yml:10 — Spark
-  * schedules the submitted jobs fairly across the session).
+  * `parallelism` caps how many models run at once: the dbt `threads`
+  * analogue (profiles.yml:10). It defaults to the number of models, and 1
+  * runs them one at a time in [[order]]. The models run on a per-run
+  * [[graft.core.JobPool]], under the caller's Spark job group, so a step
+  * timeout's `cancelJobGroup` reaches every model's jobs. Spark's FIFO
+  * scheduler shares the executors among the models' concurrent jobs.
   */
 final class ModelGraph(models: Seq[Model], format: TableFormat,
     failuresTable: Option[String] = None,
     analyzeTables: Boolean = false,
-    parallelism: Int = 1,
+    parallelism: Int = Int.MaxValue,
     /** Stamped onto stored failures so successive runs' violations are
       * distinguishable (the failures table is append-only).
       */
@@ -61,6 +69,13 @@ final class ModelGraph(models: Seq[Model], format: TableFormat,
   require(byName.size == models.size, "duplicate model names")
   models.foreach(m => m.deps.foreach(d =>
     require(byName.contains(d), s"${m.name}: unknown dep $d")))
+  // two models writing one table would overwrite each other, and at the
+  // same time when they run concurrently (dbt rejects two nodes with one
+  // relation)
+  models.groupBy(_.targetTable.toLowerCase(java.util.Locale.ROOT)).values
+    .foreach(ms => require(ms.size == 1,
+      s"models ${ms.map(_.name).mkString(" and ")} share target table ${ms.head.targetTable}"))
+  require(parallelism >= 1, s"parallelism must be at least 1, got $parallelism")
 
   /** Deterministic topological order (stable within a rank). */
   val order: Seq[Model] = {
@@ -74,17 +89,11 @@ final class ModelGraph(models: Seq[Model], format: TableFormat,
     models.sortBy(m => (ranked(m.name), m.name))
   }
 
-  private lazy val rankOf: Map[String, Int] = {
-    def rank(n: String): Int =
-      byName(n).deps.map(d => rank(d) + 1).maxOption.getOrElse(0)
-    models.map(m => m.name -> rank(m.name)).toMap
-  }
-
-  /** Run all models in order. Build failure aborts downstream dependents but
-    * not independent branches; rule violations are stored and counted, never
-    * fatal. Models within a rank run concurrently when parallelism > 1
-    * (stored-failure appends are serialized — the Parquet table layer has no
-    * concurrent-append transaction).
+  /** Run every model; the results come back in [[order]]. Each model starts
+    * as soon as its deps have finished and a slot is free, the earliest in
+    * [[order]] first. Rule violations are stored and counted, never fatal.
+    * Stored-failure appends are serialized: the Parquet table layer has no
+    * concurrent-append transaction.
     *
     * Retries are PER MODEL (like per-entity ingestion retries): a step-level
     * re-run of the whole graph would re-build models that already succeeded
@@ -92,91 +101,95 @@ final class ModelGraph(models: Seq[Model], format: TableFormat,
     * violation rows.
     */
   def run(spark: SparkSession, retries: Int = 0, retrySleepMs: Long = 0L): Seq[ModelRun] = {
-    if (parallelism <= 1) runSequential(spark, retries, retrySleepMs)
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-        val failuresLock = new Object
-        order.groupBy(m => rankOf(m.name)).toSeq.sortBy(_._1).flatMap {
-          case (_, rank) =>
-            val futs = rank.map(m =>
-              Future(runOne(spark, m, failed, failuresLock, retries, retrySleepMs)))
-            futs.map(f => Await.result(f, Duration.Inf))
+    val slots = math.max(1, math.min(parallelism, models.size))
+    val pool = new JobPool[ModelRun](spark, slots)
+    val failuresLock = new Object
+    val done = mutable.Map[String, ModelRun]()
+    val waiting = mutable.ArrayBuffer.from(order)
+    var running = 0
+    def ready(m: Model) = m.deps.forall(done.contains)
+    def blocked(m: Model) = m.deps.exists(d => !done(d).ok)
+    try {
+      while (done.size < order.size) {
+        // a skip needs no slot; a waiting model always has a running
+        // upstream (the graph is acyclic), so `next` cannot wait forever
+        waiting.find(m => ready(m) && (blocked(m) || running < slots)) match {
+          case Some(m) =>
+            waiting -= m
+            if (blocked(m))
+              done(m.name) = ModelRun(m.name, ok = false, 0, 0,
+                Some("skipped: upstream failure"))
+            else {
+              pool.submit(runOne(spark, m, failuresLock, retries, retrySleepMs))
+              running += 1
+            }
+          case None =>
+            val r = pool.next()
+            done(r.name) = r
+            running -= 1
         }
-      } finally pool.shutdown()
-    }
-  }
-
-  private def runSequential(spark: SparkSession, retries: Int,
-      retrySleepMs: Long): Seq[ModelRun] = {
-    val failed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val lock = new Object
-    order.map(m => runOne(spark, m, failed, lock, retries, retrySleepMs))
-  }
-
-  private def runOne(spark: SparkSession, m: Model,
-      failed: java.util.Set[String], failuresLock: Object,
-      retries: Int, retrySleepMs: Long): ModelRun = {
-    def attempt(remaining: Int): ModelRun = {
-      if (m.deps.exists(failed.contains)) {
-        failed.add(m.name)
-        ModelRun(m.name, ok = false, 0, 0, Some("skipped: upstream failure"))
-      } else Try {
-        val df = m.build(spark)
-        m.incrementalCol match {
-          case Some(c) if format.exists(spark, m.targetTable) =>
-            val hwm = spark.table(m.targetTable)
-              .agg(org.apache.spark.sql.functions.max(
-                org.apache.spark.sql.functions.col(c))).head().get(0)
-            val fresh =
-              if (hwm == null) df
-              else df.filter(org.apache.spark.sql.functions.col(c) >
-                org.apache.spark.sql.functions.lit(hwm))
-            format.appendMergeSchema(spark, fresh, m.targetTable)
-          case _ =>
-            format.overwrite(spark, df, m.targetTable)
-        }
-        // on-run-end statistics hook (reference dbt_project.yml:95-97
-        // ANALYZE TABLE ... COMPUTE STATISTICS) — feeds CBO broadcast and
-        // join-reorder decisions on the materialized tables
-        if (analyzeTables)
-          spark.sql(s"ANALYZE TABLE ${m.targetTable} COMPUTE STATISTICS")
-        val materialized = spark.table(m.targetTable)
-        // every count runs BEFORE the stored-failures append: the append is
-        // the last non-idempotent action of an attempt, so a transient
-        // failure anywhere else re-runs the attempt without having appended,
-        // and a failure during the append itself is the only (unavoidable)
-        // partial-write window — retries cannot double-append via a later
-        // count/ANALYZE blowing up
-        val rowCount = materialized.count()
-        val violations = m.rules.map { rs =>
-          val fails = rs.failures(materialized)
-          val n = fails.count()
-          failuresTable.foreach(t => failuresLock.synchronized {
-            format.appendMergeSchema(spark,
-              fails.select("table_name", "rule")
-                .withColumn("run_id", org.apache.spark.sql.functions.lit(runId)),
-              t)
-          })
-          n
-        }.getOrElse(0L)
-        ModelRun(m.name, ok = true, rowCount, violations)
-      } match {
-        case Success(r) => r
-        case Failure(_) if remaining > 0 =>
-          // overwrite-materialized models are idempotent per attempt; all
-          // counts/ANALYZE run before the stored-failures append (see above),
-          // so a retried attempt has not already appended violation rows
-          if (retrySleepMs > 0) Thread.sleep(retrySleepMs)
-          attempt(remaining - 1)
-        case Failure(e) =>
-          failed.add(m.name)
-          ModelRun(m.name, ok = false, 0, 0, Some(e.toString))
       }
+    } finally pool.shutdown()
+    order.map(m => done(m.name))
+  }
+
+  private def runOne(spark: SparkSession, m: Model, failuresLock: Object,
+      retries: Int, retrySleepMs: Long): ModelRun = {
+    def attempt(remaining: Int): ModelRun = Try {
+      val df = m.build(spark)
+      // an overwrite's written rows are the table, so they are counted on
+      // the write itself; an incremental append's are only the new rows,
+      // so the table is counted after it. Observations are single-use:
+      // each attempt makes its own
+      val rowCount = m.incrementalCol match {
+        case Some(c) if format.exists(spark, m.targetTable) =>
+          val hwm = spark.table(m.targetTable).agg(max(col(c))).head().get(0)
+          val fresh = if (hwm == null) df else df.filter(col(c) > lit(hwm))
+          format.appendMergeSchema(spark, fresh, m.targetTable)
+          spark.table(m.targetTable).count()
+        case _ =>
+          val written = new Observation(s"rows_${m.name}")
+          format.overwrite(spark,
+            df.observe(written, count(lit(1)).as("rows")), m.targetTable)
+          written.get("rows").asInstanceOf[Long]
+      }
+      // on-run-end statistics hook (reference dbt_project.yml:95-97
+      // ANALYZE TABLE ... COMPUTE STATISTICS) — feeds CBO broadcast and
+      // join-reorder decisions on the materialized tables
+      if (analyzeTables)
+        spark.sql(s"ANALYZE TABLE ${m.targetTable} COMPUTE STATISTICS")
+      // the stored-failures append is the attempt's LAST action, and its
+      // violation count comes from an Observation on that same write: a
+      // transient failure anywhere earlier re-runs the attempt without
+      // having appended, and a failure during the append itself is the only
+      // (unavoidable) partial-write window — retries cannot double-append
+      val violations = m.rules.map { rs =>
+        val fails = rs.failures(spark.table(m.targetTable))
+        failuresTable match {
+          case Some(t) =>
+            val stored = new Observation(s"violations_${m.name}")
+            failuresLock.synchronized {
+              format.appendMergeSchema(spark,
+                fails.select("table_name", "rule")
+                  .withColumn("run_id", lit(runId))
+                  .observe(stored, count(lit(1)).as("violations")),
+                t)
+            }
+            stored.get("violations").asInstanceOf[Long]
+          case None => fails.count()
+        }
+      }.getOrElse(0L)
+      ModelRun(m.name, ok = true, rowCount, violations)
+    } match {
+      case Success(r) => r
+      case Failure(_) if remaining > 0 =>
+        // overwrite-materialized models are idempotent per attempt, and the
+        // stored-failures append is the last action (see above), so a
+        // retried attempt has not already appended violation rows
+        if (retrySleepMs > 0) Thread.sleep(retrySleepMs)
+        attempt(remaining - 1)
+      case Failure(e) =>
+        ModelRun(m.name, ok = false, 0, 0, Some(e.toString))
     }
     attempt(retries)
   }

@@ -44,6 +44,16 @@ final case class PipelineReport(
   * in-session steps (SURVEY §3 E1 redesign) — no Py4J, no dbt-over-HTTP hop.
   * Fail-fast between steps; per-step retry with backoff replaces the
   * reference's subprocess retry policy (config.py:58-59).
+  *
+  * Steps are barriers: transformations start only after every ingest has
+  * finished. Within a step the work overlaps. `Ingestor.ingestAll` runs
+  * entities with different target tables at the same time (specs sharing a
+  * target run in declaration order), and `ModelGraph` starts each model as
+  * soon as its deps have finished, up to its `parallelism` cap (the dbt
+  * `threads` analogue, profiles.yml:10). Their worker threads run under the
+  * step's `graft-<step>` job group, set explicitly on each worker, so a step
+  * timeout's `cancelJobGroup` cancels every concurrent job of the step and
+  * listeners attribute those jobs to the step.
   */
 final class Orchestrator(cfg: AppConfig, format: TableFormat,
     retrySleepMs: Long = -1L,

@@ -1,11 +1,16 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{AppConfig, Layer}
-import graft.ingest.IngestSpec
-import graft.models.InsuranceModels
+import graft.ingest.{Ingestor, IngestSpec}
+import graft.models.{InsuranceModels, ModelGraph}
 import graft.pipeline.Orchestrator
 import graft.sources.ParquetTableFormat
 
@@ -16,20 +21,27 @@ import graft.sources.ParquetTableFormat
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  lazy val report = {
+  /** Claims and policies CSVs of the fixtures, policies with the dirty rows
+    * when `dirty`.
+    */
+  private def csvs(dirty: Boolean): (String, String) = {
     val dir = Fixtures.tempDir()
-    val claimsCsv = Fixtures.writeCsv(dir, "claims.csv",
-      Fixtures.claimsHeader, Fixtures.claimsRows)
-    val policiesCsv = Fixtures.writeCsv(dir, "policies.csv",
-      Fixtures.policiesHeader, Fixtures.policiesRows)
+    (Fixtures.writeCsv(dir, "claims.csv", Fixtures.claimsHeader, Fixtures.claimsRows),
+      Fixtures.writeCsv(dir, "policies.csv", Fixtures.policiesHeader,
+        Fixtures.policiesRows ++ (if (dirty) Fixtures.dirtyPoliciesRows else Nil)))
+  }
+
+  private def specs(cfg: AppConfig, claimsCsv: String, policiesCsv: String) = Seq(
+    IngestSpec("claims", claimsCsv, cfg.tableName(Layer.Bronze, "claims"),
+      dedupKeys = Seq("claim_id"), orderCol = Some("updated_at")),
+    IngestSpec("policies", policiesCsv, cfg.tableName(Layer.Bronze, "policies"),
+      dedupKeys = Seq("policy_id"), orderCol = Some("updated_at")))
+
+  lazy val report = {
+    val (claimsCsv, policiesCsv) = csvs(dirty = false)
     val cfg = AppConfig(appName = "graftpipe")
     val orch = new Orchestrator(cfg, ParquetTableFormat)
-    orch.run(spark,
-      specs = Seq(
-        IngestSpec("claims", claimsCsv, cfg.tableName(Layer.Bronze, "claims"),
-          dedupKeys = Seq("claim_id"), orderCol = Some("updated_at")),
-        IngestSpec("policies", policiesCsv, cfg.tableName(Layer.Bronze, "policies"),
-          dedupKeys = Seq("policy_id"), orderCol = Some("updated_at"))),
+    orch.run(spark, specs(cfg, claimsCsv, policiesCsv),
       models = InsuranceModels.graph(cfg, runId = "test-run-1"))
   }
 
@@ -98,9 +110,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("dirty data flows through with violations stored, pipeline tolerated") {
-    val dir = Fixtures.tempDir()
-    val policiesCsv = Fixtures.writeCsv(dir, "policies.csv",
-      Fixtures.policiesHeader, Fixtures.policiesRows ++ Fixtures.dirtyPoliciesRows)
+    val (_, policiesCsv) = csvs(dirty = true)
     val cfg = AppConfig(appName = "graftdirty")
     val orch = new Orchestrator(cfg, ParquetTableFormat)
     val rpt = orch.run(spark,
@@ -116,6 +126,104 @@ class PipelineSpec extends AnyFunSuite {
     val failures = spark.table(cfg.tableName(Layer.Gold, "test_failures"))
     assert(failures.count() > 0)
     assert(failures.select("rule").distinct().count() >= 3)
+  }
+
+  /** The medallion flow into `app`'s namespace with a fixed stamp, batch
+    * and run id. `serial` ingests spec by spec and runs the models with
+    * parallelism = 1; otherwise `ingestAll` and the default cap run them.
+    * Returns the results, every table's rows (sorted, without the
+    * wall-clock `dbt_run_timestamp`) and the stored failures per
+    * (table_name, rule).
+    */
+  private def medallion(app: String, claimsCsv: String, policiesCsv: String,
+      serial: Boolean) = {
+    val cfg = AppConfig(appName = app)
+    new Orchestrator(cfg, ParquetTableFormat).bootstrap(spark)
+    val ingestor = new Ingestor(ParquetTableFormat, "cmp-batch",
+      Some(java.time.Instant.parse("2024-05-01T00:00:00Z")))
+    val sp = specs(cfg, claimsCsv, policiesCsv)
+    val ingests =
+      if (serial) sp.map(ingestor.ingest(spark, _)) else ingestor.ingestAll(spark, sp)
+    val failures = cfg.tableName(Layer.Gold, "test_failures")
+    val graph = InsuranceModels.graph(cfg, runId = "cmp-run")
+    val runs = (if (serial) new ModelGraph(graph, ParquetTableFormat,
+        failuresTable = Some(failures), runId = "cmp-run", parallelism = 1)
+      else new ModelGraph(graph, ParquetTableFormat,
+        failuresTable = Some(failures), runId = "cmp-run")).run(spark)
+    val tables = Layer.all.flatMap { l =>
+      spark.catalog.listTables(cfg.database(l)).collect().filterNot(_.isTemporary)
+        .map(t => t.name -> spark.table(s"${cfg.database(l)}.${t.name}")
+          .drop("dbt_run_timestamp").collect().map(_.toString).sorted.toSeq)
+    }.toMap
+    val stored = spark.table(failures).groupBy("table_name", "rule").count()
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    (ingests, runs, tables, stored)
+  }
+
+  Seq(false, true).foreach { dirty =>
+    val fixtures = if (dirty) "dirty" else "clean"
+    test(s"parallelism = 1 and the default give the same results ($fixtures fixtures)") {
+      val (claimsCsv, policiesCsv) = csvs(dirty)
+      val (ingS, runS, tabS, failS) = medallion(s"graftser$fixtures", claimsCsv, policiesCsv, serial = true)
+      val (ingC, runC, tabC, failC) = medallion(s"graftcon$fixtures", claimsCsv, policiesCsv, serial = false)
+      assert(ingS.forall(_.ok) && runS.forall(_.ok))
+      assert(ingS == ingC)
+      assert(runS == runC)
+      assert(tabS.keySet == tabC.keySet && tabS.size == 9)
+      tabS.foreach { case (t, rows) => assert(rows == tabC(t), t) }
+      assert(failS == failC)
+      assert(failS.values.sum == runS.map(_.testViolations).sum)
+      assert(failS.nonEmpty == dirty)
+    }
+  }
+
+  test("every job of the concurrent ingests and models runs under its step's job group") {
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add((
+        e.properties.getProperty("spark.jobGroup.id"),
+        e.properties.getProperty("spark.job.description")))
+    }
+    val (claimsCsv, policiesCsv) = csvs(dirty = true)
+    val cfg = AppConfig(appName = "graftgroups")
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val rpt = new Orchestrator(cfg, ParquetTableFormat).run(spark,
+        specs(cfg, claimsCsv, policiesCsv), InsuranceModels.graph(cfg, runId = "groups"))
+      assert(rpt.ok)
+      // listener events arrive in order: once this marker job is seen, so
+      // are all of the run's jobs
+      sc.setJobGroup("graft-test-marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!jobs.asScala.exists(_._1 == "graft-test-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    val run = jobs.asScala.toSeq.takeWhile(_._1 != "graft-test-marker")
+    assert(run.map(_._1).distinct == Seq("graft-ingestion", "graft-transformations"))
+    assert(run.forall { case (group, desc) => group == s"graft-$desc" })
+  }
+
+  test("ingest specs sharing a target table both land, beside another target") {
+    val cfg = AppConfig(appName = "graftshared")
+    new Orchestrator(cfg, ParquetTableFormat).bootstrap(spark)
+    val dir = Fixtures.tempDir()
+    val (early, late) = Fixtures.claimsRows.splitAt(3)
+    val claims = cfg.tableName(Layer.Bronze, "claims")
+    val sp = Seq(
+      IngestSpec("claims_early", Fixtures.writeCsv(dir, "early.csv",
+        Fixtures.claimsHeader, early), claims),
+      IngestSpec("policies", Fixtures.writeCsv(dir, "policies.csv",
+        Fixtures.policiesHeader, Fixtures.policiesRows),
+        cfg.tableName(Layer.Bronze, "policies")),
+      IngestSpec("claims_late", Fixtures.writeCsv(dir, "late.csv",
+        Fixtures.claimsHeader, late), claims))
+    val rs = new Ingestor(ParquetTableFormat, "shared").ingestAll(spark, sp)
+    assert(rs.map(r => (r.name, r.ok, r.rowsWritten)) ==
+      Seq(("claims_early", true, 3L), ("policies", true, 5L), ("claims_late", true, 4L)))
+    assert(spark.table(claims).count() == 7)
+    assert(spark.table(claims).select("source_file").distinct().count() == 2)
   }
 
   test("a step exceeding its timeout aborts with a timeout error") {
