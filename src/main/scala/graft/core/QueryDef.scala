@@ -16,8 +16,7 @@ object QueryDef {
   def apply(build: (SparkSession, String) => DataFrame, sql: String): QueryDef =
     QueryDef(build, Some(sql))
 
-  /** Deterministic gate output: `df.persist().orderBy(cols)`, registered
-    * for release.
+  /** Deterministic gate output: `Materialize.pin(df).orderBy(cols)`.
     *
     * A global sort shuffles by RANGE, and building the range bounds runs a
     * SAMPLING pass over the sort's child — so everything between the last
@@ -25,17 +24,14 @@ object QueryDef {
     * to shuffle). For a gate whose final stage is real work (windows,
     * rebuild joins, explodes), that is a 2x on the most expensive stage —
     * measured on q195 as two back-to-back 0.7 s passes over the same
-    * window pipeline. The lazy persist fixes it without any extra job:
-    * the sampling pass (always first, by construction of RangePartitioner)
+    * window pipeline. The lazy pin fixes it without any extra job: the
+    * sampling pass (always first, by construction of RangePartitioner)
     * fills the cache and the shuffle map reads blocks. At scale the trade
     * is one output-sized block write+read against recomputing the final
     * stage — the standard materialize-before-global-sort discipline.
     */
-  def orderedOut(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.operators.ShardCaches.register(p)
-    p.orderBy(cols: _*)
-  }
+  def orderedOut(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
+    Materialize.pin(df).orderBy(cols: _*)
 
   def orderedOut(df: DataFrame, first: String, rest: String*): DataFrame =
     orderedOut(df,

@@ -78,7 +78,7 @@ object Sessions {
       // fragments per query); a long-lived driver serving many query
       // shapes wants the same headroom (code cache is already 1g)
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // static conf: reliable Barriers.cut checkpoints are deleted once
+      // static conf: reliable Materialize.cut checkpoints are deleted once
       // their frame is unreferenced, instead of living as long as the app
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .withExtensions(new GraftExtensions)
@@ -94,7 +94,7 @@ object Sessions {
     * the [[graft.GraftExtensions]] catalogue (functions, optimizer rules,
     * planner strategies), once. A session that already has the catalogue —
     * any session from [[local]] — is returned untouched. Static confs cannot
-    * be set after the build; see [[Barriers]] for the one a foreign session
+    * be set after the build; see [[Materialize.cut]] for the one a foreign session
     * needs for reliable checkpoints to be cleaned.
     */
   def tune(spark: SparkSession): SparkSession = {

@@ -41,14 +41,10 @@ object Bm25 {
 
     val toks = TextFunctions.hashAlignedTokens(col(textCol))
     // the tokenized corpus feeds three branches (stats, document
-    // frequencies, term frequencies) — persist once; registered so
-    // Curriculum.releaseCaches reclaims it in long-lived sessions (the
-    // Verify/Bench harnesses clear the block store between queries)
-    val withLen = docs.select(col(idCol),
+    // frequencies, term frequencies) — pin it once
+    val withLen = graft.core.Materialize.pin(docs.select(col(idCol),
       TextFunctions.hashAlignedTokenCount(col(textCol)).cast("long").as("dl"),
-      toks.as("__toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ShardCaches.register(withLen)
+      toks.as("__toks")))
     val qTerms: Seq[(String, String)] = queries.flatMap { case (qid, qt) =>
       qt.trim.split("\\s+").filter(_.nonEmpty).distinct.map(t => (qid, t))
     }

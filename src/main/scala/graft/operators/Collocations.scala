@@ -30,23 +30,14 @@ object Collocations {
     */
   def bigramLift(df: DataFrame, textCol: String, minCount: Long): DataFrame = {
     // the tokenized corpus feeds the unigram tally, the bigram tally and
-    // the bigram total; the unigram counts feed their total and both join
-    // sides — persist each once (corpus- and vocabulary-sized
-    // respectively) instead of re-tokenizing per branch; registered so
-    // Curriculum.releaseCaches can reclaim them
-    val toks = df.select(TextFunctions.tokens(col(textCol)).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ShardCaches.register(toks)
-    // eager fill: the unigram tally, bigram tally and bigram total are
-    // independent map stages AQE submits concurrently — each would
-    // re-tokenize the corpus against a lazily-persisted frame
-    toks.count()
-    val uni = toks.select(explode(col("t")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ShardCaches.register(uni)
-    // same race: the total aggregate and both lift join sides read uni
-    uni.count()
+    // the bigram total (shared: three concurrent stages); the unigram
+    // counts feed their total and both join sides, but they are a
+    // vocabulary-sized aggregate over the filled tokens, so a lazy pin is
+    // enough — a recompute re-reads blocks, it never re-tokenizes
+    val toks = graft.core.Materialize.share(
+      df.select(TextFunctions.tokens(col(textCol)).as("t")))
+    val uni = graft.core.Materialize.pin(toks.select(explode(col("t")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c")))
     val totalT = uni.agg(sum(col("c")).as("__T"))
     val bi = toks
       .select(explode(TextFunctions.shinglesOfTokens(col("t"), 2)).as("s"))

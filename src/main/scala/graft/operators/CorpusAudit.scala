@@ -56,11 +56,10 @@ object CorpusAudit {
   def contingency(df: DataFrame, splitCol: String, groupCol: String): DataFrame = {
     // ONE corpus scan: margins and the grand total re-aggregate the
     // cells frame (category-cardinality), pinned so the three consumers
-    // don't each recompute the scan; released by the session cache sweep
-    val cells = df.groupBy(col(splitCol).as("split"), col(groupCol).as("grp"))
-      .agg(count(lit(1)).as("observed"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ShardCaches.register(cells)
+    // don't each recompute the scan
+    val cells = graft.core.Materialize.pin(
+      df.groupBy(col(splitCol).as("split"), col(groupCol).as("grp"))
+        .agg(count(lit(1)).as("observed")))
     val nRow = cells.agg(sum(col("observed"))).first()
     val n = if (nRow.isNullAt(0)) 0L else nRow.getLong(0)
     val rowTot = cells.groupBy("split").agg(sum(col("observed")).as("__rn"))

@@ -28,36 +28,25 @@ import org.apache.spark.sql.functions._
   */
 object Curriculum {
 
-  /** Unpersist every shard cache this session accumulated through the
-    * prefix-sum operators (Curriculum, Packing, and the rank-based ops
-    * built on them: SortedNeighborhood, Vocabulary, tokenBudgetFill).
-    * Call only after the ranked results have been fully consumed — a plan
-    * still pending over a released cache recomputes with FRESH sampled
-    * boundaries and would rank inconsistently. Registry bookkeeping
-    * (including self-pruning after an external `clearCache()`) lives in
-    * [[ShardCaches]].
-    */
-  def releaseCaches(spark: org.apache.spark.sql.SparkSession): Unit =
-    ShardCaches.release(spark)
-
   /** Each row with its global 1-based rank in `orderCols` order (column
     * `rank`) and the corpus row count (column `total`). The order must be a
     * total order (include a unique tie-break column) for the rank to be
     * well-defined.
     *
-    * Cache lifecycle: the range-sharded corpus is persisted because the
+    * Cache lifecycle: the range-sharded corpus is pinned because the
     * per-shard counts (phase 1) and the within-shard ranking (phase 2) MUST
     * see the same sampled shard boundaries — a recompute would resample
     * them and desynchronize the prefix map, so the cache is a correctness
     * pin, not an optimization, and is deliberately NOT auto-released.
     * Long-lived sessions calling rank-based operators repeatedly should
-    * call [[releaseCaches]] once the ranked results are fully consumed
-    * (the Bench/Verify drivers clear the cache between queries).
+    * call [[graft.core.Materialize.release]] once the ranked results are
+    * fully consumed (the Bench/Verify drivers clear the cache between
+    * queries).
     */
   def withGlobalRank(df: DataFrame, orderCols: Seq[String]): DataFrame = {
     val shard = "graft_cur_shard"
-    // shared two-phase scaffolding (persist pin, cache registration,
-    // prefix fold) lives in ShardedScan; counts scan, row_number ranks
+    // shared two-phase scaffolding (correctness pin, prefix fold) lives
+    // in ShardedScan; counts scan, row_number ranks
     val s = ShardedScan.prefix(df, orderCols, shard, count(lit(1)), 0L, _ + _)
     val withinShard = Window.partitionBy(shard).orderBy(orderCols.map(col): _*)
     s.frame

@@ -20,11 +20,9 @@ import org.apache.spark.sql.functions._
   * tiny scalar aggregate, and a TakeOrderedAndProject top-k — the corpus
   * is scanned once per snapshot and never shuffled. The joined count frame
   * has two consumers (scalar totals + the ranked output), so it is
-  * materialized once via an eager [[graft.core.Barriers.cut]] —
-  * vocabulary-sized, reclaimed when the result frame is dropped (local
-  * blocks by the ContextCleaner; reliable files only under the cleaner
-  * conf [[graft.core.Barriers]] names); without it both consumers would
-  * re-run the corpus scans.
+  * materialized once (vocabulary-sized) via an eager
+  * [[graft.core.Materialize.cut]]; without it both consumers would re-run
+  * the corpus scans.
   */
 object Drift {
 
@@ -45,7 +43,7 @@ object Drift {
       .select(col("term"),
         coalesce(col("cnt_old"), lit(0L)).as("cnt_old"),
         coalesce(col("cnt_new"), lit(0L)).as("cnt_new"))
-      .transform(graft.core.Barriers.cut)
+      .transform(graft.core.Materialize.cut)
     val stats = joined
       .agg(sum(col("cnt_old")).as("t_old"), sum(col("cnt_new")).as("t_new"),
         count(lit(1)).as("v"))

@@ -42,13 +42,11 @@ object DupGroups {
     */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 25, maxDriverEdges: Long = 1000000L): DataFrame = {
-    // persist, NOT localCheckpoint: the edge projection is read twice (count
-    // + one strategy) and must be releasable — Dataset.unpersist frees cache
-    // entries but not checkpoints (local blocks wait for the ContextCleaner,
-    // reliable files for its cleanCheckpoints conf), so a checkpoint here
-    // could never be released on exit
-    val e = edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // pin, NOT cut: the edge projection is read twice (count + one
+    // strategy) and must be released on exit — unpersist frees a pin but
+    // not a cut
+    val e = graft.core.Materialize.pin(
+      edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v")))
     // Size-based strategy switch, the same philosophy as Spark's broadcast
     // threshold: a thresholded similarity pair list is usually orders of
     // magnitude smaller than its corpus, and below `maxDriverEdges` a driver
@@ -94,18 +92,16 @@ object DupGroups {
   }
 
   private def distributedComponents(e: DataFrame, maxIter: Int): DataFrame = {
-    // localCheckpoint, not persist: each round references the previous label
+    // cut, not pin: each round references the previous label
     // frame TWICE (join + union), so an un-truncated logical plan doubles per
     // round — exponential analysis/optimization cost that dwarfs execution
     // after ~15 rounds. Checkpointing cuts the lineage to the materialized
     // partitions, keeping every round's plan constant-size. Edges are tiny
     // (already-thresholded pairs), so the materialization is cheap. The
-    // round frames' checkpoints are reclaimed by the ContextCleaner once
-    // unreferenced — local blocks always, reliable files only under
-    // spark.cleaner.referenceTracking.cleanCheckpoints (see Barriers;
-    // Dataset.unpersist frees neither) — bounded by rounds × label-frame
-    // size, label frames being vertex-sized.
-    val sym = graft.core.Barriers.cut(
+    // round frames' checkpoints wait for the reclamation Materialize.cut
+    // describes — bounded by rounds × label-frame size, label frames being
+    // vertex-sized.
+    val sym = graft.core.Materialize.cut(
       e.union(e.select(col("v").as("u"), col("u").as("v"))))
 
     // null-safe: an empty edge list yields a null SUM — treat as zero so the
@@ -115,7 +111,7 @@ object DupGroups {
       Option(labels.agg(sum(col("label").cast("decimal(38,0)"))).head().getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
 
-    var cur = graft.core.Barriers.cut(
+    var cur = graft.core.Materialize.cut(
       sym.groupBy(col("u").as("vertex"))
         .agg(min(least(col("u"), col("v"))).as("label")))
     var curSum = labelSum(cur)
@@ -123,10 +119,10 @@ object DupGroups {
     var round = 0
     while (!converged && round < maxIter) {
       // one shuffle on edges (join by u) + one on vertices (groupBy) — the
-      // corpus never appears; the eager localCheckpoint truncates lineage so
+      // corpus never appears; the eager cut truncates lineage so
       // each round reads the previous labels' materialized partitions, not
       // the whole chain of prior rounds
-      val next = graft.core.Barriers.cut(
+      val next = graft.core.Materialize.cut(
         sym.join(cur, sym("u") === cur("vertex"))
           .select(sym("v").as("vertex"), col("label"))
           .union(cur)
@@ -201,9 +197,9 @@ object DupGroups {
     */
   def semanticDupGroups(corpus: DataFrame, kCells: Int, threshold: Double,
       iters: Int = 3): DataFrame = {
-    val cached = corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = graft.core.Materialize.pin(corpus)
     // connectedComponents materializes its labels (driver union-find local
-    // relation or eager localCheckpoints) before returning, so by the time
+    // relation or eager cuts) before returning, so by the time
     // embeddingDupGroups comes back nothing lazy references the cache —
     // release it instead of pinning a corpus-sized block set per call
     try {
@@ -305,22 +301,20 @@ object DupGroups {
     try {
       // dup-mass-sized, read by two consumers (survivor signatures + the
       // final anti-join, which executes AFTER this method returns) — an
-      // eager localCheckpoint materializes it once and truncates lineage so
-      // the returned plan reads its blocks instead of re-running the LSH
-      // probe over the by-then-unpersisted signatures; the checkpoint is
-      // reclaimed when the result frame is dropped, under the conditions
-      // distributedComponents documents
+      // eager cut materializes it once and truncates lineage so the
+      // returned plan reads its blocks instead of re-running the LSH probe
+      // over the by-then-unpersisted signatures
       val flagged = TextDedup.minHashVerifyAgainst(
         TextDedup.lshCandidatePairsAgainst(bs, cs, bands, md5Parity),
         bs, cs, minJaccard)
         .select(col("doc_a").as("doc")).distinct()
-        .transform(graft.core.Barriers.cut)
+        .transform(graft.core.Materialize.cut)
       // survivor signatures feed FOUR plan branches (both sides of the
       // in-batch band self-join + both probe sides of the verify) and the
       // closure executes after bs is unpersisted — checkpoint like flagged,
       // or the batch-vs-flagged anti-join re-runs once per branch over
       // by-then-cold signatures
-      val freshSigs = graft.core.Barriers.cut(
+      val freshSigs = graft.core.Materialize.cut(
         bs.join(flagged, Seq("doc"), "left_anti"))
       val verified = TextDedup.minHashVerify(
         if (md5Parity) TextDedup.lshCandidatePairsIdentity(freshSigs, bands)

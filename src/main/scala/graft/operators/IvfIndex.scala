@@ -26,12 +26,13 @@ object IvfIndex {
   /** Train k-means cells and assign the corpus — no I/O; pair with [[save]]
     * to persist. Training touches the corpus once per iteration (map-side-
     * combined mean aggregation); assignment is a zero-shuffle projection.
-    * The corpus stays persisted because the returned assignment reads it;
+    * The corpus stays pinned because the returned assignment reads it;
     * after [[save]] the on-disk index is self-contained and the caller can
-    * `corpus.unpersist()` (a [[load]]ed index holds no cache at all).
+    * `corpus.unpersist()` or [[graft.core.Materialize.release]] (a
+    * [[load]]ed index holds no cache at all).
     */
   def build(corpus: DataFrame, kCells: Int, iters: Int = 3): Index = {
-    val cached = corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = graft.core.Materialize.pin(corpus)
     val centroids = Similarity.kmeansCentroids(cached, kCells, iters)
     Index(centroids, Similarity.assignCells(cached, centroids))
   }

@@ -97,15 +97,12 @@ object KmvSketch {
     * shape this audits.
     */
   def pairwiseOverlap(skIn: DataFrame, groupCol: String, k: Int): DataFrame = {
-    // the sketch frame feeds FOUR branches (per-side estimates, the source
-    // list, the pair lift, and the broadcast builds) that AQE submits as
-    // independent stages — persist + eager fill so the corpus-pass sketch
-    // aggregate runs once instead of once per branch (measured on q224 as
-    // two concurrent 0.4 s sketch builds); sketch rows are groups x k,
-    // broadcast-class
-    val sk = skIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ShardCaches.register(sk)
-    sk.count()
+    // shared: the sketch frame feeds FOUR branches (per-side estimates,
+    // the source list, the pair lift, and the broadcast builds), so the
+    // corpus-pass sketch aggregate runs once instead of once per branch
+    // (measured on q224 as two concurrent 0.4 s sketch builds); sketch
+    // rows are groups x k, broadcast-class
+    val sk = graft.core.Materialize.share(skIn)
     val sideEst = estimate(sk, groupCol, k)
       .select(col(groupCol).cast("string").as("g"), col("kmv_estimate"))
     val src = sk.select(col(groupCol).cast("string").as("g")).distinct()

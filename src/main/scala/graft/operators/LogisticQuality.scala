@@ -85,12 +85,11 @@ object LogisticQuality {
       dim: Int, maxN: Int = 1, iters: Int = 20, lr: Double = 1.0,
       l2: Double = 0.0): Model = {
     require(dim >= 1 && iters >= 0)
-    val feat = docs
+    val feat = graft.core.Materialize.pin(docs
       .select(labelCol.cast("double").as("__y"),
         Dsir.featureBuckets(col(textCol), maxN, dim).as("__f"))
       .filter(size(col("__f")) > 0)
-      .select(col("__y"), col("__f"), size(col("__f")).cast("double").as("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("__y"), col("__f"), size(col("__f")).cast("double").as("__n")))
     try {
       val nDocs = feat.count().toDouble
       require(nDocs > 0, "no non-empty training documents")

@@ -37,11 +37,10 @@ object Packing {
   def withGlobalOffsets(df: DataFrame, orderCols: Seq[String],
       weightCol: String): DataFrame = {
     val shard = "graft_pack_shard"
-    // shared two-phase scaffolding (persist-as-correctness-pin, cache
-    // registration, prefix fold) lives in ShardedScan; NOTE releaseCaches
-    // is a session-wide sweep over every prefix-scan cache: calling it
-    // with a packed/ranked result still PENDING recomputes that result
-    // over freshly-sampled shard boundaries (inconsistent offsets) —
+    // shared two-phase scaffolding (correctness pin, prefix fold) lives in
+    // ShardedScan; NOTE Materialize.release is a session-wide sweep:
+    // calling it with a packed/ranked result still PENDING recomputes that
+    // result over freshly-sampled shard boundaries (inconsistent offsets) —
     // consume all such results first, as its scaladoc requires.
     // cast BEFORE summing, matching the within-shard window below —
     // casting the sum instead would make fractional weights contribute to

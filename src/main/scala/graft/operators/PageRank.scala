@@ -11,12 +11,13 @@ import org.apache.spark.sql.functions._
   * stationary mass ranks node importance.
   *
   * Scale design: state per iteration is one (node, rank) frame — node-
-  * sized, not edge-sized; the edge list is persisted ONCE partitioned by
-  * source and every iteration reuses it (the join key never changes, so
-  * AQE reuses the exchange); each iteration is exactly one join + one
-  * grouped aggregate, the minimal shuffle a mass-passing step needs.
-  * Iterations are a driver loop over persisted frames with the previous
-  * round unpersisted — lineage stays bounded.
+  * sized, not edge-sized; the edge list is materialized ONCE
+  * ([[graft.core.Materialize.cut]]) partitioned by source and every
+  * iteration reuses it (the join key never changes, so AQE reuses the
+  * exchange); each iteration is exactly one join + one grouped aggregate,
+  * the minimal shuffle a mass-passing step needs. Iterations are a driver
+  * loop whose rank frame is cut every `checkpointEvery` rounds — lineage
+  * stays bounded.
   *
   * Determinism: the production path (`ordered = false`) sums contributions
   * in partition-arrival order (fast, ~ulp drift run to run). The audit
@@ -44,7 +45,7 @@ object PageRank {
     // the raw edge list feeds THREE consumers before the loop (the degree
     // aggregate, the degree join, and the dangling-node stats), and the
     // symmetrize shape upstream references its input TWICE (p ∪ swap(p)) —
-    // an eager localCheckpoint materializes the derivation once and
+    // an eager cut materializes the derivation once and
     // TRUNCATES the plan to a LogicalRDD. persist+count did the same work
     // but left the full lineage in the plan: every downstream reference
     // re-inlined the edge derivation (the q161 gate's physical plan held
@@ -52,8 +53,7 @@ object PageRank {
     // §3.3 "enormous plans: planning time itself becomes the bottleneck"),
     // and profiled iteration stages re-read the base parquet (12-14
     // CPU-s/stage at sf0.1) where checkpoint blocks are reused
-    // unconditionally. Checkpoints are reclaimed when the frames drop out of
-    // scope, under the conditions DupGroups.distributedComponents documents.
+    // unconditionally.
     // degree-annotated edges materialize ONCE, in ONE barrier: the
     // out-degree rides along as a window count over the source-partitioned
     // edges, so the degree aggregate + degree join (and their own edge-
@@ -61,13 +61,13 @@ object PageRank {
     // materialization instead of two, and locally it removes a barrier
     // job plus the join stages (the r10 shape checkpointed `e`, derived
     // `deg` by groupBy, joined, and checkpointed AGAIN)
-    val withDeg: DataFrame = graft.core.Barriers.cut(
+    val withDeg: DataFrame = graft.core.Materialize.cut(
       edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
         .repartition(col("__s"))
         .withColumn("__od", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy("__s"))))
     locally {
-      val nodes = graft.core.Barriers.cut(
+      val nodes = graft.core.Materialize.cut(
         withDeg.select(col("__s").as("node"))
           .union(withDeg.select(col("__d").as("node"))).distinct())
       // one driver action for BOTH the node count and the dangling check
@@ -90,7 +90,7 @@ object PageRank {
       // the DupGroupsSpec failure mode), and the FINAL frame is always
       // materialized so the result survives edge-frame reclamation
       var pr = nodes.select(col("node"), lit(1.0 / n).as("rank"))
-      def materialize(df: DataFrame): DataFrame = graft.core.Barriers.cut(df)
+      def materialize(df: DataFrame): DataFrame = graft.core.Materialize.cut(df)
       var it = 0
       while (it < iters) {
         val contrib = withDeg.join(pr, withDeg("__s") === pr("node"))

@@ -51,17 +51,13 @@ object PrefixFilter {
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       t: Double, n: Int = 3): DataFrame = {
     require(t > 0.0 && t <= 1.0, s"threshold must be in (0, 1], got $t")
-    val toks = docs
+    // shared: the df aggregate, the rank join side and the set aggregate
+    // all read this md5 shingle expansion
+    val toks = graft.core.Materialize.share(docs
       .filter(trim(col(textCol)) =!= "")
       .select(col(idCol).as("doc_id"),
         explode(array_distinct(ColumnBridge.column(ShingleHashesMd5(
-          ColumnBridge.expression(col(textCol)), n)))).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ShardCaches.register(toks)
-    // eager fill: the df aggregate, the rank join side and the set
-    // aggregate consume this expansion as independent concurrent stages —
-    // lazily persisted, each re-ran the md5 shingle kernel over the corpus
-    toks.count()
+          ColumnBridge.expression(col(textCol)), n)))).as("h")))
     // EVERY join side below grows with the corpus (the df aggregate's
     // group domain is the shingle vocabulary, the set frame is
     // doc-count-sized with |d|-long arrays, candidates are pair-sized) —

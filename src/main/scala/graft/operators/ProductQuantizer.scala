@@ -71,11 +71,10 @@ object ProductQuantizer {
     require(dim > 0, "cannot train PQ codebooks on an empty corpus")
     require(dim % m == 0, s"embedding dim $dim must divide by m=$m")
     val subDim = dim / m
-    val subs = corpus.select(col("vec_id"), posexplode(
+    val subs = graft.core.Materialize.pin(corpus.select(col("vec_id"), posexplode(
         array((0 until m).map(s =>
           slice(col("embedding"), s * subDim + 1, subDim)): _*)))
-      .toDF("vec_id", "s", "embedding")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .toDF("vec_id", "s", "embedding"))
     def step(cellOfRow: Column): Array[Array[Array[Float]]] =
       collectBooks(Similarity.ivfCentroids(
         subs.withColumn("ckey", col("s") * kCodes + cellOfRow), "ckey", subDim),

@@ -13,11 +13,12 @@ import org.apache.spark.sql.functions._
   * within-shard window on top — sum, row_number, or max — so each shard
   * ranks only its own slice and no scan ever funnels through one task.
   *
-  * One definition of the shared concerns: the persist is a CORRECTNESS
-  * pin (phase 1's shard boundaries must be bitwise the ones phase 2
-  * sees — a recompute would resample them and desynchronize the prefix
-  * map), the cache registers with [[ShardCaches]] for session-level
-  * release, and an empty input degrades to a constant-identity lookup.
+  * One definition of the shared concerns: the sharded frame is a
+  * CORRECTNESS pin ([[graft.core.Materialize.pin]]: phase 1's shard
+  * boundaries must be bitwise the ones phase 2 sees — a recompute would
+  * resample them and desynchronize the prefix map), released with the
+  * session's other pins by [[graft.core.Materialize.release]], and an
+  * empty input degrades to a constant-identity lookup.
   */
 private[operators] object ShardedScan {
 
@@ -34,10 +35,9 @@ private[operators] object ShardedScan {
   def prefix(df: DataFrame, orderCols: Seq[String], shardCol: String,
       perShard: Column, identity: Long,
       combine: (Long, Long) => Long): Sharded = {
-    val sharded = df.repartitionByRange(orderCols.map(col): _*)
-      .withColumn(shardCol, spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ShardCaches.register(sharded)
+    val sharded = graft.core.Materialize.pin(
+      df.repartitionByRange(orderCols.map(col): _*)
+        .withColumn(shardCol, spark_partition_id()))
     val shardVals = sharded.groupBy(shardCol).agg(perShard.as("v"))
       .collect().map(r => r.getInt(0) ->
         (if (r.isNullAt(1)) identity else r.getLong(1))).toMap

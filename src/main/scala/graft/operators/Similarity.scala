@@ -250,12 +250,12 @@ object Similarity {
     *
     * Plan shape: k-means training (one map-side-combined groupBy per Lloyd
     * iteration), then ONE broadcast join of the corpus against the k-row
-    * centroid table — the corpus never shuffles. The corpus is persisted
+    * centroid table — the corpus never shuffles. The corpus is pinned
     * for the duration (training scans it per iteration) and stays cached
     * for the caller's downstream actions.
     */
   def prototypicality(corpus: DataFrame, kCells: Int, iters: Int = 3): DataFrame = {
-    val cached = corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = graft.core.Materialize.pin(corpus)
     val cents = kmeansLocal(cached, kCells, iters)
     prototypicalityLocal(cached, cents)
   }
@@ -280,13 +280,13 @@ object Similarity {
   }
 
   /** IVF with trained (k-means) cells: train, assign, probe. The corpus is
-    * persisted for the duration — training scans it once per iteration.
+    * pinned for the duration — training scans it once per iteration.
     */
   def knnIvfTrained(corpus: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int, kCells: Int, iters: Int = 3): DataFrame = {
-    val cached = corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val assigned = assignCellsLocal(cached, kmeansLocal(cached, kCells, iters))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = graft.core.Materialize.pin(corpus)
+    val assigned = graft.core.Materialize.pin(
+      assignCellsLocal(cached, kmeansLocal(cached, kCells, iters)))
     knnIvf(assigned, queries, "cell", k, nprobe)
   }
 

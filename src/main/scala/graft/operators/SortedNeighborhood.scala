@@ -35,20 +35,15 @@ object SortedNeighborhood {
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
       sortCol: String, window: Int, n: Int, minJaccard: Double): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
-    val ranked = Curriculum.withGlobalRank(
+    // shared: both join sides read the ranked+shingled frame (measured on
+    // q97 as two concurrent ~1.2 CPU-s shingle passes when lazily pinned)
+    val ranked = graft.core.Materialize.share(Curriculum.withGlobalRank(
       df.select(col(idCol).as("__id"), col(textCol).as("__text"),
         col(sortCol).as("__key")),
       Seq("__key", "__id"))
       .select(col("__id"), col("rank"),
         ColumnBridge.column(ShingleHashes(
-          ColumnBridge.expression(col("__text")), n)).as("__sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ShardCaches.register(ranked)
-    // eager fill: both join sides consume the ranked+shingled frame as
-    // independent concurrent map stages — lazily persisted, each re-ran
-    // the shingle kernel over the whole corpus (measured on q97 as two
-    // concurrent ~1.2 CPU-s passes)
-    ranked.count()
+          ColumnBridge.expression(col("__text")), n)).as("__sh")))
     val lhs = ranked
       .select(col("__id").as("id_a"), col("__sh").as("sh_a"),
         explode(sequence(col("rank") + 1, col("rank") + window)).as("rank"))

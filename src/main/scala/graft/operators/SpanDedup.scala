@@ -53,18 +53,11 @@ object SpanDedup {
     */
   def duplicatedWindows(df: DataFrame, idCol: String, textCol: String,
       k: Int, minDocFreq: Int = 2, keepFirstDoc: Boolean = false): DataFrame = {
-    // the corpus-×-windows expansion feeds BOTH the doc-frequency aggregate
-    // and the hits join — persist it so the shingle explode (the operator's
-    // dominant cost) runs once per action, same discipline as
-    // TextDedup.ngramJaccardPairs' shingle expansion
-    val wins = positionalWindows(df, idCol, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill: the doc-frequency aggregate and the hits join are
-    // independent map stages AQE submits concurrently — each would
-    // recompute the shingle explode against a lazily-persisted frame
-    // (measured on q110/q111 as two concurrent full expansion passes).
-    // One count() runs the expansion once; both consumers read blocks.
-    wins.count()
+    // shared: the corpus-×-windows expansion feeds BOTH the doc-frequency
+    // aggregate and the hits join, so the shingle explode (the operator's
+    // dominant cost) runs once (measured on q110/q111 as two concurrent
+    // full expansion passes when lazily pinned)
+    val wins = graft.core.Materialize.share(positionalWindows(df, idCol, textCol, k))
     // duplicated-window set: map-side partial agg on the 64-bit hash; only
     // hashes clearing the doc-frequency bar survive to the join
     val dup = wins.groupBy("h")
@@ -191,11 +184,8 @@ object SpanDedup {
     */
   def stripSelfRepeats(df: DataFrame, idCol: String, textCol: String, k: Int,
       minCount: Int = 2): DataFrame = {
-    val wins = positionalWindows(df, idCol, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill — see duplicatedWindows (concurrent consumer stages
-    // recompute a lazily-persisted expansion)
-    wins.count()
+    // shared, as in duplicatedWindows
+    val wins = graft.core.Materialize.share(positionalWindows(df, idCol, textCol, k))
     val rep = wins.groupBy(col(idCol), col("h"))
       .agg(count(lit(1)).as("n"), min(col("pos")).as("first_pos"))
       .filter(col("n") >= minCount)

@@ -87,12 +87,9 @@ object TextDedup {
       .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
     if (!materialize) result
     else {
-      // pairs output is tiny (post-threshold); pinning it is cheap, while the
-      // corpus-sized expansion gets released immediately; registered so
-      // Curriculum.releaseCaches can reclaim it in long-lived sessions
-      val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ShardCaches.register(out)
-      out.count()
+      // pairs output is tiny (post-threshold); filling it is cheap, while
+      // the corpus-sized expansion gets released immediately
+      val out = graft.core.Materialize.share(result)
       docShingles.unpersist()
       out
     }
@@ -101,30 +98,26 @@ object TextDedup {
   /** The shared candidate-pair machinery behind [[ngramJaccardPairs]] and
     * [[ngramContainmentPairs]]: (doc_a, doc_b, inter, sz_a, sz_b) for every
     * unordered pair sharing at least one surviving shingle, plus the
-    * persisted expansion for the caller to release.
+    * shared expansion for the caller to release.
     *
     * Pairs join on 64-bit shingle HASHES (one-pass ShingleHashes), not the
     * shingle strings: identical distinct/intersection counts (collisions at
     * 2^-64 are noise) with a fixed-8-byte shuffle key instead of a string.
     * The expansion feeds four plan branches (sizes, doc-freq filter, both
-    * join sides) — persist it once instead of re-exploding per branch.
-    * Lifecycle note: the cached expansion lives until LRU eviction or
-    * session end; long-running callers invoking this per batch should run
-    * inside a job scope that clears the block store (or call
-    * spark.catalog.clearCache between batches).
+    * join sides) — share it once instead of re-exploding per branch.
+    * Lifecycle note: without `materialize` the cached expansion lives until
+    * [[graft.core.Materialize.release]]; long-running callers invoking this
+    * per batch should release between batches.
     */
   private def intersectionPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, maxDocFreq: Long): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val docShingles = df
+    // shared: the doc-frequency aggregate and the semi-join probe both
+    // read the corpus-sized shingle explode
+    val docShingles = graft.core.Materialize.share(df
       .select(col(idCol).as("doc"),
         explode(ColumnBridge.column(graft.expressions.ShingleHashes(
-          ColumnBridge.expression(col(textCol)), n))).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill: the doc-frequency aggregate and the semi-join probe are
-    // independent map stages AQE submits concurrently — each would re-run
-    // the corpus-sized shingle explode against a lazily-persisted frame.
-    docShingles.count()
+          ColumnBridge.expression(col(textCol)), n))).as("sh")))
     // SHUFFLE_HASH hints on every expansion-derived join side: Catalyst's
     // size estimate for the post-explode frame inherits the (tiny,
     // compressed) pre-explode scan stats, so it would BROADCAST the
@@ -174,9 +167,7 @@ object TextDedup {
       .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "cont_a", "cont_b")
     if (!materialize) result
     else {
-      val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ShardCaches.register(out)
-      out.count()
+      val out = graft.core.Materialize.share(result)
       docShingles.unpersist()
       out
     }
@@ -199,22 +190,13 @@ object TextDedup {
   def corpusOverlap(a: DataFrame, b: DataFrame, textColA: String,
       textColB: String, n: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    // each side's distinct-gram set feeds TWO branches (its own count and
-    // the shared semi-join) — persist the vocabulary-sized sets so the
-    // corpus-scale tokenize+explode+distinct pass runs once per side
-    // (same discipline as intersectionPairs); registered for release
-    def gramSet(df: DataFrame, c: String) = {
-      val g = df.select(explode(ColumnBridge.column(graft.expressions
+    // shared: each side's distinct-gram set feeds TWO stages of one
+    // action (its own count and the shared semi-join), so the corpus-scale
+    // tokenize+explode+distinct pass runs once per side
+    def gramSet(df: DataFrame, c: String) = graft.core.Materialize.share(
+      df.select(explode(ColumnBridge.column(graft.expressions
         .ShingleHashes(ColumnBridge.expression(col(c)), n))).as("sh"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ShardCaches.register(g)
-      // eager fill: each side's own-count aggregate and the shared
-      // semi-join are independent stages of one action — a lazy persist
-      // is recomputed per stage (see minHashSignatures)
-      g.count()
-      g
-    }
+        .distinct())
     val ga = gramSet(a, textColA)
     val gb = gramSet(b, textColB)
     val na = ga.agg(count(lit(1)).as("grams_a"))
@@ -263,11 +245,8 @@ object TextDedup {
     def grams(d: DataFrame) = d.select(col(idCol),
       explode(ColumnBridge.column(graft.expressions.ShingleHashes(
         ColumnBridge.expression(col(textCol)), n))).as("h"))
-    val docGrams = grams(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill — the per-doc tally and the hit join consume this frame
-    // as independent concurrent stages (see minHashSignatures)
-    docGrams.count()
+    // shared: the per-doc tally and the hit join both read this frame
+    val docGrams = graft.core.Materialize.share(grams(df))
     // the reference is corpus-sized in the stated use (per-increment
     // admission against everything already ingested): its distinct-gram
     // set and the per-doc tallies must SHUFFLE, not broadcast — Catalyst's
@@ -284,13 +263,11 @@ object TextDedup {
           / col("n_grams")).as("novelty"))
     if (!materialize) result
     else {
-      // the (document-sized) result cache is REGISTERED so a recurring
-      // caller has a release path (Curriculum.releaseCaches) — otherwise N
-      // admission calls would pin N result caches, the smaller sibling of
-      // the gram-expansion leak this valve exists to close
-      val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ShardCaches.register(out)
-      out.count()
+      // a recurring caller frees the (document-sized) result caches with
+      // Materialize.release — otherwise N admission calls would pin N of
+      // them, the smaller sibling of the gram-expansion leak this valve
+      // exists to close
+      val out = graft.core.Materialize.share(result)
       docGrams.unpersist()
       out
     }
@@ -307,22 +284,13 @@ object TextDedup {
   def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
       n: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val sigs = df.select(col(idCol).as("doc"),
+    // shared: signatures feed banding AND pair verification (3 plan
+    // branches); at cluster scale this would be a cut to shuffle-safe
+    // storage instead
+    graft.core.Materialize.share(df.select(col(idCol).as("doc"),
       ColumnBridge.column(graft.expressions.MinHashSig(
         ColumnBridge.expression(col(textCol)), n, k)).as("signature"))
-      .filter(col("signature").isNotNull)
-      // signatures feed banding AND pair verification (3 plan branches);
-      // persist — at cluster scale this would be a checkpoint to shuffle-safe
-      // storage instead
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill: the consumers are INDEPENDENT map stages of one action,
-    // which AQE submits concurrently — against a lazily-persisted frame
-    // each stage recomputes the signature kernel over the whole corpus
-    // before one of them wins the cache write (measured on q42: four
-    // concurrent 0.63 s kernel passes for one 5 MB corpus). One count()
-    // fills the cache in a single pass; every consumer then reads blocks.
-    sigs.count()
-    sigs
+      .filter(col("signature").isNotNull))
   }
 
   /** Modulus of the md5-affine MinHash family: 2³¹ − 1 (Mersenne prime).
@@ -363,16 +331,12 @@ object TextDedup {
       n: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val (a, b) = md5AffineParams(k)
-    val sigs = df.select(col(idCol).as("doc"),
+    // shared, as in minHashSignatures
+    graft.core.Materialize.share(df.select(col(idCol).as("doc"),
       ColumnBridge.column(graft.expressions.MinHashSigMd5(
         ColumnBridge.expression(col(textCol)), n, k, a, b, MinHashMd5P))
         .as("signature"))
-      .filter(col("signature").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager fill — see minHashSignatures (AQE submits the banding/verify
-    // map stages concurrently; a lazy persist is recomputed per stage)
-    sigs.count()
-    sigs
+      .filter(col("signature").isNotNull))
   }
 
   /** LSH banding over MinHash signatures: split the k-length signature into

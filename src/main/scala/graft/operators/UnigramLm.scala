@@ -46,15 +46,14 @@ object UnigramLm {
   /** Trained LM with corpus-relative log-probabilities:
     * (term, cnt, logp = ln(cnt / total)); the total joins back as a
     * broadcast single row. The counts frame backs both the total aggregate
-    * and the output projection, so it is persisted (vocabulary-sized —
+    * and the output projection, so it is pinned (vocabulary-sized —
     * broadcast-class, not corpus-class) rather than exploded twice. The
     * distributed `logp` uses Spark's ln for [[scoreJoin]]-scale use;
     * [[collectLm]] recomputes it on the driver for the bit-reproducible
     * broadcast path.
     */
   def train(docs: DataFrame, textCol: String): DataFrame = {
-    val counts = termCounts(docs, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = graft.core.Materialize.pin(termCounts(docs, textCol))
     val total = counts.agg(sum(col("cnt")).as("total"))
     counts.crossJoin(broadcast(total))
       .select(col("term"), col("cnt"),

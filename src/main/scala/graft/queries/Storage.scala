@@ -214,16 +214,15 @@ object Storage {
             .otherwise(col("n_nationkey").cast("string")),
           col("n_name"), col("n_regionkey").cast("string")).as("line"))
         .write.mode("overwrite").text(tmp)
-      s.read
+      // pin: Spark disallows plans whose pruned scan references ONLY the
+      // corrupt-record column (e.g. a count over the status groups);
+      // caching the parsed rows is the documented pattern, and the table
+      // is nation-sized
+      graft.core.Materialize.pin(s.read
         .schema("n_nationkey INT, n_name STRING, n_regionkey INT, _corrupt STRING")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(tmp)
-        // cache: Spark disallows plans whose pruned scan references ONLY
-        // the corrupt-record column (e.g. a count over the status groups);
-        // caching the parsed rows is the documented pattern, and the table
-        // is nation-sized
-        .cache()
+        .csv(tmp))
         .withColumn("status",
           when(col("_corrupt").isNull, "clean").otherwise("quarantined"))
         .groupBy("status")

@@ -1468,17 +1468,16 @@ object Text {
     * with the nll riding through the prefix sum. Every stage's arithmetic
     * replays in SQL, so the final packed layout (bin assignment + straddle
     * flags) is hash-exact against the full composition. The kept frame is
-    * persisted once (three consumers: LM train, scoring, source join).
+    * pinned once (three consumers: LM train, scoring, source join).
     */
   private val corpusPipeline4 = QueryDef(
     (s, dir) => {
       val docs = Tables.documents(s, dir)
-      val kept = docs.join(
+      val kept = graft.core.Materialize.pin(docs.join(
           graft.operators.BlocklistScan.scan(docs, "doc_id", "text",
             Seq("a a", "merge batch"))
             .filter(col("n_hits") === 0).select("doc_id"),
-          Seq("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          Seq("doc_id")))
       val model = graft.operators.BigramLm.train(
         kept.filter(col("doc_id") < 300), "text", lambda = 0.75)
       val scored = graft.operators.BigramLm
@@ -1545,7 +1544,7 @@ object Text {
     * a per-source distinct-2 diversity table, and the kept-vs-dropped
     * Hellinger distance (ordered audit fold, sqrt-only arithmetic) rides
     * every row as the recipe's one-number "what did the filter remove"
-    * signal. kept is persisted once (diversity + the Hellinger old side).
+    * signal. kept is pinned once (diversity + the Hellinger old side).
     */
   private val corpusPipeline5 = QueryDef(
     (s, dir) => {
@@ -1557,8 +1556,7 @@ object Text {
             graft.functions.TextFunctions.hashAlignedTokens(col("text")),
             "the"),
         lit(false))
-      val kept = docs.filter(keep)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val kept = graft.core.Materialize.pin(docs.filter(keep))
       val dropped = docs.filter(!keep)
       val div = graft.operators.CorpusAudit
         .ngramDiversity(kept, Seq("source"), "text", maxN = 2, minN = 2)
@@ -2488,13 +2486,11 @@ object Text {
     */
   private val corpusPipeline3 = QueryDef(
     (s, dir) => {
-      // persisted: the strip pipeline feeds three driver actions (LM
+      // pinned: the strip pipeline feeds three driver actions (LM
       // collect, range-boundary sampling, shard sums) — without the pin its
-      // dominant shuffles re-execute per action (released by the harness's
-      // per-query clearCache)
-      val stripped = graft.operators.SpanDedup
-        .stripSpans(Tables.documents(s, dir), "doc_id", "text", k = 8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // dominant shuffles re-execute per action
+      val stripped = graft.core.Materialize.pin(graft.operators.SpanDedup
+        .stripSpans(Tables.documents(s, dir), "doc_id", "text", k = 8))
       val (terms, logps, oov) = graft.operators.UnigramLm.collectLm(
         graft.operators.UnigramLm.termCounts(stripped, "text"))
       val scored = graft.operators.UnigramLm
@@ -2503,7 +2499,9 @@ object Text {
         .tokenBudgetFill(scored, Seq("nll", "doc_id"), "n_tokens", budget = 10000L)
         .select(col("doc_id"), col("n_tokens"), col("nll"),
           col("offset").as("cum_before"))
-        .transform(d => graft.core.QueryDef.orderedOut(d, "doc_id"))
+        // plain sort: the fill's input is already pinned (ShardedScan and
+        // `stripped`), so an orderedOut pin would only add a cache write
+        .orderBy("doc_id")
     },
     """WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') t FROM documents),
       |sh AS (SELECT doc_id, unnest([struct_pack(pos := i - 1, w := array_to_string(t[i:i+7], ' '))
@@ -2969,16 +2967,14 @@ object Text {
     */
   private val budgetedMixture = QueryDef(
     (s, dir) => {
-      // persisted: the tokenization projection feeds TWO independent
+      // pinned: the tokenization projection feeds TWO independent
       // actions (the allocation's totals and the fill's prefix-sum
       // sharding) — uncached it would re-split every document's text per
-      // consumer, doubling the dominant scan; released by the harness's
-      // per-query clearCache
-      val scored = Tables.documents(s, dir)
+      // consumer, doubling the dominant scan
+      val scored = graft.core.Materialize.pin(Tables.documents(s, dir)
         .select(col("doc_id"), col("source"),
           tokenCount(col("text")).cast("long").as("tok_cnt"))
-        .withColumn("neg_tc", -col("tok_cnt"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn("neg_tc", -col("tok_cnt")))
       val budgets = graft.operators.Sampling.allocateBudget(
         scored, "source", col("tok_cnt"), 50000L)
         .select(col("source"), col("alloc"))

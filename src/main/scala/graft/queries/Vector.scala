@@ -166,8 +166,7 @@ object Vector {
     */
   private val knnIvf = QueryDef(
     (s, dir) => {
-      val corpus = Tables.embeddings(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val corpus = graft.core.Materialize.pin(Tables.embeddings(s, dir))
       val centsDf = Similarity.kmeansCentroids(corpus, k = 8, iters = 3)
       val centVals = centroidRowsSql(centsDf)
       graft.core.DynamicOracle.put("q54_knn_ivf",
@@ -333,8 +332,7 @@ object Vector {
     */
   private val semdedup = QueryDef(
     (s, dir) => {
-      val corpus = Tables.embeddings(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val corpus = graft.core.Materialize.pin(Tables.embeddings(s, dir))
       val centsDf = Similarity.kmeansCentroids(corpus, k = 4, iters = 3)
       val centVals = centroidRowsSql(centsDf)
       graft.core.DynamicOracle.put("q112_semdedup",
@@ -383,8 +381,7 @@ object Vector {
     */
   private val prototypicality = QueryDef(
     (s, dir) => {
-      val corpus = Tables.embeddings(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val corpus = graft.core.Materialize.pin(Tables.embeddings(s, dir))
       val centsDf = Similarity.kmeansCentroids(corpus, k = 8, iters = 3)
       val centVals = centroidRowsSql(centsDf)
       graft.core.DynamicOracle.put("q116_prototypicality",
@@ -489,8 +486,8 @@ object Vector {
              |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)
       }
       // encoded feeds two plan branches (ADC shortlist + re-rank join)
-      val encoded = graft.operators.ProductQuantizer.encode(corpus, cb)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val encoded = graft.core.Materialize.pin(
+        graft.operators.ProductQuantizer.encode(corpus, cb))
       graft.operators.ProductQuantizer.queryAdcRerank(encoded,
         corpus.filter(col("vec_id") < 10), cb, k = 5, shortlist = 50)
         .orderBy("query_id", "rank")
@@ -625,15 +622,13 @@ object Vector {
   private def evalRankings(s: org.apache.spark.sql.SparkSession,
       dir: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val corpus = Tables.embeddings(s, dir)
-    val truth = Similarity.knnBruteForce(
-      corpus, corpus.filter(col("vec_id") < 10), k = 5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val truth = graft.core.Materialize.pin(Similarity.knnBruteForce(
+      corpus, corpus.filter(col("vec_id") < 10), k = 5))
     val proj = graft.operators.Projections.randomProjection(
       corpus, "embedding", d = 64, k = 16, seed = 0)
       .withColumn("embedding", col("embedding").cast("array<float>"))
-    val approx = Similarity.knnBruteForce(
-      proj, proj.filter(col("vec_id") < 10), k = 5)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val approx = graft.core.Materialize.pin(Similarity.knnBruteForce(
+      proj, proj.filter(col("vec_id") < 10), k = 5))
     (truth, approx)
   }
 

@@ -60,7 +60,7 @@ object IvmStream {
         IncrementalAgg.deltaState(d, opCol, groupCols, sums),
         groupCols, sums.map(_._1))
       if ((i + 1) % checkpointEvery == 0 && i + 1 < deltaChunks.length)
-        graft.core.Barriers.cut(next)
+        graft.core.Materialize.cut(next)
       else next
     }
   }
@@ -144,7 +144,7 @@ object IvmStream {
         groupCols, sums.map(_._1))
       ((rOld.unionByName(signed(rD)), sOld.unionByName(signed(sD)),
         if ((i + 1) % 4 == 0 && i + 1 < chunks.length)
-          graft.core.Barriers.cut(next)
+          graft.core.Materialize.cut(next)
         else next))
     }._3
   }

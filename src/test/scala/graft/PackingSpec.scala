@@ -109,7 +109,7 @@ class PackingSpec extends AnyFunSuite {
 
   test("shard-cache registry self-prunes after an external clearCache") {
     // the Bench/Verify harnesses drop blocks with spark.catalog.clearCache()
-    // rather than releaseCaches(); the registry must not grow one dead plan
+    // rather than Materialize.release; the registry must not grow one dead plan
     // reference per prefix-sum invocation in such sessions
     // distinct inputs per call (like distinct queries in one session):
     // identical plans would re-register the SAME cache entry, and the old
@@ -121,10 +121,10 @@ class PackingSpec extends AnyFunSuite {
     }
     val df = (1L to 60L).map(j => (j, 1L)).toDF("id", "w")
     Packing.withGlobalOffsets(df, "id", "w").count() // registers + sweeps
-    assert(graft.operators.ShardCaches.liveCount(spark) <= 1,
+    assert(graft.core.Materialize.liveCount(spark) <= 1,
       "dead cache entries survived the sweep")
-    graft.operators.Curriculum.releaseCaches(spark)
-    assert(graft.operators.ShardCaches.liveCount(spark) === 0)
+    graft.core.Materialize.release(spark)
+    assert(graft.core.Materialize.liveCount(spark) === 0)
   }
 
   test("empty input yields an empty result, not a crash") {
