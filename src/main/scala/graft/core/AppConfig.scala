@@ -1,22 +1,19 @@
 package graft.core
 
-/** Environment-driven pipeline configuration.
+/** Pipeline configuration.
   *
-  * Re-expresses the reference's config surface (reference
-  * scripts/utils/config.py:14-85): environment name, database naming with the
-  * medallion-layer suffix convention (`{app}_{env}_{layer}`, config.py:42,
-  * :83-85), quality thresholds (config.py:52-54; dbt_project.yml:76-79),
-  * batching and retry policy (config.py:57-59).
+  * The part of the reference's config surface (reference
+  * scripts/utils/config.py:14-85) that the pipeline reads: environment name,
+  * database naming with the medallion-layer suffix convention
+  * (`{app}_{env}_{layer}`, config.py:42, :83-85) and the retry count
+  * (config.py:58). The retry delay is `Orchestrator`'s `retrySleepMs`; the
+  * dataset quality thresholds (config.py:52-54) are the
+  * `QualityReport.datasetChecks` defaults.
   */
 final case class AppConfig(
     appName: String = "graft",
     environment: String = "dev",
-    maxNullPct: Double = 0.05,
-    minRowCount: Long = 100L,
-    maxDupPct: Double = 0.01,
-    batchSize: Int = 10000,
-    maxRetries: Int = 3,
-    retryDelayMs: Long = 60000L) {
+    maxRetries: Int = 3) {
 
   require(Set("dev", "staging", "prod")(environment),
     s"unknown environment: $environment")
@@ -27,19 +24,6 @@ final case class AppConfig(
   /** Fully-qualified `{database}.{table}` name. */
   def tableName(layer: Layer, table: String): String =
     s"${database(layer)}.$table"
-}
-
-object AppConfig {
-  /** Build from environment variables with defaults (config.py:14-67). */
-  def fromEnv(env: Map[String, String] = sys.env): AppConfig = AppConfig(
-    appName = env.getOrElse("GRAFT_APP_NAME", "graft"),
-    environment = env.getOrElse("GRAFT_ENV", "dev"),
-    maxNullPct = env.getOrElse("GRAFT_MAX_NULL_PCT", "0.05").toDouble,
-    minRowCount = env.getOrElse("GRAFT_MIN_ROW_COUNT", "100").toLong,
-    maxDupPct = env.getOrElse("GRAFT_MAX_DUP_PCT", "0.01").toDouble,
-    batchSize = env.getOrElse("GRAFT_BATCH_SIZE", "10000").toInt,
-    maxRetries = env.getOrElse("GRAFT_MAX_RETRIES", "3").toInt,
-    retryDelayMs = env.getOrElse("GRAFT_RETRY_DELAY_MS", "60000").toLong)
 }
 
 /** Medallion layer (reference dbt_project.yml:89-93 creates one schema per

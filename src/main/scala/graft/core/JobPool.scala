@@ -36,3 +36,21 @@ final class JobPool[T](spark: SparkSession, threads: Int) {
   /** Lets running tasks finish and releases the threads afterwards. */
   def shutdown(): Unit = executor.shutdown()
 }
+
+object JobPool {
+  /** The pipeline's one retry policy: runs `attempt`, and while `ok` does
+    * not hold for its result re-runs it up to `retries` more times,
+    * sleeping `sleepMs` before each re-run (reference config.py:58-59).
+    * The last attempt's result comes back. `Ingestor.ingestAll` retries
+    * one entity and `ModelGraph.run` one model with it, so only the failed
+    * unit re-runs.
+    */
+  def retry[T](retries: Int, sleepMs: Long)(attempt: => T)(ok: T => Boolean): T = {
+    val r = attempt
+    if (ok(r) || retries <= 0) r
+    else {
+      if (sleepMs > 0) Thread.sleep(sleepMs)
+      retry(retries - 1, sleepMs)(attempt)(ok)
+    }
+  }
+}

@@ -21,9 +21,6 @@ import graft.sources.TableFormat
   *                    highest value; reference dropDuplicates keeps an
   *                    arbitrary row — SURVEY §7.4)
   * @param format      csv | parquet | json
-  * @param partitionBy partition columns for the bronze table (e.g. an
-  *                    ingestion-date column) — at scale this is what makes
-  *                    downstream date-bounded reads prune instead of scan
   */
 final case class IngestSpec(
     name: String,
@@ -32,8 +29,7 @@ final case class IngestSpec(
     schema: Option[StructType] = None,
     dedupKeys: Seq[String] = Nil,
     orderCol: Option[String] = None,
-    format: String = "csv",
-    partitionBy: Seq[String] = Nil)
+    format: String = "csv")
 
 /** @param rowsRead rows scanned from source (pre-dedup)
   * @param rowsWritten rows appended to the bronze table
@@ -92,7 +88,7 @@ final class Ingestor(format: TableFormat, batchId: String,
 
       val obsWritten = new org.apache.spark.sql.Observation(s"write_${spec.name}")
       val observed = deduped.observe(obsWritten, count(lit(1)).as("rows_written"))
-      format.appendMergeSchema(spark, observed, spec.targetTable, spec.partitionBy)
+      format.appendMergeSchema(spark, observed, spec.targetTable)
       val written = obsWritten.get("rows_written").asInstanceOf[Long]
       val read = obsRead.get("rows_read").asInstanceOf[Long]
       IngestResult(spec.name, ok = true, rowsRead = read, rowsWritten = written,
@@ -123,30 +119,20 @@ final class Ingestor(format: TableFormat, batchId: String,
     * [[graft.core.JobPool]], under the caller's Spark job group; specs that
     * share a target table run one after another in declaration order, so
     * their appends never race. The results come back in spec order.
-    * Retries are per entity — only the failed entity re-runs, so entities
-    * that already appended are never duplicated by a step-level re-run.
-    * (Caveat: a mid-write crash can still leave a partial append in the
-    * Parquet layer; Delta's transactional commit closes that via the
+    * A failed entity re-runs alone, up to `retries` times, through
+    * [[graft.core.JobPool.retry]]; entities that already appended are never
+    * re-run. (Caveat: a mid-write crash can still leave a partial append in
+    * the Parquet layer; Delta's transactional commit closes that via the
     * TableFormat seam.)
     */
   def ingestAll(spark: SparkSession, specs: Seq[IngestSpec],
       retries: Int = 0, retrySleepMs: Long = 0L): Seq[IngestResult] = {
-    def withRetries(spec: IngestSpec): IngestResult = {
-      var result = ingest(spark, spec)
-      var remaining = retries
-      while (!result.ok && remaining > 0) {
-        if (retrySleepMs > 0) Thread.sleep(retrySleepMs)
-        result = ingest(spark, spec)
-        remaining -= 1
-      }
-      result
-    }
     val chains = specs.zipWithIndex
       .groupBy(_._1.targetTable.toLowerCase(java.util.Locale.ROOT)).values.toSeq
     val pool = new JobPool[Seq[(Int, IngestResult)]](spark, math.max(1, chains.size))
     try {
-      chains.foreach(chain =>
-        pool.submit(chain.map { case (spec, i) => i -> withRetries(spec) }))
+      chains.foreach(chain => pool.submit(chain.map { case (spec, i) =>
+        i -> JobPool.retry(retries, retrySleepMs)(ingest(spark, spec))(_.ok) }))
       chains.flatMap(_ => pool.next()).sortBy(_._1).map(_._2)
     } finally pool.shutdown()
   }

@@ -21,7 +21,7 @@ object InsuranceModels {
   /** Quality rules for silver_claims (reference sources.yml:13-45 +
     * dbt_project.yml:82-84 amount bounds).
     */
-  def claimsRules(cfg: AppConfig): RuleSet = RuleSet("silver_claims", Seq(
+  val claimsRules: RuleSet = RuleSet("silver_claims", Seq(
     NotNull("claim_id"), NotNull("policy_id"), NotNull("customer_id"),
     NotNull("claim_amount"), NotNull("claim_date"),
     Unique(Seq("claim_id")),
@@ -35,7 +35,7 @@ object InsuranceModels {
   /** Quality rules for silver_policies (reference sources.yml:50-77 +
     * test_insurance_data_quality.py:55-142,250-267).
     */
-  def policiesRules(cfg: AppConfig): RuleSet = RuleSet("silver_policies", Seq(
+  val policiesRules: RuleSet = RuleSet("silver_policies", Seq(
     NotNull("policy_id"), NotNull("customer_id"), NotNull("premium_amount"),
     Unique(Seq("policy_id")),
     AcceptedValues("policy_type", Schemas.policyTypes),
@@ -140,9 +140,9 @@ object InsuranceModels {
         build = bronze(bronzePolicies,
           Schemas.policies.fieldNames.toSeq :+ "ingestion_timestamp", runId)),
       Model("silver_claims", sClaims, deps = Seq("bronze_claims"),
-        build = silverClaims(bClaims), rules = Some(claimsRules(cfg))),
+        build = silverClaims(bClaims), rules = Some(claimsRules)),
       Model("silver_policies", sPolicies, deps = Seq("bronze_policies"),
-        build = silverPolicies(bPolicies), rules = Some(policiesRules(cfg))),
+        build = silverPolicies(bPolicies), rules = Some(policiesRules)),
       Model("gold_claims_summary", cfg.tableName(Layer.Gold, "claims_summary"),
         deps = Seq("silver_claims", "silver_policies"),
         build = goldClaimsSummary(sClaims, sPolicies)),

@@ -58,7 +58,6 @@ final case class ModelRun(
   */
 final class ModelGraph(models: Seq[Model], format: TableFormat,
     failuresTable: Option[String] = None,
-    analyzeTables: Boolean = false,
     parallelism: Int = Int.MaxValue,
     /** Stamped onto stored failures so successive runs' violations are
       * distinguishable (the failures table is append-only).
@@ -95,10 +94,10 @@ final class ModelGraph(models: Seq[Model], format: TableFormat,
     * Stored-failure appends are serialized: the Parquet table layer has no
     * concurrent-append transaction.
     *
-    * Retries are PER MODEL (like per-entity ingestion retries): a step-level
-    * re-run of the whole graph would re-build models that already succeeded
-    * and re-append their stored failures under the same runId, duplicating
-    * violation rows.
+    * A failed model re-runs alone, up to `retries` times, through
+    * [[graft.core.JobPool.retry]] (the same policy as per-entity ingestion):
+    * models that already succeeded are never re-built, so their stored
+    * failures are never re-appended under the same runId.
     */
   def run(spark: SparkSession, retries: Int = 0, retrySleepMs: Long = 0L): Seq[ModelRun] = {
     val slots = math.max(1, math.min(parallelism, models.size))
@@ -120,7 +119,8 @@ final class ModelGraph(models: Seq[Model], format: TableFormat,
               done(m.name) = ModelRun(m.name, ok = false, 0, 0,
                 Some("skipped: upstream failure"))
             else {
-              pool.submit(runOne(spark, m, failuresLock, retries, retrySleepMs))
+              pool.submit(JobPool.retry(retries, retrySleepMs)(
+                runOne(spark, m, failuresLock))(_.ok))
               running += 1
             }
           case None =>
@@ -133,9 +133,11 @@ final class ModelGraph(models: Seq[Model], format: TableFormat,
     order.map(m => done(m.name))
   }
 
-  private def runOne(spark: SparkSession, m: Model, failuresLock: Object,
-      retries: Int, retrySleepMs: Long): ModelRun = {
-    def attempt(remaining: Int): ModelRun = Try {
+  /** One attempt at `m`: overwrite-materialized models are idempotent per
+    * attempt, so [[run]] may re-run it.
+    */
+  private def runOne(spark: SparkSession, m: Model, failuresLock: Object): ModelRun =
+    Try {
       val df = m.build(spark)
       // an overwrite's written rows are the table, so they are counted on
       // the write itself; an incremental append's are only the new rows,
@@ -153,11 +155,6 @@ final class ModelGraph(models: Seq[Model], format: TableFormat,
             df.observe(written, count(lit(1)).as("rows")), m.targetTable)
           written.get("rows").asInstanceOf[Long]
       }
-      // on-run-end statistics hook (reference dbt_project.yml:95-97
-      // ANALYZE TABLE ... COMPUTE STATISTICS) — feeds CBO broadcast and
-      // join-reorder decisions on the materialized tables
-      if (analyzeTables)
-        spark.sql(s"ANALYZE TABLE ${m.targetTable} COMPUTE STATISTICS")
       // the stored-failures append is the attempt's LAST action, and its
       // violation count comes from an Observation on that same write: a
       // transient failure anywhere earlier re-runs the attempt without
@@ -182,15 +179,6 @@ final class ModelGraph(models: Seq[Model], format: TableFormat,
       ModelRun(m.name, ok = true, rowCount, violations)
     } match {
       case Success(r) => r
-      case Failure(_) if remaining > 0 =>
-        // overwrite-materialized models are idempotent per attempt, and the
-        // stored-failures append is the last action (see above), so a
-        // retried attempt has not already appended violation rows
-        if (retrySleepMs > 0) Thread.sleep(retrySleepMs)
-        attempt(remaining - 1)
-      case Failure(e) =>
-        ModelRun(m.name, ok = false, 0, 0, Some(e.toString))
+      case Failure(e) => ModelRun(m.name, ok = false, 0, 0, Some(e.toString))
     }
-    attempt(retries)
-  }
 }

@@ -150,8 +150,7 @@ object DupGroups {
     */
   def nearDupGroups(df: DataFrame, idCol: String, textCol: String,
       n: Int, minJaccard: Double, maxDocFreq: Long = 1000L): DataFrame = {
-    val pairs = TextDedup.ngramJaccardPairs(
-      df, idCol, textCol, n, minJaccard, maxDocFreq, materialize = true)
+    val pairs = TextDedup.ngramJaccardPairs(df, idCol, textCol, n, minJaccard, maxDocFreq)
     connectedComponents(pairs, "doc_a", "doc_b")
       .select(col("vertex").as(idCol), col("label").as("group_id"))
   }

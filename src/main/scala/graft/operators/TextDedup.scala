@@ -70,29 +70,27 @@ object TextDedup {
   /** Exact n-gram Jaccard similarity for all candidate pairs sharing at least
     * one shingle. `maxDocFreq` drops shingles present in more than that many
     * documents (stop-shingles) — without it, a low-entropy corpus degenerates
-    * to the full cross product.
+    * to the full cross product. The result is filled eagerly and the
+    * corpus-sized shingle expansion released before returning, so no caller
+    * leaves it pinned until LRU eviction.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, minJaccard: Double, maxDocFreq: Long = 1000L,
-      /** Eagerly compute the (small) pairs result and unpersist the shingle
-        * expansion before returning — for one-shot callers that would
-        * otherwise leave the corpus-sized cache pinned until LRU eviction.
-        */
-      materialize: Boolean = false): DataFrame = {
+      n: Int, minJaccard: Double, maxDocFreq: Long = 1000L): DataFrame = {
     val (docShingles, pairs) = intersectionPairs(df, idCol, textCol, n, maxDocFreq)
-    val result = pairs
+    // pairs output is tiny (post-threshold); filling it is cheap, while
+    // the corpus-sized expansion gets released immediately
+    shareReleasing(pairs
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
-    if (!materialize) result
-    else {
-      // pairs output is tiny (post-threshold); filling it is cheap, while
-      // the corpus-sized expansion gets released immediately
-      val out = graft.core.Materialize.share(result)
-      docShingles.unpersist()
-      out
-    }
+      .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard"), docShingles)
+  }
+
+  /** Fill `result` eagerly, then unpersist the `expansion` it was built from. */
+  private def shareReleasing(result: DataFrame, expansion: DataFrame): DataFrame = {
+    val out = graft.core.Materialize.share(result)
+    expansion.unpersist()
+    out
   }
 
   /** The shared candidate-pair machinery behind [[ngramJaccardPairs]] and
@@ -104,10 +102,8 @@ object TextDedup {
     * shingle strings: identical distinct/intersection counts (collisions at
     * 2^-64 are noise) with a fixed-8-byte shuffle key instead of a string.
     * The expansion feeds four plan branches (sizes, doc-freq filter, both
-    * join sides) — share it once instead of re-exploding per branch.
-    * Lifecycle note: without `materialize` the cached expansion lives until
-    * [[graft.core.Materialize.release]]; long-running callers invoking this
-    * per batch should release between batches.
+    * join sides) — share it once instead of re-exploding per branch; the
+    * caller releases it once its result is filled.
     */
   private def intersectionPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, maxDocFreq: Long): (DataFrame, DataFrame) = {
@@ -157,20 +153,13 @@ object TextDedup {
     * stop-shingle cutoff, and scale shape as [[ngramJaccardPairs]].
     */
   def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, minContainment: Double, maxDocFreq: Long = 1000L,
-      materialize: Boolean = false): DataFrame = {
+      n: Int, minContainment: Double, maxDocFreq: Long = 1000L): DataFrame = {
     val (docShingles, pairs) = intersectionPairs(df, idCol, textCol, n, maxDocFreq)
-    val result = pairs
+    shareReleasing(pairs
       .withColumn("cont_a", col("inter").cast("double") / col("sz_a"))
       .withColumn("cont_b", col("inter").cast("double") / col("sz_b"))
       .filter(greatest(col("cont_a"), col("cont_b")) >= minContainment)
-      .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "cont_a", "cont_b")
-    if (!materialize) result
-    else {
-      val out = graft.core.Materialize.share(result)
-      docShingles.unpersist()
-      out
-    }
+      .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "cont_a", "cont_b"), docShingles)
   }
 
   /** Corpus-level overlap audit between two corpora: distinct n-gram
@@ -230,17 +219,15 @@ object TextDedup {
     * the reference's distinct-hash set on a fixed 8-byte key (the same
     * shuffle as [[ngramJaccardPairs]]' intersection, minus the pair
     * blow-up); the expansion is persisted once and feeds both the totals
-    * and the semi-join tally.
+    * and the semi-join tally. As in [[ngramJaccardPairs]], the
+    * (document-sized) result is filled eagerly and the corpus-sized gram
+    * expansion released before returning: the stated use (per-increment
+    * admission) is a recurring call that would otherwise pin one expansion
+    * cache per invocation. A recurring caller frees the result caches with
+    * [[graft.core.Materialize.release]].
     */
   def ngramNovelty(df: DataFrame, reference: DataFrame, idCol: String,
-      textCol: String, n: Int,
-      /** Eagerly compute the (document-sized) result and unpersist the
-        * corpus-sized gram expansion before returning — same lifecycle
-        * valve as [[ngramJaccardPairs]]; the stated use (per-increment
-        * admission) is a recurring call that would otherwise pin one
-        * expansion cache per invocation until LRU eviction.
-        */
-      materialize: Boolean = false): DataFrame = {
+      textCol: String, n: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     def grams(d: DataFrame) = d.select(col(idCol),
       explode(ColumnBridge.column(graft.expressions.ShingleHashes(
@@ -256,21 +243,11 @@ object TextDedup {
     val tot = docGrams.groupBy(idCol).agg(count(lit(1)).as("n_grams"))
     val seen = docGrams.join(refSet, Seq("h"), "left_semi")
       .groupBy(idCol).agg(count(lit(1)).as("seen_grams"))
-    val result = tot.join(seen.hint("shuffle_hash"), Seq(idCol), "left")
+    shareReleasing(tot.join(seen.hint("shuffle_hash"), Seq(idCol), "left")
       .select(col(idCol), col("n_grams"),
         coalesce(col("seen_grams"), lit(0L)).as("seen_grams"),
         ((col("n_grams") - coalesce(col("seen_grams"), lit(0L))).cast("double")
-          / col("n_grams")).as("novelty"))
-    if (!materialize) result
-    else {
-      // a recurring caller frees the (document-sized) result caches with
-      // Materialize.release — otherwise N admission calls would pin N of
-      // them, the smaller sibling of the gram-expansion leak this valve
-      // exists to close
-      val out = graft.core.Materialize.share(result)
-      docGrams.unpersist()
-      out
-    }
+          / col("n_grams")).as("novelty")), docGrams)
   }
 
   /** MinHash signatures: k universal-family min-hashes per document over

@@ -42,8 +42,12 @@ final case class PipelineReport(
 
 /** Single-JVM orchestrator: the subprocess DAG of the reference collapses to
   * in-session steps (SURVEY §3 E1 redesign) — no Py4J, no dbt-over-HTTP hop.
-  * Fail-fast between steps; per-step retry with backoff replaces the
-  * reference's subprocess retry policy (config.py:58-59).
+  * Fail-fast between steps. Each step runs once; the reference's subprocess
+  * retry policy (config.py:58-59: 3 retries, 60 s apart) applies per unit
+  * instead, through [[graft.core.JobPool.retry]]: a failed ingest entity or
+  * model re-runs alone, `cfg.maxRetries` times, `retrySleepMs` apart. A
+  * step-level re-run would re-append the entities and stored failures that
+  * already succeeded.
   *
   * Steps are barriers: transformations start only after every ingest has
   * finished. Within a step the work overlaps. `Ingestor.ingestAll` runs
@@ -54,55 +58,38 @@ final case class PipelineReport(
   * step's `graft-<step>` job group, set explicitly on each worker, so a step
   * timeout's `cancelJobGroup` cancels every concurrent job of the step and
   * listeners attribute those jobs to the step.
+  *
+  * @param retrySleepMs pause before each per-unit retry; the default is the
+  *   reference's `retry_delay` of 60 s (config.py:59), 0 disables it
   */
 final class Orchestrator(cfg: AppConfig, format: TableFormat,
-    retrySleepMs: Long = -1L,
+    retrySleepMs: Long = 60000L,
     stepTimeouts: Map[String, Long] = Orchestrator.defaultTimeouts) {
 
-  // -1 = take the configured delay (config.py:58-59 semantics); explicit 0
-  // disables sleeping between retries (tests)
-  private val sleepMs: Long = if (retrySleepMs >= 0) retrySleepMs else cfg.retryDelayMs
-
-  /** Marks a timeout abort; never retried — the timed-out body keeps
-    * running on its thread after job cancellation (only Spark jobs can be
-    * killed), so a retry would race the zombie attempt's writes.
+  /** Run `body` once under the step's job group and wall-clock timeout. On
+    * timeout, jobs tagged with the step's job group are cancelled on the
+    * cluster — the in-session analogue of the reference's subprocess
+    * timeouts (orchestrator.py:35,70,78 — 1800 s ingest, 3600 s transform).
     */
-  private final class StepTimeout(msg: String) extends RuntimeException(msg)
-
-  /** Run `body` with retries and a per-step wall-clock timeout. On timeout,
-    * jobs tagged with the step's job group are cancelled on the cluster —
-    * the in-session analogue of the reference's subprocess timeouts
-    * (orchestrator.py:35,70,78 — 1800 s ingest, 3600 s transform).
-    * `retries` defaults to the config; pass 0 for non-idempotent bodies
-    * (appends) whose per-unit retry lives inside the body instead.
-    */
-  private def timed[A](step: String, spark: SparkSession,
-      retries: Int = cfg.maxRetries)(body: => A): (Try[A], StepResult) = {
+  private def timed[A](step: String, spark: SparkSession)(body: => A): (Try[A], StepResult) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val timeout: Duration =
       stepTimeouts.get(step).map(_.millis: Duration).getOrElse(Duration.Inf)
     val t0 = System.nanoTime()
-    def once: Try[A] = {
-      val fut = Future {
-        spark.sparkContext.setJobGroup(s"graft-$step", step, interruptOnCancel = true)
-        try body finally spark.sparkContext.clearJobGroup()
-      }
-      Try(Await.result(fut, timeout)).recoverWith {
-        case _: java.util.concurrent.TimeoutException =>
-          spark.sparkContext.cancelJobGroup(s"graft-$step")
-          Failure(new StepTimeout(s"step $step timed out after $timeout"))
-      }
+    val fut = Future {
+      spark.sparkContext.setJobGroup(s"graft-$step", step, interruptOnCancel = true)
+      try body finally spark.sparkContext.clearJobGroup()
     }
-    def attempt(remaining: Int): Try[A] = once match {
-      case f @ Failure(_: StepTimeout) => f // never retry a timeout (zombie race)
-      case f @ Failure(_) if remaining > 0 =>
-        if (sleepMs > 0) Thread.sleep(sleepMs)
-        attempt(remaining - 1)
-      case other => other
+    val res = Try(Await.result(fut, timeout)).recoverWith {
+      case _: java.util.concurrent.TimeoutException =>
+        // only Spark jobs can be killed: the timed-out body keeps running on
+        // its thread after its jobs are cancelled
+        spark.sparkContext.cancelJobGroup(s"graft-$step")
+        Failure(new java.util.concurrent.TimeoutException(
+          s"step $step timed out after $timeout"))
     }
-    val res = attempt(retries)
     val ms = (System.nanoTime() - t0) / 1000000
     res match {
       case Success(_) => (res, StepResult(step, ok = true, "", ms))
@@ -120,12 +107,10 @@ final class Orchestrator(cfg: AppConfig, format: TableFormat,
       .withZone(java.time.ZoneOffset.UTC).format(java.time.Instant.now())
 
     // step 1: ingestion (fail-fast if ANY entity failed — orchestrator.py:
-    // 157-160). Step-level retries are OFF: appends are not idempotent, so a
-    // wholesale re-run would duplicate the entities that already succeeded —
-    // retries happen per entity inside ingestAll instead.
-    val (ingTry, ingStep) = timed("ingestion", spark, retries = 0) {
+    // 157-160)
+    val (ingTry, ingStep) = timed("ingestion", spark) {
       val rs = new Ingestor(format, batchId)
-        .ingestAll(spark, specs, retries = cfg.maxRetries, retrySleepMs = sleepMs)
+        .ingestAll(spark, specs, retries = cfg.maxRetries, retrySleepMs = retrySleepMs)
       if (!rs.forall(_.ok))
         throw new RuntimeException(
           rs.filterNot(_.ok).flatMap(_.error).mkString("; "))
@@ -134,14 +119,11 @@ final class Orchestrator(cfg: AppConfig, format: TableFormat,
     val ingests = ingTry.getOrElse(Nil)
     if (!ingStep.ok) return PipelineReport(Seq(ingStep), ingests, Nil)
 
-    // step 2: transformations (model builds fail-fast; orchestrator.py:66-74).
-    // Step-level retries are OFF for the same reason as ingestion: a
-    // wholesale re-run re-appends stored failures for models that already
-    // succeeded under this runId — retries happen per model instead.
-    val (mdlTry, mdlStep0) = timed("transformations", spark, retries = 0) {
+    // step 2: transformations (model builds fail-fast; orchestrator.py:66-74)
+    val (mdlTry, mdlStep0) = timed("transformations", spark) {
       val runs = new ModelGraph(models, format,
         failuresTable = Some(cfg.tableName(Layer.Gold, "test_failures")),
-        runId = batchId).run(spark, retries = cfg.maxRetries, retrySleepMs = sleepMs)
+        runId = batchId).run(spark, retries = cfg.maxRetries, retrySleepMs = retrySleepMs)
       if (!runs.forall(_.ok))
         throw new RuntimeException(
           runs.filterNot(_.ok).flatMap(_.error).mkString("; "))

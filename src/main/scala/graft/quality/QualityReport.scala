@@ -44,7 +44,8 @@ object QualityReport {
       .when(metric >= 0.9 * threshold, "warning")
       .otherwise("ok")
 
-  /** Dataset-level threshold checks (reference dbt_project.yml:76-79:
+  /** Dataset-level threshold checks (reference dbt_project.yml:76-79 and
+    * config.py:52-54:
     * max_null_percentage 5%, min_row_count 100, max_duplicate_percentage 1%)
     * over a key + checked column, emitting metric values and severities.
     */

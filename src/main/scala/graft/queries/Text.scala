@@ -90,13 +90,11 @@ object Text {
     * paths), at the library-default stop-shingle cutoff (maxDocFreq=1000 —
     * the quadratic-degeneration guard stays armed in gate code); the oracle
     * mirrors the cutoff with the same doc-frequency HAVING filter.
-    * `materialize = true` releases the corpus-sized shingle-expansion cache
-    * as soon as the (tiny) pairs result is computed.
     */
   private val ngramJaccard = QueryDef(
     (s, dir) =>
       TextDedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
-        n = 3, minJaccard = 0.5, maxDocFreq = 1000L, materialize = true)
+        n = 3, minJaccard = 0.5, maxDocFreq = 1000L)
         .select("doc_a", "doc_b", "inter", "sz_a", "sz_b", "jaccard")
         .orderBy("doc_a", "doc_b"),
     """WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') t FROM documents),
@@ -2745,8 +2743,7 @@ object Text {
       val docs = Tables.documents(s, dir)
       TextDedup.ngramNovelty(
         docs.filter(col("doc_id") % 5 >= 2),
-        docs.filter(col("doc_id") % 5 < 2), "doc_id", "text", n = 3,
-        materialize = true)
+        docs.filter(col("doc_id") % 5 < 2), "doc_id", "text", n = 3)
         .orderBy("doc_id")
     },
     """WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') t FROM documents),
@@ -3066,8 +3063,7 @@ object Text {
   private val containmentPairs = QueryDef(
     (s, dir) =>
       TextDedup.ngramContainmentPairs(Tables.documents(s, dir), "doc_id",
-          "text", n = 3, minContainment = 0.5, maxDocFreq = 1000L,
-          materialize = true)
+          "text", n = 3, minContainment = 0.5, maxDocFreq = 1000L)
         .orderBy("doc_a", "doc_b"),
     """WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') t FROM documents),
       |sh AS (SELECT doc_id, unnest(list_distinct(

@@ -13,11 +13,8 @@ import org.apache.spark.sql.functions.{col, lit}
   */
 trait TableFormat {
   def ensureDatabase(spark: SparkSession, db: String): Unit
-  /** Append `df` to `table`, evolving the table schema by union-by-name.
-    * `partitionBy` applies when the table is first created.
-    */
-  def appendMergeSchema(spark: SparkSession, df: DataFrame, table: String,
-      partitionBy: Seq[String] = Nil): Unit
+  /** Append `df` to `table`, evolving the table schema by union-by-name. */
+  def appendMergeSchema(spark: SparkSession, df: DataFrame, table: String): Unit
   /** Overwrite `table` with `df` (model materialization). */
   def overwrite(spark: SparkSession, df: DataFrame, table: String): Unit
 
@@ -50,12 +47,9 @@ object ParquetTableFormat extends TableFormat {
   override def ensureDatabase(spark: SparkSession, db: String): Unit =
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
 
-  override def appendMergeSchema(spark: SparkSession, df: DataFrame, table: String,
-      partitionBy: Seq[String] = Nil): Unit =
+  override def appendMergeSchema(spark: SparkSession, df: DataFrame, table: String): Unit =
     if (!exists(spark, table)) {
-      val w = df.write.format("parquet").mode(SaveMode.Overwrite)
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .saveAsTable(table)
+      df.write.format("parquet").mode(SaveMode.Overwrite).saveAsTable(table)
     } else {
       val existing = spark.table(table)
       val existingCols = existing.columns.toSeq

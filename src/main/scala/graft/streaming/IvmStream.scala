@@ -73,19 +73,24 @@ object IvmStream {
     * the newest committed refresh.
     */
   def latestVersion(spark: SparkSession, statePath: String,
-      before: Long = Long.MaxValue): Option[Long] = {
+      before: Long = Long.MaxValue): Option[Long] =
+    committedVersions(spark, statePath).filter(_ < before).maxOption
+
+  /** Ids of the committed `v=` state directories under `statePath`
+    * (those holding a `_SUCCESS` marker), ascending; empty when the path
+    * does not exist yet.
+    */
+  private def committedVersions(spark: SparkSession, statePath: String): Seq[Long] = {
     import org.apache.hadoop.fs.Path
     val root = new Path(statePath)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val versions =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory &&
-          fs.exists(new Path(s.getPath, "_SUCCESS")))
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
-        .filter(_ < before)
-    if (versions.isEmpty) None else Some(versions.max)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory &&
+        fs.exists(new Path(s.getPath, "_SUCCESS")))
+      .map(_.getPath.getName)
+      .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
+      .sorted
   }
 
   /** Newest committed state strictly below `before`, as a frame. */
@@ -252,16 +257,8 @@ object IvmStream {
       keepLast: Int): Seq[Long] = {
     import org.apache.hadoop.fs.Path
     require(keepLast >= 1, "must keep at least the newest version")
-    val root = new Path(statePath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return Seq.empty
-    val committed = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
-      .sorted
-    val drop = committed.dropRight(keepLast)
+    val fs = new Path(statePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val drop = committedVersions(spark, statePath).dropRight(keepLast)
     drop.foreach(v => fs.delete(new Path(s"$statePath/v=$v"), true))
     drop
   }

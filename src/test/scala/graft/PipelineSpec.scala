@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +13,7 @@ import graft.core.{AppConfig, Layer}
 import graft.ingest.{Ingestor, IngestSpec}
 import graft.models.{InsuranceModels, ModelGraph}
 import graft.pipeline.Orchestrator
-import graft.sources.ParquetTableFormat
+import graft.sources.{ParquetTableFormat, TableFormat}
 
 /** End-to-end medallion pipeline over our own claims/policies fixtures:
   * ingest (with deterministic dedup) → bronze → silver (cleansed) → gold
@@ -226,6 +227,49 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.table(claims).select("source_file").distinct().count() == 2)
   }
 
+  /** Parquet tables whose first append to `failing` throws before writing. */
+  private final class FailFirstAppend(failing: String) extends TableFormat {
+    private val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def ensureDatabase(spark: SparkSession, db: String): Unit =
+      ParquetTableFormat.ensureDatabase(spark, db)
+    def appendMergeSchema(spark: SparkSession, df: DataFrame, table: String): Unit =
+      if (table == failing && failed.compareAndSet(false, true))
+        throw new RuntimeException(s"transient append failure on $table")
+      else ParquetTableFormat.appendMergeSchema(spark, df, table)
+    def overwrite(spark: SparkSession, df: DataFrame, table: String): Unit =
+      ParquetTableFormat.overwrite(spark, df, table)
+    def upsert(spark: SparkSession, df: DataFrame, table: String, keys: Seq[String]): Unit =
+      ParquetTableFormat.upsert(spark, df, table, keys)
+    def compact(spark: SparkSession, table: String, targetFiles: Int): Unit =
+      ParquetTableFormat.compact(spark, table, targetFiles)
+  }
+
+  test("an entity whose append fails re-runs alone, with fresh counts and one copy") {
+    val (claimsCsv, policiesCsv) = csvs(dirty = false)
+    def ingestInto(app: String, format: TableFormat, retries: Int) = {
+      val cfg = AppConfig(appName = app)
+      new Orchestrator(cfg, ParquetTableFormat).bootstrap(spark)
+      val rs = new Ingestor(format, "retry-batch")
+        .ingestAll(spark, specs(cfg, claimsCsv, policiesCsv), retries = retries)
+      (rs, cfg.tableName(Layer.Bronze, "claims"), cfg.tableName(Layer.Bronze, "policies"))
+    }
+    val (unfailed, _, _) = ingestInto("graftretryref", ParquetTableFormat, retries = 0)
+    assert(unfailed.forall(_.ok))
+
+    val (retried, claims, policies) = ingestInto("graftretryok",
+      new FailFirstAppend("graftretryok_dev_bronze.claims"), retries = 1)
+    assert(retried == unfailed)
+    assert(spark.table(claims).count() == unfailed.head.rowsWritten)
+    assert(spark.table(claims).select("claim_id").distinct().count() == unfailed.head.rowsWritten)
+    assert(spark.table(policies).count() == unfailed(1).rowsWritten)
+
+    val (failed, _, _) = ingestInto("graftretryno",
+      new FailFirstAppend("graftretryno_dev_bronze.claims"), retries = 0)
+    assert(!failed.head.ok)
+    assert(failed.head.error.exists(_.contains("transient append failure")))
+    assert(failed(1) == unfailed(1))
+  }
+
   test("a step exceeding its timeout aborts with a timeout error") {
     val cfg = AppConfig(appName = "grafttimeout", maxRetries = 0)
     val orch = new Orchestrator(cfg, ParquetTableFormat,
@@ -242,7 +286,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("a missing source fails fast with an isolated error") {
-    val cfg = AppConfig(appName = "graftbad", maxRetries = 0, retryDelayMs = 0)
+    val cfg = AppConfig(appName = "graftbad", maxRetries = 0)
     val orch = new Orchestrator(cfg, ParquetTableFormat)
     val bad = orch.run(spark,
       specs = Seq(IngestSpec("claims", "/nonexistent/claims.csv",

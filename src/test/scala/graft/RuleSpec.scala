@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.AppConfig
 import graft.models.InsuranceModels
 import graft.quality._
 
@@ -25,7 +24,7 @@ class RuleSpec extends AnyFunSuite {
   }
 
   test("each dirty row trips exactly the intended rule") {
-    val rs = InsuranceModels.policiesRules(AppConfig())
+    val rs = InsuranceModels.policiesRules
     val ann = rs.annotate(dirtySilver)
     def failedFor(id: String): Set[String] =
       ann.filter(col("policy_number") === s"NBX-X-$id")
@@ -41,7 +40,7 @@ class RuleSpec extends AnyFunSuite {
   }
 
   test("quarantine splits clean rows from violating rows") {
-    val rs = InsuranceModels.policiesRules(AppConfig())
+    val rs = InsuranceModels.policiesRules
     val (clean, bad) = rs.quarantine(dirtySilver)
     assert(clean.count() == 0) // every dirty row violates something
     assert(bad.count() == 6)

@@ -66,8 +66,7 @@ class ScaleSpec extends AnyFunSuite {
     val docs = (1 to 120).map(i =>
       (i.toLong, s"common shared trigram unique$i tail$i word$i")).toDF("doc_id", "text")
     val pairs = graft.operators.TextDedup.ngramJaccardPairs(
-      docs, "doc_id", "text", n = 3, minJaccard = 0.1, maxDocFreq = 50L,
-      materialize = true)
+      docs, "doc_id", "text", n = 3, minJaccard = 0.1, maxDocFreq = 50L)
     assert(pairs.count() == 0L)
   }
 
