@@ -2,26 +2,62 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Cleanup for gate/bench artifacts that are intentionally written to disk
-  * (roundtrip gates prove on-disk semantics, so they must materialize).
-  * Artifact names embed the Spark applicationId; each run sweeps PRIOR runs'
-  * leftovers — its own are left in place while live — so repeated
-  * Verify/Bench invocations stay bounded at one artifact set instead of
-  * accumulating until the warehouse or /tmp fills.
+/** The one owner of gate scratch artifacts: the directories and catalog
+  * tables that round-trip gates write to prove on-disk semantics.
+  *
+  * Naming: every artifact is `graft_<stem>_<tag>`, the tag being the
+  * sanitized Spark applicationId ([[appTag]]). Directories live in
+  * `java.io.tmpdir`, tables in the session catalog (their data in the
+  * warehouse). A gate gets a name only from [[scratchDir]] or
+  * [[scratchTable]].
+  *
+  * Reclaim has two paths:
+  *  - prior runs: before returning a name, [[scratchDir]] / [[scratchTable]]
+  *    remove that stem's entries that carry another tag and are over an hour
+  *    old (a younger one may be a concurrent run's live artifact). The sweep
+  *    is per stem, never a blanket `graft_` prefix: pipeline databases such
+  *    as `graft_dev_bronze` share that prefix.
+  *  - this run: [[installExitSweep]] deletes this app's `graft_*<tag>`
+  *    entries in tmpdir and in the warehouse when the JVM exits, crashed
+  *    gates included.
+  *
+  * The `graft_keep_` prefix is exempt from the exit sweep: such artifacts
+  * are read after the JVM exits (the q220 oracle replays a parquet footer in
+  * DuckDB once Verify has terminated), so only the prior-run sweep of their
+  * stem reclaims them.
   */
 object Housekeeping {
 
-  /** Drop catalog tables starting with `prefix`, except those carrying
-    * `keepSuffix` (the current app's own artifacts) and anything created
-    * within the last hour — a CONCURRENT run's live tables (including its
-    * in-flight `__stage_` tables, which share the prefix) must not be
-    * dropped mid-query, mirroring [[cleanStaleTmpDirs]]'s age guard.
+  private val staleAfterMs = 60L * 60 * 1000
+
+  private def tmpDir: String = System.getProperty("java.io.tmpdir")
+
+  private def isPriorRun(name: String, stem: String, tag: String): Boolean =
+    name.startsWith(s"graft_${stem}_") && !name.endsWith(tag)
+
+  /** This app's scratch directory for `stem`, `$tmpdir/graft_<stem>_<tag>`,
+    * after deleting prior runs' `graft_<stem>_*` entries over an hour old.
     */
-  def dropStaleTables(spark: SparkSession, prefix: String, keepSuffix: String): Unit = {
-    val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
+  def scratchDir(spark: SparkSession, stem: String): String = {
+    val tag = appTag(spark)
+    val cutoff = System.currentTimeMillis() - staleAfterMs
+    Option(new java.io.File(tmpDir).listFiles()).getOrElse(Array.empty)
+      .filter(f => isPriorRun(f.getName, stem, tag) && f.lastModified() < cutoff)
+      .foreach(deleteRecursively)
+    s"$tmpDir/graft_${stem}_$tag"
+  }
+
+  /** This app's scratch table name for `stem`, `graft_<stem>_<tag>`, after
+    * dropping prior runs' `graft_<stem>_*` catalog tables created over an
+    * hour ago (only a persistent metastore holds any: an in-memory catalog
+    * lists this app's tables alone).
+    */
+  def scratchTable(spark: SparkSession, stem: String): String = {
+    val tag = appTag(spark)
+    val cutoff = System.currentTimeMillis() - staleAfterMs
     spark.catalog.listTables().collect()
       .map(_.name)
-      .filter(n => n.startsWith(prefix) && !n.endsWith(keepSuffix))
+      .filter(n => isPriorRun(n, stem, tag))
       .filter { n =>
         try spark.sessionState.catalog
           .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(n))
@@ -29,19 +65,7 @@ object Housekeeping {
         catch { case _: Exception => false } // vanished/external: leave it
       }
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
-  /** Delete `java.io.tmpdir` entries starting with `prefix`, except the
-    * current app's (`keepSuffix`) and anything modified within the last
-    * hour — a concurrent run's live artifacts must not be swept.
-    */
-  def cleanStaleTmpDirs(prefix: String, keepSuffix: String): Unit = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-    Option(tmp.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(prefix) &&
-        !f.getName.endsWith(keepSuffix) && f.lastModified() < cutoff)
-      .foreach(deleteRecursively)
+    s"graft_${stem}_$tag"
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -50,7 +74,7 @@ object Housekeeping {
   }
 
   /** The applicationId sanitized for use in table/directory names. */
-  def appTag(spark: SparkSession): String =
+  private[graft] def appTag(spark: SparkSession): String =
     spark.sparkContext.applicationId.replaceAll("[^a-zA-Z0-9]", "_")
 
   private val exitSweepInstalled = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -58,15 +82,9 @@ object Housekeeping {
   /** Register a JVM shutdown hook that deletes THIS app's on-disk gate
     * artifacts — `graft_*<tag>` entries in java.io.tmpdir and in the Spark
     * warehouse directory (the managed-table data of an in-memory catalog,
-    * which would otherwise outlive the JVM that owns it). Closes the gap the
-    * age-guarded [[cleanStaleTmpDirs]]/[[dropStaleTables]] sweeps leave: a
-    * crashed gate's residue used to sit for an hour until the NEXT run swept
-    * it; now the owning JVM removes it on the way out. Idempotent; hooks run
-    * even when a gate threw mid-write (any exit except a hard kill).
-    *
-    * The `graft_keep_` prefix is exempt: those artifacts are read AFTER the
-    * JVM exits (the q220 oracle replays a parquet footer in DuckDB once
-    * Verify has terminated) and are cleaned by the age-guarded sweep instead.
+    * which would otherwise outlive the JVM that owns it). Idempotent; hooks
+    * run even when a gate threw mid-write (any exit except a hard kill).
+    * `graft_keep_` entries are spared (see the object doc).
     */
   def installExitSweep(spark: SparkSession): Unit =
     if (exitSweepInstalled.compareAndSet(false, true)) {
@@ -86,7 +104,7 @@ object Housekeeping {
         .filter(f => f.getName.startsWith("graft_") &&
           !f.getName.startsWith("graft_keep_") && f.getName.contains(tag))
         .foreach(deleteRecursively)
-    sweep(new java.io.File(System.getProperty("java.io.tmpdir")))
+    sweep(new java.io.File(tmpDir))
     warehouse.foreach(sweep)
   }
 

@@ -72,11 +72,9 @@ object Extra {
     */
   private val modelDag = QueryDef(
     (s, dir) => {
-      val app = graft.core.Housekeeping.appTag(s)
-      graft.core.Housekeeping.dropStaleTables(s, "graft_gate_dag_", app)
-      val bron = s"graft_gate_dag_bronze_$app"
-      val silv = s"graft_gate_dag_silver_$app"
-      val gold = s"graft_gate_dag_gold_$app"
+      val bron = graft.core.Housekeeping.scratchTable(s, "gate_dag_bronze")
+      val silv = graft.core.Housekeeping.scratchTable(s, "gate_dag_silver")
+      val gold = graft.core.Housekeeping.scratchTable(s, "gate_dag_gold")
       Seq(bron, silv, gold).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
       Tables.orders(s, dir).createOrReplaceTempView("gate_dag_orders")
       val models = Seq( // scrambled on purpose: gold, bronze, silver
@@ -738,9 +736,7 @@ object Extra {
   private val upsertRoundtrip = QueryDef(
     (s, dir) => {
       val fmt = graft.sources.ParquetTableFormat
-      val tag = graft.core.Housekeeping.appTag(s)
-      val tbl = s"graft_gate_upsert_$tag"
-      graft.core.Housekeeping.dropStaleTables(s, "graft_gate_upsert_", tag)
+      val tbl = graft.core.Housekeeping.scratchTable(s, "gate_upsert")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
       val base = Tables.customer(s, dir).select(
         col("c_custkey").as("k"), col("c_name").as("name"),
@@ -776,10 +772,8 @@ object Extra {
     */
   private val incrementalRoundtrip = QueryDef(
     (s, dir) => {
-      val app = graft.core.Housekeeping.appTag(s)
-      val src = s"graft_gate_inc_src_$app"
-      val out = s"graft_gate_inc_out_$app"
-      graft.core.Housekeeping.dropStaleTables(s, "graft_gate_inc_", app)
+      val src = graft.core.Housekeeping.scratchTable(s, "gate_inc_src")
+      val out = graft.core.Housekeeping.scratchTable(s, "gate_inc_out")
       s.sql(s"DROP TABLE IF EXISTS $src")
       s.sql(s"DROP TABLE IF EXISTS $out")
       val orders = Tables.orders(s, dir).select("o_orderkey", "o_orderpriority", "o_orderdate")
@@ -1260,17 +1254,14 @@ object Extra {
       import graft.operators.IncrementalAgg
       val groups = Seq("o_orderstatus", "o_orderpriority")
       val sums = Seq("sum_price" -> "o_totalprice")
-      val tag = graft.core.Housekeeping.appTag(s)
       // the gate owns its base table (a copy of orders): registering the
       // SHARED orders path would also — correctly but opaquely — rewrite
       // any other gate whose aggregate happens to match the view shape
       // (q238's base state does); a private path keeps every other plan
       // untouched and mirrors production, where the registered base is a
       // specific table location
-      val basePath = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_mv_base_$tag"
-      val viewPath = s"${System.getProperty("java.io.tmpdir")}/" +
-        s"graft_mv_orders_$tag"
+      val basePath = graft.core.Housekeeping.scratchDir(s, "mv_base")
+      val viewPath = graft.core.Housekeeping.scratchDir(s, "mv_orders")
       // a previous bench pass of this gate left its registration live:
       // deregister BEFORE rewriting base/view parquet, or the rebuild's
       // own aggregate would be answered from the view it is overwriting
@@ -1307,13 +1298,11 @@ object Extra {
   private val mvJoinRewrite = QueryDef(
     (s, dir) => {
       import graft.operators.IncrementalAgg
-      val tag = graft.core.Housekeeping.appTag(s)
-      val tmp = System.getProperty("java.io.tmpdir")
       val groups = Seq("seg", "o_orderstatus")
       val sums = Seq("sum_price" -> "o_totalprice")
-      val cPath = s"$tmp/graft_mvj_cust_$tag"
-      val oPath = s"$tmp/graft_mvj_ord_$tag"
-      val vPath = s"$tmp/graft_mvj_view_$tag"
+      val cPath = graft.core.Housekeeping.scratchDir(s, "mvj_cust")
+      val oPath = graft.core.Housekeeping.scratchDir(s, "mvj_ord")
+      val vPath = graft.core.Housekeeping.scratchDir(s, "mvj_view")
       // drop a previous pass's registration before the rebuild (same
       // overwrite-what-you-read hazard as q247)
       graft.plans.MvRewrite.deregisterJoin(cPath, oPath)
@@ -1358,10 +1347,8 @@ object Extra {
       import graft.operators.IncrementalAgg
       val groups = Seq("o_orderstatus", "o_orderpriority")
       val sums = Seq("sum_price" -> "o_totalprice")
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = graft.core.Housekeeping.appTag(s)
-      val basePath = s"$tmp/graft_mvf_base_$tag"
-      val viewPath = s"$tmp/graft_mvf_view_$tag"
+      val basePath = graft.core.Housekeeping.scratchDir(s, "mvf_base")
+      val viewPath = graft.core.Housekeeping.scratchDir(s, "mvf_view")
       // deregister before rebuilding base/view parquet (q247's discipline)
       graft.plans.MvRewrite.deregister(basePath)
       Tables.orders(s, dir)
@@ -1457,13 +1444,11 @@ object Extra {
   private val mvJoinFilterRewrite = QueryDef(
     (s, dir) => {
       import graft.operators.IncrementalAgg
-      val tag = graft.core.Housekeeping.appTag(s)
-      val tmp = System.getProperty("java.io.tmpdir")
       val groups = Seq("seg", "o_orderstatus")
       val sums = Seq("sum_price" -> "o_totalprice")
-      val cPath = s"$tmp/graft_mvjf_cust_$tag"
-      val oPath = s"$tmp/graft_mvjf_ord_$tag"
-      val vPath = s"$tmp/graft_mvjf_view_$tag"
+      val cPath = graft.core.Housekeeping.scratchDir(s, "mvjf_cust")
+      val oPath = graft.core.Housekeeping.scratchDir(s, "mvjf_ord")
+      val vPath = graft.core.Housekeeping.scratchDir(s, "mvjf_view")
       graft.plans.MvRewrite.deregisterJoin(cPath, oPath)
       Tables.customer(s, dir)
         .select(col("c_custkey").as("k"), col("c_mktsegment").as("seg"))
@@ -1574,10 +1559,8 @@ object Extra {
       import graft.streaming.IvmStream
       val groups = Seq("o_orderstatus")
       val sums = Seq("sum_price" -> "o_totalprice")
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = graft.core.Housekeeping.appTag(s)
-      val basePath = s"$tmp/graft_mvv_base_$tag"
-      val stateRoot = s"$tmp/graft_mvv_state_$tag"
+      val basePath = graft.core.Housekeeping.scratchDir(s, "mvv_base")
+      val stateRoot = graft.core.Housekeeping.scratchDir(s, "mvv_state")
       graft.plans.MvRewrite.deregister(basePath)
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -1931,8 +1914,7 @@ object Extra {
           .select(col("l_returnflag").as("grp"),
             col("l_orderkey").cast("string").as("k"),
             col("l_linenumber").cast("int").as("shard"))
-        val path = s"${System.getProperty("java.io.tmpdir")}/" +
-          s"graft_sketch_store_${graft.core.Housekeeping.appTag(s)}"
+        val path = graft.core.Housekeeping.scratchDir(s, "sketch_store")
         HllMd5.sketchAgg(li, "k", Seq("grp", "shard"))
           .write.mode("overwrite").parquet(path)
         val loaded = s.read.parquet(path)

@@ -89,11 +89,8 @@ object Medallion {
       // bronze: materialize the raw claims, read back (q17 pattern — the
       // scan the silver model sees is a real parquet read, not lineage)
       // unique per Spark app: two concurrent gate/bench runs on one machine
-      // must not overwrite each other's bronze data mid-query; prior runs'
-      // leftovers are swept (age-guarded) so repeated runs stay bounded
-      val tag = graft.core.Housekeeping.appTag(s)
-      graft.core.Housekeeping.cleanStaleTmpDirs("graft_medallion_bronze_", tag)
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_medallion_bronze_$tag"
+      // must not overwrite each other's bronze data mid-query
+      val tmp = graft.core.Housekeeping.scratchDir(s, "medallion_bronze")
       rawClaims(s, dir).write.mode("overwrite").parquet(tmp)
       s.read.parquet(tmp).createOrReplaceTempView("graft_mdl_bronze_claims")
       rawPolicies(s, dir).createOrReplaceTempView("graft_mdl_bronze_policies")

@@ -393,7 +393,7 @@ object Relational {
     */
   private val csvRoundtrip = QueryDef(
     (s, dir) => {
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_csv_nation_${graft.core.Housekeeping.appTag(s)}"
+      val tmp = graft.core.Housekeeping.scratchDir(s, "csv_nation")
       Tables.nation(s, dir).write.mode("overwrite").option("header", "true").csv(tmp)
       s.read
         .schema("n_nationkey INT, n_name STRING, n_regionkey INT")

@@ -26,7 +26,7 @@ object Storage {
     */
   private val orcRoundtrip = QueryDef(
     (s, dir) => {
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_orc_supplier_${Housekeeping.appTag(s)}"
+      val tmp = Housekeeping.scratchDir(s, "orc_supplier")
       Tables.supplier(s, dir).write.mode("overwrite").orc(tmp)
       s.read.orc(tmp)
         .groupBy("s_nationkey")
@@ -46,7 +46,7 @@ object Storage {
     */
   private val jsonlRoundtrip = QueryDef(
     (s, dir) => {
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_jsonl_customer_${Housekeeping.appTag(s)}"
+      val tmp = Housekeeping.scratchDir(s, "jsonl_customer")
       Tables.customer(s, dir)
         .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
         .write.mode("overwrite").json(tmp)
@@ -72,10 +72,8 @@ object Storage {
     */
   private val bucketedJoin = QueryDef(
     (s, dir) => {
-      val tag = Housekeeping.appTag(s)
-      val ot = s"graft_gate_bkt_orders_$tag"
-      val lt = s"graft_gate_bkt_lineitem_$tag"
-      Housekeeping.dropStaleTables(s, "graft_gate_bkt_", tag)
+      val ot = Housekeeping.scratchTable(s, "gate_bkt_orders")
+      val lt = Housekeeping.scratchTable(s, "gate_bkt_lineitem")
       // the bucketed LAYOUT is built once per session and reused on re-runs
       // — exactly how a production lake works (bucketing is amortized over
       // every downstream join, not paid per query) and what the r7 verdict
@@ -134,7 +132,7 @@ object Storage {
     */
   private val partitionPrune = QueryDef(
     (s, dir) => {
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_part_orders_${Housekeeping.appTag(s)}"
+      val tmp = Housekeeping.scratchDir(s, "part_orders")
       // layout built once per session, reused on re-runs (same rationale as
       // q83: partitioning is amortized infrastructure; the operator under
       // test is the PRUNED SCAN, which PlanShapeSpec pins to one partition).
@@ -206,7 +204,7 @@ object Storage {
     */
   private val csvQuarantine = QueryDef(
     (s, dir) => {
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_csv_quarantine_${Housekeeping.appTag(s)}"
+      val tmp = Housekeeping.scratchDir(s, "csv_quarantine")
       Tables.nation(s, dir)
         .select(concat_ws(",",
           when(col("n_nationkey") % 5 === 0,
@@ -248,9 +246,7 @@ object Storage {
   private val mergeSchemaAppend = QueryDef(
     (s, dir) => {
       val fmt = graft.sources.ParquetTableFormat
-      val tag = Housekeeping.appTag(s)
-      val tbl = s"graft_gate_merge_$tag"
-      Housekeeping.dropStaleTables(s, "graft_gate_merge_", tag)
+      val tbl = Housekeeping.scratchTable(s, "gate_merge")
       s.sql(s"DROP TABLE IF EXISTS $tbl") // append sink: re-runs must reset
       val nation = Tables.nation(s, dir)
       fmt.appendMergeSchema(s,
@@ -279,11 +275,9 @@ object Storage {
   private val ingestStamp = QueryDef(
     (s, dir) => {
       val fmt = graft.sources.ParquetTableFormat
-      val tag = Housekeeping.appTag(s)
-      val tbl = s"graft_gate_stamp_$tag"
-      Housekeeping.dropStaleTables(s, "graft_gate_stamp_", tag)
+      val tbl = Housekeeping.scratchTable(s, "gate_stamp")
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_csv_stamp_$tag"
+      val tmp = Housekeeping.scratchDir(s, "csv_stamp")
       Tables.nation(s, dir).write.mode("overwrite").option("header", "true").csv(tmp)
       val ingestor = new graft.ingest.Ingestor(fmt, batchId = "gate_batch_001",
         stampTimestamp = Some(java.time.Instant.parse("2024-01-15T10:30:00Z")))
@@ -311,7 +305,7 @@ object Storage {
     */
   private val compaction = QueryDef(
     (s, dir) => {
-      val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_compact_docs_${Housekeeping.appTag(s)}"
+      val tmp = Housekeeping.scratchDir(s, "compact_docs")
       graft.operators.Compaction
         .compactToTarget(Tables.documents(s, dir), tmp, 128)
         .select(col("doc_id"), col("n_chars"),
@@ -331,7 +325,7 @@ object Storage {
     */
   private val multiUriSource = QueryDef(
     (s, dir) => {
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft_uri_docs_${Housekeeping.appTag(s)}"
+      val base = Housekeeping.scratchDir(s, "uri_docs")
       val docs = Tables.documents(s, dir)
       docs.filter(col("doc_id") % 2 === 0).write.mode("overwrite").parquet(s"$base/drop_a")
       docs.filter(col("doc_id") % 2 === 1).write.mode("overwrite").parquet(s"$base/drop_b")
@@ -361,9 +355,7 @@ object Storage {
     */
   private val metastoreScan = QueryDef(
     (s, dir) => {
-      val tag = Housekeeping.appTag(s)
-      val tbl = s"graft_gate_raw_supplier_$tag"
-      Housekeeping.dropStaleTables(s, "graft_gate_raw_supplier_", tag)
+      val tbl = Housekeeping.scratchTable(s, "gate_raw_supplier")
       Tables.supplier(s, dir).write.mode("overwrite")
         .format("parquet").saveAsTable(tbl)
       s.table(tbl)
@@ -385,21 +377,18 @@ object Storage {
     * engines independently parse the file metadata, so what is verified
     * is the drift classification itself, not a copied expectation.
     *
-    * The artifact path is SESSION-TAGGED (concurrent JVMs must not overwrite
-    * each other's in-flight commit — Spark's overwrite is delete-then-write,
-    * so a shared fixed path could transiently glob to zero part files) and
-    * carries the `graft_keep_` prefix: the oracle replays the footer AFTER
-    * this JVM exits, so the exit sweep must not remove it (the age-guarded
-    * stale sweep reclaims it instead). The tagged path reaches the oracle
-    * through [[graft.core.DynamicOracle]].
+    * The artifact is `Housekeeping.scratchDir(s, "keep_schema_drift")`:
+    * SESSION-TAGGED (concurrent JVMs must not overwrite each other's
+    * in-flight commit — Spark's overwrite is delete-then-write, so a shared
+    * fixed path could transiently glob to zero part files) and under the
+    * `graft_keep_` prefix: the oracle replays the footer AFTER this JVM
+    * exits, so the exit sweep spares it and a later run's `scratchDir` of
+    * the same stem reclaims it once it is an hour old. The tagged path
+    * reaches the oracle through [[graft.core.DynamicOracle]].
     */
   private val schemaDriftGate = QueryDef(
     (s, dir) => {
-      val tag = Housekeeping.appTag(s)
-      Housekeeping.cleanStaleTmpDirs("graft_keep_schema_drift_", tag)
-      // no ".parquet" suffix on the dir: cleanStaleTmpDirs' own-artifact
-      // guard is endsWith(tag)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_keep_schema_drift_$tag"
+      val path = Housekeeping.scratchDir(s, "keep_schema_drift")
       Tables.supplier(s, dir)
         .withColumn("s_nationkey", col("s_nationkey").cast("bigint"))
         .withColumn("s_region", concat(lit("R"), col("s_nationkey")))
@@ -516,9 +505,7 @@ object Storage {
     */
   private lazy val timeTravel = QueryDef(
     (s, dir) => {
-      val tag = Housekeeping.appTag(s)
-      Housekeeping.cleanStaleTmpDirs("graft_gate_tt_", tag)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_gate_tt_$tag"
+      val path = Housekeeping.scratchDir(s, "gate_tt")
       val vt = graft.sources.VersionedTable
       val v1 = Tables.customer(s, dir)
         .filter(col("c_custkey") <= 500)
@@ -560,9 +547,7 @@ object Storage {
     */
   private lazy val exactlyOnceSink = QueryDef(
     (s, dir) => {
-      val tag = Housekeeping.appTag(s)
-      Housekeeping.cleanStaleTmpDirs("graft_gate_xo_", tag)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_gate_xo_$tag"
+      val path = Housekeeping.scratchDir(s, "gate_xo")
       val nation = Tables.nation(s, dir)
       val b0 = nation.filter(col("n_nationkey") < 13)
       graft.streaming.EventStreams.idempotentAppend(b0.limit(5), 0L, path)

@@ -820,10 +820,8 @@ object Stream {
           val b = PerceptualHash.dHashBands(px, w, h)
           (id, b(0), b(1), b(2), b(3))
         }.toDF("id", "b0", "b1", "b2", "b3")
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = graft.core.Housekeeping.appTag(s)
-      val hashPath = s"$tmp/graft_ipd_hashes_$tag"
-      val idxPath = s"$tmp/graft_ipd_index_$tag"
+      val hashPath = graft.core.Housekeeping.scratchDir(s, "ipd_hashes")
+      val idxPath = graft.core.Housekeeping.scratchDir(s, "ipd_index")
       // ingest once: corpus hashes + band index sorted by band_key (range
       // partition + in-file sort = row-group stats prune the probe scan)
       val cH = hash(corpus)

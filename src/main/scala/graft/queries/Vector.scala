@@ -218,9 +218,7 @@ object Vector {
   private val ivfIndexQuery = QueryDef(
     (s, dir) => {
       val corpus = Tables.embeddings(s, dir)
-      val tag = graft.core.Housekeeping.appTag(s)
-      graft.core.Housekeeping.cleanStaleTmpDirs("graft_gate_ivf_", tag)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_gate_ivf_$tag"
+      val path = graft.core.Housekeeping.scratchDir(s, "gate_ivf")
       graft.operators.IvfIndex.save(
         graft.operators.IvfIndex.build(corpus, kCells = 8, iters = 3), path)
       // the on-disk index is self-contained after save: release the training

@@ -39,7 +39,7 @@ class CleansingSpec extends AnyFunSuite {
   }
 
   test("silver_policies end-to-end cleanses the messy fixture") {
-    val dir = Fixtures.tempDir()
+    val dir = Fixtures.tempDir("graft_fixtures")
     val messyCsv = Fixtures.writeCsv(dir, "messy.csv",
       Fixtures.policiesHeader, Fixtures.messyPoliciesRows)
     spark.sql("CREATE DATABASE IF NOT EXISTS cleansing_test")

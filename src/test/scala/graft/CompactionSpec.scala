@@ -18,7 +18,7 @@ class CompactionSpec extends AnyFunSuite {
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
 
   test("many small inputs merge to exactly ceil(n/target) files") {
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_compact_spec_a"
+    val tmp = Fixtures.tempDir("graft_compact_spec_a").toString
     // 1000 rows scattered across 64 tiny partitions
     val df = spark.range(1000).repartition(64)
       .select(col("id"), (col("id") % 13).as("v"))
@@ -35,7 +35,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("fewer rows than target collapse to one file") {
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_compact_spec_b"
+    val tmp = Fixtures.tempDir("graft_compact_spec_b").toString
     val df = spark.range(50).repartition(16).toDF("id")
     val back = Compaction.compactToTarget(df, tmp, 1000)
     assert(files(tmp).length === 1)
@@ -43,7 +43,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("empty input still writes a readable (empty) table") {
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft_compact_spec_c"
+    val tmp = Fixtures.tempDir("graft_compact_spec_c").toString
     val df = spark.range(10).filter(col("id") < 0).toDF("id")
     val back = Compaction.compactToTarget(df, tmp, 100)
     assert(back.count() === 0L)

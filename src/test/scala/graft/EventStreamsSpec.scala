@@ -18,7 +18,7 @@ class EventStreamsSpec extends AnyFunSuite {
     * parquet into one.
     */
   lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_events_stream")
+    val dir = Fixtures.tempDir("graft_events_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"${SparkTestSession.sfDir}/events.parquet"),
       dir.resolve("part-0.parquet"))
@@ -27,7 +27,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   /** Same staging for documents, shared by the LM and DSIR stream tests. */
   lazy val docsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_docs_stream")
+    val dir = Fixtures.tempDir("graft_docs_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"${SparkTestSession.sfDir}/documents.parquet"),
       dir.resolve("part-0.parquet"))
@@ -118,7 +118,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("streaming ingest sinks micro-batches into a medallion table") {
     spark.sql("CREATE DATABASE IF NOT EXISTS stream_test")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val ckpt = Fixtures.tempDir("graft_ckpt").toString
     val q = EventStreams.sinkToTable(
       EventStreams.readEvents(spark, eventsDir),
       graft.sources.ParquetTableFormat,
@@ -153,8 +153,8 @@ class EventStreamsSpec extends AnyFunSuite {
     // checkpoint: the source must skip everything already committed (no
     // re-ingest of file 0) and pick up only the new file — the exactly-once
     // resume contract a production ingest relies on after a crash/deploy
-    val dir = java.nio.file.Files.createTempDirectory("graft_resume_stream")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_resume_ckpt").toString
+    val dir = Fixtures.tempDir("graft_resume_stream")
+    val ckpt = Fixtures.tempDir("graft_resume_ckpt").toString
     val tbl = "graft_stream_resume_tbl"
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     val src = java.nio.file.Paths.get(s"${SparkTestSession.sfDir}/events.parquet")
@@ -181,7 +181,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // RE-DELIVERED with the same batchId. The partition-per-batch overwrite
     // must absorb the replay (including a partial first attempt) without
     // duplicating rows, while new batch ids append.
-    val out = java.nio.file.Files.createTempDirectory("graft_eo_sink").toString
+    val out = Fixtures.tempDir("graft_eo_sink").toString
     val b0 = (1L to 100L).toDF("v")
     EventStreams.idempotentAppend(b0, 0L, out)
     assert(spark.read.parquet(out).count() == 100)
@@ -200,9 +200,9 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("exactly-once sink end-to-end over a file stream") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_eo_stream")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_eo_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_eo_out").toString
+    val dir = Fixtures.tempDir("graft_eo_stream")
+    val ckpt = Fixtures.tempDir("graft_eo_ckpt").toString
+    val out = Fixtures.tempDir("graft_eo_out").toString
     val src = java.nio.file.Paths.get(s"${SparkTestSession.sfDir}/events.parquet")
     java.nio.file.Files.copy(src, dir.resolve("0.parquet"))
     def run(): Unit = {
@@ -222,7 +222,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("sessionization state carries across micro-batches") {
     // split events by time into two files; maxFilesPerTrigger=1 forces two
     // micro-batches, so sessions spanning the cut exercise state handoff
-    val dir = java.nio.file.Files.createTempDirectory("graft_two_batches")
+    val dir = Fixtures.tempDir("graft_two_batches")
     val ev = Tables.events(spark, SparkTestSession.sfDir).orderBy("ts")
     val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
       .head.getTimestamp(0)
@@ -266,7 +266,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // at 09:35/09:36 — before the open session's reach (09:50) but within
     // the gap of EACH OTHER, so they must emit as ONE closed session of 2
     // (the pre-fix code emitted two spurious singletons)
-    val dir = java.nio.file.Files.createTempDirectory("graft_late_merge")
+    val dir = Fixtures.tempDir("graft_late_merge")
     def writeBatch(name: String, minutes: Seq[Int]): Unit = {
       val df = minutes.map(m => (1L, new java.sql.Timestamp(
           java.time.Instant.parse("2024-01-01T09:00:00Z").toEpochMilli + m * 60000L),
@@ -322,7 +322,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("readEvents starts on an EMPTY landing directory and picks up late files") {
     // the normal streaming-startup order: define the stream BEFORE the
     // first file lands; the schema probe must fall back, not throw
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty_stream")
+    val dir = Fixtures.tempDir("graft_empty_stream")
     val stream = EventStreams.readEvents(spark, dir.toString)
     val q = stream.writeStream.outputMode("append")
       .format("memory").queryName("late_files_out").start()
@@ -343,14 +343,14 @@ class EventStreamsSpec extends AnyFunSuite {
     // them on a checkpoint and restart, so the register state also
     // survives a recovery. The final per-group row must equal the batch
     // twin exactly — same doubles, not "within sketch error".
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll_stream")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_hll_ckpt")
+    val dir = Fixtures.tempDir("graft_hll_stream")
+    val ckpt = Fixtures.tempDir("graft_hll_ckpt")
     val ev = Tables.events(spark, SparkTestSession.sfDir)
     val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
       .head.getTimestamp(0)
     // stage as flat files (the source lists the directory, not nested dirs)
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_hll_stage")
+      val tmp = Fixtures.tempDir("graft_hll_stage")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       java.nio.file.Files.move(
         java.nio.file.Files.list(tmp)
@@ -409,13 +409,13 @@ class EventStreamsSpec extends AnyFunSuite {
     // stop+restart on the checkpoint between them; every final per-group
     // emission must equal the batch twin's doubles exactly
     val k = 8 // < the 15 distinct users per type at sf0.001 → saturated branch
-    val dir = java.nio.file.Files.createTempDirectory("graft_kmv_stream")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_kmv_ckpt")
+    val dir = Fixtures.tempDir("graft_kmv_stream")
+    val ckpt = Fixtures.tempDir("graft_kmv_ckpt")
     val ev = Tables.events(spark, SparkTestSession.sfDir)
     val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
       .head.getTimestamp(0)
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_kmv_stage")
+      val tmp = Fixtures.tempDir("graft_kmv_stage")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       java.nio.file.Files.move(
         java.nio.file.Files.list(tmp)
@@ -466,13 +466,13 @@ class EventStreamsSpec extends AnyFunSuite {
     // counter updates are pure sums, so micro-batch boundaries and a
     // checkpoint restart cannot move a single counter off the batch twin
     val width = 64
-    val dir = java.nio.file.Files.createTempDirectory("graft_cms_stream")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cms_ckpt")
+    val dir = Fixtures.tempDir("graft_cms_stream")
+    val ckpt = Fixtures.tempDir("graft_cms_ckpt")
     val ev = Tables.events(spark, SparkTestSession.sfDir)
     val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
       .head.getTimestamp(0)
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cms_stage")
+      val tmp = Fixtures.tempDir("graft_cms_stage")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       java.nio.file.Files.move(
         java.nio.file.Files.list(tmp)
@@ -520,11 +520,11 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("streaming as-of enrich converges to the native batch as-of join across restarts") {
     import spark.implicits._
-    val evDir = java.nio.file.Files.createTempDirectory("graft_asof_ev")
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_asof_dim")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_asof_ckpt")
+    val evDir = Fixtures.tempDir("graft_asof_ev")
+    val dimDir = Fixtures.tempDir("graft_asof_dim")
+    val ckpt = Fixtures.tempDir("graft_asof_ckpt")
     def stage(df: org.apache.spark.sql.DataFrame, dir: java.nio.file.Path, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_asof_stage")
+      val tmp = Fixtures.tempDir("graft_asof_stage")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       java.nio.file.Files.move(
         java.nio.file.Files.list(tmp)
@@ -593,13 +593,13 @@ class EventStreamsSpec extends AnyFunSuite {
     // bin counts are pure sums over the shared scalar/column binning, so
     // micro-batch splits and a restart cannot move a count between bins
     val (lo, hi, nBins) = (0.0, 100.0, 32)
-    val dir = java.nio.file.Files.createTempDirectory("graft_hist_stream")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_hist_ckpt")
+    val dir = Fixtures.tempDir("graft_hist_stream")
+    val ckpt = Fixtures.tempDir("graft_hist_ckpt")
     val ev = Tables.events(spark, SparkTestSession.sfDir)
     val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
       .head.getTimestamp(0)
     def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_hist_stage")
+      val tmp = Fixtures.tempDir("graft_hist_stage")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       java.nio.file.Files.move(
         java.nio.file.Files.list(tmp)

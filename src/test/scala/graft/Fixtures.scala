@@ -57,5 +57,28 @@ object Fixtures {
     f.toString
   }
 
-  def tempDir(): Path = Files.createTempDirectory("graft_fixtures")
+  /** One root per test JVM for every scratch directory the suites create,
+    * made on first use and deleted, with everything under it, when the JVM
+    * exits — test runs leave nothing behind in java.io.tmpdir.
+    */
+  private lazy val tempRoot: Path = {
+    val root = Files.createTempDirectory("graft_test")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
+        f.delete()
+      }
+      rm(root.toFile)
+    }, "graft-test-tmp-sweep"))
+    root
+  }
+
+  private val tempSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A fresh directory `<prefix><n>` under the per-JVM root. A counter, not
+    * a random suffix: plan strings cut file locations at 100 characters, and
+    * MvRewriteSpec reads view paths out of them.
+    */
+  def tempDir(prefix: String): Path =
+    Files.createDirectory(tempRoot.resolve(s"$prefix${tempSeq.incrementAndGet()}"))
 }

@@ -16,9 +16,7 @@ class IvfIndexSpec extends AnyFunSuite {
   lazy val emb = Tables.embeddings(spark, SparkTestSession.sfDir).cache()
   // unique per run: two concurrent test invocations must not clobber each
   // other's index directories (save overwrites, load scans)
-  private lazy val path =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_test_" +
-      java.util.UUID.randomUUID().toString.take(8)
+  private lazy val path = Fixtures.tempDir("graft_ivf_index_test_").toString
 
   private lazy val built = IvfIndex.build(emb, kCells = 8, iters = 2)
   private lazy val loaded = { IvfIndex.save(built, path); IvfIndex.load(spark, path) }

@@ -45,12 +45,11 @@ class IvmStreamSpec extends AnyFunSuite {
       .select("op", "o_orderpriority", "o_totalprice", "o_orderkey")
       .cache()
 
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ivm_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivm_ckpt")
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_ivm_state").toString
+    val srcDir = Fixtures.tempDir("graft_ivm_src")
+    val ckpt = Fixtures.tempDir("graft_ivm_ckpt")
+    val statePath = Fixtures.tempDir("graft_ivm_state").toString
     def stage(df: DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivm_stage")
+      val tmp = Fixtures.tempDir("graft_ivm_stage")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       java.nio.file.Files.move(
         java.nio.file.Files.list(tmp)
@@ -135,12 +134,11 @@ class IvmStreamSpec extends AnyFunSuite {
               lit(null).cast("string").as("seg"),
               col("o_orderstatus"), col("o_totalprice")))
 
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_jivm_src")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_jivm_ckpt")
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_jivm_state").toString
+    val srcDir = Fixtures.tempDir("graft_jivm_src")
+    val ckpt = Fixtures.tempDir("graft_jivm_ckpt")
+    val statePath = Fixtures.tempDir("graft_jivm_state").toString
     def stage(df: DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_jivm_stage")
+      val tmp = Fixtures.tempDir("graft_jivm_stage")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       java.nio.file.Files.move(
         java.nio.file.Files.list(tmp)
@@ -196,9 +194,9 @@ class IvmStreamSpec extends AnyFunSuite {
 
   test("a versioned MV registration tracks the stream's refreshes, no re-register") {
     import graft.plans.MvRewrite
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivm_mv").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivm_mv_ckpt")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_ivm_mv_src")
+    val dir = Fixtures.tempDir("graft_ivm_mv").toString
+    val ckpt = Fixtures.tempDir("graft_ivm_mv_ckpt")
+    val srcDir = Fixtures.tempDir("graft_ivm_mv_src")
     Tables.orders(spark, SparkTestSession.sfDir)
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
       .write.parquet(s"$dir/base")
@@ -222,7 +220,7 @@ class IvmStreamSpec extends AnyFunSuite {
       Map("o_totalprice" -> "sum_price"))
     try {
       def stage(df: DataFrame, name: String): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ivm_mv_stage")
+        val tmp = Fixtures.tempDir("graft_ivm_mv_stage")
         df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         java.nio.file.Files.move(
           java.nio.file.Files.list(tmp)
@@ -288,8 +286,7 @@ class IvmStreamSpec extends AnyFunSuite {
   }
 
   test("vacuum drops old committed view versions, never the newest") {
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_ivm_vacuum").toString
+    val statePath = Fixtures.tempDir("graft_ivm_vacuum").toString
     import spark.implicits._
     (0L to 3L).foreach(v => Seq((v, 1L)).toDF("ver", "n")
       .write.parquet(s"$statePath/v=$v"))

@@ -19,7 +19,7 @@ class MaterializeSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def withReliableDir[T](f: java.nio.file.Path => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val dir = Fixtures.tempDir("graft-ckpt")
     spark.conf.set(Materialize.ConfKey, dir.toString)
     try f(dir)
     finally {

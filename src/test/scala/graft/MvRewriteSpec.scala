@@ -21,8 +21,7 @@ class MvRewriteSpec extends AnyFunSuite {
   private val basePath = s"${SparkTestSession.sfDir}/orders.parquet"
 
   private def withView(f: => Unit): Unit = {
-    val viewPath = java.nio.file.Files
-      .createTempDirectory("graft_mv_spec").toString
+    val viewPath = Fixtures.tempDir("graft_mv_spec").toString
     IncrementalAgg.state(orders, groups, sums)
       .write.mode("overwrite").parquet(viewPath)
     MvRewrite.register(spark, basePath, viewPath, groups,
@@ -94,7 +93,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("global count over an EMPTY registered base returns 0, not NULL") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mv_empty").toString
+    val dir = Fixtures.tempDir("graft_mv_empty").toString
     val empty = orders.filter(lit(false))
       .select("o_orderstatus", "o_orderpriority", "o_totalprice")
     empty.write.parquet(s"$dir/base")
@@ -135,7 +134,7 @@ class MvRewriteSpec extends AnyFunSuite {
 
   test("join-view rewrite fires only on the exact registered equi-join") {
     import graft.core.Tables
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvj").toString
+    val dir = Fixtures.tempDir("graft_mvj").toString
     val c = Tables.customer(spark, SparkTestSession.sfDir)
       .select(col("c_custkey").as("k"), col("c_mktsegment").as("seg"))
     val o = Tables.orders(spark, SparkTestSession.sfDir)
@@ -195,7 +194,7 @@ class MvRewriteSpec extends AnyFunSuite {
 
   test("versioned registry resolves the NEWEST committed version at match time") {
     import graft.operators.IncrementalAgg
-    val dir = java.nio.file.Files.createTempDirectory("graft_mv_ver").toString
+    val dir = Fixtures.tempDir("graft_mv_ver").toString
     orders.select("o_orderstatus", "o_orderpriority", "o_totalprice")
       .write.parquet(s"$dir/base")
     val base = spark.read.parquet(s"$dir/base")
@@ -235,7 +234,7 @@ class MvRewriteSpec extends AnyFunSuite {
 
   test("versioned JOIN registration flips to the stream's newest view version") {
     import graft.core.Tables
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvj_ver").toString
+    val dir = Fixtures.tempDir("graft_mvj_ver").toString
     val c = Tables.customer(spark, SparkTestSession.sfDir)
       .select(col("c_custkey").as("k"), col("c_mktsegment").as("seg"))
     val o = Tables.orders(spark, SparkTestSession.sfDir)
@@ -272,7 +271,7 @@ class MvRewriteSpec extends AnyFunSuite {
 
   test("join rewrite refuses a group column whose name exists on BOTH sides") {
     import graft.core.Tables
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvj_amb").toString
+    val dir = Fixtures.tempDir("graft_mvj_amb").toString
     // both sides carry a column literally named "seg": the left's is the
     // registered group column, the right's is a decoy with other values
     val c = Tables.customer(spark, SparkTestSession.sfDir)
@@ -312,8 +311,7 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("registered min/max columns answer min/max roll-ups from the view") {
-    val viewPath = java.nio.file.Files
-      .createTempDirectory("graft_mv_spec").toString
+    val viewPath = Fixtures.tempDir("graft_mv_spec").toString
     orders.groupBy(groups.map(col): _*)
       .agg(count(lit(1)).as("n"),
         sum(OracleArith.dec2(col("o_totalprice"))).as("sum_price"),

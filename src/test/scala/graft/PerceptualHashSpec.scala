@@ -73,7 +73,7 @@ class PerceptualHashSpec extends AnyFunSuite {
     // corpus: 25 distinct-seed bases, ingested once
     val corpus = (0 until 25).map(s => hashRow(s.toLong, base(s)))
       .toDF("id", "b0", "b1", "b2", "b3")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ipd_spec").toString
+    val dir = Fixtures.tempDir("graft_ipd_spec").toString
     corpus.write.parquet(s"$dir/hashes")
     PerceptualHash.bandKeys(corpus, "id")
       .sortWithinPartitions("band_key")

@@ -26,7 +26,7 @@ class PipelineSpec extends AnyFunSuite {
     * when `dirty`.
     */
   private def csvs(dirty: Boolean): (String, String) = {
-    val dir = Fixtures.tempDir()
+    val dir = Fixtures.tempDir("graft_fixtures")
     (Fixtures.writeCsv(dir, "claims.csv", Fixtures.claimsHeader, Fixtures.claimsRows),
       Fixtures.writeCsv(dir, "policies.csv", Fixtures.policiesHeader,
         Fixtures.policiesRows ++ (if (dirty) Fixtures.dirtyPoliciesRows else Nil)))
@@ -209,7 +209,7 @@ class PipelineSpec extends AnyFunSuite {
   test("ingest specs sharing a target table both land, beside another target") {
     val cfg = AppConfig(appName = "graftshared")
     new Orchestrator(cfg, ParquetTableFormat).bootstrap(spark)
-    val dir = Fixtures.tempDir()
+    val dir = Fixtures.tempDir("graft_fixtures")
     val (early, late) = Fixtures.claimsRows.splitAt(3)
     val claims = cfg.tableName(Layer.Bronze, "claims")
     val sp = Seq(
@@ -274,7 +274,7 @@ class PipelineSpec extends AnyFunSuite {
     val cfg = AppConfig(appName = "grafttimeout", maxRetries = 0)
     val orch = new Orchestrator(cfg, ParquetTableFormat,
       stepTimeouts = Map("ingestion" -> 50L))
-    val dir = Fixtures.tempDir()
+    val dir = Fixtures.tempDir("graft_fixtures")
     val csv = Fixtures.writeCsv(dir, "claims.csv",
       Fixtures.claimsHeader, Fixtures.claimsRows)
     val slow = orch.run(spark,

@@ -14,7 +14,7 @@ class RuleSpec extends AnyFunSuite {
   import spark.implicits._
 
   lazy val dirtySilver = {
-    val dir = Fixtures.tempDir()
+    val dir = Fixtures.tempDir("graft_fixtures")
     val csv = Fixtures.writeCsv(dir, "dirty.csv",
       Fixtures.policiesHeader, Fixtures.dirtyPoliciesRows)
     spark.sql("CREATE DATABASE IF NOT EXISTS rule_test")

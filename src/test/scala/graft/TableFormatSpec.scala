@@ -55,7 +55,7 @@ class TableFormatSpec extends AnyFunSuite {
   }
 
   test("JSON ingest lands in bronze like CSV") {
-    val dir = Fixtures.tempDir()
+    val dir = Fixtures.tempDir("graft_fixtures")
     val f = dir.resolve("events.json")
     java.nio.file.Files.writeString(f,
       """{"id": 1, "kind": "view"}

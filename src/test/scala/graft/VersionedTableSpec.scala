@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.VersionedTable
@@ -14,7 +12,7 @@ class VersionedTableSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshPath() =
-    Files.createTempDirectory("graft_vt").toString + "/tbl"
+    Fixtures.tempDir("graft_vt").toString + "/tbl"
 
   test("commit returns monotone versions; pinned reads are immutable") {
     val path = freshPath()
