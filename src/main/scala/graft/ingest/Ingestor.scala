@@ -49,8 +49,8 @@ final case class IngestResult(
   *   keep latest) instead of dropDuplicates' arbitrary row.
   * - Errors are isolated per entity and reported in the result, not thrown
   *   (ingestion.py:149-176 semantics).
-  */
-/** @param stampTimestamp fixed ingestion timestamp to stamp instead of
+  *
+  * @param stampTimestamp fixed ingestion timestamp to stamp instead of
   *   `current_timestamp()` — injected by deterministic tests and the
   *   correctness gate (a wall-clock stamp cannot be oracle-compared);
   *   production callers leave it None. An Instant, not a java.sql
@@ -113,27 +113,23 @@ final class Ingestor(format: TableFormat, batchId: String,
       case (keys, None) => df.dropDuplicates(keys)
     }
 
-  /** Ingest every spec, isolating failures per entity
-    * (ingestion.py:149-176): one bad source never blocks the others.
-    * Specs with different `targetTable`s run at the same time on a per-run
-    * [[graft.core.JobPool]], under the caller's Spark job group; specs that
-    * share a target table run one after another in declaration order, so
-    * their appends never race. The results come back in spec order.
-    * A failed entity re-runs alone, up to `retries` times, through
-    * [[graft.core.JobPool.retry]]; entities that already appended are never
-    * re-run. (Caveat: a mid-write crash can still leave a partial append in
-    * the Parquet layer; Delta's transactional commit closes that via the
+  /** Ingest every spec through [[graft.core.JobPool.run]], isolating
+    * failures per entity (ingestion.py:149-176): one bad source never
+    * blocks the others. Each spec depends on the previous spec with the
+    * same `targetTable` (case-insensitive), so different targets ingest at
+    * the same time and a shared one appends in declaration order, even
+    * after a failure. The results come back in spec order. A failed entity
+    * re-runs alone under `limits` through [[graft.core.JobPool.retry]].
+    * (Caveat: a mid-write crash can still leave a partial append in the
+    * Parquet layer; Delta's transactional commit closes that via the
     * TableFormat seam.)
     */
   def ingestAll(spark: SparkSession, specs: Seq[IngestSpec],
-      retries: Int = 0, retrySleepMs: Long = 0L): Seq[IngestResult] = {
-    val chains = specs.zipWithIndex
-      .groupBy(_._1.targetTable.toLowerCase(java.util.Locale.ROOT)).values.toSeq
-    val pool = new JobPool[Seq[(Int, IngestResult)]](spark, math.max(1, chains.size))
-    try {
-      chains.foreach(chain => pool.submit(chain.map { case (spec, i) =>
-        i -> JobPool.retry(retries, retrySleepMs)(ingest(spark, spec))(_.ok) }))
-      chains.flatMap(_ => pool.next()).sortBy(_._1).map(_._2)
-    } finally pool.shutdown()
+      limits: JobPool.Limits = JobPool.Limits()): Seq[IngestResult] = {
+    val targets = specs.map(_.targetTable.toLowerCase(java.util.Locale.ROOT))
+    JobPool.run[IngestSpec, IngestResult](spark, specs, math.max(1, targets.distinct.size),
+        limits.deadline)(i => Seq(targets.lastIndexOf(targets(i), i - 1)).filter(_ >= 0)) {
+      (spec, _) => JobPool.retry(limits)(ingest(spark, spec))(_.ok)
+    }
   }
 }

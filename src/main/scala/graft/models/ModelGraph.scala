@@ -1,6 +1,5 @@
 package graft.models
 
-import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
@@ -51,10 +50,8 @@ final case class ModelRun(
   *
   * `parallelism` caps how many models run at once: the dbt `threads`
   * analogue (profiles.yml:10). It defaults to the number of models, and 1
-  * runs them one at a time in [[order]]. The models run on a per-run
-  * [[graft.core.JobPool]], under the caller's Spark job group, so a step
-  * timeout's `cancelJobGroup` reaches every model's jobs. Spark's FIFO
-  * scheduler shares the executors among the models' concurrent jobs.
+  * runs them one at a time in [[order]]. Spark's FIFO scheduler shares the
+  * executors among the models' concurrent jobs.
   */
 final class ModelGraph(models: Seq[Model], format: TableFormat,
     failuresTable: Option[String] = None,
@@ -88,49 +85,24 @@ final class ModelGraph(models: Seq[Model], format: TableFormat,
     models.sortBy(m => (ranked(m.name), m.name))
   }
 
-  /** Run every model; the results come back in [[order]]. Each model starts
-    * as soon as its deps have finished and a slot is free, the earliest in
-    * [[order]] first. Rule violations are stored and counted, never fatal.
-    * Stored-failure appends are serialized: the Parquet table layer has no
-    * concurrent-append transaction.
-    *
-    * A failed model re-runs alone, up to `retries` times, through
-    * [[graft.core.JobPool.retry]] (the same policy as per-entity ingestion):
-    * models that already succeeded are never re-built, so their stored
-    * failures are never re-appended under the same runId.
+  /** Run every model through [[graft.core.JobPool.run]]; the results come
+    * back in [[order]]. A model's deps are its dependency edges, and a
+    * model whose dep failed comes back `skipped: upstream failure` without
+    * a build, retry or sleep. Rule violations are stored and counted, never
+    * fatal; stored-failure appends are serialized (the Parquet table layer
+    * has no concurrent-append transaction). A failed model re-runs alone
+    * under `limits` through [[graft.core.JobPool.retry]], so models that
+    * succeeded never re-append their stored failures under the same runId.
     */
-  def run(spark: SparkSession, retries: Int = 0, retrySleepMs: Long = 0L): Seq[ModelRun] = {
-    val slots = math.max(1, math.min(parallelism, models.size))
-    val pool = new JobPool[ModelRun](spark, slots)
+  def run(spark: SparkSession, limits: JobPool.Limits = JobPool.Limits()): Seq[ModelRun] = {
     val failuresLock = new Object
-    val done = mutable.Map[String, ModelRun]()
-    val waiting = mutable.ArrayBuffer.from(order)
-    var running = 0
-    def ready(m: Model) = m.deps.forall(done.contains)
-    def blocked(m: Model) = m.deps.exists(d => !done(d).ok)
-    try {
-      while (done.size < order.size) {
-        // a skip needs no slot; a waiting model always has a running
-        // upstream (the graph is acyclic), so `next` cannot wait forever
-        waiting.find(m => ready(m) && (blocked(m) || running < slots)) match {
-          case Some(m) =>
-            waiting -= m
-            if (blocked(m))
-              done(m.name) = ModelRun(m.name, ok = false, 0, 0,
-                Some("skipped: upstream failure"))
-            else {
-              pool.submit(JobPool.retry(retries, retrySleepMs)(
-                runOne(spark, m, failuresLock))(_.ok))
-              running += 1
-            }
-          case None =>
-            val r = pool.next()
-            done(r.name) = r
-            running -= 1
-        }
-      }
-    } finally pool.shutdown()
-    order.map(m => done(m.name))
+    val index = order.map(_.name).zipWithIndex.toMap
+    JobPool.run[Model, ModelRun](spark, order, parallelism, limits.deadline)(
+        i => order(i).deps.map(index)) { (m, upstream) =>
+      if (upstream.exists(!_.ok))
+        ModelRun(m.name, ok = false, 0, 0, Some("skipped: upstream failure"))
+      else JobPool.retry(limits)(runOne(spark, m, failuresLock))(_.ok)
+    }
   }
 
   /** One attempt at `m`: overwrite-materialized models are idempotent per

@@ -1,10 +1,11 @@
 package graft.pipeline
 
-import scala.util.{Failure, Success, Try}
+import scala.concurrent.duration._
+import scala.util.Try
 
 import org.apache.spark.sql.SparkSession
 
-import graft.core.{AppConfig, Layer}
+import graft.core.{AppConfig, JobPool, Layer}
 import graft.ingest.{IngestResult, Ingestor, IngestSpec}
 import graft.models.{Model, ModelGraph, ModelRun}
 import graft.sources.TableFormat
@@ -50,14 +51,12 @@ final case class PipelineReport(
   * already succeeded.
   *
   * Steps are barriers: transformations start only after every ingest has
-  * finished. Within a step the work overlaps. `Ingestor.ingestAll` runs
-  * entities with different target tables at the same time (specs sharing a
-  * target run in declaration order), and `ModelGraph` starts each model as
-  * soon as its deps have finished, up to its `parallelism` cap (the dbt
-  * `threads` analogue, profiles.yml:10). Their worker threads run under the
-  * step's `graft-<step>` job group, set explicitly on each worker, so a step
-  * timeout's `cancelJobGroup` cancels every concurrent job of the step and
-  * listeners attribute those jobs to the step.
+  * finished. Within a step the ingest entities or the models overlap on
+  * one scheduler, [[graft.core.JobPool.run]], and every job runs under the
+  * step's `graft-<step>` job group, so listeners attribute it to the step.
+  * At the step's deadline `cancelJobGroup` cancels every concurrent job of
+  * the step and the scheduler starts nothing more: a timed-out step leaves
+  * no work behind.
   *
   * @param retrySleepMs pause before each per-unit retry; the default is the
   *   reference's `retry_delay` of 60 s (config.py:59), 0 disables it
@@ -66,35 +65,21 @@ final class Orchestrator(cfg: AppConfig, format: TableFormat,
     retrySleepMs: Long = 60000L,
     stepTimeouts: Map[String, Long] = Orchestrator.defaultTimeouts) {
 
-  /** Run `body` once under the step's job group and wall-clock timeout. On
-    * timeout, jobs tagged with the step's job group are cancelled on the
-    * cluster — the in-session analogue of the reference's subprocess
-    * timeouts (orchestrator.py:35,70,78 — 1800 s ingest, 3600 s transform).
+  /** Run `body` once on this thread under the step's job group, then
+    * restore the caller's. `body` gets the per-unit retries and the step
+    * deadline `now + stepTimeouts(step)`: the in-session analogue of the
+    * reference's subprocess timeouts (orchestrator.py:35,70,78: 1800 s
+    * ingest, 3600 s transform), enforced by [[graft.core.JobPool.run]].
     */
-  private def timed[A](step: String, spark: SparkSession)(body: => A): (Try[A], StepResult) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val timeout: Duration =
-      stepTimeouts.get(step).map(_.millis: Duration).getOrElse(Duration.Inf)
+  private def timed[A](step: String, spark: SparkSession)(
+      body: JobPool.Limits => A): (Try[A], StepResult) = {
     val t0 = System.nanoTime()
-    val fut = Future {
-      spark.sparkContext.setJobGroup(s"graft-$step", step, interruptOnCancel = true)
-      try body finally spark.sparkContext.clearJobGroup()
-    }
-    val res = Try(Await.result(fut, timeout)).recoverWith {
-      case _: java.util.concurrent.TimeoutException =>
-        // only Spark jobs can be killed: the timed-out body keeps running on
-        // its thread after its jobs are cancelled
-        spark.sparkContext.cancelJobGroup(s"graft-$step")
-        Failure(new java.util.concurrent.TimeoutException(
-          s"step $step timed out after $timeout"))
-    }
+    val limits = JobPool.Limits(cfg.maxRetries, retrySleepMs,
+      stepTimeouts.get(step).map(ms => Deadline.now + ms.millis))
+    val res = Try(JobPool.withJobGroup(spark.sparkContext, Some(s"graft-$step"), Some(step))(
+      body(limits)))
     val ms = (System.nanoTime() - t0) / 1000000
-    res match {
-      case Success(_) => (res, StepResult(step, ok = true, "", ms))
-      case Failure(e) => (res, StepResult(step, ok = false, e.toString, ms))
-    }
+    (res, StepResult(step, res.isSuccess, res.failed.map(_.toString).getOrElse(""), ms))
   }
 
   /** Bootstrap the medallion databases (reference dbt_project.yml:89-93). */
@@ -108,9 +93,8 @@ final class Orchestrator(cfg: AppConfig, format: TableFormat,
 
     // step 1: ingestion (fail-fast if ANY entity failed — orchestrator.py:
     // 157-160)
-    val (ingTry, ingStep) = timed("ingestion", spark) {
-      val rs = new Ingestor(format, batchId)
-        .ingestAll(spark, specs, retries = cfg.maxRetries, retrySleepMs = retrySleepMs)
+    val (ingTry, ingStep) = timed("ingestion", spark) { limits =>
+      val rs = new Ingestor(format, batchId).ingestAll(spark, specs, limits)
       if (!rs.forall(_.ok))
         throw new RuntimeException(
           rs.filterNot(_.ok).flatMap(_.error).mkString("; "))
@@ -120,10 +104,10 @@ final class Orchestrator(cfg: AppConfig, format: TableFormat,
     if (!ingStep.ok) return PipelineReport(Seq(ingStep), ingests, Nil)
 
     // step 2: transformations (model builds fail-fast; orchestrator.py:66-74)
-    val (mdlTry, mdlStep0) = timed("transformations", spark) {
+    val (mdlTry, mdlStep0) = timed("transformations", spark) { limits =>
       val runs = new ModelGraph(models, format,
         failuresTable = Some(cfg.tableName(Layer.Gold, "test_failures")),
-        runId = batchId).run(spark, retries = cfg.maxRetries, retrySleepMs = retrySleepMs)
+        runId = batchId).run(spark, limits)
       if (!runs.forall(_.ok))
         throw new RuntimeException(
           runs.filterNot(_.ok).flatMap(_.error).mkString("; "))

@@ -22,9 +22,6 @@ sealed trait Rule {
 
   /** Rows of `df` violating the rule. */
   def violations(df: DataFrame): DataFrame
-
-  /** Count of violating rows — single aggregate, no row materialization. */
-  def violationCount(df: DataFrame): Long = violations(df).count()
 }
 
 /** A rule defined by a row predicate: violation = NOT pred (null-safe —

@@ -118,7 +118,7 @@ class IncrementalModelSpec extends AnyFunSuite {
       else src
     })
     val runs = within(new ModelGraph(Seq(model), ParquetTableFormat)
-      .run(spark, retries = 1))
+      .run(spark, graft.core.JobPool.Limits(retries = 1)))
     assert(builds.get == 2)
     assert(runs.map(r => (r.ok, r.rows)) == Seq((true, 2L)))
   }

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -9,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{AppConfig, Layer}
+import graft.core.{AppConfig, JobPool, Layer}
 import graft.ingest.{Ingestor, IngestSpec}
 import graft.models.{InsuranceModels, ModelGraph}
 import graft.pipeline.Orchestrator
@@ -250,7 +251,7 @@ class PipelineSpec extends AnyFunSuite {
       val cfg = AppConfig(appName = app)
       new Orchestrator(cfg, ParquetTableFormat).bootstrap(spark)
       val rs = new Ingestor(format, "retry-batch")
-        .ingestAll(spark, specs(cfg, claimsCsv, policiesCsv), retries = retries)
+        .ingestAll(spark, specs(cfg, claimsCsv, policiesCsv), JobPool.Limits(retries = retries))
       (rs, cfg.tableName(Layer.Bronze, "claims"), cfg.tableName(Layer.Bronze, "policies"))
     }
     val (unfailed, _, _) = ingestInto("graftretryref", ParquetTableFormat, retries = 0)
@@ -283,6 +284,100 @@ class PipelineSpec extends AnyFunSuite {
       models = Nil)
     assert(!slow.ok)
     assert(slow.steps.head.detail.contains("timed out"))
+  }
+
+  test("a timed-out step leaves nothing behind: no retry, job or append after it") {
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val retrySleepMs = 200L
+    val cfg = AppConfig(appName = "grafttimeoutretry", maxRetries = 1)
+    val csv = Fixtures.writeCsv(Fixtures.tempDir("graft_fixtures"), "claims.csv",
+      Fixtures.claimsHeader, Fixtures.claimsRows)
+    val bronze = cfg.tableName(Layer.Bronze, "claims")
+    val sc = spark.sparkContext
+    def marker(name: String): Unit = {
+      sc.setJobGroup(name, name)
+      try spark.range(1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val rpt = new Orchestrator(cfg, ParquetTableFormat, retrySleepMs = retrySleepMs,
+        stepTimeouts = Map("ingestion" -> 50L)).run(spark,
+        specs = Seq(IngestSpec("slow", csv, bronze)), models = Nil)
+      assert(!rpt.ok)
+      assert(rpt.steps.head.detail.contains("timed out"))
+      marker("graft-test-returned")
+      // a retry left running would start within its sleep plus one ingest
+      Thread.sleep(retrySleepMs + 5000)
+      // listener events arrive in order: once this marker job is seen, so
+      // is every job started before it
+      marker("graft-test-waited")
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!groups.contains("graft-test-waited") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    val after = groups.asScala.toSeq.dropWhile(_ != "graft-test-returned")
+    assert(after.nonEmpty && !after.contains("graft-ingestion"), groups.asScala.mkString(", "))
+    assert(!spark.catalog.tableExists(bronze) || spark.table(bronze).count() == 0)
+  }
+
+  test("a run restores the caller's job group and description") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-test-caller", "caller", interruptOnCancel = false)
+    try {
+      assert(new Orchestrator(AppConfig(appName = "graftrestore"), ParquetTableFormat)
+        .run(spark, Nil, Nil).ok)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "graft-test-caller")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(sc.getLocalProperty("spark.job.interruptOnCancel") == "false")
+    } finally sc.clearJobGroup()
+  }
+
+  test("JobPool.run starts units after their deps and stops every one at its deadline") {
+    assert(JobPool.run[Int, Int](spark, Seq(1, 2, 3, 4), slots = 2)(i =>
+      if (i == 3) Seq(0, 2) else Nil) { (u, upstream) => u * 10 + upstream.sum } ==
+      Seq(10, 20, 30, 80))
+    val started = new ConcurrentLinkedQueue[Int]()
+    val t0 = System.nanoTime()
+    intercept[java.util.concurrent.TimeoutException](JobPool.run[Int, Int](spark,
+        Seq(0, 1, 2), slots = 2, Some(Deadline.now + 200.millis))(i => if (i == 2) Seq(0) else Nil) {
+      (u, _) => started.add(u); Thread.sleep(60000); u
+    })
+    // the blocked workers were interrupted, and unit 2 never started
+    assert(System.nanoTime() - t0 < 30L * 1000000000L)
+    assert(started.asScala.toSet == Set(0, 1))
+  }
+
+  test("JobPool.retry neither sleeps past its deadline nor starts an attempt after it") {
+    val attempts = new java.util.concurrent.atomic.AtomicInteger()
+    val t0 = System.nanoTime()
+    val last = JobPool.retry(JobPool.Limits(retries = 3, sleepMs = 60000L,
+      Some(Deadline.now + 200.millis)))(attempts.incrementAndGet())(_ => false)
+    assert(last == 1 && attempts.get == 1)
+    assert(System.nanoTime() - t0 < 30L * 1000000000L)
+    assert(JobPool.retry(JobPool.Limits(retries = 2))(attempts.incrementAndGet())(_ => false) == 4)
+  }
+
+  test("no source file outside core/JobPool.scala runs work on its own threads") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    val forbidden = Seq("scala.concurrent.Future", "Future {", "Await.", "ExecutionContext",
+      "Executors.", "ExecutorCompletionService")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val offenders = for {
+      f <- files(root)
+      if !f.getPath.endsWith("core/JobPool.scala")
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      if forbidden.exists(line.contains)
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "run concurrent pipeline work through graft.core.JobPool.run:\n" + offenders.mkString("\n"))
   }
 
   test("a missing source fails fast with an isolated error") {
