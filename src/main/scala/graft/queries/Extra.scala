@@ -730,8 +730,8 @@ object Extra {
     * operational surface): base table, a delta of key-matched updates plus
     * brand-new keys, upsert, compact, read back — the q17 materialize-
     * then-read pattern, so what's compared is the real on-disk result of
-    * the staged-swap merge, not lineage. The oracle replays the merge as
-    * anti-join + union.
+    * the merge (each step publishes a new table version), not lineage. The
+    * oracle replays the merge as anti-join + union.
     */
   private val upsertRoundtrip = QueryDef(
     (s, dir) => {

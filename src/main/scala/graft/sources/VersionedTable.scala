@@ -11,7 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[readLatest]]), and historical versions stay readable until
   * explicitly vacuumed. Commits are ATOMIC to readers: data stages into
   * a dot-prefixed temp dir and becomes visible through one filesystem
-  * rename — a reader never lists a half-written version.
+  * rename — a reader never lists a half-written version. It is also the
+  * commit behind every [[ParquetTableFormat]] rewrite, which then points
+  * the catalog at the new version and vacuums the rest.
   *
   * Scale notes: full-snapshot versioning is the right trade for
   * dimension/config tables (the reference's entities) where history
@@ -43,7 +45,9 @@ object VersionedTable {
     * The staging directory is WRITER-UNIQUE (version + UUID), so two
     * racing committers never interleave files — the rename decides the
     * race (directory renames are atomic on HDFS-like stores), the loser
-    * throws, and its orphaned staging is cleaned up before throwing.
+    * throws, and its orphaned staging is cleaned up before throwing. A
+    * write that fails or is cancelled deletes its staging too, so the
+    * path only ever holds committed versions.
     */
   def commit(spark: SparkSession, df: DataFrame, path: String): Long = {
     val next = versions(spark, path).lastOption.getOrElse(0L) + 1
@@ -51,7 +55,8 @@ object VersionedTable {
     val stage = new Path(
       s"$path/.staging_v${next}_${java.util.UUID.randomUUID().toString}")
     val target = new Path(s"$path/v$next")
-    df.write.mode("overwrite").parquet(stage.toString)
+    try df.write.mode("overwrite").parquet(stage.toString)
+    catch { case e: Throwable => fs.delete(stage, true); throw e }
     val renamed = !fs.exists(target) && fs.rename(stage, target)
     // Hadoop rename(src, dst) with dst an EXISTING directory moves src
     // INSIDE dst and reports true — a race loser on HDFS-like stores

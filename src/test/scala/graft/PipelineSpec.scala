@@ -324,6 +324,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(!spark.catalog.tableExists(bronze) || spark.table(bronze).count() == 0)
   }
 
+  test("a transformations step cancelled at its first write leaves every model table as it was") {
+    val (claimsCsv, policiesCsv) = csvs(dirty = true)
+    val cfg = AppConfig(appName = "graftcancel", maxRetries = 0)
+    val orch = new Orchestrator(cfg, ParquetTableFormat, retrySleepMs = 0)
+    def run(runId: String) = orch.run(spark, specs(cfg, claimsCsv, policiesCsv),
+      InsuranceModels.graph(cfg, runId))
+    val tables = InsuranceModels.graph(cfg, "").map(_.targetTable) :+
+      cfg.tableName(Layer.Gold, "test_failures")
+    assert(run("cancel-1").ok)
+    val counts = tables.map(t => t -> spark.table(t).count())
+    assert(counts.forall(_._2 > 0), counts)
+    val second = CancelWrites.during(spark, "graft-transformations")(run("cancel-2"))
+    assert(second.steps.map(s => (s.step, s.ok)) ==
+      Seq(("ingestion", true), ("transformations", false)))
+    assert(second.steps(1).detail.contains("cancelled"), second.steps(1).detail)
+    counts.foreach { case (t, n) => assert(spark.table(t).count() == n, t) }
+  }
+
   test("a run restores the caller's job group and description") {
     val sc = spark.sparkContext
     sc.setJobGroup("graft-test-caller", "caller", interruptOnCancel = false)

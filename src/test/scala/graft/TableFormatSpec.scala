@@ -1,13 +1,19 @@
 package graft
 
+import java.io.File
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Layer
 import graft.ingest.{Ingestor, IngestSpec}
 import graft.sources.ParquetTableFormat
 
-/** TableFormat schema evolution and non-CSV ingest formats. */
+/** TableFormat schema evolution, rewrites under a cancel, and non-CSV
+  * ingest formats.
+  */
 class TableFormatSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -52,6 +58,50 @@ class TableFormatSpec extends AnyFunSuite {
     ParquetTableFormat.compact(spark, "fmt_test.t4", targetFiles = 2)
     assert(spark.table("fmt_test.t4").count() == 1000)
     assert(spark.table("fmt_test.t4").rdd.getNumPartitions <= 2)
+  }
+
+  private def ident(table: String) = spark.sessionState.catalog.qualifyIdentifier(
+    spark.sessionState.sqlParser.parseTableIdentifier(table))
+
+  /** The directory that holds the table's versions. */
+  private def root(table: String): File = new File(new Path(
+    spark.sessionState.catalog.defaultTablePath(ident(table))).toUri.getPath)
+
+  /** Nothing under the table's root but the version the catalog reads. */
+  private def onlyCurrentVersion(table: String): Boolean = {
+    val location = spark.sessionState.catalog.getTableMetadata(ident(table)).location
+    root(table).list().toSet == Set(new File(location.getPath).getName)
+  }
+
+  private def snapshot(table: String): (StructType, Seq[String]) = {
+    val t = spark.table(table)
+    (t.schema, t.collect().map(_.toString).sorted.toSeq)
+  }
+
+  // each rewrite of a 2000-row (id, v) table, and its row count after
+  Seq[(String, String => Unit, Long)](
+    ("overwrite",
+      t => ParquetTableFormat.overwrite(spark, Seq((9L, "z")).toDF("id", "v"), t), 1L),
+    ("upsert", t => ParquetTableFormat.upsert(spark,
+      Seq((2L, "b2"), (4000L, "d")).toDF("id", "v"), t, Seq("id")), 2001L),
+    ("compact", t => ParquetTableFormat.compact(spark, t, targetFiles = 1), 2000L),
+    ("drift append", t => ParquetTableFormat.appendMergeSchema(spark,
+      Seq((4000L, 2.5)).toDF("id", "score"), t), 2001L)
+  ).foreach { case (op, rewrite, rowsAfter) =>
+    test(s"a cancelled $op leaves the previous version readable and no residue") {
+      spark.sql("CREATE DATABASE IF NOT EXISTS fmt_fault")
+      val t = s"fmt_fault.${op.replace(' ', '_')}"
+      ParquetTableFormat.overwrite(spark, spark.range(0, 2000, 1, 8)
+        .select(col("id"), (col("id") % 7).cast("string").as("v")), t)
+      val before = snapshot(t)
+      CancelWrites.assertCancelled(spark, root(t).toString)(rewrite(t))
+      assert(snapshot(t) == before)
+      assert(!spark.catalog.listTables("fmt_fault").collect().exists(_.name.contains("__stage_")))
+      assert(onlyCurrentVersion(t), root(t).list().mkString(", "))
+      rewrite(t)
+      assert(spark.table(t).count() == rowsAfter)
+      assert(onlyCurrentVersion(t), root(t).list().mkString(", "))
+    }
   }
 
   test("JSON ingest lands in bronze like CSV") {

@@ -32,6 +32,15 @@ class VersionedTableSpec extends AnyFunSuite {
     assert(names.toSet === Set("v1"))
   }
 
+  test("a cancelled commit leaves only committed versions") {
+    val path = freshPath()
+    VersionedTable.commit(spark, Seq((1, "a")).toDF("k", "v"), path)
+    CancelWrites.assertCancelled(spark, path)(
+      VersionedTable.commit(spark, Seq((2, "b")).toDF("k", "v"), path))
+    assert(new java.io.File(path).list().toSet === Set("v1"))
+    assert(VersionedTable.readLatest(spark, path).count() === 1L)
+  }
+
   test("vacuum drops old versions; dropped reads fail loudly") {
     val path = freshPath()
     (1 to 3).foreach(i =>
