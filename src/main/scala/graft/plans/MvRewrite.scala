@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.core.OracleArith
+import graft.sources.VersionedTable
 
 /** Transparent query rewrite over maintained aggregate views — the read
   * half of the IVM story (Goldstein & Larson, "Optimizing queries using
@@ -58,10 +59,11 @@ import graft.core.OracleArith
   *
   * Registration comes in two flavors: [[register]] freezes one parquet
   * listing (a static view), while [[registerVersioned]] points at an
-  * [[graft.streaming.IvmStream]] state ROOT and resolves the newest
-  * committed `v=N` at match time — a streaming refresh is picked up by
-  * the next query with no re-register, which is what makes continuous
-  * maintenance and transparent reads compose (q253).
+  * [[graft.streaming.IvmStream]] state ROOT and resolves its newest
+  * [[graft.sources.VersionedTable]] version at match time — a streaming
+  * refresh is picked up by the next query with no re-register, which is
+  * what makes continuous maintenance and transparent reads compose
+  * (q253).
   */
 object MvRewrite extends Rule[LogicalPlan] {
 
@@ -73,29 +75,30 @@ object MvRewrite extends Rule[LogicalPlan] {
     def plan(): Option[LogicalPlan] = Some(p)
   }
 
-  /** Resolves the newest committed `v=N` under an IvmStream state root at
-    * MATCH time (commit = parquet `_SUCCESS`, the exactly-once chain's
-    * marker), caching the analyzed plan per version so steady-state
-    * matching costs one directory listing, not a re-analysis. None while
-    * no version has committed — the rule then leaves the plan on the
-    * base scan rather than failing the query.
+  /** Resolves the newest committed version under an IvmStream state root
+    * at MATCH time, through [[graft.sources.VersionedTable.versions]] (a
+    * version exists only once its commit's rename landed, so a crashed
+    * commit's staging is never read), caching the analyzed plan per
+    * version so steady-state matching costs one directory listing, not a
+    * re-analysis. None while no version has committed — the rule then
+    * leaves the plan on the base scan rather than failing the query.
     */
   private final class Versioned(stateRoot: String) extends ViewSource {
     @volatile private var cached: Option[(Long, LogicalPlan)] = None
     // NOTE (r11, measured): caching the parquet schema per state root to
     // skip the footer job on version advance was tried and REVERTED — the
     // layout is NOT version-invariant (IncrementalAgg.refresh widens the
-    // sum's DECIMAL precision, so v=1 can carry a wider type than v=0;
-    // reading v=1 with v=0's schema fails with a Parquet type mismatch —
+    // sum's DECIMAL precision, so v1 can carry a wider type than v0;
+    // reading v1 with v0's schema fails with a Parquet type mismatch —
     // IvmStreamSpec's versioned-registration case caught it). The footer
     // read per refresh is the price of layout flexibility.
     def plan(): Option[LogicalPlan] = {
       val spark = SparkSession.active
-      graft.streaming.IvmStream.latestVersion(spark, stateRoot).map { v =>
+      VersionedTable.versions(spark, stateRoot).lastOption.map { v =>
         cached match {
           case Some((cv, p)) if cv == v => p
           case _ =>
-            val p = spark.read.parquet(s"$stateRoot/v=$v")
+            val p = VersionedTable.read(spark, stateRoot, v)
               .queryExecution.analyzed
             cached = Some((v, p))
             p
@@ -133,7 +136,7 @@ object MvRewrite extends Rule[LogicalPlan] {
   /** Register a CONTINUOUSLY MAINTAINED view for `basePath`: `stateRoot`
     * is the versioned state directory an
     * [[graft.streaming.IvmStream.maintainAggStream]] writer advances
-    * (`v=0`, `v=1`, ...); every match resolves the newest committed
+    * (`v0`, `v1`, ...); every match resolves the newest committed
     * version, so a refresh needs no re-register. Until the first version
     * commits, queries stay on the base scan.
     */

@@ -1539,16 +1539,18 @@ object Extra {
 
   /** q253: the IVM story end to end — continuous maintenance COMPOSED
     * with transparent reads. The view's versioned state chain
-    * (IvmStream's exactly-once `v=N` layout) is registered ONCE via
-    * MvRewrite.registerVersioned; a CDC batch then advances the chain to
-    * v=1 — exactly the refresh maintainAggStream's foreachBatch commits,
-    * reading newest-below-batch state (before=1) so a stale previous-run
-    * v=1 can never leak in — and the SAME registration answers the next
-    * base aggregate from v=1: no re-register, no base scan, no v=0
-    * (PlanShapeSpec pins all three). The base parquet is compacted to
-    * the post-delta snapshot (the registered logical table advances with
-    * its view), so the gate value is delta-consistent with or without
-    * the rewrite; the oracle recomputes post-delta truth from scratch,
+    * (IvmStream's exactly-once layout: one VersionedTable version per
+    * batch) is registered ONCE via MvRewrite.registerVersioned; a CDC
+    * batch then commits v1 — exactly the refresh maintainAggStream's
+    * foreachBatch commits for batch 1 over v0 — and the SAME registration
+    * answers the next base aggregate from v1: no re-register, no base
+    * scan, no v0 (PlanShapeSpec pins all three). The state root is
+    * emptied first: a commit of a version that exists is a replay and
+    * skips, so an earlier pass's v1 would otherwise stay. The base
+    * parquet is compacted to the post-delta snapshot (the registered
+    * logical table advances with its view), so the gate value is
+    * delta-consistent with or without the rewrite; the oracle recomputes
+    * post-delta truth from scratch,
     * proving refresh + version resolution exact. MvRewriteSpec drives
     * the same resolution through commit/no-commit edges; IvmStreamSpec
     * from a real running stream.
@@ -1556,7 +1558,7 @@ object Extra {
   private val mvVersionedRead = QueryDef(
     (s, dir) => {
       import graft.operators.IncrementalAgg
-      import graft.streaming.IvmStream
+      import graft.sources.VersionedTable
       val groups = Seq("o_orderstatus")
       val sums = Seq("sum_price" -> "o_totalprice")
       val basePath = graft.core.Housekeeping.scratchDir(s, "mvv_base")
@@ -1565,24 +1567,25 @@ object Extra {
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       o.write.mode("overwrite").parquet(basePath)
-      IncrementalAgg.state(s.read.parquet(basePath), groups, sums)
-        .write.mode("overwrite").parquet(s"$stateRoot/v=0")
+      VersionedTable.vacuum(s, stateRoot, keepFrom = Long.MaxValue)
+      VersionedTable.commit(s,
+        IncrementalAgg.state(s.read.parquet(basePath), groups, sums),
+        stateRoot, 0L)
       // register the state ROOT once, BEFORE the refresh lands — the
       // production reader never re-registers
       graft.plans.MvRewrite.registerVersioned(basePath, stateRoot,
         groups, Map("o_totalprice" -> "sum_price"))
       // CDC batch 1: delete every 107th order, duplicate every 97th at
-      // price+750 — refreshed against newest state BELOW the batch id
+      // price+750 — refreshed against v0, the newest state below it
       val delta = o.filter(col("o_orderkey") % 107 === 0)
         .withColumn("op", lit("delete"))
         .unionByName(o.filter(col("o_orderkey") % 97 === 0)
           .withColumn("o_totalprice", col("o_totalprice") + 750.0)
           .withColumn("op", lit("insert")))
-      IncrementalAgg.refresh(
-          IvmStream.latestState(s, stateRoot, before = 1L).get,
+      VersionedTable.commit(s, IncrementalAgg.refresh(
+          VersionedTable.read(s, stateRoot, 0L),
           IncrementalAgg.deltaState(delta, "op", groups, sums),
-          groups, sums.map(_._1))
-        .write.mode("overwrite").parquet(s"$stateRoot/v=1")
+          groups, sums.map(_._1)), stateRoot, 1L)
       // compact the base to the post-delta snapshot (log-compaction
       // semantics: the registered logical table advanced with its view)
       o.filter(col("o_orderkey") % 107 =!= 0)

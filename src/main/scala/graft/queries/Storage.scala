@@ -515,8 +515,8 @@ object Storage {
             .otherwise(col("acctbal")))
         .unionByName(v1.filter(col("k") <= 10)
           .select((col("k") + 900000L).as("k"), lit(3.25).as("acctbal")))
-      vt.commit(s, v1, path)
-      vt.commit(s, v2, path)
+      vt.commit(s, v1, path, 1L)
+      vt.commit(s, v2, path, 2L)
       vt.read(s, path, 1L).withColumn("version", lit(1L))
         .unionByName(vt.readLatest(s, path).withColumn("version", lit(2L)))
         .orderBy("version", "k")

@@ -119,7 +119,9 @@ object ParquetTableFormat extends TableFormat {
     val ident = catalog.qualifyIdentifier(
       spark.sessionState.sqlParser.parseTableIdentifier(table))
     val root = new Path(catalog.defaultTablePath(ident)).toString
-    val version = VersionedTable.commit(spark, df, root)
+    val version = VersionedTable.versions(spark, root).lastOption.getOrElse(0L) + 1
+    if (!VersionedTable.commit(spark, df, root, version))
+      throw new IllegalStateException(s"version $version of $table was committed concurrently")
     // a fresh definition: a rewrite resets properties and stats, as a
     // drop and create would
     val definition = CatalogTable(ident, CatalogTableType.MANAGED,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned parquet table with time travel — the snapshot/commit half of
@@ -11,9 +11,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ([[readLatest]]), and historical versions stay readable until
   * explicitly vacuumed. Commits are ATOMIC to readers: data stages into
   * a dot-prefixed temp dir and becomes visible through one filesystem
-  * rename — a reader never lists a half-written version. It is also the
-  * commit behind every [[ParquetTableFormat]] rewrite, which then points
-  * the catalog at the new version and vacuums the rest.
+  * rename — a reader never lists a half-written version.
+  *
+  * It is the one protocol for versioned state: every [[ParquetTableFormat]]
+  * rewrite commits the next version, then points the catalog at it and
+  * vacuums the rest; [[graft.streaming.IvmStream]] commits each
+  * micro-batch's view and delta logs as version `<batchId>`; and
+  * [[graft.plans.MvRewrite]]'s versioned views resolve through
+  * [[versions]]. Nothing else lists a version root.
   *
   * Scale notes: full-snapshot versioning is the right trade for
   * dimension/config tables (the reference's entities) where history
@@ -24,37 +29,49 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object VersionedTable {
 
+  private val Version = "v(\\d+)".r
+  private val Stage = "\\.staging_v(\\d+)_.*".r
+
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** Committed version numbers at `path`, ascending; empty when none. */
-  def versions(spark: SparkSession, path: String): Seq[Long] = {
-    val fs = fsOf(spark, path)
+  /** Names of the directories directly under `path`; empty when it does
+    * not exist.
+    */
+  private def entries(fs: FileSystem, path: String): Seq[String] = {
     val root = new Path(path)
     if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
-      .sorted
+    else fs.listStatus(root).toSeq.filter(_.isDirectory).map(_.getPath.getName)
   }
 
-  /** Write `df` as the next version; returns the committed version
-    * number (1-based). Stage-then-rename: concurrent readers see either
-    * the previous latest or the complete new version, never a partial.
-    * The staging directory is WRITER-UNIQUE (version + UUID), so two
-    * racing committers never interleave files — the rename decides the
-    * race (directory renames are atomic on HDFS-like stores), the loser
-    * throws, and its orphaned staging is cleaned up before throwing. A
-    * write that fails or is cancelled deletes its staging too, so the
-    * path only ever holds committed versions.
+  /** Committed version numbers at `path`, ascending; empty when none. */
+  def versions(spark: SparkSession, path: String): Seq[Long] =
+    entries(fsOf(spark, path), path)
+      .collect { case Version(v) => v.toLong }
+      .sorted
+
+  /** Write `df` as version `version`; returns false, writing nothing, when
+    * that version is already committed. A caller whose version names its
+    * input (a streaming batch id, whose replay carries the same rows) gets
+    * an idempotent commit; one that appends takes `versions(...).last + 1`
+    * and treats false as a lost race.
+    *
+    * Stage-then-rename: concurrent readers see either the previous
+    * versions or the complete new one, never a partial. The staging
+    * directory is WRITER-UNIQUE (version + UUID), so two racing committers
+    * never interleave files — the rename decides the race (directory
+    * renames are atomic on HDFS-like stores), the loser throws, and its
+    * orphaned staging is cleaned up before throwing. A write that fails or
+    * is cancelled deletes its staging too; what late tasks of a cancelled
+    * write leave behind, [[vacuum]] sweeps.
     */
-  def commit(spark: SparkSession, df: DataFrame, path: String): Long = {
-    val next = versions(spark, path).lastOption.getOrElse(0L) + 1
+  def commit(spark: SparkSession, df: DataFrame, path: String,
+      version: Long): Boolean = {
     val fs = fsOf(spark, path)
+    val target = new Path(s"$path/v$version")
+    if (fs.exists(target)) return false
     val stage = new Path(
-      s"$path/.staging_v${next}_${java.util.UUID.randomUUID().toString}")
-    val target = new Path(s"$path/v$next")
+      s"$path/.staging_v${version}_${java.util.UUID.randomUUID().toString}")
     try df.write.mode("overwrite").parquet(stage.toString)
     catch { case e: Throwable => fs.delete(stage, true); throw e }
     val renamed = !fs.exists(target) && fs.rename(stage, target)
@@ -68,14 +85,16 @@ object VersionedTable {
       fs.delete(nested, true)
       fs.delete(stage, true)
       throw new IllegalStateException(
-        s"commit of version $next at $path lost a rename race")
+        s"commit of version $version at $path lost a rename race")
     }
-    next
+    true
   }
 
-  /** Read one pinned historical version. */
-  def read(spark: SparkSession, path: String, version: Long): DataFrame =
-    spark.read.parquet(s"$path/v$version")
+  /** Read pinned historical versions (one, or the union of several with
+    * one schema, as one scan).
+    */
+  def read(spark: SparkSession, path: String, versions: Long*): DataFrame =
+    spark.read.parquet(versions.map(v => s"$path/v$v"): _*)
 
   /** Read the newest committed version. */
   def readLatest(spark: SparkSession, path: String): DataFrame = {
@@ -86,11 +105,19 @@ object VersionedTable {
 
   /** Drop all versions strictly older than `keepFrom` — the vacuum that
     * bounds history storage; pinned readers of dropped versions fail
-    * loudly (missing path), exactly like a vacuumed Delta read.
+    * loudly (missing path), exactly like a vacuumed Delta read. It also
+    * drops every `.staging_v<k>_*` directory with `k <= keepFrom`: once
+    * `v<keepFrom>` exists such a stage can never be renamed into place,
+    * and late tasks of a cancelled write re-create theirs after
+    * [[commit]] has deleted it. `keepFrom = Long.MaxValue` empties the
+    * table.
     */
   def vacuum(spark: SparkSession, path: String, keepFrom: Long): Unit = {
     val fs = fsOf(spark, path)
-    versions(spark, path).filter(_ < keepFrom)
-      .foreach(v => fs.delete(new Path(s"$path/v$v"), true))
+    entries(fs, path).filter {
+      case Version(v) => v.toLong < keepFrom
+      case Stage(v) => v.toLong <= keepFrom
+      case _ => false
+    }.foreach(n => fs.delete(new Path(path, n), true))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.operators.{IncrementalAgg, IncrementalJoin}
+import graft.sources.VersionedTable
 
 /** Continuous incremental view maintenance: a materialized grouped
   * count/sum view kept current from a CDC delta STREAM — the streaming
@@ -14,14 +15,16 @@ import graft.operators.{IncrementalAgg, IncrementalJoin}
   *
   * Exactly-once without a transaction log: foreachBatch is at-least-once
   * by contract, so the state is VERSIONED — batch B reads the newest
-  * committed state version strictly below B and overwrites `v=B`. A
-  * replayed batch re-reads the same predecessor and rewrites its own
-  * version, never double-applying; a crash mid-write leaves a version
-  * without parquet's `_SUCCESS` marker, which readers skip. Because
-  * Structured Streaming serializes micro-batches per query, the
-  * predecessor of B is always complete before B runs. The version chain
-  * doubles as time travel for the view (the q194 pattern applied to
-  * maintained state).
+  * committed state version strictly below B and commits its result as
+  * [[VersionedTable]] version B (`v<B>`). A replayed batch whose version
+  * is already committed skips the write: foreachBatch re-delivers the
+  * same rows under the same batch id, so the committed version is
+  * already its result. A crash mid-write leaves only a hidden staging
+  * directory, never a version, so the replay computes and commits it
+  * afresh. Because Structured Streaming serializes micro-batches per
+  * query, the predecessor of B is always complete before B runs. The
+  * version chain doubles as time travel for the view (the q194 pattern
+  * applied to maintained state); [[VersionedTable.vacuum]] bounds it.
   *
   * Scale shape: each micro-batch shuffles only the delta at group
   * granularity plus a group-sized full-outer merge — state size is the
@@ -65,39 +68,23 @@ object IvmStream {
     }
   }
 
-  /** Newest committed state version id strictly below `before` (None =
-    * the view has absorbed no batch yet). Commit = the directory's
-    * parquet `_SUCCESS` marker; a half-written version from a crash is
-    * invisible. This is also what [[graft.plans.MvRewrite]]'s versioned
-    * registry resolves at match time, so a query rewrite always reads
-    * the newest committed refresh.
-    */
-  def latestVersion(spark: SparkSession, statePath: String,
-      before: Long = Long.MaxValue): Option[Long] =
-    committedVersions(spark, statePath).filter(_ < before).maxOption
+  /** Committed versions at `path` strictly below batch `before`. */
+  private def below(spark: SparkSession, path: String, before: Long): Seq[Long] =
+    VersionedTable.versions(spark, path).filter(_ < before)
 
-  /** Ids of the committed `v=` state directories under `statePath`
-    * (those holding a `_SUCCESS` marker), ascending; empty when the path
-    * does not exist yet.
+  /** Commit `df` as batch `batchId`'s version at `path`. A re-run batch
+    * finds its version committed and writes nothing.
     */
-  private def committedVersions(spark: SparkSession, statePath: String): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(statePath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v=") => n.stripPrefix("v=").toLong }
-      .sorted
-  }
+  private def commitBatch(path: String, batchId: Long, df: DataFrame): Unit =
+    VersionedTable.commit(df.sparkSession, df, path, batchId)
 
-  /** Newest committed state strictly below `before`, as a frame. */
+  /** Newest committed state strictly below `before` (None = the view has
+    * absorbed no batch yet), as a frame.
+    */
   def latestState(spark: SparkSession, statePath: String,
       before: Long = Long.MaxValue): Option[DataFrame] =
-    latestVersion(spark, statePath, before)
-      .map(v => spark.read.parquet(s"$statePath/v=$v"))
+    below(spark, statePath, before).lastOption
+      .map(VersionedTable.read(spark, statePath, _))
 
   /** Maintain the view from a CDC delta stream. `baseState` is the
     * initial materialization ([[IncrementalAgg.state]] of the base
@@ -113,10 +100,9 @@ object IvmStream {
         val spark = batch.sparkSession
         val prev = latestState(spark, statePath, before = batchId)
           .getOrElse(baseState)
-        IncrementalAgg.refresh(prev,
-            IncrementalAgg.deltaState(batch, opCol, groupCols, sums),
-            groupCols, sums.map(_._1))
-          .write.mode("overwrite").parquet(s"$statePath/v=$batchId")
+        commitBatch(statePath, batchId, IncrementalAgg.refresh(prev,
+          IncrementalAgg.deltaState(batch, opCol, groupCols, sums),
+          groupCols, sums.map(_._1)))
       }
 
   /** Sequential multi-batch JOIN-view refresh — the batch twin of
@@ -159,16 +145,17 @@ object IvmStream {
     * with the other side's columns null). Storage is log-structured:
     *
     *   - `statePath/rlog`, `statePath/slog` — append-only SIGNED delta
-    *     logs, one partition per micro-batch (`__batch_id=<id>`,
-    *     dynamic-overwrite so an at-least-once replay rewrites its own
-    *     partition, the [[EventStreams.idempotentAppend]] discipline);
-    *   - `statePath/view/v=<id>` — the versioned maintained view,
+    *     logs, one [[VersionedTable]] version per micro-batch (`v<id>`,
+    *     empty when the batch has no rows for that side, so "committed
+    *     empty" stays distinct from "not committed"); a replay skips a
+    *     version already committed;
+    *   - `statePath/view/v<id>` — the versioned maintained view,
     *     [[maintainAggStream]]'s exactly-once chain.
     *
-    * Batch B joins its deltas against base ∪ log(< B) — partition
-    * pruning makes "committed log prefix" a filter, never a rescan of
-    * data files beyond the log — and a delete is a −1 log row, so base
-    * relations are NEVER rewritten. Log growth is bounded by compacting
+    * Batch B joins its deltas against base ∪ log(< B) — the committed log
+    * prefix is the log versions below B, so a replayed batch's own log
+    * version never reaches its reader — and a delete is a −1 log row, so
+    * base relations are NEVER rewritten. Log growth is bounded by compacting
     * the log into a new base version offline (q154's machinery); the
     * algebra is indifferent to when, since base ∪ log is the same
     * multiset before and after.
@@ -188,37 +175,28 @@ object IvmStream {
             .select((opCol +: cols).map(col): _*)
         val rD = side("r", rCols)
         val sD = side("s", sCols)
-        def appendLog(d: DataFrame, path: String): Unit =
-          d.withColumn("__m",
+        def commitLog(d: DataFrame, path: String): Unit =
+          commitBatch(path, batchId, d.withColumn("__m",
               when(col(opCol) === "insert", 1).otherwise(-1))
-            .drop(opCol)
-            .withColumn("__batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch_id").parquet(path)
-        appendLog(rD, s"$statePath/rlog")
-        appendLog(sD, s"$statePath/slog")
+            .drop(opCol))
+        commitLog(rD, s"$statePath/rlog")
+        commitLog(sD, s"$statePath/slog")
         def oldSide(base: DataFrame, path: String): DataFrame = {
           val withSign = base.withColumn("__m", lit(1))
-          // enumerate committed partitions explicitly: a replayed batch's
-          // own (possibly partial, pre-crash) partition must never reach
-          // the reader — not even its parquet footers
-          val committed = listLogBatches(spark, path, before = batchId)
+          val committed = below(spark, path, batchId)
           if (committed.isEmpty) withSign
           else withSign.unionByName(
-            spark.read.parquet(
-              committed.map(b => s"$path/__batch_id=$b"): _*))
+            VersionedTable.read(spark, path, committed: _*))
         }
         val prev = latestState(spark, s"$statePath/view", before = batchId)
           .getOrElse(IncrementalAgg.state(
             rBase.join(sBase, joinKeys), groupCols, sums))
-        IncrementalAgg.refresh(prev,
-            IncrementalJoin.deltaJoinStateSigned(
-              oldSide(rBase, s"$statePath/rlog"), rD,
-              oldSide(sBase, s"$statePath/slog"), sD,
-              "__m", opCol, joinKeys, groupCols, sums),
-            groupCols, sums.map(_._1))
-          .write.mode("overwrite").parquet(s"$statePath/view/v=$batchId")
+        commitBatch(s"$statePath/view", batchId, IncrementalAgg.refresh(prev,
+          IncrementalJoin.deltaJoinStateSigned(
+            oldSide(rBase, s"$statePath/rlog"), rD,
+            oldSide(sBase, s"$statePath/slog"), sD,
+            "__m", opCol, joinKeys, groupCols, sums),
+          groupCols, sums.map(_._1)))
       }
 
   /** Collapse a signed multiset (base +1 ∪ log ±1, the storage
@@ -246,40 +224,5 @@ object IvmStream {
       // count DOWN; with the step pinned it throws on a malformed feed
       .withColumn("__i", explode(sequence(lit(1L), col("__net"), lit(1L))))
       .select(dataCols.map(col): _*)
-  }
-
-  /** Drop all but the newest `keepLast` committed view versions — the
-    * retention sweep for [[maintainAggStream]]'s state chain (q194's
-    * vacuum applied to maintained state). Never touches the newest
-    * version or any uncommitted directory. Returns the dropped ids.
-    */
-  def vacuumView(spark: SparkSession, statePath: String,
-      keepLast: Int): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
-    require(keepLast >= 1, "must keep at least the newest version")
-    val fs = new Path(statePath).getFileSystem(spark.sessionState.newHadoopConf())
-    val drop = committedVersions(spark, statePath).dropRight(keepLast)
-    drop.foreach(v => fs.delete(new Path(s"$statePath/v=$v"), true))
-    drop
-  }
-
-  /** Committed log batch ids below `before`, ascending; empty when the
-    * log has no such partition (or does not exist yet). Batches below
-    * the in-flight one are complete because Structured Streaming
-    * serializes micro-batches per query.
-    */
-  def listLogBatches(spark: SparkSession, logPath: String,
-      before: Long): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(logPath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("__batch_id=") =>
-        n.stripPrefix("__batch_id=").toLong }
-      .filter(_ < before)
-      .sorted
   }
 }

@@ -76,8 +76,9 @@ object Fixtures {
   private val tempSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** A fresh directory `<prefix><n>` under the per-JVM root. A counter, not
-    * a random suffix: plan strings cut file locations at 100 characters, and
-    * MvRewriteSpec reads view paths out of them.
+    * a random suffix, keeps paths short in plan strings, which cut file
+    * locations at 100 characters; specs that ask which paths a plan reads
+    * use [[PlanScans]] instead.
     */
   def tempDir(prefix: String): Path =
     Files.createDirectory(tempRoot.resolve(s"$prefix${tempSeq.incrementAndGet()}"))

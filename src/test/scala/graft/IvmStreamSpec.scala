@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Tables
 import graft.operators.IncrementalAgg
+import graft.sources.VersionedTable
 import graft.streaming.IvmStream
 
 /** Continuous IVM over a real file-source CDC stream: the maintained
@@ -26,6 +27,30 @@ class IvmStreamSpec extends AnyFunSuite {
       .collect()
       .map(r => (r.getString(0), r.getLong(1), BigDecimal(r.getDecimal(2))))
       .toSet
+
+  /** Write `df` as the single parquet file `srcDir/name`, for a file-source
+    * stream to pick up whole.
+    */
+  private def stage(srcDir: java.nio.file.Path, df: DataFrame, name: String): Unit = {
+    val tmp = Fixtures.tempDir("graft_ivm_stage")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    java.nio.file.Files.move(
+      java.nio.file.Files.list(tmp)
+        .filter(_.toString.endsWith(".parquet")).findFirst.get,
+      srcDir.resolve(name))
+  }
+
+  /** Make the checkpoint forget that `batch` finished, as a crash before
+    * its commit file would: the next start re-runs it.
+    */
+  private def forgetBatch(ckpt: java.nio.file.Path, batch: Long): Unit =
+    Seq(s"$batch", s".$batch.crc").foreach(f =>
+      java.nio.file.Files.deleteIfExists(ckpt.resolve("commits").resolve(f)))
+
+  /** Directories a crashed or cancelled commit left under `path`. */
+  private def stagingLeft(path: String): Seq[String] =
+    Option(new java.io.File(path).list()).toSeq.flatten
+      .filter(_.startsWith(".staging_"))
 
   test("maintained view equals full recompute across a checkpoint restart") {
     val o = Tables.orders(spark, SparkTestSession.sfDir)
@@ -48,14 +73,6 @@ class IvmStreamSpec extends AnyFunSuite {
     val srcDir = Fixtures.tempDir("graft_ivm_src")
     val ckpt = Fixtures.tempDir("graft_ivm_ckpt")
     val statePath = Fixtures.tempDir("graft_ivm_state").toString
-    def stage(df: DataFrame, name: String): Unit = {
-      val tmp = Fixtures.tempDir("graft_ivm_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      java.nio.file.Files.move(
-        java.nio.file.Files.list(tmp)
-          .filter(_.toString.endsWith(".parquet")).findFirst.get,
-        java.nio.file.Paths.get(s"$srcDir/$name"))
-    }
     def run(): Unit = {
       val deltas = spark.readStream
         .schema("op STRING, o_orderpriority STRING, o_totalprice DOUBLE, o_orderkey BIGINT")
@@ -69,14 +86,14 @@ class IvmStreamSpec extends AnyFunSuite {
     // chunks arrive as files: two before the restart, two after
     val chunks = (0 until 4).map(i =>
       delta.filter(col("o_orderkey") % 4 === i))
-    stage(chunks(0), "0.parquet"); stage(chunks(1), "1.parquet")
+    stage(srcDir, chunks(0), "0.parquet"); stage(srcDir, chunks(1), "1.parquet")
     run()
     val mid = IvmStream.latestState(spark, statePath).get
     assert(rowSet(mid) ==
       rowSet(IvmStream.foldRefresh(base, chunks.take(2), "op", groups, sums)),
       "state after two chunks diverged from the batch fold twin")
 
-    stage(chunks(2), "2.parquet"); stage(chunks(3), "3.parquet")
+    stage(srcDir, chunks(2), "2.parquet"); stage(srcDir, chunks(3), "3.parquet")
     run() // restart on the same checkpoint: versions continue, no re-apply
 
     // final view == from-scratch recompute of the post-delta base
@@ -90,12 +107,9 @@ class IvmStreamSpec extends AnyFunSuite {
       "maintained view diverged from full recompute after restart")
 
     // one committed version per micro-batch, each a readable snapshot
-    val versions = new java.io.File(statePath).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-      .map(_.getName.stripPrefix("v=").toLong).sorted
-    assert(versions.length == 4, s"versions: ${versions.mkString(",")}")
-    assert(rowSet(spark.read.parquet(s"$statePath/v=${versions(1)}")) ==
-      rowSet(mid))
+    val versions = VersionedTable.versions(spark, statePath)
+    assert(versions == Seq(0L, 1L, 2L, 3L), s"versions: ${versions.mkString(",")}")
+    assert(rowSet(VersionedTable.read(spark, statePath, 1L)) == rowSet(mid))
     o.unpersist(); delta.unpersist()
   }
 
@@ -137,14 +151,6 @@ class IvmStreamSpec extends AnyFunSuite {
     val srcDir = Fixtures.tempDir("graft_jivm_src")
     val ckpt = Fixtures.tempDir("graft_jivm_ckpt")
     val statePath = Fixtures.tempDir("graft_jivm_state").toString
-    def stage(df: DataFrame, name: String): Unit = {
-      val tmp = Fixtures.tempDir("graft_jivm_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      java.nio.file.Files.move(
-        java.nio.file.Files.list(tmp)
-          .filter(_.toString.endsWith(".parquet")).findFirst.get,
-        java.nio.file.Paths.get(s"$srcDir/$name"))
-    }
     def run(): Unit = {
       val cdc = spark.readStream
         .schema("side STRING, op STRING, k BIGINT, seg STRING, " +
@@ -158,9 +164,9 @@ class IvmStreamSpec extends AnyFunSuite {
         jGroups, sums).start()
       q.processAllAvailable(); q.stop()
     }
-    stage(cdcRows(0), "0.parquet"); stage(cdcRows(1), "1.parquet")
+    stage(srcDir, cdcRows(0), "0.parquet"); stage(srcDir, cdcRows(1), "1.parquet")
     run()
-    stage(cdcRows(2), "2.parquet")
+    stage(srcDir, cdcRows(2), "2.parquet")
     run() // restart: logs + view versions continue on the checkpoint
 
     def jRowSet(df: DataFrame): Set[(String, String, Long, BigDecimal)] =
@@ -184,11 +190,25 @@ class IvmStreamSpec extends AnyFunSuite {
       jRowSet(truth),
       "maintained join view diverged from full recompute")
 
-    // both logs hold one committed partition per micro-batch
-    assert(IvmStream.listLogBatches(spark, s"$statePath/rlog",
-      Long.MaxValue).length == 3)
-    assert(IvmStream.listLogBatches(spark, s"$statePath/slog",
-      Long.MaxValue).length == 3)
+    // both logs hold one committed version per micro-batch
+    for (log <- Seq("rlog", "slog"))
+      assert(VersionedTable.versions(spark, s"$statePath/$log") == Seq(0L, 1L, 2L), log)
+
+    // a crash after batch 2 committed its logs but before its view: the
+    // restart re-runs batch 2, skips both log versions, and the view
+    // it commits reads only the log versions below 2
+    forgetBatch(ckpt, 2)
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$statePath/view/v2"))
+    run()
+    assert(new java.io.File(s"$ckpt/commits/2").exists(), "batch 2 did not re-run")
+    assert(jRowSet(IvmStream.latestState(spark, s"$statePath/view").get) ==
+      jRowSet(truth), "the re-run batch double-applied its logged delta")
+    assert(VersionedTable.versions(spark, s"$statePath/view") == Seq(0L, 1L, 2L))
+    for (log <- Seq("rlog", "slog")) {
+      assert(VersionedTable.versions(spark, s"$statePath/$log") == Seq(0L, 1L, 2L), log)
+      assert(stagingLeft(s"$statePath/$log").isEmpty, log)
+    }
     c.unpersist(); o.unpersist()
   }
 
@@ -219,14 +239,6 @@ class IvmStreamSpec extends AnyFunSuite {
     MvRewrite.registerVersioned(s"$dir/base", s"$dir/state", groups,
       Map("o_totalprice" -> "sum_price"))
     try {
-      def stage(df: DataFrame, name: String): Unit = {
-        val tmp = Fixtures.tempDir("graft_ivm_mv_stage")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        java.nio.file.Files.move(
-          java.nio.file.Files.list(tmp)
-            .filter(_.toString.endsWith(".parquet")).findFirst.get,
-          java.nio.file.Paths.get(s"$srcDir/$name"))
-      }
       def runStream(): Unit = {
         val deltas = spark.readStream
           .schema("op STRING, o_orderpriority STRING, o_totalprice DOUBLE")
@@ -239,17 +251,19 @@ class IvmStreamSpec extends AnyFunSuite {
       def query(): DataFrame = base.groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),
           sum(graft.core.OracleArith.dec2(col("o_totalprice"))).as("sum_price"))
+      def plan(q: DataFrame): String = q.queryExecution.executedPlan.toString.take(800)
       // before any committed version: the query stays on the base scan
-      assert(!query().queryExecution.executedPlan.toString.contains("/state/v="))
-      stage(chunks(0), "0.parquet"); runStream()
-      val p1 = query().queryExecution.executedPlan.toString
-      assert(p1.contains("state/v=0"), p1.take(800))
-      stage(chunks(1), "1.parquet"); runStream()
-      // the SAME registration now answers from v=1 — the r9 frozen
-      // registry would have kept reading v=0 until a manual re-register
+      val q0 = query()
+      assert(!PlanScans.reads(q0, s"$dir/state"), plan(q0))
+      stage(srcDir, chunks(0), "0.parquet"); runStream()
+      val q1 = query()
+      assert(PlanScans.reads(q1, s"$dir/state/v0"), plan(q1))
+      stage(srcDir, chunks(1), "1.parquet"); runStream()
+      // the SAME registration now answers from v1 — the r9 frozen
+      // registry would have kept reading v0 until a manual re-register
       val q2 = query()
-      val p2 = q2.queryExecution.executedPlan.toString
-      assert(p2.contains("state/v=1") && !p2.contains("state/v=0"), p2.take(800))
+      assert(PlanScans.reads(q2, s"$dir/state/v1") &&
+        !PlanScans.reads(q2, s"$dir/state/v0"), plan(q2))
       assert(rowSet(q2) == expected,
         "rewritten read diverged from the batch fold twin")
     } finally MvRewrite.deregister(s"$dir/base")
@@ -288,13 +302,53 @@ class IvmStreamSpec extends AnyFunSuite {
   test("vacuum drops old committed view versions, never the newest") {
     val statePath = Fixtures.tempDir("graft_ivm_vacuum").toString
     import spark.implicits._
-    (0L to 3L).foreach(v => Seq((v, 1L)).toDF("ver", "n")
-      .write.parquet(s"$statePath/v=$v"))
-    val dropped = IvmStream.vacuumView(spark, statePath, keepLast = 2)
-    assert(dropped == Seq(0L, 1L))
+    (0L to 3L).foreach(v => VersionedTable.commit(spark,
+      Seq((v, 1L)).toDF("ver", "n"), statePath, v))
+    VersionedTable.vacuum(spark, statePath, keepFrom = 2L)
+    assert(VersionedTable.versions(spark, statePath) == Seq(2L, 3L))
     assert(IvmStream.latestState(spark, statePath).get
       .select("ver").head.getLong(0) == 3L)
     // idempotent: nothing more to drop
-    assert(IvmStream.vacuumView(spark, statePath, keepLast = 2).isEmpty)
+    VersionedTable.vacuum(spark, statePath, keepFrom = 2L)
+    assert(VersionedTable.versions(spark, statePath) == Seq(2L, 3L))
+  }
+
+  test("a re-run batch keeps its committed version and leaves no staging") {
+    import spark.implicits._
+    val base = IncrementalAgg.state(
+      Seq(("A", 10.0), ("B", 5.0)).toDF("o_orderpriority", "o_totalprice"),
+      groups, sums)
+    val chunks = Seq(Seq(("insert", "A", 1.25)), Seq(("delete", "B", 5.0)))
+      .map(_.toDF("op", "o_orderpriority", "o_totalprice"))
+    val srcDir = Fixtures.tempDir("graft_ivm_rerun_src")
+    val ckpt = Fixtures.tempDir("graft_ivm_rerun_ckpt")
+    val statePath = Fixtures.tempDir("graft_ivm_rerun_state").toString
+    def run(): Unit = {
+      val deltas = spark.readStream
+        .schema("op STRING, o_orderpriority STRING, o_totalprice DOUBLE")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(srcDir.toString)
+      val q = IvmStream.maintainAggStream(deltas, base, statePath,
+        ckpt.toString, "op", groups, sums).start()
+      q.processAllAvailable(); q.stop()
+    }
+    chunks.zipWithIndex.foreach { case (c, i) => stage(srcDir, c, s"$i.parquet") }
+    run()
+    val versions = VersionedTable.versions(spark, statePath)
+    val state = rowSet(IvmStream.latestState(spark, statePath).get)
+    assert(versions == Seq(0L, 1L))
+    assert(state == rowSet(IvmStream.foldRefresh(base, chunks, "op", groups, sums)))
+    def files(): Set[String] = new java.io.File(s"$statePath/v1").list().toSet
+    val written = files()
+
+    // the checkpoint loses batch 1's commit: the restart re-runs batch 1,
+    // whose version is already committed
+    forgetBatch(ckpt, 1)
+    run()
+    assert(new java.io.File(s"$ckpt/commits/1").exists(), "batch 1 did not re-run")
+    assert(VersionedTable.versions(spark, statePath) == versions)
+    assert(files() == written, "the re-run rewrote its committed version")
+    assert(rowSet(IvmStream.latestState(spark, statePath).get) == state)
+    assert(stagingLeft(statePath).isEmpty)
   }
 }

@@ -1,15 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{OracleArith, Tables}
 import graft.operators.IncrementalAgg
+import graft.PlanScans.{reads, scanned}
 import graft.plans.MvRewrite
+import graft.sources.VersionedTable
 
 /** The maintained-view rewrite's firing envelope: it must answer exactly
   * the query shapes the registration proves equivalent — and leave every
@@ -23,37 +22,21 @@ class MvRewriteSpec extends AnyFunSuite {
   private def orders = Tables.orders(spark, SparkTestSession.sfDir)
   private val basePath = s"${SparkTestSession.sfDir}/orders.parquet"
 
-  private def withView(f: => Unit): Unit = {
+  /** Runs `f` with a view of `orders` registered at a fresh path, which
+    * `f` gets and which is returned.
+    */
+  private def withView(f: String => Unit): String = {
     val viewPath = Fixtures.tempDir("graft_mv_spec").toString
     IncrementalAgg.state(orders, groups, sums)
       .write.mode("overwrite").parquet(viewPath)
     MvRewrite.register(spark, basePath, viewPath, groups,
       Map("o_totalprice" -> "sum_price"))
-    try f finally MvRewrite.deregister(basePath)
+    try f(viewPath) finally MvRewrite.deregister(basePath)
+    viewPath
   }
 
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
-
-  /** Root paths of every file scan in `df`'s physical plan, under AQE, its
-    * query stages and subqueries too. The plan string cuts a location at
-    * `spark.sql.maxMetadataStringLength`, so a path looked up there would
-    * be found or not depending on the path's length.
-    */
-  private def scanned(df: DataFrame): Seq[String] = {
-    def scans(p: SparkPlan): Seq[String] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case s: QueryStageExec => scans(s.plan)
-      case r: ReusedExchangeExec => scans(r.child)
-      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
-      case _ => (p.children ++ p.subqueries).flatMap(scans)
-    }
-    scans(df.queryExecution.executedPlan)
-  }
-
-  /** Whether `df` scans a file relation rooted at a path containing `path`. */
-  private def reads(df: DataFrame, path: String): Boolean =
-    scanned(df).exists(_.contains(path))
 
   private def agg(df: DataFrame, by: String*): DataFrame =
     df.groupBy(by.map(col): _*)
@@ -69,14 +52,14 @@ class MvRewriteSpec extends AnyFunSuite {
     val globalBase = rows(orders.agg(
       count(lit(1)).as("n"),
       sum(OracleArith.dec2(col("o_totalprice"))).as("s")))
-    withView {
+    withView { view =>
       for ((q, base) <- Seq(
           (agg(orders, groups: _*), exactBase),
           (agg(orders, "o_orderpriority"), subsetBase),
           // global aggregate = empty grouping, also a subset
           (orders.agg(count(lit(1)).as("n"),
             sum(OracleArith.dec2(col("o_totalprice"))).as("s")), globalBase))) {
-        assert(reads(q, "graft_mv_spec"), planOf(q).take(800))
+        assert(reads(q, view), planOf(q).take(800))
         assert(rows(q) == base)
       }
     }
@@ -88,28 +71,28 @@ class MvRewriteSpec extends AnyFunSuite {
     val inBase = rows(agg(orders.filter(
       col("o_orderpriority").isin("1-URGENT", "2-HIGH") &&
         col("o_orderstatus") =!= "P"), "o_orderstatus"))
-    withView {
+    withView { view =>
       val f = agg(orders.filter(col("o_orderstatus") === "F"),
         "o_orderpriority")
-      assert(reads(f, "graft_mv_spec"), planOf(f).take(800))
-      assert(!reads(f, "orders.parquet"), planOf(f).take(800))
+      assert(reads(f, view), planOf(f).take(800))
+      assert(!reads(f, basePath), planOf(f).take(800))
       assert(rows(f) == fBase)
       // compound predicate over two group columns, still whole-group
       val in = agg(orders.filter(
         col("o_orderpriority").isin("1-URGENT", "2-HIGH") &&
           col("o_orderstatus") =!= "P"), "o_orderstatus")
-      assert(reads(in, "graft_mv_spec"), planOf(in).take(800))
+      assert(reads(in, view), planOf(in).take(800))
       assert(rows(in) == inBase)
     }
   }
 
   test("one plan matching twice gets fresh view instances (no duplicate exprIds)") {
-    withView {
+    withView { view =>
       val a = agg(orders, "o_orderstatus")
       val b = agg(orders, "o_orderstatus")
       val u = a.unionByName(b)
       // both legs rewritten, and the union analyzes + executes cleanly
-      assert(scanned(u).count(_.contains("graft_mv_spec")) >= 2, planOf(u).take(1200))
+      assert(scanned(u).count(_ == view) >= 2, planOf(u).take(1200))
       assert(u.count() == 2 * a.count())
     }
   }
@@ -132,26 +115,26 @@ class MvRewriteSpec extends AnyFunSuite {
   }
 
   test("non-provable shapes stay on the base scan") {
-    withView {
+    val viewPath = withView { view =>
       // a filter on a NON-group column cannot push onto the view
       val filtered = agg(orders.filter(col("o_totalprice") > 1000.0),
         "o_orderstatus")
-      assert(!reads(filtered, "graft_mv_spec"))
+      assert(!reads(filtered, view))
       // an unregistered aggregate function
       val minAgg = orders.groupBy("o_orderstatus")
         .agg(min(col("o_totalprice")).as("m"))
-      assert(!reads(minAgg, "graft_mv_spec"))
+      assert(!reads(minAgg, view))
       // a sum over a raw (uncast) column is NOT the materialized sum
       val rawSum = orders.groupBy("o_orderstatus")
         .agg(sum(col("o_totalprice")).as("s"))
-      assert(!reads(rawSum, "graft_mv_spec"))
+      assert(!reads(rawSum, view))
       // grouping by a non-view column
       val other = agg(orders, "o_orderdate")
-      assert(!reads(other, "graft_mv_spec"))
+      assert(!reads(other, view))
     }
     // deregistered: back to the base scan
     val afterwards = agg(orders, "o_orderstatus")
-    assert(!reads(afterwards, "graft_mv_spec"))
+    assert(!reads(afterwards, viewPath) && reads(afterwards, basePath))
   }
 
   test("join-view rewrite fires only on the exact registered equi-join") {
@@ -226,31 +209,30 @@ class MvRewriteSpec extends AnyFunSuite {
     try {
       val q0 = agg(base, "o_orderstatus")
       assert(!reads(q0, s"$dir/state"), planOf(q0).take(800))
-      // v=0 commits → the SAME query shape now reads v=0, no re-register
-      IncrementalAgg.state(base, groups, sums)
-        .write.parquet(s"$dir/state/v=0")
+      // v0 commits → the SAME query shape now reads v0, no re-register
+      VersionedTable.commit(spark, IncrementalAgg.state(base, groups, sums),
+        s"$dir/state", 0L)
       val q1 = agg(base, "o_orderstatus")
-      assert(reads(q1, s"$dir/state/v=0"), planOf(q1).take(800))
+      assert(reads(q1, s"$dir/state/v0"), planOf(q1).take(800))
       val v0Rows = rows(q1)
-      // a refresh commits v=1 (a delta dropped every F-status group row);
-      // the next query must read v=1 — the r9 frozen-listing registry
-      // would have stayed on v=0 until a manual re-register
-      IncrementalAgg.state(base.filter(col("o_orderstatus") =!= "F"),
-          groups, sums)
-        .write.parquet(s"$dir/state/v=1")
+      // a refresh commits v1 (a delta dropped every F-status group row);
+      // the next query must read v1 — the r9 frozen-listing registry
+      // would have stayed on v0 until a manual re-register
+      VersionedTable.commit(spark,
+        IncrementalAgg.state(base.filter(col("o_orderstatus") =!= "F"),
+          groups, sums), s"$dir/state", 1L)
       val q2 = agg(base, "o_orderstatus")
-      assert(reads(q2, s"$dir/state/v=1"), planOf(q2).take(800))
-      assert(!reads(q2, s"$dir/state/v=0"), planOf(q2).take(800))
+      assert(reads(q2, s"$dir/state/v1"), planOf(q2).take(800))
+      assert(!reads(q2, s"$dir/state/v0"), planOf(q2).take(800))
       assert(rows(q2) == v0Rows.filter(_.head != "F"))
-      // an UNCOMMITTED version (no _SUCCESS) is invisible: still v=1
+      // what a crashed commit of v2 leaves, a staging directory full of
+      // parquet files, is invisible: still v1
       IncrementalAgg.state(base.filter(col("o_orderstatus") === "F"),
           groups, sums)
-        .write.parquet(s"$dir/state/v=2")
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/state/v=2/_SUCCESS"), false)
+        .write.parquet(s"$dir/state/.staging_v2_${java.util.UUID.randomUUID()}")
       val q3 = agg(base, "o_orderstatus")
-      assert(reads(q3, s"$dir/state/v=1"), planOf(q3).take(800))
+      assert(reads(q3, s"$dir/state/v1"), planOf(q3).take(800))
+      assert(rows(q3) == rows(q2))
     } finally MvRewrite.deregister(s"$dir/base")
   }
 
@@ -275,17 +257,17 @@ class MvRewriteSpec extends AnyFunSuite {
           sum(OracleArith.dec2(col("o_totalprice"))).as("s"))
       // no committed version yet: the join executes on base
       assert(!reads(q(), s"$dir/state"))
-      IncrementalAgg.state(cP.join(oP, col("k") === col("ok")),
-          Seq("seg", "o_orderstatus"), sums)
-        .write.parquet(s"$dir/state/v=0")
-      assert(reads(q(), s"$dir/state/v=0"), planOf(q()).take(800))
-      // a refresh lands v=1 (drop one segment): same registration flips
-      IncrementalAgg.state(cP.filter(col("seg") =!= "BUILDING")
+      VersionedTable.commit(spark,
+        IncrementalAgg.state(cP.join(oP, col("k") === col("ok")),
+          Seq("seg", "o_orderstatus"), sums), s"$dir/state", 0L)
+      assert(reads(q(), s"$dir/state/v0"), planOf(q()).take(800))
+      // a refresh lands v1 (drop one segment): same registration flips
+      VersionedTable.commit(spark,
+        IncrementalAgg.state(cP.filter(col("seg") =!= "BUILDING")
           .join(oP, col("k") === col("ok")),
-          Seq("seg", "o_orderstatus"), sums)
-        .write.parquet(s"$dir/state/v=1")
+          Seq("seg", "o_orderstatus"), sums), s"$dir/state", 1L)
       val flipped = q()
-      assert(reads(flipped, s"$dir/state/v=1") && !reads(flipped, s"$dir/state/v=0"),
+      assert(reads(flipped, s"$dir/state/v1") && !reads(flipped, s"$dir/state/v0"),
         planOf(flipped).take(800))
       assert(!rows(q()).exists(_.head == "BUILDING"))
     } finally MvRewrite.deregisterJoin(s"$dir/c", s"$dir/o")
@@ -348,7 +330,7 @@ class MvRewriteSpec extends AnyFunSuite {
       val q = orders.groupBy("o_orderstatus")
         .agg(min(col("o_totalprice")).as("lo"),
           max(col("o_totalprice")).as("hi"))
-      assert(reads(q, "graft_mv_spec"), planOf(q).take(800))
+      assert(reads(q, viewPath), planOf(q).take(800))
       val base = orders.groupBy("o_orderstatus")
         .agg(min(col("o_totalprice")).as("lo"),
           max(col("o_totalprice")).as("hi"))

@@ -314,11 +314,14 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("Join"), p.take(2000))
   }
 
-  test("q253 reads the NEWEST committed view version — not base, not v=0") {
-    val p = plan("q253_mv_versioned_read")
-    assert(p.contains("v=1"), p.take(2000))
-    assert(!p.contains("v=0"), p.take(2000))
-    assert(!p.contains("graft_mvv_base_"), p.take(2000))
+  test("q253 reads the NEWEST committed view version — not base, not v0") {
+    val q = SparkEntry.queries("q253_mv_versioned_read")(spark, SparkTestSession.sfDir)
+    val p = q.queryExecution.executedPlan.toString
+    val state = graft.core.Housekeeping.scratchDir(spark, "mvv_state")
+    assert(PlanScans.reads(q, s"$state/v1"), p.take(2000))
+    assert(!PlanScans.reads(q, s"$state/v0"), p.take(2000))
+    assert(!PlanScans.reads(q, graft.core.Housekeeping.scratchDir(spark, "mvv_base")),
+      p.take(2000))
   }
 
   test("q245 point-in-time enrichment rides the native as-of exec") {
