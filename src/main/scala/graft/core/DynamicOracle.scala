@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.spark.sql.{DataFrame, Row}
+
 /** Oracle SQL computed DURING a gate's build — for gates whose DuckDB replay
   * needs literals that only exist once the gate has run: a trained PCA basis,
   * k-means centroids, or a session-tagged artifact path. The driver contract
@@ -34,4 +36,11 @@ object DynamicOracle {
     * Java's strtod on some values).
     */
   def dbl(d: Double): String = s"CAST('${d.toString}' AS DOUBLE)"
+
+  /** A gate's result as the `rows` it collected from `out` to embed as
+    * oracle literals: the oracle then checks exactly the rows the gate
+    * returns, and the query does not run a second time.
+    */
+  def collected(out: DataFrame, rows: Array[Row]): DataFrame =
+    out.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
 }

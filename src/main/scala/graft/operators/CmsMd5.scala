@@ -22,9 +22,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: the sketch is `depth × width` longs per group (16 KB at
   * the 4×512 default) regardless of key cardinality — the same
   * fixed-state contract as the HLL registers; partial sketches merge by
-  * element-wise addition (sums commute, so partition order — and
-  * micro-batch order in the streaming twin
-  * [[graft.streaming.EventStreams]] — cannot change a counter).
+  * element-wise addition (sums commute, so neither partition order nor
+  * the micro-batch order of a stream
+  * ([[graft.streaming.EventStreams.freqSketchCms]]) can change a
+  * counter).
   */
 object CmsMd5 {
 
@@ -41,8 +42,8 @@ object CmsMd5 {
   def bucketOfHash(h: Long, di: Int, width: Int): Int =
     (((A(di) * (h % P) + B(di)) % P) % width).toInt
 
-  /** Scalar add — the streaming state path. Counter layout is row-major:
-    * row di occupies `[di*width, (di+1)*width)`.
+  /** Scalar add, the aggregation buffer update of `cms_md5_agg`. Counter
+    * layout is row-major: row di occupies `[di*width, (di+1)*width)`.
     */
   def addHash(counts: Array[Long], width: Int, h: Long): Unit = {
     var di = 0

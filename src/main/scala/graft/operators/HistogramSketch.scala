@@ -36,19 +36,13 @@ object HistogramSketch {
       .cast("int")
   }
 
-  /** Scalar twin of the column binning — same expression, same operation
-    * order, so the streaming state path
-    * ([[graft.streaming.EventStreams.histogramSketchStream]]) lands every
-    * value in the identical bin.
-    */
-  def binOfScalar(x: Double, lo: Double, hi: Double, nBins: Int): Int = {
-    val w = (hi - lo) / nBins
-    math.min(math.max(math.floor((x - lo) / w), 0.0), nBins - 1.0).toInt
-  }
-
   /** Per-shard sketch: one row per (shardCol, bin) with its count.
     * `shardCol` is whatever partitions the fleet — a file, a day, a
-    * source; the sketch never carries row-level data.
+    * source; the sketch never carries row-level data. The same call is
+    * the streaming histogram: on a streaming frame it is a stateful
+    * aggregate whose update-mode emissions are the touched (shard, bin)
+    * counts, and the last one per bin equals the batch sketch
+    * (EventStreamsSpec).
     */
   def sketch(df: DataFrame, shardCol: String, valueCol: String,
       lo: Double, hi: Double, nBins: Int): DataFrame = {

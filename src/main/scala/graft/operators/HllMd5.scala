@@ -38,6 +38,8 @@ import org.apache.spark.sql.functions._
   * commutative, any tree shape), so 1000 executors can each sketch their
   * shard and a single tiny reduce merges days into months. NULL keys hash
   * to NULL and are dropped, matching COUNT(DISTINCT)'s NULL contract.
+  * [[sketchAgg]] + [[estimateCol]] run unchanged on a streaming frame
+  * ([[graft.streaming.EventStreams.distinctCountsHll]]).
   */
 object HllMd5 {
 
@@ -63,16 +65,9 @@ object HllMd5 {
   def h60(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
-  /** Scalar twin of the column math: one key's (reg_idx, rho). Used by the
-    * streaming register state ([[graft.streaming.EventStreams]]) so a
-    * stream's registers are bit-identical to the batch sketch's.
-    */
-  def registerOf(key: String): (Int, Int) =
-    registerOfHash(graft.expressions.MinHashSigMd5.h60(key))
-
-  /** Register decomposition of an already-computed 60-bit hash (the
-    * aggregates hash UTF8String bytes directly to skip a String
-    * round-trip per row).
+  /** Register decomposition (reg_idx, rho) of a key's 60-bit hash: the
+    * scalar form of [[sketch]]'s column math (the aggregates hash
+    * UTF8String bytes directly to skip a String round-trip per row).
     */
   def registerOfHash(h: Long): (Int, Int) = {
     val rem = h & RemMask
@@ -81,11 +76,11 @@ object HllMd5 {
     ((h >>> RemBits).toInt, rho)
   }
 
-  /** Scalar twin of [[estimate]] over a dense register array (index =
-    * reg_idx, 0 = empty): (m_used, v_zero, hll_estimate). Folds present
-    * registers in ascending reg_idx order and branches exactly like the
-    * distributed dag, so a streaming state read equals the batch estimate
-    * to the last bit.
+  /** [[estimate]] over a dense register array (index = reg_idx,
+    * 0 = empty): (m_used, v_zero, hll_estimate). Folds present registers
+    * in ascending reg_idx order and branches exactly like the distributed
+    * dag, so `hll_md5_estimate` over a binary sketch equals the
+    * relational estimate to the last bit.
     */
   def estimateScalar(regs: Array[Byte]): (Long, Long, Double) = {
     require(regs.length == M, s"expected $M registers, got ${regs.length}")

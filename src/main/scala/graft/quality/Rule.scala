@@ -86,12 +86,17 @@ final case class DurationDays(start: String, end: String, minDays: Int, maxDays:
   */
 final case class Unique(columns: Seq[String]) extends Rule {
   val name = s"unique_${columns.mkString("_")}"
-  override def violations(df: DataFrame): DataFrame = {
-    val dupKeys = df.groupBy(columns.map(col): _*)
+
+  /** The key values of `df` that occur more than once: one row each, key
+    * columns only.
+    */
+  def dupKeys(df: DataFrame): DataFrame =
+    df.groupBy(columns.map(col): _*)
       .agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1)
       .drop("__n")
-    // inner join back to surface the full violating rows, dbt-style
-    df.join(dupKeys, columns, "left_semi")
-  }
+
+  // inner join back to surface the full violating rows, dbt-style
+  override def violations(df: DataFrame): DataFrame =
+    df.join(dupKeys(df), columns, "left_semi")
 }

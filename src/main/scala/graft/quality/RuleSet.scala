@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * - `failures` is the dbt `store_failures` shape: one row per (rule, row).
   *
   * [[Unique]] rules can't be expressed as a row-local predicate; `annotate`
-  * handles them with a window-free groupBy+semi-join marker column computed
-  * once per unique rule (each is one shuffle on its key — at scale prefer a
+  * handles them with a marker column, [[Unique.dupKeys]] joined back once
+  * per unique rule (each is one shuffle on its key — at scale prefer a
   * single Unique on the primary key).
   */
 final case class RuleSet(table: String, rules: Seq[Rule]) {
@@ -30,12 +30,8 @@ final case class RuleSet(table: String, rules: Seq[Rule]) {
       when(!coalesce(r.passes, lit(false)), lit(r.name))
     }
     val withUniq = uniqueRules.foldLeft(df) { (acc, u) =>
-      val marker = s"__dup_${u.name}"
-      val dupKeys = df.groupBy(u.columns.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1)
-        .withColumn(marker, lit(true))
-        .drop("__n")
-      acc.join(dupKeys, u.columns, "left_outer")
+      acc.join(u.dupKeys(df).withColumn(s"__dup_${u.name}", lit(true)),
+        u.columns, "left_outer")
     }
     val uniqFlags: Seq[Column] = uniqueRules.map { u =>
       when(col(s"__dup_${u.name}") === true, lit(u.name))

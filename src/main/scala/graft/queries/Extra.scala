@@ -602,7 +602,8 @@ object Extra {
           col("approx_customers"),
           col("n"))
         .orderBy("o_orderstatus")
-      val values = out.collect().map { r =>
+      val rows = out.collect()
+      val values = rows.map { r =>
         s"('${r.getString(0)}', ${dbl(r.getDouble(1))}, ${dbl(r.getDouble(2))}, " +
           s"CAST(${r.getLong(3)} AS BIGINT), CAST(${r.getLong(4)} AS BIGINT))"
       }.mkString(", ")
@@ -626,7 +627,7 @@ object Extra {
            |  AND e.p50 BETWEEN x.p50_lo AND x.p50_hi
            |  AND e.p95 BETWEEN x.p95_lo AND x.p95_hi
            |ORDER BY e.o_orderstatus""".stripMargin)
-      out
+      graft.core.DynamicOracle.collected(out, rows)
     },
     None)
 
@@ -1668,7 +1669,8 @@ object Extra {
         .agg(hll_sketch_estimate(hll_union_agg(col("sk")))
           .as("approx_distinct_docs"))
         .orderBy("source")
-      val values = out.collect().map { r =>
+      val rows = out.collect()
+      val values = rows.map { r =>
         s"('${r.getString(0)}', CAST(${r.getLong(1)} AS BIGINT))"
       }.mkString(", ")
       graft.core.DynamicOracle.put("q101_hll_shard_merge",
@@ -1681,7 +1683,7 @@ object Extra {
            |WHERE abs(CAST(e.approx_distinct_docs AS DOUBLE) - ed) / ed
            |        <= CAST('0.05' AS DOUBLE)
            |ORDER BY e.source""".stripMargin)
-      out
+      graft.core.DynamicOracle.collected(out, rows)
     },
     None)
 

@@ -419,7 +419,8 @@ object Relational {
           approx_count_distinct(col("l_orderkey")).as("approx_orders"),
           approx_count_distinct(col("l_partkey")).as("approx_parts"))
         .orderBy("l_returnflag")
-      val values = out.collect().map { r =>
+      val rows = out.collect()
+      val values = rows.map { r =>
         s"('${r.getString(0)}', CAST(${r.getLong(1)} AS BIGINT), " +
           s"CAST(${r.getLong(2)} AS BIGINT))"
       }.mkString(", ")
@@ -438,7 +439,7 @@ object Relational {
            |  AND abs(CAST(e.approx_parts AS DOUBLE) - ep) / ep
            |        <= CAST('0.15' AS DOUBLE)
            |ORDER BY e.l_returnflag""".stripMargin)
-      out
+      graft.core.DynamicOracle.collected(out, rows)
     },
     None)
 
@@ -467,7 +468,8 @@ object Relational {
         .select(col("l_returnflag"), col("quantile"),
           col("col").as("est_value"))
         .orderBy("l_returnflag", "quantile")
-      val values = out.collect().map { r =>
+      val rows = out.collect()
+      val values = rows.map { r =>
         s"('${r.getString(0)}', ${dbl(r.getDouble(1))}, ${dbl(r.getDouble(2))})"
       }.mkString(", ")
       val eps = dbl(2.0 / acc)
@@ -492,7 +494,7 @@ object Relational {
            |SELECT l_returnflag, quantile, est_value FROM chk
            |WHERE est_value >= lo_v AND est_value <= hi_v
            |ORDER BY l_returnflag, quantile""".stripMargin)
-      out
+      graft.core.DynamicOracle.collected(out, rows)
     },
     None)
 

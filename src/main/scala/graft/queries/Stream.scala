@@ -448,17 +448,18 @@ object Stream {
       |  ORDER BY ts, event_id)
       |ORDER BY user_id, session_no, turn_idx""".stripMargin)
 
-  /** q225: streaming distinct-user counts per event type — batch twin of
-    * EventStreams.distinctCountsHll, whose 1 KB-per-group register state
-    * EventStreamsSpec pins bit-equal to this across a checkpoint restart.
-    * The oracle replays the full md5-HLL dag (registers, ordered fold,
+  /** q225: streaming distinct-user counts per event type —
+    * EventStreams.distinctCountsHll on the batch frame; EventStreamsSpec
+    * runs the same call on a file stream and pins its last emission per
+    * group bit-equal to this across a checkpoint restart. The oracle
+    * replays the full md5-HLL dag (registers, ordered fold,
     * linear-counting branch) exactly as q223 does.
     */
   private val streamDistinct: QueryDef = {
     import graft.operators.HllMd5
     QueryDef(
       (s, dir) =>
-        EventStreams.distinctCountsHllBatch(
+        EventStreams.distinctCountsHll(
           Tables.events(s, dir).filter(col("user_id").isNotNull),
           "event_type", "user_id")
           .orderBy("event_type"),
@@ -1015,7 +1016,9 @@ object Stream {
   /** q236: oracle-exact count-min frequency sketch (CmsMd5) — the
     * frequency leg of the md5-parity sketch trio (HLL q223 cardinality,
     * KMV q224 overlap). Per event type, ONE map-side-combining
-    * `cms_md5_agg` pass builds the 4×512 counter matrix; the gate then
+    * `cms_md5_agg` pass (EventStreams.freqSketchCms, the call
+    * EventStreamsSpec also runs on a stream) builds the 4×512 counter
+    * matrix; the gate then
     * probes the 5 exact-top users of each type against the sketch with
     * the codegen affine arithmetic (CmsMd5.estimateCol — no UDF) and
     * reports estimate, exact, and overestimate. DuckDB replays EVERY
@@ -1034,7 +1037,7 @@ object Stream {
         import graft.operators.CmsMd5
         val ev = Tables.events(s, dir).filter(col("user_id").isNotNull)
           .select(col("event_type"), col("user_id").cast("string").as("uid"))
-        val sk = EventStreams.freqSketchCmsBatch(ev, "event_type", "uid", width)
+        val sk = EventStreams.freqSketchCms(ev, "event_type", "uid", width)
           .select("event_type", "counters")
         val exact = ev.groupBy("event_type", "uid")
           .agg(count(lit(1)).as("n_exact"))
@@ -1180,13 +1183,14 @@ object Stream {
       |    + bit_count(xor(ha.b2, hb.b2)) + bit_count(xor(ha.b3, hb.b3)) <= 4
       |ORDER BY id_a, id_b""".stripMargin)
 
-  /** q233: streaming KMV bottom-k distinct per event type — batch twin of
-    * EventStreams.distinctCountsKmv, whose ≤8 KB-per-group sorted-hash
-    * state EventStreamsSpec pins bit-equal to this across a checkpoint
-    * restart. Where q225's HLL state only estimates cardinality, the KMV
-    * state stays a valid sketch for union/Jaccard math (q224) — streamed
-    * and batch sketches interoperate. The oracle replays the k-smallest
-    * selection and the (k-1)/tau estimate exactly as q224 does.
+  /** q233: streaming KMV bottom-k distinct per event type —
+    * EventStreams.distinctCountsKmv on the batch frame; EventStreamsSpec
+    * runs the same call on a file stream and pins its last emission per
+    * group bit-equal to this across a checkpoint restart. Where q225's
+    * HLL state only estimates cardinality, the KMV state stays a valid
+    * sketch for union/Jaccard math (q224). The oracle replays the
+    * k-smallest selection and the (k-1)/tau estimate exactly as q224
+    * does.
     */
   private val streamKmv: QueryDef = {
     import graft.operators.KmvSketch
@@ -1197,7 +1201,7 @@ object Stream {
     val kC = (k - 1).toDouble * KmvSketch.HashSpace
     QueryDef(
       (s, dir) =>
-        EventStreams.distinctCountsKmvBatch(
+        EventStreams.distinctCountsKmv(
           Tables.events(s, dir).filter(col("user_id").isNotNull),
           "event_type", "user_id", k)
           .orderBy("event_type"),

@@ -326,170 +326,74 @@ object EventStreams {
       .drop("session_no")
   }
 
-  /** Streaming distinct-count per group via the oracle-exact md5 HLL
-    * ([[graft.operators.HllMd5]]): each group carries a 1024-byte register
-    * array in `mapGroupsWithState`, folds every micro-batch's keys into it
-    * (register max — the same merge the batch sketch uses), and emits the
-    * refreshed estimate each batch. Because the hash, registers, and
-    * estimate dag are identical to the batch operator's, the stream's
-    * final row per group equals [[distinctCountsHllBatch]] on the same
-    * data to the LAST BIT — not "within sketch noise" (EventStreamsSpec
-    * pins the double equality, including across a checkpoint restart).
+  /** Group and key columns of a sketch input, both as strings, with NULL
+    * keys dropped BEFORE the aggregate (the COUNT(DISTINCT) contract): a
+    * group whose keys are all NULL then has no row, as in the relational
+    * sketches, instead of an empty-sketch row.
+    */
+  private def sketchKeys(events: DataFrame, groupCol: String,
+      keyCol: String): DataFrame =
+    events
+      .select(col(groupCol).cast("string").as(groupCol),
+        col(keyCol).cast("string").as("k"))
+      .where(col("k").isNotNull)
+
+  /** Distinct-count per group via the oracle-exact md5 HLL
+    * ([[graft.operators.HllMd5]]): the one-pass `hll_md5_agg` register
+    * build, then `hll_md5_estimate`. Output (group, m_used, v_zero,
+    * hll_estimate), bit-equal to the relational register sketch and
+    * estimate, and so to a DuckDB replay (gate q225).
     *
-    * State is 1 KB per group forever — no watermark needed for
-    * boundedness, which is the whole point of sketched streaming
-    * distincts: exact streaming COUNT(DISTINCT) state grows with
-    * cardinality and must be watermark-evicted; registers never grow.
-    * Output mode: Update (every batch re-emits touched groups).
+    * The same call runs on a batch or a streaming frame. On a stream it
+    * is a stateful aggregate: map-side partial sketches, then a state
+    * store holding one 1 KB register array per group forever (registers
+    * never grow, so no watermark is needed for boundedness). In update
+    * mode every micro-batch re-emits the touched groups, and the last
+    * emission per group equals the batch result on the same data to the
+    * last bit, across a checkpoint restart too (EventStreamsSpec).
     */
   def distinctCountsHll(events: DataFrame, groupCol: String,
       keyCol: String): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
     import graft.operators.HllMd5
-    events
-      .select(col(groupCol).cast("string").as("g"),
-        col(keyCol).cast("string").as("k"))
-      .where(col("k").isNotNull)
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[Array[Byte], (String, Long, Long, Double)](
-        GroupStateTimeout.NoTimeout) {
-        (g: String, rows: Iterator[(String, String)], state: GroupState[Array[Byte]]) =>
-          val regs = state.getOption.getOrElse(new Array[Byte](HllMd5.M))
-          rows.foreach { case (_, k) =>
-            val (idx, rho) = HllMd5.registerOf(k)
-            if (rho > regs(idx)) regs(idx) = rho.toByte
-          }
-          state.update(regs)
-          val (mUsed, vZero, est) = HllMd5.estimateScalar(regs)
-          (g, mUsed, vZero, est)
-      }
-      .toDF(groupCol, "m_used", "v_zero", "hll_estimate")
+    HllMd5.sketchAgg(sketchKeys(events, groupCol, keyCol), "k", Seq(groupCol))
+      .select(col(groupCol), HllMd5.estimateCol(col("hll_regs")).as("e"))
+      .select(col(groupCol), col("e.m_used").as("m_used"),
+        col("e.v_zero").as("v_zero"), col("e.hll_estimate").as("hll_estimate"))
   }
 
-  /** Batch twin of [[distinctCountsHll]] — the distributed register
-    * build + estimate over the same columns, bit-equal to the stream's
-    * final state and SQL-replayable (the q225 gate's oracle).
-    */
-  def distinctCountsHllBatch(events: DataFrame, groupCol: String,
-      keyCol: String): DataFrame = {
-    import graft.operators.HllMd5
-    val keyed = events
-      .select(col(groupCol).cast("string").as(groupCol),
-        col(keyCol).cast("string").as("k"))
-    HllMd5.estimate(HllMd5.sketch(keyed, "k", Seq(groupCol)), Seq(groupCol))
-  }
-
-  /** Streaming bottom-k (KMV) distinct sketch per group — the set-operation
-    * counterpart of [[distinctCountsHll]]: state is the k smallest DISTINCT
-    * 60-bit md5 hashes seen for the group (a sorted long array, ≤ 8k bytes
-    * forever — checkpoint-friendly exactly like the HLL registers), folded
-    * per micro-batch with the same bounded-insert the batch aggregate
-    * ([[graft.expressions.KmvAgg]]) uses. Emits the refreshed
-    * (group, n_mins, kmv_estimate) each batch; because hash family, k-th
-    * minimum selection, and the (k-1)/tau estimate dag are identical to
-    * [[graft.operators.KmvSketch.estimate]], the final row per group
-    * equals the batch read TO THE BIT (EventStreamsSpec pins this across
-    * a checkpoint restart). Unlike HLL registers, the recovered state also
-    * remains a valid sketch for UNION/JACCARD math against any other
-    * sketch — streamed sketches and batch sketches interoperate.
+  /** Bottom-k (KMV) distinct sketch per group, the set-operation
+    * counterpart of [[distinctCountsHll]]: the one-pass `kmv_md5_agg`
+    * build ([[graft.expressions.KmvAgg]], the k smallest distinct 60-bit
+    * md5 hashes) read as (group, n_mins, kmv_estimate) by
+    * [[graft.operators.IncrementalDistinct.estimates]], the same
+    * (k-1)/tau IEEE expression as [[graft.operators.KmvSketch.estimate]]
+    * (gate q233). On a stream the state is at most k longs per group,
+    * and it stays a valid sketch for union/Jaccard math against any
+    * other KMV sketch of the same k.
     */
   def distinctCountsKmv(events: DataFrame, groupCol: String,
       keyCol: String, k: Int): DataFrame = {
-    require(k >= 2, s"k must be >= 2 (the estimator reads the k-th minimum), got $k")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val kC = (k - 1).toDouble * graft.operators.KmvSketch.HashSpace
-    events
-      .select(col(groupCol).cast("string").as("g"),
-        col(keyCol).cast("string").as("k"))
-      .where(col("k").isNotNull)
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[Array[Long], (String, Long, Double)](
-        GroupStateTimeout.NoTimeout) {
-        (g: String, rows: Iterator[(String, String)], state: GroupState[Array[Long]]) =>
-          val set = scala.collection.mutable.TreeSet.empty[Long]
-          state.getOption.foreach(_.foreach(set.add))
-          rows.foreach { case (_, key) =>
-            val h = graft.expressions.MinHashSigMd5.h60(key)
-            // bounded insert: skip hashes past the current k-th minimum
-            if (set.size < k) set.add(h)
-            else if (h < set.last && set.add(h)) set.remove(set.last)
-          }
-          val arr = set.toArray // ascending
-          state.update(arr)
-          val nMins = arr.length
-          val est =
-            if (nMins < k) nMins.toDouble else kC / arr.last.toDouble
-          (g, nMins.toLong, est)
-      }
-      .toDF(groupCol, "n_mins", "kmv_estimate")
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val sketches = sketchKeys(events, groupCol, keyCol).groupBy(groupCol)
+      .agg(ColumnBridge.column(graft.expressions.KmvAgg(
+        ColumnBridge.expression(col("k")), k)
+        .toAggregateExpression()).as("kmv"))
+    graft.operators.IncrementalDistinct.estimates(sketches, groupCol, k)
   }
 
-  /** Batch twin of [[distinctCountsKmv]] — the native one-pass aggregate
-    * sketch + estimate over the same columns, bit-equal to the stream's
-    * final state and SQL-replayable (the q233 gate's oracle).
-    */
-  def distinctCountsKmvBatch(events: DataFrame, groupCol: String,
-      keyCol: String, k: Int): DataFrame = {
-    import graft.operators.KmvSketch
-    val keyed = events
-      .select(col(groupCol).cast("string").as(groupCol),
-        col(keyCol).cast("string").as("k"))
-    KmvSketch.estimate(
-      KmvSketch.sketchAgg(keyed, "k", groupCol, k), groupCol, k)
-  }
-
-  /** Streaming count-min frequency sketch per group — the frequency leg
-    * of the streaming sketch trio ([[distinctCountsHll]] cardinality,
-    * [[distinctCountsKmv]] set overlap, this for per-key counts): state
-    * is the `depth × width` md5-parity counter matrix of
-    * [[graft.operators.CmsMd5]] (16 KB at width 512 — fixed forever, the
-    * checkpoint-friendly contract), bumped per micro-batch row. Counter
-    * updates are pure sums, so arrival order and micro-batch boundaries
-    * CANNOT change the final state — the recovered sketch equals the
-    * batch aggregate ([[graft.expressions.CmsMd5Agg]]) element for
-    * element (EventStreamsSpec pins this across a checkpoint restart),
-    * and stays valid for further merge/probe math. Emits the refreshed
-    * (group, n_rows, counters) each batch.
+  /** Count-min frequency sketch per group, the frequency leg of the
+    * sketch trio ([[distinctCountsHll]] cardinality, [[distinctCountsKmv]]
+    * set overlap): the one-pass `cms_md5_agg` build
+    * ([[graft.expressions.CmsMd5Agg]]) of the `depth × width` md5-parity
+    * counter matrix of [[graft.operators.CmsMd5]] (16 KB at width 512).
+    * Output (group, n_rows, counters); every counter replays in DuckDB
+    * (gate q236). Counter updates are pure sums, so on a stream neither
+    * arrival order nor micro-batch boundaries can move a counter.
     */
   def freqSketchCms(events: DataFrame, groupCol: String, keyCol: String,
       width: Int): DataFrame = {
-    import graft.operators.CmsMd5
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col(groupCol).cast("string").as("g"),
-        col(keyCol).cast("string").as("k"))
-      .where(col("k").isNotNull)
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[Array[Long], (String, Long, Seq[Long])](
-        GroupStateTimeout.NoTimeout) {
-        (g: String, rows: Iterator[(String, String)], state: GroupState[Array[Long]]) =>
-          val counts = state.getOption.getOrElse(new Array[Long](CmsMd5.Depth * width))
-          rows.foreach { case (_, key) => CmsMd5.addKey(counts, width, key) }
-          state.update(counts)
-          // every row adds depth increments; row 0's sum is the row count
-          (g, counts.view.slice(0, width).sum, counts.toSeq)
-      }
-      .toDF(groupCol, "n_rows", "counters")
-  }
-
-  /** Batch twin of [[freqSketchCms]] — the native one-pass aggregate over
-    * the same columns, bit-equal to the stream's final state and
-    * bucket-for-bucket SQL-replayable (the q236 gate's oracle).
-    */
-  def freqSketchCmsBatch(events: DataFrame, groupCol: String, keyCol: String,
-      width: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val keyed = events
-      .select(col(groupCol).cast("string").as(groupCol),
-        col(keyCol).cast("string").as("k"))
-      .where(col("k").isNotNull)
-    keyed.groupBy(groupCol)
+    sketchKeys(events, groupCol, keyCol).groupBy(groupCol)
       .agg(ColumnBridge.column(
         graft.expressions.CmsMd5Agg(
           ColumnBridge.expression(col("k")), width)
@@ -497,62 +401,6 @@ object EventStreams {
       .select(col(groupCol),
         aggregate(slice(col("counters"), 1, width), lit(0L), _ + _).as("n_rows"),
         col("counters"))
-  }
-
-  /** Streaming fixed-bin histogram sketch per group — the QUANTILE leg
-    * completing the streaming sketch family (HLL cardinality, KMV set
-    * overlap, CMS frequency, this for percentile monitoring): state is
-    * the nBins-long count vector of
-    * [[graft.operators.HistogramSketch]]'s bins, bumped per micro-batch
-    * row with the scalar twin of the batch binning expression. Counts
-    * are pure sums, so the recovered state equals the batch sketch bin
-    * for bin across any micro-batch split or checkpoint restart
-    * (EventStreamsSpec), and stays mergeable/quantile-readable with any
-    * batch-built histogram. Emits (group, n_rows, counts) each batch.
-    */
-  def histogramSketchStream(events: DataFrame, groupCol: String,
-      valueCol: String, lo: Double, hi: Double, nBins: Int): DataFrame = {
-    import graft.operators.HistogramSketch
-    require(nBins >= 1 && hi > lo, "need hi > lo and nBins >= 1")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col(groupCol).cast("string").as("g"),
-        col(valueCol).cast("double").as("v"))
-      .where(col("v").isNotNull && !isnan(col("v")))
-      .as[(String, Double)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[Array[Long], (String, Long, Seq[Long])](
-        GroupStateTimeout.NoTimeout) {
-        (g: String, rows: Iterator[(String, Double)], state: GroupState[Array[Long]]) =>
-          val counts = state.getOption.getOrElse(new Array[Long](nBins))
-          rows.foreach { case (_, v) =>
-            counts(HistogramSketch.binOfScalar(v, lo, hi, nBins)) += 1L
-          }
-          state.update(counts)
-          (g, counts.sum, counts.toSeq)
-      }
-      .toDF(groupCol, "n_rows", "counts")
-  }
-
-  /** Batch twin of [[histogramSketchStream]] — the same zero-filled
-    * per-group count vector from [[graft.operators.HistogramSketch]]'s
-    * relational sketch, bit-equal to the stream's final state.
-    */
-  def histogramSketchStreamBatch(events: DataFrame, groupCol: String,
-      valueCol: String, lo: Double, hi: Double, nBins: Int): DataFrame = {
-    import graft.operators.HistogramSketch
-    val sk = HistogramSketch.sketch(
-      events.select(col(groupCol).cast("string").as(groupCol), col(valueCol)),
-      groupCol, valueCol, lo, hi, nBins)
-    sk.groupBy(groupCol)
-      .agg(map_from_entries(collect_list(struct(col("bin"), col("cnt"))))
-        .as("m"))
-      .select(col(groupCol),
-        transform(sequence(lit(0), lit(nBins - 1)),
-          i => coalesce(element_at(col("m"), i), lit(0L))).as("counts"))
-      .select(col(groupCol),
-        aggregate(col("counts"), lit(0L), _ + _).as("n_rows"), col("counts"))
   }
 
   /** Watermark-lateness audit over a RECORDED stream: replay the arrival

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +9,7 @@ import graft.streaming.EventStreams
 
 /** Streaming transforms driven end-to-end under readStream (file source →
   * memory sink, processAllAvailable), cross-checked against their batch
-  * twins on the same finite input.
+  * computations on the same finite batch input.
   */
 class EventStreamsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -34,12 +35,78 @@ class EventStreamsSpec extends AnyFunSuite {
     dir.toString
   }
 
-  private def runToMemory(df: org.apache.spark.sql.DataFrame, name: String,
-      mode: String = "append"): org.apache.spark.sql.DataFrame = {
+  private def runToMemory(df: DataFrame, name: String,
+      mode: String = "append"): DataFrame = {
     val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
     q.processAllAvailable()
     q.stop()
     spark.table(name)
+  }
+
+  /** Write `df` as the single parquet file `<dir>/<name>`: the file stream
+    * source lists flat files, not nested directories.
+    */
+  private def stage(df: DataFrame, dir: java.nio.file.Path, name: String): Unit = {
+    val tmp = Fixtures.tempDir("graft_stage")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    java.nio.file.Files.move(
+      java.nio.file.Files.list(tmp)
+        .filter(_.toString.endsWith(".parquet")).findFirst.get,
+      dir.resolve(name))
+  }
+
+  private val eventsSchema =
+    "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING"
+
+  /** The batch events split at their median timestamp: (ts <= cut, ts > cut). */
+  private def timeSplit(ev: DataFrame): (DataFrame, DataFrame) = {
+    val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
+      .head.getTimestamp(0)
+    (ev.filter(col("ts") <= cut), ev.filter(col("ts") > cut))
+  }
+
+  /** Run `sketch` on a file stream of the events split in time into two
+    * files, one micro-batch each, with a stop and a restart on the same
+    * checkpoint between them, so the aggregate state also survives a
+    * recovery. `sketch` applied to the batch frame is the reference:
+    * every group's final row must have been emitted, and every emission
+    * must be the state after the first file or after both — exact rows,
+    * the same doubles, not "within sketch error". Returns the final rows.
+    */
+  private def assertRestartedSketch(sketch: DataFrame => DataFrame): Set[Row] = {
+    val dir = Fixtures.tempDir("graft_sketch_stream")
+    val ckpt = Fixtures.tempDir("graft_sketch_ckpt")
+    val ev = Tables.events(spark, SparkTestSession.sfDir)
+    val (first, second) = timeSplit(ev)
+    val emittedBuf = new java.util.concurrent.ConcurrentLinkedQueue[Row]()
+    def run(): Unit = {
+      // foreachBatch sink: the memory sink cannot recover from a
+      // checkpoint, and recovery is exactly what this exercises
+      val q = sketch(spark.readStream.schema(eventsSchema)
+          .option("maxFilesPerTrigger", "1").parquet(dir.toString))
+        .writeStream.outputMode("update")
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.collect().foreach(emittedBuf.add)
+        }.start()
+      q.processAllAvailable(); q.stop()
+    }
+    stage(first, dir, "0.parquet")
+    run()
+    stage(second, dir, "1.parquet")
+    run()
+    val emitted = {
+      import scala.jdk.CollectionConverters._
+      emittedBuf.asScala.toSet
+    }
+    val prefix = sketch(first).collect().toSet
+    val full = sketch(ev).collect().toSet
+    assert(full.nonEmpty)
+    assert(full.subsetOf(emitted),
+      s"missing final states: ${(full -- emitted).mkString("; ").take(2000)}")
+    assert(emitted.subsetOf(prefix ++ full),
+      s"spurious emissions: ${(emitted -- prefix -- full).mkString("; ").take(2000)}")
+    full
   }
 
   test("tumbling-window counts under readStream match the batch computation") {
@@ -223,23 +290,13 @@ class EventStreamsSpec extends AnyFunSuite {
     // split events by time into two files; maxFilesPerTrigger=1 forces two
     // micro-batches, so sessions spanning the cut exercise state handoff
     val dir = Fixtures.tempDir("graft_two_batches")
-    val ev = Tables.events(spark, SparkTestSession.sfDir).orderBy("ts")
-    val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
-      .head.getTimestamp(0)
-    ev.filter(col("ts") <= cut).coalesce(1).write.parquet(s"$dir/b0")
-    ev.filter(col("ts") > cut).coalesce(1).write.parquet(s"$dir/b1")
-    // stage as flat files so the source sees them as two inputs (b0 first)
-    java.nio.file.Files.move(
-      java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/b0"))
-        .filter(_.toString.endsWith(".parquet")).findFirst.get,
-      java.nio.file.Paths.get(s"$dir/0.parquet"))
-    java.nio.file.Files.move(
-      java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/b1"))
-        .filter(_.toString.endsWith(".parquet")).findFirst.get,
-      java.nio.file.Paths.get(s"$dir/1.parquet"))
+    val (first, second) =
+      timeSplit(Tables.events(spark, SparkTestSession.sfDir).orderBy("ts"))
+    stage(first, dir, "0.parquet")
+    stage(second, dir, "1.parquet")
 
     val stream = spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
+      .schema(eventsSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir.toString)
       .select(col("user_id"), col("ts"), col("event_type"))
@@ -267,18 +324,11 @@ class EventStreamsSpec extends AnyFunSuite {
     // the gap of EACH OTHER, so they must emit as ONE closed session of 2
     // (the pre-fix code emitted two spurious singletons)
     val dir = Fixtures.tempDir("graft_late_merge")
-    def writeBatch(name: String, minutes: Seq[Int]): Unit = {
-      val df = minutes.map(m => (1L, new java.sql.Timestamp(
+    def writeBatch(name: String, minutes: Seq[Int]): Unit =
+      stage(minutes.map(m => (1L, new java.sql.Timestamp(
           java.time.Instant.parse("2024-01-01T09:00:00Z").toEpochMilli + m * 60000L),
           "view"))
-        .toDF("user_id", "ts", "event_type")
-      val tmp = s"$dir/_$name"
-      df.coalesce(1).write.parquet(tmp)
-      java.nio.file.Files.move(
-        java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-          .filter(_.toString.endsWith(".parquet")).findFirst.get,
-        java.nio.file.Paths.get(s"$dir/$name.parquet"))
-    }
+        .toDF("user_id", "ts", "event_type"), dir, s"$name.parquet")
     writeBatch("0", Seq(60))     // 10:00
     writeBatch("1", Seq(35, 36)) // 09:35, 09:36
     val stream = spark.readStream
@@ -339,183 +389,26 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("streaming HLL distinct equals the batch sketch TO THE BIT across restarts") {
-    // two time-split files → two micro-batches; stop the query between
-    // them on a checkpoint and restart, so the register state also
-    // survives a recovery. The final per-group row must equal the batch
-    // twin exactly — same doubles, not "within sketch error".
-    val dir = Fixtures.tempDir("graft_hll_stream")
-    val ckpt = Fixtures.tempDir("graft_hll_ckpt")
-    val ev = Tables.events(spark, SparkTestSession.sfDir)
-    val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
-      .head.getTimestamp(0)
-    // stage as flat files (the source lists the directory, not nested dirs)
-    def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Fixtures.tempDir("graft_hll_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      java.nio.file.Files.move(
-        java.nio.file.Files.list(tmp)
-          .filter(_.toString.endsWith(".parquet")).findFirst.get,
-        java.nio.file.Paths.get(s"$dir/$name"))
-    }
-    stage(ev.filter(col("ts") <= cut), "0.parquet")
-    def stream() = spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
-    // foreachBatch sink: the memory sink cannot recover from a checkpoint,
-    // and recovery is exactly what this test exercises
-    val emittedBuf = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long, Double)]()
-    def run(): Unit = {
-      val q = EventStreams.distinctCountsHll(stream(), "event_type", "user_id")
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach(r => emittedBuf.add(
-            (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))))
-        }.start()
-      q.processAllAvailable(); q.stop()
-    }
-    run()
-    stage(ev.filter(col("ts") > cut), "1.parquet")
-    run() // restart on the same checkpoint; state recovers, second file lands
-    // the memory sink holds every update-mode emission (one row per group
-    // per touching batch); order-free exactness check: every emission is
-    // the batch twin of SOME prefix (file0 or file0+file1), and the full
-    // twin's row for every group was emitted — i.e., each group's final
-    // streamed state equals the batch sketch bit-for-bit
-    def rowSet(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Long, Double)] =
-      df.select(col("event_type"), col("m_used"), col("v_zero"),
-        col("hll_estimate")).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSet
-    val emitted = {
-      import scala.jdk.CollectionConverters._
-      emittedBuf.asScala.toSet
-    }
-    val twinPrefix = rowSet(
-      EventStreams.distinctCountsHllBatch(ev.filter(col("ts") <= cut),
-        "event_type", "user_id"))
-    val twinFull = rowSet(
-      EventStreams.distinctCountsHllBatch(ev, "event_type", "user_id"))
-    assert(twinFull.nonEmpty)
-    assert(twinFull.subsetOf(emitted),
-      s"missing final states: ${twinFull -- emitted}")
-    assert(emitted.subsetOf(twinPrefix ++ twinFull),
-      s"spurious emissions: ${emitted -- twinPrefix -- twinFull}")
+    assertRestartedSketch(
+      EventStreams.distinctCountsHll(_, "event_type", "user_id"))
   }
 
   test("streaming KMV bottom-k equals the batch sketch TO THE BIT across restarts") {
-    // same discipline as the HLL test: two time-split micro-batches with a
-    // stop+restart on the checkpoint between them; every final per-group
-    // emission must equal the batch twin's doubles exactly
     val k = 8 // < the 15 distinct users per type at sf0.001 → saturated branch
-    val dir = Fixtures.tempDir("graft_kmv_stream")
-    val ckpt = Fixtures.tempDir("graft_kmv_ckpt")
-    val ev = Tables.events(spark, SparkTestSession.sfDir)
-    val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
-      .head.getTimestamp(0)
-    def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Fixtures.tempDir("graft_kmv_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      java.nio.file.Files.move(
-        java.nio.file.Files.list(tmp)
-          .filter(_.toString.endsWith(".parquet")).findFirst.get,
-        java.nio.file.Paths.get(s"$dir/$name"))
-    }
-    stage(ev.filter(col("ts") <= cut), "0.parquet")
-    def stream() = spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
-    val emittedBuf = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Double)]()
-    def run(): Unit = {
-      val q = EventStreams.distinctCountsKmv(stream(), "event_type", "user_id", k)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach(r => emittedBuf.add(
-            (r.getString(0), r.getLong(1), r.getDouble(2))))
-        }.start()
-      q.processAllAvailable(); q.stop()
-    }
-    run()
-    stage(ev.filter(col("ts") > cut), "1.parquet")
-    run() // restart on the same checkpoint; sorted-hash state recovers
-    def rowSet(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Double)] =
-      df.select(col("event_type"), col("n_mins"), col("kmv_estimate"))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    val emitted = {
-      import scala.jdk.CollectionConverters._
-      emittedBuf.asScala.toSet
-    }
-    val twinPrefix = rowSet(EventStreams.distinctCountsKmvBatch(
-      ev.filter(col("ts") <= cut).filter(col("user_id").isNotNull),
-      "event_type", "user_id", k))
-    val twinFull = rowSet(EventStreams.distinctCountsKmvBatch(
-      ev.filter(col("user_id").isNotNull), "event_type", "user_id", k))
-    assert(twinFull.nonEmpty)
-    assert(twinFull.exists(_._2 == k), "test should exercise the saturated (k-th minimum) branch")
-    assert(twinFull.subsetOf(emitted),
-      s"missing final states: ${twinFull -- emitted}")
-    assert(emitted.subsetOf(twinPrefix ++ twinFull),
-      s"spurious emissions: ${emitted -- twinPrefix -- twinFull}")
+    val full = assertRestartedSketch(
+      EventStreams.distinctCountsKmv(_, "event_type", "user_id", k))
+    assert(full.exists(_.getLong(1) == k),
+      "test should exercise the saturated (k-th minimum) branch")
   }
 
   test("streaming CMS counters equal the batch sketch TO THE BIT across restarts") {
     // counter updates are pure sums, so micro-batch boundaries and a
-    // checkpoint restart cannot move a single counter off the batch twin
+    // checkpoint restart cannot move a single counter off the batch result
     val width = 64
-    val dir = Fixtures.tempDir("graft_cms_stream")
-    val ckpt = Fixtures.tempDir("graft_cms_ckpt")
-    val ev = Tables.events(spark, SparkTestSession.sfDir)
-    val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
-      .head.getTimestamp(0)
-    def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Fixtures.tempDir("graft_cms_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      java.nio.file.Files.move(
-        java.nio.file.Files.list(tmp)
-          .filter(_.toString.endsWith(".parquet")).findFirst.get,
-        java.nio.file.Paths.get(s"$dir/$name"))
-    }
-    stage(ev.filter(col("ts") <= cut), "0.parquet")
-    def stream() = spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
-    val emittedBuf = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Seq[Long])]()
-    def run(): Unit = {
-      val q = EventStreams.freqSketchCms(stream(), "event_type", "user_id", width)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach(r => emittedBuf.add(
-            (r.getString(0), r.getLong(1), r.getSeq[Long](2))))
-        }.start()
-      q.processAllAvailable(); q.stop()
-    }
-    run()
-    stage(ev.filter(col("ts") > cut), "1.parquet")
-    run() // restart on the same checkpoint; the counter matrix recovers
-    def rowSet(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Seq[Long])] =
-      df.collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getSeq[Long](2))).toSet
-    val emitted = {
-      import scala.jdk.CollectionConverters._
-      emittedBuf.asScala.toSet
-    }
-    val twinPrefix = rowSet(EventStreams.freqSketchCmsBatch(
-      ev.filter(col("ts") <= cut), "event_type", "user_id", width))
-    val twinFull = rowSet(EventStreams.freqSketchCmsBatch(
-      ev, "event_type", "user_id", width))
-    assert(twinFull.nonEmpty)
-    assert(twinFull.exists(_._3.exists(_ > 1L)),
+    val full = assertRestartedSketch(
+      EventStreams.freqSketchCms(_, "event_type", "user_id", width))
+    assert(full.exists(_.getSeq[Long](2).exists(_ > 1L)),
       "test should exercise colliding/repeated counters")
-    assert(twinFull.subsetOf(emitted),
-      s"missing final states: ${(twinFull -- emitted).map(_._1)}")
-    assert(emitted.subsetOf(twinPrefix ++ twinFull),
-      s"spurious emissions: ${(emitted -- twinPrefix -- twinFull).map(_._1)}")
   }
 
   test("streaming as-of enrich converges to the native batch as-of join across restarts") {
@@ -523,14 +416,6 @@ class EventStreamsSpec extends AnyFunSuite {
     val evDir = Fixtures.tempDir("graft_asof_ev")
     val dimDir = Fixtures.tempDir("graft_asof_dim")
     val ckpt = Fixtures.tempDir("graft_asof_ckpt")
-    def stage(df: org.apache.spark.sql.DataFrame, dir: java.nio.file.Path, name: String): Unit = {
-      val tmp = Fixtures.tempDir("graft_asof_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      java.nio.file.Files.move(
-        java.nio.file.Files.list(tmp)
-          .filter(_.toString.endsWith(".parquet")).findFirst.get,
-        java.nio.file.Paths.get(s"$dir/$name"))
-    }
     // file 0: early versions + events, including id4 whose match will be
     // OVERTAKEN by a later version (re-emission path) and id1 (no match)
     stage(Seq(("a", 10L, "a1"), ("a", 20L, "a2")).toDF("key", "version_ts", "payload"),
@@ -551,7 +436,7 @@ class EventStreamsSpec extends AnyFunSuite {
       val q = EventStreams.asOfEnrichStream(evStream(), dimStream())
         .writeStream.outputMode("update")
         .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.collect().foreach(r => emitted.add((seq.incrementAndGet(),
             r.getLong(1), r.getLong(2),
             if (r.isNullAt(3)) None else Some(r.getLong(3)),
@@ -590,59 +475,12 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("streaming histogram bins equal the batch sketch TO THE BIT across restarts") {
-    // bin counts are pure sums over the shared scalar/column binning, so
-    // micro-batch splits and a restart cannot move a count between bins
-    val (lo, hi, nBins) = (0.0, 100.0, 32)
-    val dir = Fixtures.tempDir("graft_hist_stream")
-    val ckpt = Fixtures.tempDir("graft_hist_ckpt")
-    val ev = Tables.events(spark, SparkTestSession.sfDir)
-    val cut = ev.select(percentile_approx(col("ts"), lit(0.5), lit(1000)))
-      .head.getTimestamp(0)
-    def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = Fixtures.tempDir("graft_hist_stage")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      java.nio.file.Files.move(
-        java.nio.file.Files.list(tmp)
-          .filter(_.toString.endsWith(".parquet")).findFirst.get,
-        java.nio.file.Paths.get(s"$dir/$name"))
-    }
-    stage(ev.filter(col("ts") <= cut), "0.parquet")
-    def stream() = spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
-    val emittedBuf = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Seq[Long])]()
-    def run(): Unit = {
-      val q = EventStreams.histogramSketchStream(
-          stream(), "event_type", "value", lo, hi, nBins)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.collect().foreach(r => emittedBuf.add(
-            (r.getString(0), r.getLong(1), r.getSeq[Long](2))))
-        }.start()
-      q.processAllAvailable(); q.stop()
-    }
-    run()
-    stage(ev.filter(col("ts") > cut), "1.parquet")
-    run()
-    def rowSet(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Seq[Long])] =
-      df.collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getSeq[Long](2))).toSet
-    val emitted = {
-      import scala.jdk.CollectionConverters._
-      emittedBuf.asScala.toSet
-    }
-    val twinPrefix = rowSet(EventStreams.histogramSketchStreamBatch(
-      ev.filter(col("ts") <= cut), "event_type", "value", lo, hi, nBins))
-    val twinFull = rowSet(EventStreams.histogramSketchStreamBatch(
-      ev, "event_type", "value", lo, hi, nBins))
-    assert(twinFull.nonEmpty)
-    assert(twinFull.exists(_._3.count(_ > 0L) > 3),
+    // HistogramSketch.sketch itself on the stream: bin counts are pure
+    // sums, so micro-batch splits and a restart cannot move a count
+    // between bins
+    val full = assertRestartedSketch(graft.operators.HistogramSketch.sketch(
+      _, "event_type", "value", lo = 0.0, hi = 100.0, nBins = 32))
+    assert(full.groupBy(_.getString(0)).values.exists(_.size > 3),
       "test should spread mass over several bins")
-    assert(twinFull.subsetOf(emitted),
-      s"missing final states: ${(twinFull -- emitted).map(_._1)}")
-    assert(emitted.subsetOf(twinPrefix ++ twinFull),
-      s"spurious emissions: ${(emitted -- twinPrefix -- twinFull).map(_._1)}")
   }
 }

@@ -10,9 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanShapeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def plan(q: String): String =
-    SparkEntry.queries(q)(spark, SparkTestSession.sfDir)
-      .queryExecution.executedPlan.toString
+  /** A gate's frame and its physical plan string. */
+  private def gate(q: String): (org.apache.spark.sql.DataFrame, String) = {
+    val df = SparkEntry.queries(q)(spark, SparkTestSession.sfDir)
+    (df, df.queryExecution.executedPlan.toString)
+  }
+
+  private def plan(q: String): String = gate(q)._2
+
+  private def scratch(stem: String): String =
+    graft.core.Housekeeping.scratchDir(spark, stem)
 
   test("q2 filters and projection reach the parquet scan") {
     val p = plan("q2_filter_project")
@@ -283,45 +290,50 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(hashEx == 3, s"expected 3 hash exchanges, got $hashEx:\n${p.take(3000)}")
   }
 
+  // scan paths are read off the plan's file relations (PlanScans), not
+  // its string: Spark cuts a printed location at
+  // spark.sql.maxMetadataStringLength, so a negative `contains` passes on
+  // any cut path
+
   test("q247 answers the base-table aggregate FROM THE VIEW, no orders scan") {
-    val p = plan("q247_mv_rewrite")
-    assert(p.contains("graft_mv_orders_"), p.take(2000))
-    assert(!p.contains("orders.parquet"), p.take(2000))
+    val (q, p) = gate("q247_mv_rewrite")
+    assert(PlanScans.reads(q, scratch("mv_orders")), p.take(2000))
+    assert(!PlanScans.reads(q, scratch("mv_base")), p.take(2000))
+    assert(!PlanScans.reads(q, s"${SparkTestSession.sfDir}/orders.parquet"),
+      p.take(2000))
   }
 
   test("q249 answers the join-aggregate FROM THE JOIN VIEW — no join executes") {
-    val p = plan("q249_mv_join_rewrite")
-    assert(p.contains("graft_mvj_view_"), p.take(2000))
-    assert(!p.contains("graft_mvj_cust_"), p.take(2000))
-    assert(!p.contains("graft_mvj_ord_"), p.take(2000))
+    val (q, p) = gate("q249_mv_join_rewrite")
+    assert(PlanScans.reads(q, scratch("mvj_view")), p.take(2000))
+    assert(!PlanScans.reads(q, scratch("mvj_cust")), p.take(2000))
+    assert(!PlanScans.reads(q, scratch("mvj_ord")), p.take(2000))
     assert(!p.contains("Join"), p.take(2000))
   }
 
   test("q250 WHERE+GROUP BY answers from the view under a pushed filter") {
-    val p = plan("q250_mv_filter_rewrite")
-    assert(p.contains("graft_mvf_view_"), p.take(2000))
-    assert(!p.contains("graft_mvf_base_"), p.take(2000))
+    val (q, p) = gate("q250_mv_filter_rewrite")
+    assert(PlanScans.reads(q, scratch("mvf_view")), p.take(2000))
+    assert(!PlanScans.reads(q, scratch("mvf_base")), p.take(2000))
     // the group-column predicate rides the view scan
     assert(p.contains("o_orderstatus = F") || p.contains("(o_orderstatus = F)")
       || p.contains("o_orderstatus#"), p.take(2000))
   }
 
   test("q254 filtered join-aggregate: view scan only, filter pushed, no join") {
-    val p = plan("q254_mv_join_filter")
-    assert(p.contains("graft_mvjf_view_"), p.take(2000))
-    assert(!p.contains("graft_mvjf_cust_"), p.take(2000))
-    assert(!p.contains("graft_mvjf_ord_"), p.take(2000))
+    val (q, p) = gate("q254_mv_join_filter")
+    assert(PlanScans.reads(q, scratch("mvjf_view")), p.take(2000))
+    assert(!PlanScans.reads(q, scratch("mvjf_cust")), p.take(2000))
+    assert(!PlanScans.reads(q, scratch("mvjf_ord")), p.take(2000))
     assert(!p.contains("Join"), p.take(2000))
   }
 
   test("q253 reads the NEWEST committed view version — not base, not v0") {
-    val q = SparkEntry.queries("q253_mv_versioned_read")(spark, SparkTestSession.sfDir)
-    val p = q.queryExecution.executedPlan.toString
-    val state = graft.core.Housekeeping.scratchDir(spark, "mvv_state")
+    val (q, p) = gate("q253_mv_versioned_read")
+    val state = scratch("mvv_state")
     assert(PlanScans.reads(q, s"$state/v1"), p.take(2000))
     assert(!PlanScans.reads(q, s"$state/v0"), p.take(2000))
-    assert(!PlanScans.reads(q, graft.core.Housekeeping.scratchDir(spark, "mvv_base")),
-      p.take(2000))
+    assert(!PlanScans.reads(q, scratch("mvv_base")), p.take(2000))
   }
 
   test("q245 point-in-time enrichment rides the native as-of exec") {

@@ -448,7 +448,7 @@ class PropertySpec extends AnyFunSuite {
     def regs(keys: Seq[String]): Array[Byte] = {
       val a = new Array[Byte](HllMd5.M)
       keys.foreach { k =>
-        val (i, r) = HllMd5.registerOf(k)
+        val (i, r) = HllMd5.registerOfHash(graft.expressions.MinHashSigMd5.h60(k))
         if (r > a(i)) a(i) = r.toByte
       }
       a
