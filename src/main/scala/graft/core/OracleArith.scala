@@ -25,10 +25,6 @@ object OracleArith {
   /** Exact sum of a ≤2-decimal double column, surfaced as double. */
   def sumDec(c: Column): Column = sum(dec2(c)).cast(DoubleType)
 
-  /** Exact sum of a product of two ≤2-decimal columns, surfaced as double. */
-  def sumDecProduct(a: Column, b: Column): Column =
-    sum(dec2(a) * dec2(b)).cast(DoubleType)
-
   /** Mean computed as exact-decimal sum divided by count, in double. */
   def avgDec(c: Column): Column =
     sum(dec2(c)).cast(DoubleType) / count(c)
@@ -36,8 +32,6 @@ object OracleArith {
   // DuckDB-side SQL fragments mirroring the helpers above.
   def sqlDec2(e: String): String = s"CAST($e AS DECIMAL(18,2))"
   def sqlSumDec(e: String): String = s"CAST(SUM(${sqlDec2(e)}) AS DOUBLE)"
-  def sqlSumDecProduct(a: String, b: String): String =
-    s"CAST(SUM(${sqlDec2(a)} * ${sqlDec2(b)}) AS DOUBLE)"
   def sqlAvgDec(e: String): String =
     s"CAST(SUM(${sqlDec2(e)}) AS DOUBLE) / COUNT($e)"
 }

@@ -9,10 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cached here — callers decide (caching 100 TB inputs is not a thing).
   */
 object Tables {
-  val starSchema: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Parquet footer schemas of the (immutable, driver-generated) star
     * tables, cached per absolute path for the life of the JVM. Without the
     * declared schema every `spark.read.parquet` call runs a footer-

@@ -159,6 +159,17 @@ object HllMd5 {
       ColumnBridge.expression(regs)))
   }
 
+  /** (groupCols*, m_used, v_zero, hll_estimate) from binary sketches in
+    * `hll_regs` ([[sketchAgg]] or [[unionAgg]] output): [[estimateCol]]'s
+    * struct unpacked into the columns [[estimate]] yields from register
+    * rows. Runs unchanged on a streaming frame.
+    */
+  def estimates(sketches: DataFrame, groupCols: Seq[String]): DataFrame =
+    sketches.select(groupCols.map(col) :+ estimateCol(col("hll_regs")).as("e"): _*)
+      .select(groupCols.map(col) ++ Seq(col("e.m_used").as("m_used"),
+        col("e.v_zero").as("v_zero"),
+        col("e.hll_estimate").as("hll_estimate")): _*)
+
   /** Rolling `windowDays`-day distinct count per day (the DAU/WAU shape):
     * distinct counts are NOT additive over sliding windows — recomputing
     * each window from raw events costs windowDays x the corpus — but HLL

@@ -19,6 +19,10 @@ import graft.core.OracleArith
   * by construction, which is why the algebra needs the ΔR ⋈ ΔS term a
   * naive "apply each side separately" refresh gets wrong.
   *
+  * The old sides have one form, a signed multiset in [[Sign]]: a plain
+  * base is its [[positive]] image, a streamed base is that unioned with
+  * its [[signed]] delta logs, and [[deltaJoinState]] reads both alike.
+  *
   * [[IncrementalAgg]] maintains aggregates over a single table; this
   * produces the signed per-group delta of a join-aggregate view (count +
   * exact-DECIMAL sums in [[IncrementalAgg]]'s state layout), so
@@ -36,7 +40,33 @@ import graft.core.OracleArith
   */
 object IncrementalJoin {
 
+  /** The sign column of a signed multiset: +1 for a row present, −1 for a
+    * row deleted. Every signed relation of a maintained join view — base
+    * sides, delta logs, compaction input — carries its signs here.
+    */
+  val Sign = "__m"
+
+  /** A plain relation as a signed multiset: every row +1. */
+  def positive(df: DataFrame): DataFrame = df.withColumn(Sign, lit(1))
+
+  /** An op-tagged CDC delta as a signed multiset: `opCol` = "insert" is
+    * +1, anything else (a delete) −1; `opCol` is consumed.
+    */
+  def signed(delta: DataFrame, opCol: String): DataFrame =
+    delta.withColumn(Sign, when(col(opCol) === "insert", 1).otherwise(-1))
+      .drop(opCol)
+
   /** Signed per-group contribution of the delta of V = R ⋈_keys S.
+    *
+    * `rOld`/`sOld` are the relations before the delta as SIGNED multisets
+    * ([[Sign]] ±1): a plain relation is its [[positive]] form, and the
+    * log-structured form a continuously maintained view keeps its base
+    * relations in is base rows (+1) unioned with every applied delta-log
+    * row (±1) — a delete NEVER rewrites a snapshot, it appends a −1 row
+    * ([[graft.streaming.IvmStream.maintainJoinAggStream]]'s storage). The
+    * multiset a signed union denotes is exactly the post-delta relation,
+    * so the three-term rule applies unchanged with every pair's sign the
+    * product of its sides' signs.
     *
     * `rDelta`/`sDelta` carry `opCol` ∈ {"insert", "delete"} plus the same
     * join/group/sum columns as their base side; either delta may be
@@ -48,64 +78,12 @@ object IncrementalJoin {
       rOld: DataFrame, rDelta: DataFrame,
       sOld: DataFrame, sDelta: DataFrame,
       opCol: String, joinKeys: Seq[String],
-      groupCols: Seq[String], sums: Seq[(String, String)]): DataFrame =
-    deltaJoinStateSigned(
-      rOld.withColumn("__m", lit(1)), rDelta,
-      sOld.withColumn("__m", lit(1)), sDelta,
-      "__m", opCol, joinKeys, groupCols, sums)
-
-  /** The view groups a two-sided CDC delta can touch — the recompute
-    * scope for NON-invertible aggregates (min/max, distinct counts) over
-    * a JOIN view, composing [[IncrementalAgg.dirtyGroups]]'s patch
-    * pattern (q240) with the three-term structure: every joined row that
-    * enters or leaves the view has at least one delta side, so the union
-    * of ΔR⋈S, R⋈ΔS, ΔR⋈ΔS projected to the group columns covers every
-    * group whose extreme can move (over-marking — e.g. a candidate pair
-    * whose other side was concurrently deleted — is harmless: recompute
-    * is idempotent). Same delta-sized join shapes as
-    * [[deltaJoinStateSigned]]; output is the distinct dirty group tuples,
-    * which [[IncrementalAgg.recomputeGroups]] turns into a semi-join-
-    * restricted re-aggregation of the post-apply join and
-    * [[IncrementalAgg.patch]] splices over the untouched state rows.
-    */
-  def dirtyJoinGroups(
-      rOld: DataFrame, rDelta: DataFrame,
-      sOld: DataFrame, sDelta: DataFrame,
-      opCol: String, joinKeys: Seq[String],
-      groupCols: Seq[String]): DataFrame = {
-    val rD = rDelta.drop(opCol)
-    val sD = sDelta.drop(opCol)
-    def grp(df: DataFrame): DataFrame = df.select(groupCols.map(col): _*)
-    grp(rD.join(sOld, joinKeys))
-      .unionByName(grp(rOld.join(sD, joinKeys)))
-      .unionByName(grp(rD.join(sD, joinKeys)))
-      .distinct()
-  }
-
-  /** As [[deltaJoinState]], but the base sides are themselves SIGNED
-    * multisets: `signCol` (±1) on `rOld`/`sOld`. This is the
-    * log-structured form a continuously maintained view keeps its base
-    * relations in — base rows (+1) unioned with every applied delta-log
-    * row (±1) — so a delete NEVER rewrites a snapshot, it just appends a
-    * −1 row ([[graft.streaming.IvmStream.maintainJoinAggStream]]'s
-    * storage). The multiset a signed union denotes is exactly the
-    * post-delta relation, so the three-term rule applies unchanged with
-    * every pair's sign the product of its sides' signs.
-    */
-  def deltaJoinStateSigned(
-      rOld: DataFrame, rDelta: DataFrame,
-      sOld: DataFrame, sDelta: DataFrame,
-      signCol: String, opCol: String, joinKeys: Seq[String],
       groupCols: Seq[String], sums: Seq[(String, String)]): DataFrame = {
 
-    def signed(df: DataFrame, as: String): DataFrame =
-      df.withColumn(as,
-        when(col(opCol) === "insert", 1).otherwise(-1)).drop(opCol)
-
-    val rD = signed(rDelta, "m_r")
-    val sD = signed(sDelta, "m_s")
-    val rO = rOld.withColumnRenamed(signCol, "mo_r")
-    val sO = sOld.withColumnRenamed(signCol, "mo_s")
+    val rD = signed(rDelta, opCol).withColumnRenamed(Sign, "m_r")
+    val sD = signed(sDelta, opCol).withColumnRenamed(Sign, "m_s")
+    val rO = rOld.withColumnRenamed(Sign, "mo_r")
+    val sO = sOld.withColumnRenamed(Sign, "mo_s")
 
     // Each term normalized to (groupCols..., sign, sumValueCols...)
     def term(left: DataFrame, right: DataFrame,
@@ -127,5 +105,34 @@ object IncrementalJoin {
           sum(when(col("sign") === 1, OracleArith.dec2(col(s"v_$out")))
             .otherwise(-OracleArith.dec2(col(s"v_$out")))).as(out)
         }: _*)
+  }
+
+  /** The view groups a two-sided CDC delta can touch — the recompute
+    * scope for NON-invertible aggregates (min/max, distinct counts) over
+    * a JOIN view, composing [[IncrementalAgg.dirtyGroups]]'s patch
+    * pattern (q240) with the three-term structure: every joined row that
+    * enters or leaves the view has at least one delta side, so the union
+    * of ΔR⋈S, R⋈ΔS, ΔR⋈ΔS projected to the group columns covers every
+    * group whose extreme can move (over-marking — e.g. a candidate pair
+    * whose other side was concurrently deleted — is harmless: recompute
+    * is idempotent). Same delta-sized join shapes as
+    * [[deltaJoinState]], over plain (unsigned) old sides; output is the
+    * distinct dirty group tuples, which [[IncrementalAgg.recomputeGroups]]
+    * turns into a semi-join-restricted re-aggregation of the post-apply
+    * join and [[IncrementalAgg.patch]] splices over the untouched state
+    * rows.
+    */
+  def dirtyJoinGroups(
+      rOld: DataFrame, rDelta: DataFrame,
+      sOld: DataFrame, sDelta: DataFrame,
+      opCol: String, joinKeys: Seq[String],
+      groupCols: Seq[String]): DataFrame = {
+    val rD = rDelta.drop(opCol)
+    val sD = sDelta.drop(opCol)
+    def grp(df: DataFrame): DataFrame = df.select(groupCols.map(col): _*)
+    grp(rD.join(sOld, joinKeys))
+      .unionByName(grp(rOld.join(sD, joinKeys)))
+      .unionByName(grp(rD.join(sD, joinKeys)))
+      .distinct()
   }
 }

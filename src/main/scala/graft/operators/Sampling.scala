@@ -36,10 +36,6 @@ object Sampling {
     df.withColumn("split",
       when(hashBucket(col(keyCol), 100) < trainPct, "train").otherwise("holdout"))
 
-  /** Keep a deterministic ~pct% sample. */
-  def sampleFraction(df: DataFrame, keyCol: String, pct: Int): DataFrame =
-    df.filter(hashBucket(col(keyCol), 100) < pct)
-
   /** Pretraining-mixture sampling: admit each row at its source's rate
     * (percent, 0-100), falling back to `defaultPct` for unlisted sources —
     * how a data mix ("keep all of wiki, 30% of crawl") is materialized.

@@ -57,33 +57,26 @@ import graft.sources.VersionedTable
   * is instantiated fresh per match (a union/join of two rewritten
   * aggregates over the same base must not share relation exprIds).
   *
-  * Registration comes in two flavors: [[register]] freezes one parquet
-  * listing (a static view), while [[registerVersioned]] points at an
-  * [[graft.streaming.IvmStream]] state ROOT and resolves its newest
-  * [[graft.sources.VersionedTable]] version at match time — a streaming
-  * refresh is picked up by the next query with no re-register, which is
-  * what makes continuous maintenance and transparent reads compose
-  * (q253).
+  * A registered view is a [[graft.sources.VersionedTable]] root — the
+  * state an [[graft.streaming.IvmStream]] writer advances, or a view a
+  * batch job commits as `v0` — and every match resolves its newest
+  * committed version, so a streaming refresh is picked up by the next
+  * query with no re-register, which is what makes continuous maintenance
+  * and transparent reads compose (q253). One registration per view
+  * shape: [[register]] for a single-table view, [[registerJoin]] for a
+  * join view.
   */
 object MvRewrite extends Rule[LogicalPlan] {
 
-  /** Where a registered view's plan comes from at match time. */
-  sealed trait ViewSource { def plan(): Option[LogicalPlan] }
-
-  /** A fixed parquet listing captured at registration. */
-  private final case class Frozen(p: LogicalPlan) extends ViewSource {
-    def plan(): Option[LogicalPlan] = Some(p)
-  }
-
-  /** Resolves the newest committed version under an IvmStream state root
-    * at MATCH time, through [[graft.sources.VersionedTable.versions]] (a
-    * version exists only once its commit's rename landed, so a crashed
-    * commit's staging is never read), caching the analyzed plan per
-    * version so steady-state matching costs one directory listing, not a
+  /** Resolves the newest committed version under a view root at MATCH
+    * time, through [[graft.sources.VersionedTable.versions]] (a version
+    * exists only once its commit's rename landed, so a crashed commit's
+    * staging is never read), caching the analyzed plan per version so
+    * steady-state matching costs one directory listing, not a
     * re-analysis. None while no version has committed — the rule then
     * leaves the plan on the base scan rather than failing the query.
     */
-  private final class Versioned(stateRoot: String) extends ViewSource {
+  private final class View(root: String) {
     @volatile private var cached: Option[(Long, LogicalPlan)] = None
     // NOTE (r11, measured): caching the parquet schema per state root to
     // skip the footer job on version advance was tried and REVERTED — the
@@ -94,11 +87,11 @@ object MvRewrite extends Rule[LogicalPlan] {
     // read per refresh is the price of layout flexibility.
     def plan(): Option[LogicalPlan] = {
       val spark = SparkSession.active
-      VersionedTable.versions(spark, stateRoot).lastOption.map { v =>
+      VersionedTable.versions(spark, root).lastOption.map { v =>
         cached match {
           case Some((cv, p)) if cv == v => p
           case _ =>
-            val p = VersionedTable.read(spark, stateRoot, v)
+            val p = VersionedTable.read(spark, root, v)
               .queryExecution.analyzed
             cached = Some((v, p))
             p
@@ -107,10 +100,10 @@ object MvRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** A registered view: base-table path → (view source, group columns,
+  /** A registered view: base-table path → (view, group columns,
     * raw-sum-column → view-sum-column, ditto min/max).
     */
-  final case class MvDef(view: ViewSource, groupCols: Seq[String],
+  private final case class MvDef(view: View, groupCols: Seq[String],
       sums: Map[String, String],
       mins: Map[String, String] = Map.empty,
       maxs: Map[String, String] = Map.empty)
@@ -119,74 +112,47 @@ object MvRewrite extends Rule[LogicalPlan] {
 
   private def normalize(p: String): String = new Path(p).toUri.getPath
 
-  /** Register a maintained view for `basePath`. The view parquet at
-    * `viewPath` must hold [[graft.operators.IncrementalAgg.state]]'s
-    * layout: `groupCols`, `n`, and the named sum columns. Re-registering
-    * (e.g. after a refresh rewrote the parquet) replaces the entry and
-    * re-lists the view's files.
+  /** Register a maintained view for `basePath`. `viewRoot` is a
+    * [[graft.sources.VersionedTable]] root whose versions hold
+    * [[graft.operators.IncrementalAgg.state]]'s layout: `groupCols`, `n`,
+    * the named sum columns and any named min/max columns — for
+    * [[graft.streaming.IvmStream.maintainAggStream]] that is its
+    * `statePath`. Every match resolves the newest committed version, so a
+    * refresh needs no re-register; until the first version commits,
+    * queries stay on the base scan. Re-registering replaces the entry.
     */
-  def register(spark: SparkSession, basePath: String, viewPath: String,
+  def register(basePath: String, viewRoot: String,
       groupCols: Seq[String], sums: Map[String, String],
       mins: Map[String, String] = Map.empty,
       maxs: Map[String, String] = Map.empty): Unit =
     defs.put(normalize(basePath),
-      MvDef(Frozen(spark.read.parquet(viewPath).queryExecution.analyzed),
-        groupCols, sums, mins, maxs))
-
-  /** Register a CONTINUOUSLY MAINTAINED view for `basePath`: `stateRoot`
-    * is the versioned state directory an
-    * [[graft.streaming.IvmStream.maintainAggStream]] writer advances
-    * (`v0`, `v1`, ...); every match resolves the newest committed
-    * version, so a refresh needs no re-register. Until the first version
-    * commits, queries stay on the base scan.
-    */
-  def registerVersioned(basePath: String, stateRoot: String,
-      groupCols: Seq[String], sums: Map[String, String],
-      mins: Map[String, String] = Map.empty,
-      maxs: Map[String, String] = Map.empty): Unit =
-    defs.put(normalize(basePath),
-      MvDef(new Versioned(stateRoot), groupCols, sums, mins, maxs))
+      MvDef(new View(viewRoot), groupCols, sums, mins, maxs))
 
   /** A registered JOIN view (the read half of q242/q244's maintained
     * join views): (left path, right path) → equi-key column-name pairs,
-    * view source, group columns, sums — plus each base side's column
-    * names, so grouping/sum attributes resolve to the side they were
-    * registered from (a same-named column on the OTHER side must refuse
-    * the rewrite, not silently answer from the wrong side's values).
+    * the view — plus each base side's column names, so grouping/sum
+    * attributes resolve to the side they were registered from (a
+    * same-named column on the OTHER side must refuse the rewrite, not
+    * silently answer from the wrong side's values).
     */
-  final case class JoinMvDef(keys: Set[(String, String)],
-      view: ViewSource, groupCols: Seq[String],
-      sums: Map[String, String],
+  private final case class JoinMvDef(keys: Set[(String, String)], view: MvDef,
       lCols: Set[String], rCols: Set[String])
 
   private val joinDefs = new TrieMap[(String, String), JoinMvDef]()
 
   /** Register a maintained view of `leftPath ⋈ rightPath` on the given
-    * (leftCol, rightCol) equi-key pairs. Matching is orientation-exact:
-    * the query's join must have the registered left table on the left.
+    * (leftCol, rightCol) equi-key pairs. `viewRoot` is the join view's
+    * [[graft.sources.VersionedTable]] root (for
+    * [[graft.streaming.IvmStream.maintainJoinAggStream]] that is
+    * `statePath/view`), resolved per match as in [[register]]. Matching
+    * is orientation-exact: the query's join must have the registered
+    * left table on the left.
     */
   def registerJoin(spark: SparkSession, leftPath: String, rightPath: String,
-      keys: Seq[(String, String)], viewPath: String,
+      keys: Seq[(String, String)], viewRoot: String,
       groupCols: Seq[String], sums: Map[String, String]): Unit =
     joinDefs.put((normalize(leftPath), normalize(rightPath)),
-      JoinMvDef(keys.toSet,
-        Frozen(spark.read.parquet(viewPath).queryExecution.analyzed),
-        groupCols, sums,
-        spark.read.parquet(leftPath).schema.fieldNames.toSet,
-        spark.read.parquet(rightPath).schema.fieldNames.toSet))
-
-  /** The versioned flavor of [[registerJoin]]: `stateRoot` is the
-    * join view's versioned directory (for
-    * [[graft.streaming.IvmStream.maintainJoinAggStream]] that is
-    * `statePath/view`); every match resolves the newest committed
-    * version, so the continuously maintained star-schema view serves
-    * fresh reads with no re-register.
-    */
-  def registerJoinVersioned(spark: SparkSession, leftPath: String,
-      rightPath: String, keys: Seq[(String, String)], stateRoot: String,
-      groupCols: Seq[String], sums: Map[String, String]): Unit =
-    joinDefs.put((normalize(leftPath), normalize(rightPath)),
-      JoinMvDef(keys.toSet, new Versioned(stateRoot), groupCols, sums,
+      JoinMvDef(keys.toSet, MvDef(new View(viewRoot), groupCols, sums),
         spark.read.parquet(leftPath).schema.fieldNames.toSet,
         spark.read.parquet(rightPath).schema.fieldNames.toSet))
 
@@ -285,7 +251,7 @@ object MvRewrite extends Rule[LogicalPlan] {
               case IsNotNull(a: AttributeReference)
                   if keyNames.contains(a.name) => None
               case e if e.deterministic && e.references.nonEmpty &&
-                  e.references.forall(a => d.groupCols.contains(a.name)) =>
+                  e.references.forall(a => d.view.groupCols.contains(a.name)) =>
                 Some(e)
               case _ => return None
             }
@@ -304,8 +270,7 @@ object MvRewrite extends Rule[LogicalPlan] {
               (fromL && d.lCols.contains(a.name) && !d.rCols.contains(a.name)) ||
               (fromR && d.rCols.contains(a.name) && !d.lCols.contains(a.name))
             }) Some(()) else None
-          rewritten <- buildViewAggregate(grouping, aggExprs,
-            MvDef(d.view, d.groupCols, d.sums),
+          rewritten <- buildViewAggregate(grouping, aggExprs, d.view,
             filt = pushable.reduceOption(And))
         } yield rewritten
       case _ => None
@@ -403,8 +368,8 @@ object MvRewrite extends Rule[LogicalPlan] {
       aggExprs: Seq[NamedExpression], d: MvDef,
       filt: Option[Expression]): Option[LogicalPlan] = {
     for {
-      frozen <- d.view.plan()
-      viewPlan = frozen.transform {
+      resolved <- d.view.plan()
+      viewPlan = resolved.transform {
         case lr: LogicalRelation => lr.newInstance()
       }
       groupNames <- Some(grouping.map {

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1214,8 +1215,8 @@ object Extra {
         .unionByName(o.filter(col("o_orderkey") % 103 === 0)
           .withColumn("op", lit("insert")))
       IncrementalAgg.refresh(base,
-          IncrementalJoin.deltaJoinState(c, cDelta, o, oDelta,
-            "op", Seq("k"), groups, sums),
+          IncrementalJoin.deltaJoinState(IncrementalJoin.positive(c), cDelta,
+            IncrementalJoin.positive(o), oDelta, "op", Seq("k"), groups, sums),
           groups, sums.map(_._1))
         .select(col("seg"), col("o_orderstatus"), col("n").as("n_rows"),
           col("sum_price").cast("double").as("sum_price"))
@@ -1238,6 +1239,16 @@ object Extra {
       |  CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
       |FROM o2 JOIN c2 USING (k)
       |GROUP BY 1, 2 ORDER BY seg, o_orderstatus""".stripMargin)
+
+  /** Empty the view root `path` and commit `state` as its version 0: a
+    * registered view is a [[graft.sources.VersionedTable]] root. Emptied
+    * first because a commit of a version that exists is a replay and
+    * skips, so an earlier pass's v0 would otherwise stay.
+    */
+  private def commitView(s: SparkSession, state: DataFrame, path: String): Unit = {
+    graft.sources.VersionedTable.vacuum(s, path, keepFrom = Long.MaxValue)
+    graft.sources.VersionedTable.commit(s, state, path, 0L)
+  }
 
   /** q247: transparent materialized-view rewrite (MvRewrite, the read
     * half of the IVM family) — the gate materializes the
@@ -1272,9 +1283,8 @@ object Extra {
           "o_orderpriority", "o_totalprice")
         .write.mode("overwrite").parquet(basePath)
       val o = s.read.parquet(basePath)
-      IncrementalAgg.state(o, groups, sums)
-        .write.mode("overwrite").parquet(viewPath)
-      graft.plans.MvRewrite.register(s, basePath, viewPath,
+      commitView(s, IncrementalAgg.state(o, groups, sums), viewPath)
+      graft.plans.MvRewrite.register(basePath, viewPath,
         groups, Map("o_totalprice" -> "sum_price"))
       o.groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_orders"),
@@ -1316,8 +1326,9 @@ object Extra {
         .write.mode("overwrite").parquet(oPath)
       val c = s.read.parquet(cPath)
       val o = s.read.parquet(oPath)
-      IncrementalAgg.state(c.join(o, col("k") === col("ok")), groups, sums)
-        .write.mode("overwrite").parquet(vPath)
+      commitView(s,
+        IncrementalAgg.state(c.join(o, col("k") === col("ok")), groups, sums),
+        vPath)
       graft.plans.MvRewrite.registerJoin(s, cPath, oPath,
         Seq("k" -> "ok"), vPath, groups, Map("o_totalprice" -> "sum_price"))
       c.join(o, col("k") === col("ok"))
@@ -1357,9 +1368,8 @@ object Extra {
           "o_totalprice")
         .write.mode("overwrite").parquet(basePath)
       val o = s.read.parquet(basePath)
-      IncrementalAgg.state(o, groups, sums)
-        .write.mode("overwrite").parquet(viewPath)
-      graft.plans.MvRewrite.register(s, basePath, viewPath,
+      commitView(s, IncrementalAgg.state(o, groups, sums), viewPath)
+      graft.plans.MvRewrite.register(basePath, viewPath,
         groups, Map("o_totalprice" -> "sum_price"))
       o.filter(col("o_orderstatus") === "F")
         .groupBy("o_orderpriority")
@@ -1460,8 +1470,9 @@ object Extra {
         .write.mode("overwrite").parquet(oPath)
       val c = s.read.parquet(cPath)
       val o = s.read.parquet(oPath)
-      IncrementalAgg.state(c.join(o, col("k") === col("ok")), groups, sums)
-        .write.mode("overwrite").parquet(vPath)
+      commitView(s,
+        IncrementalAgg.state(c.join(o, col("k") === col("ok")), groups, sums),
+        vPath)
       graft.plans.MvRewrite.registerJoin(s, cPath, oPath,
         Seq("k" -> "ok"), vPath, groups, Map("o_totalprice" -> "sum_price"))
       c.join(o, col("k") === col("ok"))
@@ -1541,7 +1552,7 @@ object Extra {
   /** q253: the IVM story end to end — continuous maintenance COMPOSED
     * with transparent reads. The view's versioned state chain
     * (IvmStream's exactly-once layout: one VersionedTable version per
-    * batch) is registered ONCE via MvRewrite.registerVersioned; a CDC
+    * batch) is registered ONCE via MvRewrite.register; a CDC
     * batch then commits v1 — exactly the refresh maintainAggStream's
     * foreachBatch commits for batch 1 over v0 — and the SAME registration
     * answers the next base aggregate from v1: no re-register, no base
@@ -1568,13 +1579,11 @@ object Extra {
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       o.write.mode("overwrite").parquet(basePath)
-      VersionedTable.vacuum(s, stateRoot, keepFrom = Long.MaxValue)
-      VersionedTable.commit(s,
-        IncrementalAgg.state(s.read.parquet(basePath), groups, sums),
-        stateRoot, 0L)
+      commitView(s, IncrementalAgg.state(s.read.parquet(basePath), groups, sums),
+        stateRoot)
       // register the state ROOT once, BEFORE the refresh lands — the
       // production reader never re-registers
-      graft.plans.MvRewrite.registerVersioned(basePath, stateRoot,
+      graft.plans.MvRewrite.register(basePath, stateRoot,
         groups, Map("o_totalprice" -> "sum_price"))
       // CDC batch 1: delete every 107th order, duplicate every 97th at
       // price+750 — refreshed against v0, the newest state below it
@@ -1860,11 +1869,8 @@ object Extra {
         // by register max — bit-equal to the relational sketch/merge/
         // estimate (HllMd5Spec), which is what the oracle replays
         val sharded = HllMd5.sketchAgg(keys, "k", Seq("grp", "shard"))
-        val est = HllMd5.unionAgg(sharded, Seq("grp"))
-          .select(col("grp"), HllMd5.estimateCol(col("hll_regs")).as("e"))
-          .select(col("grp"), col("e.m_used").as("m_used"),
-            col("e.v_zero").as("v_zero"),
-            col("e.hll_estimate").as("hll_estimate"))
+        val est = HllMd5.estimates(HllMd5.unionAgg(sharded, Seq("grp")),
+          Seq("grp"))
         val exact = keys.groupBy("grp")
           .agg(countDistinct(col("k")).as("n_exact"))
         est.join(exact, "grp").orderBy("grp")
@@ -1923,11 +1929,7 @@ object Extra {
         HllMd5.sketchAgg(li, "k", Seq("grp", "shard"))
           .write.mode("overwrite").parquet(path)
         val loaded = s.read.parquet(path)
-        HllMd5.unionAgg(loaded, Seq("grp"))
-          .select(col("grp"), HllMd5.estimateCol(col("hll_regs")).as("e"))
-          .select(col("grp"), col("e.m_used").as("m_used"),
-            col("e.v_zero").as("v_zero"),
-            col("e.hll_estimate").as("hll_estimate"))
+        HllMd5.estimates(HllMd5.unionAgg(loaded, Seq("grp")), Seq("grp"))
           .orderBy("grp")
       },
       s"""WITH h AS (

@@ -1223,10 +1223,10 @@ object Stream {
          |FROM sk GROUP BY event_type ORDER BY event_type""".stripMargin)
   }
 
-  /** q243: continuous IVM, batch twin — the q238 delta rule folded
-    * through FOUR sequential micro-batch chunks (IvmStream.foldRefresh,
-    * chunks = o_orderkey % 4), exactly the computation the streaming
-    * maintainAggStream runs per foreachBatch commit. Refresh COMPOSES:
+  /** q243: continuous IVM — the q238 delta rule folded through FOUR
+    * sequential micro-batch chunks (IvmStream.foldRefresh, chunks =
+    * o_orderkey % 4), the same step the streaming maintainAggStream runs
+    * over each foreachBatch batch. Refresh COMPOSES:
     * state after chunk 4 must equal a one-shot refresh, must equal a
     * from-scratch recompute — the oracle checks the last leg in DuckDB
     * while the plan only ever touches base state + chunk deltas.
@@ -1272,21 +1272,24 @@ object Stream {
       |  CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
       |FROM survivors GROUP BY 1 ORDER BY o_orderpriority""".stripMargin)
 
-  /** q244: continuously maintained JOIN view, batch twin — three
-    * two-sided CDC chunks (customers re-segmenting AND orders
-    * deleting/repricing/arriving, chunked by key % 3) folded through
-    * IvmStream.foldJoinRefresh: each chunk's ΔV comes from the
-    * three-term signed rule against the relations AS OF the previous
-    * chunk, kept as signed multisets (base +1 ∪ applied deltas ±1 — the
-    * log-structured form maintainJoinAggStream persists; no snapshot is
-    * ever rewritten). The oracle recomputes the final join-aggregate
-    * from scratch, so hash equality proves chunked two-sided maintenance
+  /** q244: continuously maintained JOIN view — three two-sided CDC
+    * chunks (customers re-segmenting AND orders deleting/repricing/
+    * arriving, chunked by key % 3) folded through
+    * IvmStream.foldJoinRefresh, the step maintainJoinAggStream runs per
+    * batch: each chunk's ΔV comes from the three-term signed rule against
+    * the relations AS OF the previous chunk, kept as signed multisets
+    * (base +1 ∪ applied deltas ±1 — the log-structured form
+    * maintainJoinAggStream persists; no snapshot is ever rewritten). The
+    * oracle recomputes the final join-aggregate from scratch, so hash
+    * equality proves chunked two-sided maintenance
     * converges to truth regardless of how history was sliced —
     * IvmStreamSpec pins the same fold against the real multi-table CDC
     * stream across a checkpoint restart.
     */
   private val streamJoinIvm = QueryDef(
     (s, dir) => {
+      import graft.operators.IncrementalAgg
+      import graft.operators.IncrementalJoin.positive
       import graft.streaming.IvmStream
       val groups = Seq("seg", "o_orderstatus")
       val sums = Seq("sum_price" -> "o_totalprice")
@@ -1314,8 +1317,10 @@ object Stream {
           .select("op", "k", "seg"),
         oDelta.filter(col("o_orderkey") % 3 === i)
           .select("op", "k", "o_orderstatus", "o_totalprice")))
-      IvmStream.foldJoinRefresh(c, o.drop("o_orderkey"), chunks,
-          "op", Seq("k"), groups, sums)
+      val oBase = o.drop("o_orderkey")
+      IvmStream.foldJoinRefresh(positive(c), positive(oBase),
+          IncrementalAgg.state(c.join(oBase, Seq("k")), groups, sums),
+          chunks, "op", Seq("k"), groups, sums)
         .select(col("seg"), col("o_orderstatus"), col("n").as("n_rows"),
           col("sum_price").cast("double").as("sum_price"))
         .orderBy("seg", "o_orderstatus")
@@ -1352,6 +1357,7 @@ object Stream {
   private val logCompaction = QueryDef(
     (s, dir) => {
       import graft.core.OracleArith
+      import graft.operators.IncrementalJoin.{positive, signed}
       import graft.streaming.IvmStream
       val o = Tables.orders(s, dir)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
@@ -1365,11 +1371,8 @@ object Stream {
           .withColumn("o_totalprice", col("o_totalprice") + 250.0))
         .unionByName(o.filter(col("o_orderkey") % 79 === 0)
           .withColumn("op", lit("insert")))
-        .withColumn("__m",
-          when(col("op") === "insert", 1).otherwise(-1))
-        .drop("op")
       IvmStream.compactSigned(
-          o.withColumn("__m", lit(1)).unionByName(log), "__m")
+          positive(o).unionByName(signed(log, "op")))
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n_rows"),
           sum(OracleArith.dec2(col("o_totalprice")))

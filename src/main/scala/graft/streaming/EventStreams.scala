@@ -355,10 +355,9 @@ object EventStreams {
   def distinctCountsHll(events: DataFrame, groupCol: String,
       keyCol: String): DataFrame = {
     import graft.operators.HllMd5
-    HllMd5.sketchAgg(sketchKeys(events, groupCol, keyCol), "k", Seq(groupCol))
-      .select(col(groupCol), HllMd5.estimateCol(col("hll_regs")).as("e"))
-      .select(col(groupCol), col("e.m_used").as("m_used"),
-        col("e.v_zero").as("v_zero"), col("e.hll_estimate").as("hll_estimate"))
+    HllMd5.estimates(
+      HllMd5.sketchAgg(sketchKeys(events, groupCol, keyCol), "k", Seq(groupCol)),
+      Seq(groupCol))
   }
 
   /** Bottom-k (KMV) distinct sketch per group, the set-operation

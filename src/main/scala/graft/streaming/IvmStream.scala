@@ -9,9 +9,16 @@ import graft.sources.VersionedTable
 
 /** Continuous incremental view maintenance: a materialized grouped
   * count/sum view kept current from a CDC delta STREAM — the streaming
-  * twin of [[graft.operators.IncrementalAgg]] (q238's batch rule), so the
+  * form of [[graft.operators.IncrementalAgg]] (q238's batch rule), so the
   * gold table refreshes at delta cost forever instead of on a rescan
   * schedule.
+  *
+  * One refresh step per view kind: [[foldRefresh]] (aggregate view) and
+  * [[foldJoinRefresh]] (join view) fold delta chunks over a state, and
+  * each stream's `foreachBatch` body is that fold over one chunk — its
+  * batch — starting from the newest committed state. The gates fold
+  * several chunks in one batch job; the streams fold one per
+  * micro-batch; the code that refreshes is the same.
   *
   * Exactly-once without a transaction log: foreachBatch is at-least-once
   * by contract, so the state is VERSIONED — batch B reads the newest
@@ -31,42 +38,44 @@ import graft.sources.VersionedTable
   * number of live groups, independent of how much history the stream has
   * absorbed. Sums stay exact DECIMAL end to end, so the maintained view
   * is bit-identical to a from-scratch recompute after ANY prefix of
-  * batches — the invariant [[foldRefresh]] (the gate's batch twin) and
-  * the restart spec pin.
+  * batches — the invariant the gates and the restart spec pin.
   */
 object IvmStream {
 
-  /** Sequential multi-batch refresh — the deterministic batch twin of
-    * [[maintainAggStream]]: folds each delta chunk through
+  import IncrementalJoin.{positive, signed}
+
+  /** Chunks between two lineage cuts of a fold's (group-sized) state: its
+    * lineage otherwise compounds chunk over chunk (each refresh inlines
+    * the previous state's whole plan — guide §3.3) and a long fold's
+    * analysis cost grows quadratically. Spaced, not per-chunk: an eager
+    * cut is one extra job, and for the 3-chunk gates that job overhead
+    * measurably exceeded the plan saving (full-bench r10: per-chunk
+    * checkpoints cost q244 ~+1.9 s). Exact-DECIMAL sums make the cut
+    * value-neutral wherever it lands.
+    */
+  private val CutEvery = 4
+
+  /** `state` after chunk `i` of `n`, cut on every [[CutEvery]]-th chunk
+    * that is not the last (a last cut would only add a job).
+    */
+  private def spaced(state: DataFrame, i: Int, n: Int): DataFrame =
+    if ((i + 1) % CutEvery == 0 && i + 1 < n) graft.core.Materialize.cut(state)
+    else state
+
+  /** The aggregate view's refresh step: folds each delta chunk through
     * deltaState+refresh in order. Refresh composes (state after chunks
     * c1..cn equals one-shot refresh of c1∪..∪cn equals full recompute),
     * which is exactly what lets a stream maintain the view chunk by
-    * chunk.
+    * chunk: [[maintainAggStream]] runs this over one batch.
     */
   def foldRefresh(base: DataFrame, deltaChunks: Seq[DataFrame],
       opCol: String, groupCols: Seq[String],
-      sums: Seq[(String, String)],
-      /** Checkpoint the (group-sized) state after every `checkpointEvery`
-        * chunks: its lineage otherwise compounds chunk over chunk (each
-        * refresh inlines the previous state's whole plan — guide §3.3) and
-        * a long fold's analysis cost grows quadratically. Spaced, not
-        * per-chunk: an eager checkpoint is one extra job, and for the
-        * 3-chunk gates that job overhead measurably exceeded the plan
-        * saving (full-bench r10: per-chunk checkpoints cost q244 ~+1.9 s).
-        * Exact-DECIMAL sums make the cut value-neutral wherever it lands.
-        */
-      checkpointEvery: Int = 4): DataFrame = {
-    require(checkpointEvery >= 1,
-      s"checkpointEvery must be >= 1, got $checkpointEvery")
+      sums: Seq[(String, String)]): DataFrame =
     deltaChunks.zipWithIndex.foldLeft(base) { case (state, (d, i)) =>
-      val next = IncrementalAgg.refresh(state,
+      spaced(IncrementalAgg.refresh(state,
         IncrementalAgg.deltaState(d, opCol, groupCols, sums),
-        groupCols, sums.map(_._1))
-      if ((i + 1) % checkpointEvery == 0 && i + 1 < deltaChunks.length)
-        graft.core.Materialize.cut(next)
-      else next
+        groupCols, sums.map(_._1)), i, deltaChunks.length)
     }
-  }
 
   /** Committed versions at `path` strictly below batch `before`. */
   private def below(spark: SparkSession, path: String, before: Long): Seq[Long] =
@@ -88,8 +97,9 @@ object IvmStream {
 
   /** Maintain the view from a CDC delta stream. `baseState` is the
     * initial materialization ([[IncrementalAgg.state]] of the base
-    * table); each micro-batch advances the newest committed version by
-    * its own delta. Caller starts/stops the returned writer.
+    * table); each micro-batch folds its own delta over the newest
+    * committed version and commits the result. Caller starts/stops the
+    * returned writer.
     */
   def maintainAggStream(deltas: DataFrame, baseState: DataFrame,
       statePath: String, checkpointDir: String, opCol: String,
@@ -97,48 +107,36 @@ object IvmStream {
     deltas.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val prev = latestState(spark, statePath, before = batchId)
+        val prev = latestState(batch.sparkSession, statePath, before = batchId)
           .getOrElse(baseState)
-        commitBatch(statePath, batchId, IncrementalAgg.refresh(prev,
-          IncrementalAgg.deltaState(batch, opCol, groupCols, sums),
-          groupCols, sums.map(_._1)))
+        commitBatch(statePath, batchId,
+          foldRefresh(prev, Seq(batch), opCol, groupCols, sums))
       }
 
-  /** Sequential multi-batch JOIN-view refresh — the batch twin of
-    * [[maintainJoinAggStream]]: each chunk is a (ΔR, ΔS) pair applied
+  /** The join view's refresh step: each chunk is a (ΔR, ΔS) pair applied
     * through the three-term signed delta rule against the relations AS
-    * OF the previous chunk, kept as signed multisets (base +1 ∪ applied
-    * deltas ±1) so no chunk ever rewrites a base snapshot.
+    * OF the previous chunk, kept as signed multisets (`rOld`/`sOld`:
+    * [[IncrementalJoin.positive]] bases ∪ applied deltas ±1) so no chunk
+    * ever rewrites a base snapshot. `state` is the view over
+    * `rOld ⋈ sOld`. [[maintainJoinAggStream]] runs this over one batch.
     */
-  def foldJoinRefresh(rBase: DataFrame, sBase: DataFrame,
+  def foldJoinRefresh(rOld: DataFrame, sOld: DataFrame, state: DataFrame,
       chunks: Seq[(DataFrame, DataFrame)], opCol: String,
       joinKeys: Seq[String], groupCols: Seq[String],
-      sums: Seq[(String, String)]): DataFrame = {
-    def signed(d: DataFrame): DataFrame =
-      d.withColumn("__m",
-        when(col(opCol) === "insert", 1).otherwise(-1)).drop(opCol)
-    val init = (
-      rBase.withColumn("__m", lit(1)),
-      sBase.withColumn("__m", lit(1)),
-      IncrementalAgg.state(rBase.join(sBase, joinKeys), groupCols, sums))
-    chunks.zipWithIndex.foldLeft(init) { case ((rOld, sOld, state), ((rD, sD), i)) =>
-      // state checkpoints are SPACED (see foldRefresh: per-chunk barriers
-      // cost more than the plan-size saving at gate chunk counts; lineage
-      // compounding only bites on long folds). rOld/sOld stay LAZY unions
-      // on purpose: materializing base ∪ deltas would rewrite the full
-      // relation per chunk — exactly what the signed-log design avoids —
-      // while the lazy union costs one base scan wherever it is consumed.
-      val next = IncrementalAgg.refresh(state,
-        IncrementalJoin.deltaJoinStateSigned(rOld, rD, sOld, sD,
-          "__m", opCol, joinKeys, groupCols, sums),
-        groupCols, sums.map(_._1))
-      ((rOld.unionByName(signed(rD)), sOld.unionByName(signed(sD)),
-        if ((i + 1) % 4 == 0 && i + 1 < chunks.length)
-          graft.core.Materialize.cut(next)
-        else next))
+      sums: Seq[(String, String)]): DataFrame =
+    chunks.zipWithIndex.foldLeft((rOld, sOld, state)) {
+      case ((r, s, st), ((rD, sD), i)) =>
+        // r/s stay LAZY unions on purpose: materializing base ∪ deltas
+        // would rewrite the full relation per chunk — exactly what the
+        // signed-log design avoids — while the lazy union costs one base
+        // scan wherever it is consumed
+        val next = IncrementalAgg.refresh(st,
+          IncrementalJoin.deltaJoinState(r, rD, s, sD, opCol, joinKeys,
+            groupCols, sums),
+          groupCols, sums.map(_._1))
+        (r.unionByName(signed(rD, opCol)), s.unionByName(signed(sD, opCol)),
+          spaced(next, i, chunks.length))
     }._3
-  }
 
   /** Maintain a JOIN-aggregate view from ONE multi-table CDC stream (the
     * shape a CDC bus delivers: each row tagged `sideCol` ∈ {"r", "s"}
@@ -152,7 +150,7 @@ object IvmStream {
     *   - `statePath/view/v<id>` — the versioned maintained view,
     *     [[maintainAggStream]]'s exactly-once chain.
     *
-    * Batch B joins its deltas against base ∪ log(< B) — the committed log
+    * Batch B folds its deltas over base ∪ log(< B) — the committed log
     * prefix is the log versions below B, so a replayed batch's own log
     * version never reaches its reader — and a delete is a −1 log row, so
     * base relations are NEVER rewritten. Log growth is bounded by compacting
@@ -175,28 +173,20 @@ object IvmStream {
             .select((opCol +: cols).map(col): _*)
         val rD = side("r", rCols)
         val sD = side("s", sCols)
-        def commitLog(d: DataFrame, path: String): Unit =
-          commitBatch(path, batchId, d.withColumn("__m",
-              when(col(opCol) === "insert", 1).otherwise(-1))
-            .drop(opCol))
-        commitLog(rD, s"$statePath/rlog")
-        commitLog(sD, s"$statePath/slog")
+        commitBatch(s"$statePath/rlog", batchId, signed(rD, opCol))
+        commitBatch(s"$statePath/slog", batchId, signed(sD, opCol))
         def oldSide(base: DataFrame, path: String): DataFrame = {
-          val withSign = base.withColumn("__m", lit(1))
           val committed = below(spark, path, batchId)
-          if (committed.isEmpty) withSign
-          else withSign.unionByName(
+          if (committed.isEmpty) positive(base)
+          else positive(base).unionByName(
             VersionedTable.read(spark, path, committed: _*))
         }
         val prev = latestState(spark, s"$statePath/view", before = batchId)
           .getOrElse(IncrementalAgg.state(
             rBase.join(sBase, joinKeys), groupCols, sums))
-        commitBatch(s"$statePath/view", batchId, IncrementalAgg.refresh(prev,
-          IncrementalJoin.deltaJoinStateSigned(
-            oldSide(rBase, s"$statePath/rlog"), rD,
-            oldSide(sBase, s"$statePath/slog"), sD,
-            "__m", opCol, joinKeys, groupCols, sums),
-          groupCols, sums.map(_._1)))
+        commitBatch(s"$statePath/view", batchId, foldJoinRefresh(
+          oldSide(rBase, s"$statePath/rlog"), oldSide(sBase, s"$statePath/slog"),
+          prev, Seq((rD, sD)), opCol, joinKeys, groupCols, sums))
       }
 
   /** Collapse a signed multiset (base +1 ∪ log ±1, the storage
@@ -211,14 +201,15 @@ object IvmStream {
     * net counts (net is a tiny int for CDC workloads — a row's history
     * length, not a corpus dimension).
     *
-    * `signCol` is consumed; a net < 0 row (a delete of a row the base
-    * never had) is a malformed feed and surfaces as a thrown error from
-    * the negative sequence length rather than being silently dropped.
+    * The [[IncrementalJoin.Sign]] column is consumed; a net < 0 row (a
+    * delete of a row the base never had) is a malformed feed and surfaces
+    * as a thrown error from the negative sequence length rather than
+    * being silently dropped.
     */
-  def compactSigned(signed: DataFrame, signCol: String): DataFrame = {
-    val dataCols = signed.columns.filter(_ != signCol).toSeq
-    signed.groupBy(dataCols.map(col): _*)
-      .agg(sum(col(signCol).cast("long")).as("__net"))
+  def compactSigned(signedRows: DataFrame): DataFrame = {
+    val dataCols = signedRows.columns.filter(_ != IncrementalJoin.Sign).toSeq
+    signedRows.groupBy(dataCols.map(col): _*)
+      .agg(sum(col(IncrementalJoin.Sign).cast("long")).as("__net"))
       .filter(col("__net") =!= 0L)
       // explicit +1 step: sequence(1, net) with net < 0 would silently
       // count DOWN; with the step pinned it throws on a malformed feed

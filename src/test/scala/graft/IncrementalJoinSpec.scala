@@ -23,8 +23,8 @@ class IncrementalJoinSpec extends AnyFunSuite {
   private def refreshed(r: DataFrame, rD: DataFrame,
       s: DataFrame, sD: DataFrame): DataFrame =
     IncrementalAgg.refresh(viewState(r, s),
-      IncrementalJoin.deltaJoinState(r, rD, s, sD, "op", Seq("k"),
-        groups, sums),
+      IncrementalJoin.deltaJoinState(IncrementalJoin.positive(r), rD,
+        IncrementalJoin.positive(s), sD, "op", Seq("k"), groups, sums),
       groups, Seq("total"))
 
   private def rows(df: DataFrame): Set[(String, String, Long, BigDecimal)] =

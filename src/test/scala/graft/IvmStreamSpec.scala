@@ -10,7 +10,7 @@ import graft.sources.VersionedTable
 import graft.streaming.IvmStream
 
 /** Continuous IVM over a real file-source CDC stream: the maintained
-  * state must equal the batch foldRefresh twin AND a from-scratch
+  * state must equal the same foldRefresh over the chunks AND a from-scratch
   * recompute — bit-for-bit on the DECIMAL sums — across a checkpoint
   * stop/restart mid-delta, and the versioned state chain must expose
   * every intermediate view.
@@ -236,7 +236,7 @@ class IvmStreamSpec extends AnyFunSuite {
     val expected = rowSet(
       IvmStream.foldRefresh(baseState, chunks, "op", groups, sums))
     // register ONCE, before any version exists
-    MvRewrite.registerVersioned(s"$dir/base", s"$dir/state", groups,
+    MvRewrite.register(s"$dir/base", s"$dir/state", groups,
       Map("o_totalprice" -> "sum_price"))
     try {
       def runStream(): Unit = {
@@ -272,14 +272,15 @@ class IvmStreamSpec extends AnyFunSuite {
   test("compaction preserves the multiset and later deltas are unchanged") {
     import spark.implicits._
     import graft.operators.IncrementalJoin
+    import IncrementalJoin.positive
     val rBase = Seq((1L, "A"), (2L, "B"), (2L, "B"), (3L, "C"))
       .toDF("k", "seg")
     val rLog = Seq( // delete one of the duplicate 2s, delete 3 (both rows
       // bit-identical to base), insert a second 1 (net 2) and a new 4
       (-1, 2L, "B"), (-1, 3L, "C"), (1, 1L, "A"), (1, 4L, "D"))
-      .toDF("__m", "k", "seg")
-    val signed = rBase.withColumn("__m", lit(1)).unionByName(rLog)
-    val compacted = IvmStream.compactSigned(signed, "__m")
+      .toDF(IncrementalJoin.Sign, "k", "seg")
+    val signed = positive(rBase).unionByName(rLog)
+    val compacted = IvmStream.compactSigned(signed)
     val got = compacted.collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
       .groupBy(identity).view.mapValues(_.size).toMap
@@ -287,16 +288,78 @@ class IvmStreamSpec extends AnyFunSuite {
 
     // the algebra cannot tell (base', empty) from (base, log): the next
     // chunk's ΔV is identical against either representation
-    val sOld = Seq((1L, "O", 10.0), (2L, "O", 5.0), (4L, "O", 7.0))
-      .toDF("k", "status", "price").withColumn("__m", lit(1))
+    val sOld = positive(Seq((1L, "O", 10.0), (2L, "O", 5.0), (4L, "O", 7.0))
+      .toDF("k", "status", "price"))
     val rD = Seq(("delete", 4L, "D")).toDF("op", "k", "seg")
     val sD = Seq(("insert", 1L, "F", 3.0)).toDF("op", "k", "status", "price")
     def dv(rOld: org.apache.spark.sql.DataFrame) =
-      IncrementalJoin.deltaJoinStateSigned(rOld, rD, sOld, sD, "__m",
+      IncrementalJoin.deltaJoinState(rOld, rD, sOld, sD,
         "op", Seq("k"), Seq("seg", "status"), Seq("total" -> "price"))
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
           r.getDecimal(3).toPlainString)).toSet
-    assert(dv(signed) == dv(compacted.withColumn("__m", lit(1))))
+    assert(dv(signed) == dv(positive(compacted)))
+  }
+
+  test("a ten-chunk fold runs the spaced lineage cut and equals a full recompute") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.LogicalRDD
+    import graft.operators.IncrementalJoin
+    // ten chunks: both folds cut their state after chunks 4 and 8, so
+    // the result's plan starts from a cut, not from the base
+    val n = 10
+    def cuts(df: DataFrame): Int =
+      df.queryExecution.analyzed.collect { case r: LogicalRDD => r }.size
+    def decRows(df: DataFrame, g: Seq[String], sumCol: String): Set[Seq[Any]] =
+      df.select(g.map(col) ++ Seq(col("n"),
+          col(sumCol).cast("decimal(18,2)")): _*)
+        .collect().map(_.toSeq).toSet
+
+    // aggregate view: chunk i deletes base row i and inserts two rows
+    val prio = Seq("A", "B", "C")
+    val baseRows = (0 until 12).map(i => (prio(i % 3), 1.25 * i))
+    def inserts(i: Int) = Seq((prio(i % 3), 0.5 + i), (prio((i + 1) % 3), 2.75 * i))
+    val chunks = (0 until n).map(i =>
+      (inserts(i).map { case (g, v) => ("insert", g, v) } :+
+        (("delete", baseRows(i)._1, baseRows(i)._2)))
+        .toDF("op", "o_orderpriority", "o_totalprice"))
+    val after = baseRows.drop(n) ++ (0 until n).flatMap(inserts)
+    val folded = IvmStream.foldRefresh(
+      IncrementalAgg.state(baseRows.toDF("o_orderpriority", "o_totalprice"),
+        groups, sums),
+      chunks, "op", groups, sums)
+    assert(cuts(folded) >= 1, folded.queryExecution.analyzed.treeString.take(2000))
+    assert(decRows(folded, groups, "sum_price") == decRows(
+      IncrementalAgg.state(after.toDF("o_orderpriority", "o_totalprice"),
+        groups, sums), groups, "sum_price"))
+
+    // join view: chunk i moves customer i to a new segment, deletes its
+    // base order and gives customer i + 1 a new order
+    val jGroups = Seq("seg", "status")
+    val jSums = Seq("total" -> "price")
+    val rBase = (0 until 12).map(k => (k.toLong, prio(k % 3)))
+    val sBase = (0 until 12).map(k => (k.toLong, "O", 3.5 * k))
+    def moved(i: Int) = (i.toLong, s"M${i % 2}")
+    def newOrder(i: Int) = (i + 1L, "F", 0.25 + i)
+    val jChunks = (0 until n).map { i =>
+      (Seq(("delete", rBase(i)._1, rBase(i)._2),
+          ("insert", moved(i)._1, moved(i)._2)).toDF("op", "k", "seg"),
+        Seq(("delete", sBase(i)._1, sBase(i)._2, sBase(i)._3),
+          ("insert", newOrder(i)._1, newOrder(i)._2, newOrder(i)._3))
+          .toDF("op", "k", "status", "price"))
+    }
+    val r = rBase.toDF("k", "seg")
+    val s = sBase.toDF("k", "status", "price")
+    val rAfter = ((0 until n).map(moved) ++ rBase.drop(n)).toDF("k", "seg")
+    val sAfter = (sBase.drop(n) ++ (0 until n).map(newOrder))
+      .toDF("k", "status", "price")
+    val jFolded = IvmStream.foldJoinRefresh(
+      IncrementalJoin.positive(r), IncrementalJoin.positive(s),
+      IncrementalAgg.state(r.join(s, Seq("k")), jGroups, jSums),
+      jChunks, "op", Seq("k"), jGroups, jSums)
+    assert(cuts(jFolded) >= 1, jFolded.queryExecution.analyzed.treeString.take(2000))
+    assert(decRows(jFolded, jGroups, "total") == decRows(
+      IncrementalAgg.state(rAfter.join(sAfter, Seq("k")), jGroups, jSums),
+      jGroups, "total"))
   }
 
   test("vacuum drops old committed view versions, never the newest") {

@@ -27,9 +27,9 @@ class MvRewriteSpec extends AnyFunSuite {
     */
   private def withView(f: String => Unit): String = {
     val viewPath = Fixtures.tempDir("graft_mv_spec").toString
-    IncrementalAgg.state(orders, groups, sums)
-      .write.mode("overwrite").parquet(viewPath)
-    MvRewrite.register(spark, basePath, viewPath, groups,
+    VersionedTable.commit(spark, IncrementalAgg.state(orders, groups, sums),
+      viewPath, 0L)
+    MvRewrite.register(basePath, viewPath, groups,
       Map("o_totalprice" -> "sum_price"))
     try f(viewPath) finally MvRewrite.deregister(basePath)
     viewPath
@@ -91,8 +91,9 @@ class MvRewriteSpec extends AnyFunSuite {
       val a = agg(orders, "o_orderstatus")
       val b = agg(orders, "o_orderstatus")
       val u = a.unionByName(b)
-      // both legs rewritten, and the union analyzes + executes cleanly
-      assert(scanned(u).count(_ == view) >= 2, planOf(u).take(1200))
+      // both legs rewritten (each scans the view's one version, v0), and
+      // the union analyzes + executes cleanly
+      assert(scanned(u).count(_ == s"$view/v0") >= 2, planOf(u).take(1200))
       assert(u.count() == 2 * a.count())
     }
   }
@@ -103,9 +104,9 @@ class MvRewriteSpec extends AnyFunSuite {
       .select("o_orderstatus", "o_orderpriority", "o_totalprice")
     empty.write.parquet(s"$dir/base")
     val base = spark.read.parquet(s"$dir/base")
-    IncrementalAgg.state(base, groups, sums)
-      .write.parquet(s"$dir/view")
-    MvRewrite.register(spark, s"$dir/base", s"$dir/view", groups,
+    VersionedTable.commit(spark, IncrementalAgg.state(base, groups, sums),
+      s"$dir/view", 0L)
+    MvRewrite.register(s"$dir/base", s"$dir/view", groups,
       Map("o_totalprice" -> "sum_price"))
     try {
       val q = base.agg(count(lit(1)).as("n"))
@@ -148,9 +149,9 @@ class MvRewriteSpec extends AnyFunSuite {
     c.write.parquet(s"$dir/c"); o.write.parquet(s"$dir/o")
     val cP = spark.read.parquet(s"$dir/c")
     val oP = spark.read.parquet(s"$dir/o")
-    IncrementalAgg.state(cP.join(oP, col("k") === col("ok")),
-        Seq("seg", "o_orderstatus"), sums)
-      .write.parquet(s"$dir/view")
+    VersionedTable.commit(spark,
+      IncrementalAgg.state(cP.join(oP, col("k") === col("ok")),
+        Seq("seg", "o_orderstatus"), sums), s"$dir/view", 0L)
     MvRewrite.registerJoin(spark, s"$dir/c", s"$dir/o",
       Seq("k" -> "ok"), s"$dir/view", Seq("seg", "o_orderstatus"),
       Map("o_totalprice" -> "sum_price"))
@@ -204,7 +205,7 @@ class MvRewriteSpec extends AnyFunSuite {
       .write.parquet(s"$dir/base")
     val base = spark.read.parquet(s"$dir/base")
     // registered BEFORE any version committed: queries stay on the base
-    MvRewrite.registerVersioned(s"$dir/base", s"$dir/state", groups,
+    MvRewrite.register(s"$dir/base", s"$dir/state", groups,
       Map("o_totalprice" -> "sum_price"))
     try {
       val q0 = agg(base, "o_orderstatus")
@@ -247,7 +248,7 @@ class MvRewriteSpec extends AnyFunSuite {
     c.write.parquet(s"$dir/c"); o.write.parquet(s"$dir/o")
     val cP = spark.read.parquet(s"$dir/c")
     val oP = spark.read.parquet(s"$dir/o")
-    MvRewrite.registerJoinVersioned(spark, s"$dir/c", s"$dir/o",
+    MvRewrite.registerJoin(spark, s"$dir/c", s"$dir/o",
       Seq("k" -> "ok"), s"$dir/state", Seq("seg", "o_orderstatus"),
       Map("o_totalprice" -> "sum_price"))
     try {
@@ -286,10 +287,9 @@ class MvRewriteSpec extends AnyFunSuite {
     c.write.parquet(s"$dir/c"); o.write.parquet(s"$dir/o")
     val cP = spark.read.parquet(s"$dir/c")
     val oP = spark.read.parquet(s"$dir/o")
-    IncrementalAgg.state(
+    VersionedTable.commit(spark, IncrementalAgg.state(
         cP.join(oP.withColumnRenamed("seg", "o_seg"), col("k") === col("ok")),
-        Seq("seg"), sums)
-      .write.parquet(s"$dir/view")
+        Seq("seg"), sums), s"$dir/view", 0L)
     MvRewrite.registerJoin(spark, s"$dir/c", s"$dir/o",
       Seq("k" -> "ok"), s"$dir/view", Seq("seg"),
       Map("o_totalprice" -> "sum_price"))
@@ -316,13 +316,12 @@ class MvRewriteSpec extends AnyFunSuite {
 
   test("registered min/max columns answer min/max roll-ups from the view") {
     val viewPath = Fixtures.tempDir("graft_mv_spec").toString
-    orders.groupBy(groups.map(col): _*)
+    VersionedTable.commit(spark, orders.groupBy(groups.map(col): _*)
       .agg(count(lit(1)).as("n"),
         sum(OracleArith.dec2(col("o_totalprice"))).as("sum_price"),
         min(col("o_totalprice")).as("min_p"),
-        max(col("o_totalprice")).as("max_p"))
-      .write.mode("overwrite").parquet(viewPath)
-    MvRewrite.register(spark, basePath, viewPath, groups,
+        max(col("o_totalprice")).as("max_p")), viewPath, 0L)
+    MvRewrite.register(basePath, viewPath, groups,
       Map("o_totalprice" -> "sum_price"),
       mins = Map("o_totalprice" -> "min_p"),
       maxs = Map("o_totalprice" -> "max_p"))

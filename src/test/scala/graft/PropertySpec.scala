@@ -534,16 +534,15 @@ class PropertySpec extends AnyFunSuite {
         .map { case (op, (k, st, p)) => (op, k, st, p) }
         .toDF("op", "k", "status", "price")
       val refreshed = IncrementalAgg.refresh(view(rOld, sOld),
-        IncrementalJoin.deltaJoinState(rOld, rD, sOld, sD, "op",
-          Seq("k"), groups, sums),
+        IncrementalJoin.deltaJoinState(IncrementalJoin.positive(rOld), rD,
+          IncrementalJoin.positive(sOld), sD, "op", Seq("k"), groups, sums),
         groups, Seq("total"))
       assert(rows(refreshed) == rows(view(rNew, sNew)))
       // compaction law: base ∪ signed delta collapses to exactly the
       // new relation (as a multiset)
-      val signedR = rOld.withColumn("__m", lit(1)).unionByName(
-        rD.withColumn("__m",
-          when(col("op") === "insert", 1).otherwise(-1)).drop("op"))
-      val compacted = IvmStream.compactSigned(signedR, "__m")
+      val signedR = IncrementalJoin.positive(rOld)
+        .unionByName(IncrementalJoin.signed(rD, "op"))
+      val compacted = IvmStream.compactSigned(signedR)
         .collect().map(x => (x.getLong(0), x.getString(1))).toSeq
       assert(compacted.groupBy(identity).view.mapValues(_.size).toMap ==
         rNewL.groupBy(identity).view.mapValues(_.size).toMap)
