@@ -160,7 +160,7 @@ object GraftExtensions {
     Seq(graft.plans.NoBroadcastOverExpansion, graft.plans.MvRewrite)
 
   /** Planner strategies of the native operators behind
-    * [[graft.operators.AsOfJoin.joinAsOfNative]] and
+    * [[graft.operators.AsOfJoin.joinAsOf]] and
     * [[graft.operators.TopK.perGroupNative]].
     */
   private[graft] val strategies: Seq[SparkStrategy] =

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: two windows partitioned by user (session cut, turn lag)
   * and one map-side-combining aggregate per conversation — the same
-  * per-key window discipline as sessionizeBatch, no global state. The
+  * per-key window discipline as a lag-gap session cut, no global state. The
   * transcript is assembled from a sorted in-conversation struct array
   * (conversations are bounded by the gap rule, not corpus-sized).
   *

@@ -257,10 +257,8 @@ object DupGroups {
       if (md5Parity) TextDedup.minHashSignaturesMd5(df, idCol, textCol, n, k)
       else TextDedup.minHashSignatures(df, idCol, textCol, n, k)
     try {
-      val cands =
-        if (md5Parity) TextDedup.lshCandidatePairsIdentity(sigs, bands)
-        else TextDedup.lshCandidatePairs(sigs, bands)
-      val verified = TextDedup.minHashVerify(cands, sigs, minJaccard)
+      val verified = TextDedup.minHashVerify(
+        TextDedup.lshCandidatePairs(sigs, bands, md5Parity), sigs, minJaccard)
       connectedComponents(verified, "doc_a", "doc_b")
         .select(col("vertex").as(idCol), col("label").as("group_id"))
     } finally sigs.unpersist()
@@ -316,8 +314,7 @@ object DupGroups {
       val freshSigs = graft.core.Materialize.cut(
         bs.join(flagged, Seq("doc"), "left_anti"))
       val verified = TextDedup.minHashVerify(
-        if (md5Parity) TextDedup.lshCandidatePairsIdentity(freshSigs, bands)
-        else TextDedup.lshCandidatePairs(freshSigs, bands),
+        TextDedup.lshCandidatePairs(freshSigs, bands, md5Parity),
         freshSigs, minJaccard)
       val losers = connectedComponents(verified, "doc_a", "doc_b")
         .filter(col("vertex") =!= col("label"))

@@ -301,25 +301,8 @@ object Similarity {
   def knnIvfWith(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       k: Int, nprobe: Int): DataFrame = {
     val cents = collectCentroids(centroids)
-    val assigned = assignCellsLocal(corpus, cents)
-    val centsDf = broadcast(toCentroidDF(corpus.sparkSession, cents))
-    val q = withNorm(
-      queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-      "q_emb", "q_norm")
-    val wProbe = Window.partitionBy("query_id").orderBy(desc("cent_sim"), asc("cell"))
-    val probed = broadcast(
-      q.crossJoin(centsDf)
-        .withColumn("cent_sim", cosine(col("q_emb"), col("centroid")))
-        .withColumn("probe_rank", row_number().over(wProbe))
-        .filter(col("probe_rank") <= nprobe)
-        .select(col("query_id"), col("q_emb"), col("q_norm"), col("cell")))
-    val c = withNorm(assigned, "embedding", "c_norm")
-    rankTopK(
-      c.join(probed, c("cell") === probed("cell"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .withColumn("cos_sim",
-          dot(col("q_emb"), col("embedding")) / (col("q_norm") * col("c_norm"))),
-      k)
+    probeCells(assignCellsLocal(corpus, cents),
+      toCentroidDF(corpus.sparkSession, cents), "cell", queries, k, nprobe)
   }
 
   /** Exact top-k ranking restricted to explicit (query, cell) probe pairs —
@@ -346,14 +329,22 @@ object Similarity {
     * probed cells.
     */
   def knnIvf(corpus: DataFrame, queries: DataFrame, cellCol: String,
-      k: Int, nprobe: Int): DataFrame = {
-    val cents = broadcast(ivfCentroids(corpus, cellCol))
+      k: Int, nprobe: Int): DataFrame =
+    probeCells(corpus, ivfCentroids(corpus, cellCol), cellCol, queries, k, nprobe)
+
+  /** The IVF probe over a (cell, centroid) frame: each query's `nprobe`
+    * most cosine-similar centroids (ties to the smaller cell), then the
+    * exact top-k among the corpus rows whose `cellCol` is a probed cell.
+    * Centroids and probed queries are broadcast.
+    */
+  private def probeCells(corpus: DataFrame, centroids: DataFrame,
+      cellCol: String, queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val q = withNorm(
       queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
       "q_emb", "q_norm")
     val wProbe = Window.partitionBy("query_id").orderBy(desc("cent_sim"), asc("cell"))
     val probed = broadcast(
-      q.crossJoin(cents)
+      q.crossJoin(broadcast(centroids))
         .withColumn("cent_sim", cosine(col("q_emb"), col("centroid")))
         .withColumn("probe_rank", row_number().over(wProbe))
         .filter(col("probe_rank") <= nprobe)

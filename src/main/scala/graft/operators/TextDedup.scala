@@ -319,9 +319,16 @@ object TextDedup {
   /** LSH banding over MinHash signatures: split the k-length signature into
     * `bands` bands, hash each band, and emit candidate pairs that collide in
     * at least one band. Shuffles on (band, bucket) — never all-pairs.
+    *
+    * `identityBuckets` buckets on the band's value string itself instead
+    * of its 8-byte xxhash — the oracle-parity form: bucket equality is
+    * then exactly band-value equality, which SQL replays verbatim. The
+    * hash bucket is only a shuffle-key size optimization; candidate SETS
+    * are identical up to 2^-64 collisions.
     */
-  def lshCandidatePairs(signatures: DataFrame, bands: Int): DataFrame = {
-    val buckets = bandBuckets(signatures, bands)
+  def lshCandidatePairs(signatures: DataFrame, bands: Int,
+      identityBuckets: Boolean = false): DataFrame = {
+    val buckets = bandBuckets(signatures, bands, identityBuckets)
     val a = buckets.withColumnRenamed("doc", "doc_a")
     val b = buckets.withColumnRenamed("doc", "doc_b")
     // SHUFFLE_HASH: the band expansion is corpus-sized (docs × bands) but
@@ -354,26 +361,10 @@ object TextDedup {
       .distinct()
   }
 
-  /** [[lshCandidatePairs]] with IDENTITY buckets (the band's value string
-    * itself) instead of the 8-byte xxhash bucket — the oracle-parity twin:
-    * bucket equality is then exactly band-value equality, which SQL
-    * replays verbatim. The hash bucket is only a shuffle-key size
-    * optimization; candidate SETS are identical up to 2^-64 collisions.
-    */
-  def lshCandidatePairsIdentity(signatures: DataFrame, bands: Int): DataFrame = {
-    val buckets = bandBuckets(signatures, bands, identityBucket = true)
-    val a = buckets.withColumnRenamed("doc", "doc_a")
-    val b = buckets.withColumnRenamed("doc", "doc_b")
-    a.join(b.hint("shuffle_hash"), Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .distinct()
-  }
-
   /** (doc, band, bucket) banding of a signature frame — shared by the
     * symmetric and asymmetric candidate generators. `identityBucket` swaps
     * the 8-byte xxhash bucket for the band's comma-joined value string
-    * (SQL-replayable; see [[lshCandidatePairsIdentity]]).
+    * (SQL-replayable; see [[lshCandidatePairs]]).
     */
   private def bandBuckets(signatures: DataFrame, bands: Int,
       identityBucket: Boolean = false): DataFrame =

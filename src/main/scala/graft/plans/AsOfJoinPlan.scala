@@ -19,11 +19,11 @@ case object AsOfBackward extends AsOfDirection
 case object AsOfForward extends AsOfDirection
 
 /** Whole-operator custom plan for the as-of join — the (c) tier of the
-  * custom-operator ladder (LogicalPlan + Strategy + SparkPlan), used where
-  * composing built-ins costs an extra pass: the union+window formulation in
-  * graft.operators.AsOfJoin shuffles the *union* of both sides and then
-  * filters half the rows back out; this operator shuffles each side once,
-  * sorts within partitions, and streams a single merge pass.
+  * custom-operator ladder (LogicalPlan + Strategy + SparkPlan), and the one
+  * form behind graft.operators.AsOfJoin.joinAsOf. Composed from built-ins,
+  * an as-of join is a union+window that shuffles the *union* of both sides
+  * and then filters half the rows back out; this operator shuffles each
+  * side once, sorts within partitions, and streams a single merge pass.
   *
   * Semantics: for every left row, attach the right row with the greatest
   * `rightTs <= leftTs` (backward) or smallest `rightTs >= leftTs` (forward)

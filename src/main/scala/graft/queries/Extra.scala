@@ -159,9 +159,13 @@ object Extra {
        |FROM guessed GROUP BY lang, lang_guess
        |ORDER BY lang, lang_guess""".stripMargin)
 
-  /** As-of join: each purchase event matched to the user's most recent
-    * prior view (right side pre-deduped per (user, ts) so ties are
-    * deterministic on both engines).
+  /** q26 and q219 (one query under two names): each purchase event
+    * matched to the user's most recent prior view through the native
+    * as-of join (AsOfJoinNode → AsOfJoinStrategy → AsOfJoinPlan's per-side
+    * shuffle + in-partition sort + streaming merge), so the whole custom
+    * SparkPlan is hash-verified against DuckDB's `ASOF LEFT JOIN`. Right
+    * side pre-aggregated to one row per (user, ts) so tie order cannot
+    * leak nondeterminism (the operator's documented contract).
     */
   private val asofJoin = QueryDef(
     (s, dir) => {
@@ -170,39 +174,9 @@ object Extra {
         .select("event_id", "user_id", "ts")
       val views = events.filter(col("event_type") === "view")
         .groupBy("user_id", "ts").agg(max(col("value")).as("v_value"))
-      AsOfJoin.joinAsOf(purchases, views, key = "user_id",
-        leftTs = "ts", rightTs = "ts", rightValueCols = Seq("v_value"))
-        .withColumnRenamed("asof_ts", "view_ts")
-        .withColumnRenamed("asof_v_value", "view_value")
-        .orderBy("event_id")
-    },
-    """WITH views AS (SELECT user_id, ts, max(value) AS v_value FROM events
-      |               WHERE event_type = 'view' GROUP BY 1, 2),
-      |purchases AS (SELECT event_id, user_id, ts FROM events
-      |              WHERE event_type = 'purchase')
-      |SELECT p.event_id, p.user_id, p.ts, v.ts AS view_ts, v.v_value AS view_value
-      |FROM purchases p ASOF LEFT JOIN views v
-      |  ON p.user_id = v.user_id AND v.ts <= p.ts
-      |ORDER BY p.event_id""".stripMargin)
-
-  /** q219: the NATIVE as-of join (AsOfJoinNode → AsOfJoinStrategy →
-    * AsOfJoinPlan's per-side shuffle + in-partition sort + streaming
-    * merge) under the SAME DuckDB ASOF JOIN oracle as q26 — the whole
-    * custom SparkPlan, not just the composed window formulation, is
-    * hash-verified end to end. Right side pre-aggregated to one row per
-    * (key, ts) so tie order cannot leak nondeterminism (the operator's
-    * documented contract).
-    */
-  private val asofNative = QueryDef(
-    (s, dir) => {
-      val events = Tables.events(s, dir)
-      val purchases = events.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val views = events.filter(col("event_type") === "view")
-        .groupBy("user_id", "ts").agg(max(col("value")).as("v_value"))
         .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
           col("v_value"))
-      AsOfJoin.joinAsOfNative(purchases, views, key = "user_id",
+      AsOfJoin.joinAsOf(purchases, views, key = "user_id",
         leftTs = "ts", rightKey = "v_user", rightTs = "v_ts")
         .select(col("event_id"), col("user_id"), col("ts"),
           col("v_ts").as("view_ts"), col("v_value").as("view_value"))
@@ -237,7 +211,7 @@ object Extra {
         .select(col("user_id").as("e_user"),
           date_trunc("day", col("ts")).as("e_day"),
           col("ts").as("e_ts"), col("e_value"))
-      AsOfJoin.joinAsOfNative(purchases, errors,
+      AsOfJoin.joinAsOf(purchases, errors,
           keys = Seq("user_id", "day"), leftTs = "ts",
           rightKeys = Seq("e_user", "e_day"), rightTs = "e_ts",
           direction = graft.plans.AsOfForward)
@@ -272,7 +246,7 @@ object Extra {
         .groupBy("user_id", "ts").agg(max(col("value")).as("v_value"))
         .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
           col("v_value"))
-      AsOfJoin.joinAsOfNative(purchases, views,
+      AsOfJoin.joinAsOf(purchases, views,
           keys = Seq("user_id"), leftTs = "ts",
           rightKeys = Seq("v_user"), rightTs = "v_ts",
           direction = graft.plans.AsOfBackward,
@@ -325,7 +299,7 @@ object Extra {
       val facts = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"),
           to_timestamp(col("o_orderdate")).as("ots"))
-      AsOfJoin.joinAsOfNative(facts, hist, key = "o_custkey",
+      AsOfJoin.joinAsOf(facts, hist, key = "o_custkey",
           leftTs = "ots", rightKey = "d_key", rightTs = "d_from")
         .select(col("o_orderkey"), col("d_from").as("pit_from"),
           col("d_bal").as("pit_bal"))
@@ -2217,7 +2191,7 @@ object Extra {
     "q45_corpus_pipeline" -> corpusPipeline,
     "q25_rolling_trend" -> rollingTrend,
     "q26_asof_join" -> asofJoin,
-    "q219_asof_native" -> asofNative,
+    "q219_asof_native" -> asofJoin,
     "q221_asof_forward" -> asofForward,
     "q222_asof_tolerance" -> asofTolerance,
     "q245_pit_enrich" -> pitEnrich,

@@ -7,18 +7,20 @@ import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 
 /** Batch-checkable faces of the streaming + multimodal surface: the same
-  * transform functions run under readStream (see EventStreamsSpec); here the
-  * finite-input results go through the correctness gate.
+  * transform functions run unchanged under readStream (see
+  * EventStreamsSpec); here their results on the finite input go through
+  * the correctness gate.
   */
 object Stream {
 
-  /** Gap sessionization (30 min) over events — lag-gap-cumsum batch twin of
-    * the stateful streaming operator.
+  /** Gap sessionization (30 min) over events: the `session_window`
+    * operator that also runs on a stream, checked against a lag-gap-cumsum
+    * replay in DuckDB.
     */
   private val sessions = QueryDef(
     (s, dir) =>
       graft.core.QueryDef.orderedOut(
-        EventStreams.sessionizeBatch(Tables.events(s, dir),
+        EventStreams.sessionize(Tables.events(s, dir),
           gapMs = 30 * 60 * 1000L),
         "user_id", "session_start"),
     """WITH t AS (

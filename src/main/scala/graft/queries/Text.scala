@@ -161,8 +161,8 @@ object Text {
       val sigs = TextDedup.minHashSignaturesMd5(
         Tables.documents(s, dir), "doc_id", "text", n = 3, k = 128)
       TextDedup.minHashVerify(
-        TextDedup.lshCandidatePairsIdentity(sigs, bands = 32), sigs,
-        minJaccard = 0.5)
+        TextDedup.lshCandidatePairs(sigs, bands = 32, identityBuckets = true),
+        sigs, minJaccard = 0.5)
         .orderBy("doc_a", "doc_b")
     },
     Some(minhashMd5Ctes +

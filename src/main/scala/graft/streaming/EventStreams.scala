@@ -1,15 +1,8 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-/** Mutable session accumulator carried in streaming state (top-level so the
-  * state encoder's generated code can construct it).
-  */
-final case class SessionState(start: Long, end: Long, n: Long)
 
 /** Structured Streaming operators over the events stream (north-star
   * extension; the reference is batch-only — its freshness/append semantics
@@ -80,76 +73,27 @@ object EventStreams {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
-  final case class SessionEvent(user_id: Long, ts: Timestamp, event_type: String)
-  final case class UserSession(user_id: Long, session_start: Timestamp,
-      session_end: Timestamp, n_events: Long)
-
-  // state timestamps carried as epoch MICROS — getTime() alone would
-  // truncate to ms and disagree with the batch twin's unix_micros gaps
-  private def toMicros(t: Timestamp): Long =
-    t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
-  private def fromMicros(us: Long): Timestamp =
-    Timestamp.from(java.time.Instant.ofEpochSecond(
-      Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
-
-  /** Gap-based sessionization via flatMapGroupsWithState: a session closes
-    * after `gapMs` of inactivity (event-time timeout). Custom state is the
-    * (c) tier of the custom-operator ladder — used here because no built-in
-    * operator expresses gap sessions.
+  /** Gap sessionization: per user, events at most `gapMs` apart (the
+    * gap itself included) form one session, reported as (user_id,
+    * session_start, session_end, n_events) with the first and last event
+    * time. One planned operator, Spark's `session_window`, so the same
+    * call runs on a batch or a streaming frame.
+    *
+    * On a stream, state is one aggregation buffer per open session per
+    * user, bounded by the 30 minute watermark. In append mode a session
+    * is emitted once, when the watermark passes its last event plus the
+    * gap: late events within the watermark still merge into it (and can
+    * bridge two sessions), and no session is emitted before it is final.
+    * On a batch frame `withWatermark` does nothing and every session is
+    * final. A row whose `ts` is NULL belongs to no session and is dropped.
     */
-  def sessionize(events: Dataset[SessionEvent], gapMs: Long): Dataset[UserSession] = {
-    import events.sparkSession.implicits._
-    val gapUs = gapMs * 1000L
+  def sessionize(events: DataFrame, gapMs: Long): DataFrame =
     events
       .withWatermark("ts", "30 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, UserSession](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, batch: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(UserSession(userId,
-              fromMicros(s.start), fromMicros(s.end), s.n))
-          } else {
-            val times = batch.map(e => toMicros(e.ts)).toSeq.sorted
-            // phase 1: gap-merge the batch's (sorted) times into candidate
-            // sessions — consecutive late events within gapUs become ONE
-            // session, exactly as the batch twin's lag-gap-cumsum would
-            val batchSessions = Seq.newBuilder[SessionState]
-            var open: Option[SessionState] = None
-            times.foreach { t =>
-              open = open match {
-                case Some(s) if t - s.end <= gapUs =>
-                  Some(s.copy(end = t, n = s.n + 1))
-                case Some(s) =>
-                  batchSessions += s
-                  Some(SessionState(t, t, 1))
-                case None => Some(SessionState(t, t, 1))
-              }
-            }
-            open.foreach(batchSessions += _)
-            // phase 2: interval-merge with the carried open session — a late
-            // chunk reaching within gapUs of the state's start extends it
-            // backwards (and can bridge chunks), never emits spurious
-            // singletons
-            val all = (batchSessions.result() ++ state.getOption).sortBy(_.start)
-            val merged = all.foldLeft(List.empty[SessionState]) {
-              case (prev :: rest, s) if s.start - prev.end <= gapUs =>
-                prev.copy(start = math.min(prev.start, s.start),
-                  end = math.max(prev.end, s.end), n = prev.n + s.n) :: rest
-              case (acc, s) => s :: acc
-            }.reverse
-            // everything but the latest session is closed; the latest stays
-            // open under an event-time timeout
-            val last = merged.last
-            state.update(last)
-            state.setTimeoutTimestamp((last.end + gapUs) / 1000L)
-            merged.init.map(s =>
-              UserSession(userId, fromMicros(s.start), fromMicros(s.end), s.n)).iterator
-          }
-      }
-  }
+      .groupBy(col("user_id"), session_window(col("ts"), s"$gapMs milliseconds"))
+      .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
+        count(lit(1)).as("n_events"))
+      .drop("session_window")
 
   /** Watermarked stream-stream join: purchases joined to the same user's
     * views within `withinMs` BEFORE the purchase. Both sides watermarked so
@@ -184,7 +128,7 @@ object EventStreams {
     events.join(broadcast(dim), col(eventKey) === col(dimKey), "left")
 
   /** Streaming TEMPORAL enrichment — the streaming twin of the native
-    * batch as-of join ([[graft.operators.AsOfJoin.joinAsOfNative]],
+    * batch as-of join ([[graft.operators.AsOfJoin.joinAsOf]],
     * backward): the dimension is not a static table but a STREAM of
     * versioned updates (a CDC changelog), and every event enriches with
     * the latest version at-or-before its event time.
@@ -231,7 +175,7 @@ object EventStreams {
       .flatMapGroupsWithState[
         (Seq[(Long, String)], Seq[(Long, Long, Long)]),
         (String, Long, Long, Option[Long], Option[String])](
-        org.apache.spark.sql.streaming.OutputMode.Update(),
+        OutputMode.Update(),
         GroupStateTimeout.NoTimeout) {
         (k: String, rows: Iterator[(String, Boolean, Long, Long, Long, String)],
             state: GroupState[(Seq[(Long, String)], Seq[(Long, Long, Long)])]) =>
@@ -304,27 +248,6 @@ object EventStreams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         idempotentAppend(batch, batchId, path)
       }
-
-  /** Batch twin of sessionization (lag-gap-cumsum): same output for the
-    * finite case; used by tests to cross-check the stateful path and by the
-    * correctness gate as an oracle-friendly formulation.
-    */
-  def sessionizeBatch(events: DataFrame, gapMs: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    events
-      .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-      .withColumn("new_session",
-        when(col("prev_ts").isNull ||
-          unix_micros(col("ts")) - unix_micros(col("prev_ts")) > gapMs * 1000L, 1)
-          .otherwise(0))
-      .withColumn("session_no", sum(col("new_session")).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy("user_id", "session_no")
-      .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
-        count(lit(1)).as("n_events"))
-      .drop("session_no")
-  }
 
   /** Group and key columns of a sketch input, both as strings, with NULL
     * keys dropped BEFORE the aggregate (the COUNT(DISTINCT) contract): a

@@ -6,8 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Tables
 import graft.operators.AsOfJoin
 
-/** As-of join: composed (union+window) and native (custom SparkPlan) forms
-  * must agree exactly; the native plan must shuffle-sort-merge.
+/** As-of join (the native custom SparkPlan): hand-picked semantics cases,
+  * agreement with a brute-force join on real events, and the
+  * shuffle-sort-merge plan.
   */
 class AsOfJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -19,23 +20,10 @@ class AsOfJoinSpec extends AnyFunSuite {
     .groupBy(col("user_id").as("v_user"), col("ts").as("v_ts"))
     .agg(max("value").as("v_value"))
 
-  lazy val composed = AsOfJoin.joinAsOf(
-    purchases,
-    views.select(col("v_user").as("user_id"), col("v_ts").as("ts"), col("v_value")),
-    key = "user_id", leftTs = "ts", rightTs = "ts",
-    rightValueCols = Seq("v_value"))
-    .select(col("event_id"), col("asof_ts").as("v_ts"), col("asof_v_value").as("v_value"))
-
-  lazy val native = AsOfJoin.joinAsOfNative(
+  lazy val native = AsOfJoin.joinAsOf(
     purchases, views, key = "user_id", leftTs = "ts",
     rightKey = "v_user", rightTs = "v_ts")
     .select("event_id", "v_ts", "v_value")
-
-  test("native custom-plan as-of join equals the composed form") {
-    assert(native.count() == purchases.count())
-    assert(composed.exceptAll(native).count() == 0)
-    assert(native.exceptAll(composed).count() == 0)
-  }
 
   test("native plan is the custom exec with shuffle + sort children") {
     val plan = native.queryExecution.executedPlan.toString
@@ -48,12 +36,13 @@ class AsOfJoinSpec extends AnyFunSuite {
     val l = Seq((1L, 10L, 3000000L)).toDF("id", "k", "us")
       .select(col("id"), col("k"), org.apache.spark.sql.functions.timestamp_micros(col("us")).as("ts"))
     val r = Seq((10L, 1000000L, Some(5.0)), (10L, 2000000L, None))
-      .toDF("k", "us", "v")
-      .select(col("k"), org.apache.spark.sql.functions.timestamp_micros(col("us")).as("ts"), col("v"))
-    val out = AsOfJoin.joinAsOf(l, r, "k", "ts", "ts", Seq("v")).head
+      .toDF("rk", "us", "v")
+      .select(col("rk"), org.apache.spark.sql.functions.timestamp_micros(col("us")).as("rts"), col("v"))
+    val out = AsOfJoin.joinAsOf(l, r, key = "k", leftTs = "ts",
+      rightKey = "rk", rightTs = "rts").head
     // the as-of match is the ts=2s row whose v is null — NOT the ts=1s value
-    assert(out.getAs[java.sql.Timestamp]("asof_ts").toInstant.toEpochMilli == 2000L)
-    assert(out.isNullAt(out.fieldIndex("asof_v")))
+    assert(out.getAs[java.sql.Timestamp]("rts").toInstant.toEpochMilli == 2000L)
+    assert(out.isNullAt(out.fieldIndex("v")))
   }
 
   test("left rows with no prior right row are null-extended") {
@@ -74,7 +63,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       (20L, 9000000L, 9.0)) // id=3's match, other key
       .toDF("k", "us", "v")
       .select(col("k").as("rk"), tsf("us").as("rts"), col("v"))
-    val out = AsOfJoin.joinAsOfNative(l, r, keys = Seq("k"), leftTs = "ts",
+    val out = AsOfJoin.joinAsOf(l, r, keys = Seq("k"), leftTs = "ts",
       rightKeys = Seq("rk"), rightTs = "rts", direction = graft.plans.AsOfForward)
       .select("id", "v").collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
     assert(out == Map(1L -> 2.0, 2L -> 7.0, 3L -> 9.0))
@@ -89,7 +78,7 @@ class AsOfJoinSpec extends AnyFunSuite {
     val r = Seq((10L, "a", 1000000L, 1.0), (10L, "zz", 2000000L, 99.0))
       .toDF("k1", "k2", "us", "v")
       .select(col("k1").as("r1"), col("k2").as("r2"), tsf("us").as("rts"), col("v"))
-    val out = AsOfJoin.joinAsOfNative(l, r, keys = Seq("k1", "k2"),
+    val out = AsOfJoin.joinAsOf(l, r, keys = Seq("k1", "k2"),
       leftTs = "ts", rightKeys = Seq("r1", "r2"), rightTs = "rts",
       direction = graft.plans.AsOfBackward)
       .select("id", "v").collect()
@@ -103,7 +92,7 @@ class AsOfJoinSpec extends AnyFunSuite {
     val errors = events.filter(col("event_type") === "error")
       .groupBy(col("user_id").as("e_user"), col("ts").as("e_ts"))
       .agg(max("value").as("e_value"))
-    val fwd = AsOfJoin.joinAsOfNative(purchases, errors,
+    val fwd = AsOfJoin.joinAsOf(purchases, errors,
       keys = Seq("user_id"), leftTs = "ts",
       rightKeys = Seq("e_user"), rightTs = "e_ts",
       direction = graft.plans.AsOfForward)
@@ -130,7 +119,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       .toDF("k", "us", "v")
       .select(col("k").as("rk"), tsf("us").as("rts"), col("v"))
     def run(dir: graft.plans.AsOfDirection, tolUs: Long) =
-      AsOfJoin.joinAsOfNative(l, r, keys = Seq("k"), leftTs = "ts",
+      AsOfJoin.joinAsOf(l, r, keys = Seq("k"), leftTs = "ts",
         rightKeys = Seq("rk"), rightTs = "rts", direction = dir,
         toleranceUs = Some(tolUs))
         .select("id", "v").collect()
@@ -163,7 +152,7 @@ class AsOfJoinSpec extends AnyFunSuite {
       .select(col("k").as("rk"),
         org.apache.spark.sql.functions.timestamp_micros(col("us")).as("rts"),
         col("v"))
-    val out = AsOfJoin.joinAsOfNative(l, r,
+    val out = AsOfJoin.joinAsOf(l, r,
       key = "k", leftTs = "ts", rightKey = "rk", rightTs = "rts")
       .select("id", "rts", "v").collect().map(x => x.getLong(0) -> x).toMap
     assert(out.size == 3)

@@ -109,6 +109,56 @@ class EventStreamsSpec extends AnyFunSuite {
     full
   }
 
+  /** A file stream over `dir`, one file per micro-batch. */
+  private def fileStream(dir: java.nio.file.Path, schema: String): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+      .parquet(dir.toString)
+
+  /** Run [[EventStreams.sessionize]] on `stream` in append mode and check
+    * it against the same function on `batch`, the whole input as a batch
+    * frame: every emitted session is a final one, and every session whose
+    * end plus the gap lies before the final watermark (the latest event
+    * time less 30 minutes) was emitted. Returns the emitted sessions.
+    */
+  private def assertStreamedSessions(stream: DataFrame, batch: DataFrame,
+      gapMs: Long, name: String): Set[Row] = {
+    val cols = Seq("user_id", "session_start", "session_end", "n_events").map(col)
+    val streamed = runToMemory(EventStreams.sessionize(stream, gapMs), name)
+      .select(cols: _*).collect().toSet
+    val full = EventStreams.sessionize(batch, gapMs).select(cols: _*).collect().toSet
+    val watermark = batch.agg(max(col("ts"))).head.getTimestamp(0).toInstant
+      .minusSeconds(30 * 60)
+    val closed = full.filter(
+      _.getTimestamp(2).toInstant.plusMillis(gapMs).isBefore(watermark))
+    assert(streamed.subsetOf(full),
+      s"sessions that are not final: ${(streamed -- full).mkString("; ").take(2000)}")
+    assert(closed.subsetOf(streamed),
+      s"closed sessions not emitted: ${(closed -- streamed).mkString("; ").take(2000)}")
+    streamed
+  }
+
+  private val sessionSchema = "user_id BIGINT, ts TIMESTAMP"
+
+  /** `m` minutes after 2024-01-01 09:00 UTC. */
+  private def minute(m: Int): java.sql.Timestamp = java.sql.Timestamp.from(
+    java.time.Instant.parse("2024-01-01T09:00:00Z").plusSeconds(m * 60L))
+
+  /** User 1's session from minute `start` to `end` with `n` events. */
+  private def session(start: Int, end: Int, n: Long): Row =
+    Row(1L, minute(start), minute(end), n)
+
+  /** Stage one file per batch of user 1's event minutes (`<i>.parquet`)
+    * and return all of them as one batch frame.
+    */
+  private def stageSessionBatches(dir: java.nio.file.Path,
+      batches: Seq[Seq[Int]]): DataFrame = {
+    batches.zipWithIndex.foreach { case (minutes, i) =>
+      stage(minutes.map(m => (1L, minute(m))).toDF("user_id", "ts"), dir,
+        s"$i.parquet")
+    }
+    batches.flatten.map(m => (1L, minute(m))).toDF("user_id", "ts")
+  }
+
   test("tumbling-window counts under readStream match the batch computation") {
     val streamed = runToMemory(
       EventStreams.tumblingCounts(
@@ -290,83 +340,65 @@ class EventStreamsSpec extends AnyFunSuite {
     // split events by time into two files; maxFilesPerTrigger=1 forces two
     // micro-batches, so sessions spanning the cut exercise state handoff
     val dir = Fixtures.tempDir("graft_two_batches")
-    val (first, second) =
-      timeSplit(Tables.events(spark, SparkTestSession.sfDir).orderBy("ts"))
+    val ev = Tables.events(spark, SparkTestSession.sfDir)
+    val (first, second) = timeSplit(ev.orderBy("ts"))
     stage(first, dir, "0.parquet")
     stage(second, dir, "1.parquet")
-
-    val stream = spark.readStream
-      .schema(eventsSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[EventStreams.SessionEvent]
-    val streamed = runToMemory(
-      EventStreams.sessionize(stream, gapMs = 30 * 60 * 1000L).toDF(),
-      "sessions_2batch_out")
-    val batch = EventStreams.sessionizeBatch(
-      Tables.events(spark, SparkTestSession.sfDir), gapMs = 30 * 60 * 1000L)
-    val streamedSet = streamed
-      .select("user_id", "session_start", "session_end", "n_events").collect().toSet
-    val batchSet = batch
-      .select("user_id", "session_start", "session_end", "n_events").collect().toSet
-    // every emitted session must be a true session even when it was built
-    // across the batch boundary; only per-user trailing sessions stay open
-    assert(streamedSet.subsetOf(batchSet))
-    assert(streamedSet.size >= batchSet.size - 150)
-    assert(streamedSet.nonEmpty)
+    val streamed = assertStreamedSessions(
+      fileStream(dir, eventsSchema), ev, 30 * 60 * 1000L, "sessions_2batch_out")
+    assert(streamed.nonEmpty)
   }
 
   test("late within-watermark events gap-merge into one session (batch-twin semantics)") {
     // batch 0: one event at 10:00 opens a session (gap 10 min, watermark 30
     // min → after batch 0 the watermark is 09:30). batch 1: two late events
     // at 09:35/09:36 — before the open session's reach (09:50) but within
-    // the gap of EACH OTHER, so they must emit as ONE closed session of 2
-    // (the pre-fix code emitted two spurious singletons)
+    // the gap of EACH OTHER, so they form ONE session of 2. batch 2 at
+    // 12:00 moves the watermark to 11:30, past both sessions: each is
+    // emitted once, when it is final, and not before
     val dir = Fixtures.tempDir("graft_late_merge")
-    def writeBatch(name: String, minutes: Seq[Int]): Unit =
-      stage(minutes.map(m => (1L, new java.sql.Timestamp(
-          java.time.Instant.parse("2024-01-01T09:00:00Z").toEpochMilli + m * 60000L),
-          "view"))
-        .toDF("user_id", "ts", "event_type"), dir, s"$name.parquet")
-    writeBatch("0", Seq(60))     // 10:00
-    writeBatch("1", Seq(35, 36)) // 09:35, 09:36
-    val stream = spark.readStream
-      .schema("user_id BIGINT, ts TIMESTAMP, event_type STRING")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
-      .as[EventStreams.SessionEvent]
-    val out = runToMemory(
-      EventStreams.sessionize(stream, gapMs = 10 * 60 * 1000L).toDF(),
-      "late_merge_out")
+    val all = stageSessionBatches(dir, Seq(Seq(60), Seq(35, 36), Seq(180)))
+    val streamed = assertStreamedSessions(fileStream(dir, sessionSchema), all,
+      10 * 60 * 1000L, "late_merge_out")
+    assert(streamed == Set(session(35, 36, 2), session(60, 60, 1)))
+  }
+
+  test("late events bridging two open sessions merge them before either is emitted") {
+    // 10:00, then 09:35/09:36 (a separate session 24 min before it), then
+    // 09:45/09:55, which close both gaps (a gap of exactly 10 min stays in
+    // the session): ONE session of five events, emitted once 12:00 moves
+    // the watermark past it. Emitting 09:35–09:36 as closed as soon as the
+    // later 10:00 session existed would report two false sessions
+    val dir = Fixtures.tempDir("graft_bridge")
+    val all = stageSessionBatches(dir,
+      Seq(Seq(60), Seq(35, 36), Seq(45, 55), Seq(180)))
+    val streamed = assertStreamedSessions(fileStream(dir, sessionSchema), all,
+      10 * 60 * 1000L, "bridge_out")
+    assert(streamed == Set(session(35, 60, 5)))
+  }
+
+  test("rows with a NULL ts belong to no session, on a batch and on a stream") {
+    val dir = Fixtures.tempDir("graft_null_ts")
+    val at10 = Some(minute(60))
+    def write(name: String, rows: Seq[(Long, Option[java.sql.Timestamp])]): Unit =
+      stage(rows.toDF("user_id", "ts"), dir, s"$name.parquet")
+    write("0", Seq((1L, at10), (1L, None), (2L, None)))
+    write("1", Seq((1L, Some(minute(180)))))
+    val all = spark.read.schema(sessionSchema).parquet(dir.toString)
+    assert(EventStreams.sessionize(all, 10 * 60 * 1000L)
       .select("user_id", "session_start", "session_end", "n_events")
-      .collect()
-    assert(out.length == 1, out.mkString("; "))
-    val s = out.head
-    assert(s.getLong(0) == 1L)
-    assert(s.getTimestamp(1).toInstant == java.time.Instant.parse("2024-01-01T09:35:00Z"))
-    assert(s.getTimestamp(2).toInstant == java.time.Instant.parse("2024-01-01T09:36:00Z"))
-    assert(s.getLong(3) == 2L)
+      .collect().toSet == Set(session(60, 60, 1), session(180, 180, 1)))
+    val streamed = assertStreamedSessions(fileStream(dir, sessionSchema), all,
+      10 * 60 * 1000L, "null_ts_out")
+    assert(streamed == Set(session(60, 60, 1)))
   }
 
   test("stateful sessionization emits the same sessions as the batch twin") {
-    val events = EventStreams.readEvents(spark, eventsDir)
-      .select(col("user_id"), col("ts"), col("event_type"))
-      .as[EventStreams.SessionEvent]
-    val streamed = runToMemory(
-      EventStreams.sessionize(events, gapMs = 30 * 60 * 1000L).toDF(), "sessions_out")
-    val batch = EventStreams.sessionizeBatch(
-      Tables.events(spark, SparkTestSession.sfDir), gapMs = 30 * 60 * 1000L)
-    // append-mode streaming only emits sessions closed by the watermark; on a
-    // finite input the final open session per user stays in state. Everything
-    // emitted must be a real session, and most sessions must have closed.
-    val streamedSet = streamed
-      .select("user_id", "session_start", "session_end", "n_events").collect().toSet
-    val batchSet = batch
-      .select("user_id", "session_start", "session_end", "n_events").collect().toSet
-    assert(streamedSet.subsetOf(batchSet))
-    assert(streamedSet.size >= batchSet.size - 150) // ≤1 open session per user
-    assert(streamedSet.nonEmpty)
+    val streamed = assertStreamedSessions(
+      EventStreams.readEvents(spark, eventsDir),
+      Tables.events(spark, SparkTestSession.sfDir), 30 * 60 * 1000L,
+      "sessions_out")
+    assert(streamed.nonEmpty)
   }
 
   test("readEvents starts on an EMPTY landing directory and picks up late files") {
@@ -458,7 +490,7 @@ class EventStreamsSpec extends AnyFunSuite {
       ("a", 4L, 35L), ("b", 5L, 50L)).toDF("key", "event_id", "ts")
     val allDim = Seq(("a", 10L, "a1"), ("a", 20L, "a2"), ("a", 30L, "a3"),
       ("b", 15L, "b1")).toDF("dkey", "version_ts", "payload")
-    val batchTwin = graft.operators.AsOfJoin.joinAsOfNative(
+    val batchTwin = graft.operators.AsOfJoin.joinAsOf(
       allEv, allDim, Seq("key"), "ts", Seq("dkey"), "version_ts",
       graft.plans.AsOfBackward)
       .collect().map(r => r.getLong(1) -> ((r.getLong(2),
@@ -482,5 +514,37 @@ class EventStreamsSpec extends AnyFunSuite {
       _, "event_type", "value", lo = 0.0, hi = 100.0, nBins = 32))
     assert(full.groupBy(_.getString(0)).values.exists(_.size > 3),
       "test should spread mass over several bins")
+  }
+
+  test("no source file hand-writes group state outside asOfEnrichStream") {
+    // sessions and sketches are planned aggregates that run unchanged on a
+    // batch or a stream; only the stream-side as-of join, which Spark has
+    // no built-in for, keeps a per-key state function
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val offenders = for {
+      f <- files(root)
+      lines = java.nio.file.Files.readAllLines(f.toPath).asScala.toSeq
+      // the body of EventStreams.asOfEnrichStream: its def line up to the
+      // next member of the object
+      allowed = if (!f.getPath.endsWith("streaming/EventStreams.scala")) 0 until 0
+        else {
+          val from = lines.indexWhere(_.contains("def asOfEnrichStream("))
+          val to = lines.indexWhere(l => l.startsWith("  /**") || l.startsWith("  def "),
+            from + 1)
+          if (from < 0) 0 until 0 else from until (if (to < 0) lines.size else to)
+        }
+      (line, i) <- lines.zipWithIndex
+      if (line.contains("flatMapGroupsWithState") ||
+        line.contains("mapGroupsWithState")) && !allowed.contains(i)
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "use a planned aggregate (groupBy / session_window) instead:\n" +
+        offenders.mkString("\n"))
   }
 }

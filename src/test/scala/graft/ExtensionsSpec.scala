@@ -154,7 +154,7 @@ class ExtensionsSpec extends AnyFunSuite {
         Seq((1, 5.0, 1L), (1, 7.0, 2L), (2, 1.0, 3L)).toDF("g", "o", "t"), "g", "o", "t", 1)
       assert(top.queryExecution.executedPlan.toString.contains("TopKPerGroup"))
       assert(top.select("t").as[Long].collect().sorted.toSeq == Seq(2L, 3L))
-      val asOf = graft.operators.AsOfJoin.joinAsOfNative(
+      val asOf = graft.operators.AsOfJoin.joinAsOf(
         Seq((1, 10L)).toDF("k", "ts"), Seq((1, 5L, "x")).toDF("rk", "rts", "v"),
         "k", "ts", "rk", "rts")
       assert(asOf.queryExecution.executedPlan.toString.contains("AsOfJoin"))

@@ -124,28 +124,6 @@ class PropertySpec extends AnyFunSuite {
     // unique (k, ts) on the right so the match is well-defined
     right.distinct.map { case (k, ts) => (k, ts, (k * 100000 + ts).toDouble) })
 
-  test("as-of join (composed) equals the brute-force reference") {
-    forAll(genEvents) { case (left, right) =>
-      whenever(left.nonEmpty) {
-        val l = left.zipWithIndex
-          .map { case ((k, ts), i) => (i.toLong, k, ts) }
-          .toDF("id", "k", "ts")
-          .withColumn("ts", timestamp_micros(col("ts")))
-        val r = right.toDF("k", "ts", "v")
-          .withColumn("ts", timestamp_micros(col("ts")))
-        val got = AsOfJoin.joinAsOf(l, r, "k", "ts", "ts", Seq("v"))
-          .select("id", "asof_v").as[(Long, Option[Double])]
-          .collect().toMap
-        val expected = left.zipWithIndex.map { case ((k, ts), i) =>
-          val matches = right.filter(x => x._1 == k && x._2 <= ts)
-          i.toLong -> (if (matches.isEmpty) None
-            else Some(matches.maxBy(_._2)._3))
-        }.toMap
-        assert(got == expected)
-      }
-    }
-  }
-
   test("NATIVE as-of join equals the brute-force reference in every mode") {
     // the execution-layer merge (backward/forward × tolerance) against a
     // driver-side model over random keyed event sets — the property form
@@ -164,7 +142,7 @@ class PropertySpec extends AnyFunSuite {
         } {
           val dir =
             if (forward) graft.plans.AsOfForward else graft.plans.AsOfBackward
-          val got = AsOfJoin.joinAsOfNative(l, r, keys = Seq("k"),
+          val got = AsOfJoin.joinAsOf(l, r, keys = Seq("k"),
               leftTs = "ts", rightKeys = Seq("rk"), rightTs = "rts",
               direction = dir, toleranceUs = tolUs)
             .select(col("id"), col("v")).as[(Long, Option[Double])]

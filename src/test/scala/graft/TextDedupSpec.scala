@@ -38,7 +38,8 @@ class TextDedupSpec extends AnyFunSuite {
   test("md5-parity MinHash twin (the q42/q113/q127 gate path) holds the same recall bar") {
     val sigs = TextDedup.minHashSignaturesMd5(docs, "doc_id", "text", n = 3, k = 128)
     val got = TextDedup.minHashVerify(
-      TextDedup.lshCandidatePairsIdentity(sigs, bands = 32), sigs, minJaccard = 0.45)
+      TextDedup.lshCandidatePairs(sigs, bands = 32, identityBuckets = true), sigs,
+      minJaccard = 0.45)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     val recall = exactPairs.count(got).toDouble / exactPairs.size
     assert(recall >= 0.9, s"recall $recall over ${exactPairs.size} pairs")
